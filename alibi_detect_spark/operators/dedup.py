@@ -69,12 +69,6 @@ def shingles_col(text: str = "text", n: int = 3):
     return F.array_distinct(F.when(F.size(w) >= n, grams).otherwise(empty))
 
 
-def _h60(col):
-    """60-bit md5-derived shingle key — join-equality only (no arithmetic),
-    collision odds ~n²/2⁶¹."""
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
-
-
 def _h32(col):
     """32-bit md5-derived hash — small enough for ANSI-safe affine mixing."""
     return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")

@@ -43,6 +43,50 @@ def _fill_series(pdf: pd.DataFrame, value_col: str, fill: str) -> np.ndarray:
     raise ValueError(f"unknown fill {fill!r}")
 
 
+def _ordered_over(df: DataFrame, key: str, order_col: str, cols, replay, out_ddl: str) -> DataFrame:
+    """Per-key ordered replay: one ``applyInPandas`` group per key over
+    ``(key, order_col, *cols)``, stable-sorted by ``order_col``. ``replay(pdf,
+    out)`` gets the sorted group and ``out``, its (key, order_col) columns,
+    and returns ``out`` (or a row slice of it) with the ``out_ddl`` columns
+    added."""
+
+    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values(order_col, kind="mergesort")
+        return replay(pdf, pd.DataFrame({key: pdf[key].to_numpy(), order_col: pdf[order_col].to_numpy()}))
+
+    schema = f"{key} string, {order_col} long, {out_ddl}"
+    return df.select(key, order_col, *cols).groupBy(key).applyInPandas(fn, schema=schema)
+
+
+def _head_fit_over(
+    df: DataFrame, key: str, order_col: str, cols, prefix: str, window_sizes, fit_score
+) -> DataFrame:
+    """Ordered replay of a head-fitted online detector: ``fit_score(k, pdf)``
+    fits on the reference head and scores the rest, returning ``(stats
+    [n_scored, len(window_sizes)], thresholds, is_drift)``, or ``None`` when
+    the series is too short to fit. Unscored rows (the head, or the whole
+    series when too short) get NaN stats and thresholds and ``is_drift`` 0.
+    Stat columns: ``{prefix}_stat`` for a single window (back-compat),
+    ``{prefix}_stat_w{ws}`` each for multiple windows."""
+    stat_cols = [f"{prefix}_stat_w{w}" for w in window_sizes] if len(window_sizes) > 1 else [f"{prefix}_stat"]
+
+    def replay(pdf: pd.DataFrame, out: pd.DataFrame) -> pd.DataFrame:
+        res = fit_score(pdf[key].iloc[0], pdf)
+        if res is None:
+            res = np.zeros((0, len(stat_cols))), np.zeros(0), np.zeros(0, dtype=np.int32)
+        stats, thr, drift = res
+        head = len(pdf) - len(thr)
+        pad = np.full(head, np.nan)
+        for j, c in enumerate(stat_cols):
+            out[c] = np.concatenate([pad, stats[:, j]])
+        out[f"{prefix}_threshold"] = np.concatenate([pad, thr])
+        out[f"{prefix}_is_drift"] = np.concatenate([np.zeros(head, dtype=np.int32), drift]).astype(np.int32)
+        return out
+
+    ddl = "".join(f"{c} double, " for c in stat_cols) + f"{prefix}_threshold double, {prefix}_is_drift int"
+    return _ordered_over(df, key, order_col, cols, replay, ddl)
+
+
 def score_series(
     pdf: pd.DataFrame,
     value_col: str = "sum_n_tok",
@@ -123,19 +167,11 @@ def ewma_over(
     one sorted Arrow batch per key; at scale keys are sources/types whose
     series length is bounded by the time range, not the raw row count."""
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order_col, kind="mergesort")
-        x = pdf[value].to_numpy(dtype=np.float64)
-        return pd.DataFrame(
-            {
-                key: pdf[key].to_numpy(),
-                order_col: pdf[order_col].to_numpy(),
-                "ewma": np.round(ewma(x, lam), 6),
-            }
-        )
+    def replay(pdf: pd.DataFrame, out: pd.DataFrame) -> pd.DataFrame:
+        out["ewma"] = np.round(ewma(pdf[value].to_numpy(dtype=np.float64), lam), 6)
+        return out
 
-    out_schema = f"{key} string, {order_col} long, ewma double"
-    return df.select(key, order_col, value).groupBy(key).applyInPandas(fn, schema=out_schema)
+    return _ordered_over(df, key, order_col, [value], replay, "ewma double")
 
 
 def seasonal_band_outliers(
@@ -213,11 +249,9 @@ def ssa_outlier_over(
     points emit NaN scores (warm-up semantics, like the online detectors)."""
     w = window
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order_col, kind="mergesort")
+    def replay(pdf: pd.DataFrame, out: pd.DataFrame) -> pd.DataFrame:
         x = pdf[value].to_numpy(dtype=np.float64)
         n = len(x)
-        out = pd.DataFrame({key: pdf[key].to_numpy(), order_col: pdf[order_col].to_numpy()})
         if n < w + 1:
             out["recon"] = np.nan
             out["ssa_score"] = np.nan
@@ -243,8 +277,8 @@ def ssa_outlier_over(
         out["is_outlier"] = (e > thr).astype(np.int32)
         return out
 
-    schema = f"{key} string, {order_col} long, recon double, ssa_score double, is_outlier int"
-    return df.select(key, order_col, value).groupBy(key).applyInPandas(fn, schema=schema)
+    ddl = "recon double, ssa_score double, is_outlier int"
+    return _ordered_over(df, key, order_col, [value], replay, ddl)
 
 
 def trend_band_outliers(
@@ -362,30 +396,18 @@ def lsdd_online_over(
     ordered stream."""
     from ..functions.lsdd import OnlineLSDD
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order_col, kind="mergesort")
-        k = pdf[key].iloc[0]
+    def fit_score(k, pdf: pd.DataFrame):
         x = pdf[value_cols].to_numpy(dtype=np.float64)
-        n = len(x)
-        out = pd.DataFrame({key: pdf[key].to_numpy(), order_col: pdf[order_col].to_numpy()})
-        if n <= n_ref + 2 * window_size:
-            out["lsdd_stat"] = np.nan
-            out["lsdd_threshold"] = np.nan
-            out["lsdd_is_drift"] = np.int32(0)
-            return out
+        if len(x) <= n_ref + 2 * window_size:
+            return None
         det = OnlineLSDD.fit(
             x[:n_ref], ert=ert, window_size=window_size,
             n_bootstraps=n_bootstraps, seed=source_seed(str(k), base_seed),
         )
         stats, thr, drift, _ = det.score_stream(x[n_ref:])
-        pad = np.full(n_ref, np.nan)
-        out["lsdd_stat"] = np.concatenate([pad, np.round(stats, 9)])
-        out["lsdd_threshold"] = np.concatenate([pad, np.round(thr, 9)])
-        out["lsdd_is_drift"] = np.concatenate([np.zeros(n_ref, dtype=np.int32), drift]).astype(np.int32)
-        return out
+        return np.round(stats, 9)[:, None], np.round(thr, 9), drift
 
-    schema = f"{key} string, {order_col} long, lsdd_stat double, lsdd_threshold double, lsdd_is_drift int"
-    return df.select(key, order_col, *value_cols).groupBy(key).applyInPandas(fn, schema=schema)
+    return _head_fit_over(df, key, order_col, value_cols, "lsdd", (window_size,), fit_score)
 
 
 def ssa_outlier_hash_over(
@@ -407,8 +429,6 @@ def ssa_outlier_hash_over(
     Plan: per-key lead/lag windows (the one semantic shuffle), exact DECIMAL
     pair moments broadcast back per key, whole-stage-codegen scoring — zero
     Python stages."""
-    from pyspark.sql import Window
-
     w0 = Window.partitionBy(key).orderBy(order_col)
     base = df.select(
         F.col(key), F.col(order_col), F.col(value).cast("double").alias("x")
@@ -486,8 +506,6 @@ def lsdd_online_stats_over(
     both engines), one sliding-window sum, and two broadcast joins of tiny
     per-key relations. Whole-stage codegen end to end — at 10^12 rows the
     only shuffle is the per-key ordering the semantics require."""
-    from pyspark.sql import Window
-
     two_sig2 = 2.0 * sigma * sigma
     four_sig2 = 4.0 * sigma * sigma
     a = 1.0 + lam
@@ -572,8 +590,6 @@ def mahalanobis_online_stats_over(
 
     Scale shape: one per-key ordered window pass (the only shuffle), then
     whole-stage-codegen column math."""
-    from pyspark.sql import Window
-
     x, y = value_cols
     q = float(quant)
     w0 = Window.partitionBy(key).orderBy(order_col)
@@ -633,31 +649,17 @@ def mahalanobis_online_over(
     group's scores (``od/mahalanobis.py:178-206 infer_threshold`` semantics)."""
     from ..functions.mahalanobis import OnlineMahalanobis
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order_col, kind="mergesort")
+    def replay(pdf: pd.DataFrame, out: pd.DataFrame) -> pd.DataFrame:
         x = pdf[value_cols].to_numpy(dtype=np.float64)
         det = OnlineMahalanobis(n_components=n_components)
         scores = det.score_stream(x, batch_size=batch_size)
         thr = float(np.percentile(scores, threshold_perc)) if len(scores) else np.nan
-        return pd.DataFrame(
-            {
-                key: pdf[key].to_numpy(),
-                order_col: pdf[order_col].to_numpy(),
-                "maha_score": np.round(scores, 6),
-                "is_outlier": (scores > thr).astype(np.int32),
-            }
-        )
+        out["maha_score"] = np.round(scores, 6)
+        out["is_outlier"] = (scores > thr).astype(np.int32)
+        return out
 
-    schema = f"{key} string, {order_col} long, maha_score double, is_outlier int"
-    return df.select(key, order_col, *value_cols).groupBy(key).applyInPandas(fn, schema=schema)
-
-
-def _window_stat_cols(prefix: str, window_sizes: tuple[int, ...]) -> list[str]:
-    """Per-window stat column names: ``{prefix}_stat`` for a single window
-    (back-compat), ``{prefix}_stat_w{ws}`` each for multiple windows."""
-    if len(window_sizes) == 1:
-        return [f"{prefix}_stat"]
-    return [f"{prefix}_stat_w{w}" for w in window_sizes]
+    ddl = "maha_score double, is_outlier int"
+    return _ordered_over(df, key, order_col, value_cols, replay, ddl)
 
 
 def fet_online_over(
@@ -681,35 +683,18 @@ def fet_online_over(
     from ..functions.fet import OnlineFET
 
     window_sizes = tuple(int(w) for w in window_sizes)
-    stat_cols = _window_stat_cols("fet", window_sizes)
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order_col, kind="mergesort")
-        k = pdf[key].iloc[0]
+    def fit_score(k, pdf: pd.DataFrame):
         bits = pdf[bit_col].to_numpy(dtype=np.int64)
-        n = len(bits)
-        out = pd.DataFrame({key: pdf[key].to_numpy(), order_col: pdf[order_col].to_numpy()})
-        if n <= n_ref + max(window_sizes) or not 0 < bits[:n_ref].sum() < n_ref:
-            for c in stat_cols:
-                out[c] = np.nan
-            out["fet_threshold"] = np.nan
-            out["fet_is_drift"] = np.int32(0)
-            return out
+        if len(bits) <= n_ref + max(window_sizes) or not 0 < bits[:n_ref].sum() < n_ref:
+            return None
         det = OnlineFET.fit(
             bits[:n_ref], ert=ert, window_sizes=window_sizes,
             n_bootstraps=n_bootstraps, seed=source_seed(str(k), base_seed),
         )
-        stats, thr, drift, _ = det.score_stream(bits[n_ref:])
-        pad = np.full(n_ref, np.nan)
-        for j, c in enumerate(stat_cols):
-            out[c] = np.concatenate([pad, stats[:, j]])
-        out["fet_threshold"] = np.concatenate([pad, thr])
-        out["fet_is_drift"] = np.concatenate([np.zeros(n_ref, dtype=np.int32), drift]).astype(np.int32)
-        return out
+        return det.score_stream(bits[n_ref:])[:3]
 
-    stat_schema = ", ".join(f"{c} double" for c in stat_cols)
-    schema = f"{key} string, {order_col} long, {stat_schema}, fet_threshold double, fet_is_drift int"
-    return df.select(key, order_col, bit_col).groupBy(key).applyInPandas(fn, schema=schema)
+    return _head_fit_over(df, key, order_col, [bit_col], "fet", window_sizes, fit_score)
 
 
 def cvm_online_over(
@@ -732,37 +717,21 @@ def cvm_online_over(
     from ..functions.cvm import OnlineCVM, fit_thresholds
 
     window_sizes = tuple(int(w) for w in window_sizes)
-    stat_cols = _window_stat_cols("cvm", window_sizes)
     shared_thresholds = fit_thresholds(
         n_ref, window_sizes, ert, n_bootstraps=n_bootstraps, seed=base_seed
     )
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order_col, kind="mergesort")
+    def fit_score(_, pdf: pd.DataFrame):
         x = pdf[value].to_numpy(dtype=np.float64)
-        n = len(x)
-        out = pd.DataFrame({key: pdf[key].to_numpy(), order_col: pdf[order_col].to_numpy()})
-        if n <= n_ref + max(window_sizes):
-            for c in stat_cols:
-                out[c] = np.nan
-            out["cvm_threshold"] = np.nan
-            out["cvm_is_drift"] = np.int32(0)
-            return out
+        if len(x) <= n_ref + max(window_sizes):
+            return None
         det = OnlineCVM.fit(
             x[:n_ref], ert=ert, window_sizes=window_sizes,
             thresholds=shared_thresholds,
         )
-        stats, thr, drift, _ = det.score_stream(x[n_ref:])
-        pad = np.full(n_ref, np.nan)
-        for j, c in enumerate(stat_cols):
-            out[c] = np.concatenate([pad, stats[:, j]])
-        out["cvm_threshold"] = np.concatenate([pad, thr])
-        out["cvm_is_drift"] = np.concatenate([np.zeros(n_ref, dtype=np.int32), drift]).astype(np.int32)
-        return out
+        return det.score_stream(x[n_ref:])[:3]
 
-    stat_schema = ", ".join(f"{c} double" for c in stat_cols)
-    schema = f"{key} string, {order_col} long, {stat_schema}, cvm_threshold double, cvm_is_drift int"
-    return df.select(key, order_col, value).groupBy(key).applyInPandas(fn, schema=schema)
+    return _head_fit_over(df, key, order_col, [value], "cvm", window_sizes, fit_score)
 
 
 def mmd_online_stats_over(
@@ -800,15 +769,11 @@ def mmd_online_stats_over(
         )
     two_sig2 = 2.0 * sigma * sigma
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order_col, kind="mergesort")
+    def replay(pdf: pd.DataFrame, out: pd.DataFrame) -> pd.DataFrame:
         x = pdf[value].to_numpy(dtype=np.float64)
         n = len(x)
         if n <= n_ref + w:
-            return pd.DataFrame(
-                {key: pdf[key].to_numpy()[:0], order_col: pdf[order_col].to_numpy()[:0],
-                 "mmd_stat": np.zeros(0)}
-            )
+            return out[:0].assign(mmd_stat=np.zeros(0))
         sub, init, stream = x[:rw], x[rw:n_ref], x[n_ref:]
         m = stream.shape[0]
         # k_xx over the sub-ref, zero-diag mean
@@ -828,16 +793,9 @@ def mmd_online_stats_over(
             cd = np.concatenate([[0.0], np.cumsum(diag)])
             yy += 2.0 * (cd[w - d :] - cd[: -(w - d) or None])[1 : m + 1]
         stats = k_xx_sub + yy / (w * (w - 1)) - 2.0 * xy
-        return pd.DataFrame(
-            {
-                key: pdf[key].to_numpy()[n_ref:],
-                order_col: pdf[order_col].to_numpy()[n_ref:],
-                "mmd_stat": np.round(stats, 6) + 0.0,
-            }
-        )
+        return out[n_ref:].assign(mmd_stat=np.round(stats, 6) + 0.0)
 
-    schema = f"{key} string, {order_col} long, mmd_stat double"
-    return df.select(key, order_col, value).groupBy(key).applyInPandas(fn, schema=schema)
+    return _ordered_over(df, key, order_col, [value], replay, "mmd_stat double")
 
 
 def score_rollup(
@@ -897,6 +855,18 @@ def ssa_power_layers(w: int, n_iter: int) -> list[list[tuple[str, str]]]:
     return groups
 
 
+def _lag_windows(df: DataFrame, key: str, order_col: str, value: str, w: int) -> DataFrame:
+    """``(key, order_col, x0..x{w-1})``: each row's lag-``w`` trajectory
+    window, built with ``lead`` (NULL past the end of the key's series)."""
+    w0 = Window.partitionBy(key).orderBy(order_col)
+    base = df.select(
+        F.col(key), F.col(order_col), F.col(value).cast("double").alias("x0")
+    )
+    for i in range(1, w):
+        base = base.withColumn(f"x{i}", F.lead("x0", i).over(w0))
+    return base
+
+
 def ssa_wfeat_par(
     df: DataFrame,
     key: str,
@@ -910,14 +880,7 @@ def ssa_wfeat_par(
     DECIMAL moments + shared power-method layers). Split out so the
     streaming twin can collect the SAME JVM-computed doubles into its
     closure (fit-then-stream lifecycle, ``cd/base_online.py``)."""
-    from pyspark.sql import Window
-
-    w0 = Window.partitionBy(key).orderBy(order_col)
-    base = df.select(
-        F.col(key), F.col(order_col), F.col(value).cast("double").alias("x0")
-    )
-    for i in range(1, w):
-        base = base.withColumn(f"x{i}", F.lead("x0", i).over(w0))
+    base = _lag_windows(df, key, order_col, value, w)
     full = base.where(F.col(f"x{w - 1}").isNotNull())
     dec = [F.col(f"x{i}").cast("decimal(18,6)") for i in range(w)]
     aggs = [F.count(F.lit(1)).cast("double").alias("n")]
@@ -958,14 +921,7 @@ def ssa_outlier_wfeat_over(
 
     Plan shape: one per-key window shuffle (lead/lag), one tiny moment
     aggregate broadcast back, whole-stage-codegen scoring — zero Python."""
-    from pyspark.sql import Window
-
-    w0 = Window.partitionBy(key).orderBy(order_col)
-    base = df.select(
-        F.col(key), F.col(order_col), F.col(value).cast("double").alias("x0")
-    )
-    for i in range(1, w):
-        base = base.withColumn(f"x{i}", F.lead("x0", i).over(w0))
+    base = _lag_windows(df, key, order_col, value, w)
     par = ssa_wfeat_par(df, key, order_col, value, w, n_iter)
 
     proj = " + ".join(f"x{i}*v{i}" for i in range(w))

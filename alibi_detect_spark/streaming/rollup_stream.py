@@ -1,4 +1,4 @@
-"""Streaming tier rollup + stateful EWMA (Structured Streaming).
+"""Streaming tier rollup + the stateful streaming detector twins.
 
 Late data: the reference assumes a strictly ordered stream and has no late
 handling (SURVEY §2.6); here the watermark makes that contract explicit —
@@ -6,9 +6,18 @@ rows later than ``watermark_delay`` are dropped, and a (source, bucket) row
 is emitted exactly once when its window closes. The checkpoint directory
 carries all rollup state, so a killed job resumes mid-stream with no
 recomputation and no duplicates (exactly-once file sink).
+
+The nine stateful twins share one per-source scaffold, :func:`_per_source`,
+and its drop contract: a row at or behind its source's high-water mark (the
+last ``bucket_ts`` folded into the state) is dropped, since replaying it would
+corrupt the carried state, and a twin fitted batch-side drops every row of a
+source it has no detector for. Each drop logs a WARNING naming the twin and
+the source (executor log); no row is dropped without one.
 """
 
 from __future__ import annotations
+
+import logging
 
 import numpy as np
 import pandas as pd
@@ -24,6 +33,8 @@ from pyspark.sql.types import (
 )
 
 from ..schemas import TIER_SECONDS
+
+_log = logging.getLogger(__name__)
 
 
 def stream_rollup(
@@ -94,22 +105,103 @@ def run_stream_rollup_once(
     q.awaitTermination()
 
 
-MMD_OUT_SCHEMA = StructType(
-    [
-        StructField("source", StringType()),
-        StructField("bucket_ts", LongType()),
-        StructField("mmd_stat", DoubleType()),
-        StructField("mmd_threshold", DoubleType()),
-        StructField("mmd_is_drift", LongType()),
-    ]
-)
-MMD_STATE_SCHEMA = StructType(
-    [
-        StructField("t", LongType()),
-        StructField("window_flat", ArrayType(DoubleType())),
-        StructField("last_ts", LongType()),
-    ]
-)
+def _out(**cols) -> StructType:
+    """A twin's output schema: ``source``, ``bucket_ts``, then ``cols``."""
+    return StructType(
+        [StructField("source", StringType()), StructField("bucket_ts", LongType())]
+        + [StructField(name, t) for name, t in cols.items()]
+    )
+
+
+def _state(**carry) -> StructType:
+    """A twin's state schema: its carry, then the ``last_ts`` high-water mark
+    that :func:`_per_source` owns."""
+    return StructType(
+        [StructField(name, t) for name, t in carry.items()] + [StructField("last_ts", LongType())]
+    )
+
+
+def _per_source(
+    rollup: DataFrame, name: str, out_schema: StructType, state_schema: StructType,
+    init: tuple, step, detectors: dict | None = None,
+) -> DataFrame:
+    """The ``applyInPandasWithState`` scaffold of every stateful twin, keyed
+    by ``source``. Per micro-batch and source: look up the fitted detector
+    (twins with ``detectors``), decode the state or start from ``init``,
+    stable-sort the rows by ``bucket_ts``, drop (and log) rows at or behind
+    the high-water mark (the state's LAST field), then call ``step(det, rows,
+    carry) -> (columns | None, carry)``, ``carry`` being the state without
+    the high-water mark, which the scaffold advances itself."""
+
+    def fn(key, pdf_iter, state):
+        (source,) = key
+        det = None if detectors is None else detectors.get(source)
+        if det is None and detectors is not None:
+            # pdf_iter stays untouched: an unfitted source costs no Arrow
+            # decode, but a source appearing mid-stream is still visible
+            _log.warning(
+                "%s: source %r has no fitted detector — dropping its rows; re-fit to include it",
+                name, source,
+            )
+            return
+        *carry, last_ts = tuple(state.get) if state.exists else init
+        # gather ALL Arrow chunks of this group's micro-batch before sorting:
+        # chunk arrival order is nondeterministic (shuffle fetch), and a
+        # per-chunk last_ts filter would silently drop earlier-timestamped
+        # rows from later chunks, corrupting the carried state
+        chunks = [p for p in pdf_iter if len(p)]
+        if not chunks:
+            return
+        rows = pd.concat(chunks).sort_values("bucket_ts", kind="mergesort")
+        late = rows["bucket_ts"].to_numpy() <= last_ts
+        if late.any():
+            _log.warning(
+                "%s: source %r dropped %d late row(s) at or behind bucket_ts=%d",
+                name, source, int(late.sum()), last_ts,
+            )
+            rows = rows[~late]
+        if not len(rows):
+            return
+        cols, carry = step(det, rows, tuple(carry))
+        if cols is not None:
+            yield pd.DataFrame({"source": source, **cols})
+        state.update((*carry, int(rows["bucket_ts"].iloc[-1])))
+
+    return rollup.groupBy("source").applyInPandasWithState(
+        fn, outputStructType=out_schema, stateStructType=state_schema,
+        outputMode="append", timeoutConf="NoTimeout",
+    )
+
+
+def _drift_cols(rows: pd.DataFrame, prefix: str, stat: str, stats, thr, drift) -> dict:
+    """Output columns of the thresholded drift twins (MMD, CVM, FET, LSDD)."""
+    return {
+        "bucket_ts": rows["bucket_ts"].to_numpy(dtype=np.int64),
+        f"{prefix}_{stat}": stats,
+        f"{prefix}_threshold": thr,
+        f"{prefix}_is_drift": drift.astype(np.int64),
+    }
+
+
+def _fifo_window_step(value_cols: list[str], prefix: str):
+    """Step of the FIFO-test-window twins (online MMD and LSDD): the carry is
+    (raw time t, flattened window), ``None`` window = the fitted initial one."""
+
+    def step(det, rows, carry):
+        t, flat = carry
+        st = det.initial_state()
+        if flat is not None:
+            st.t, st.test_window = int(t), np.asarray(flat, dtype=np.float64).reshape(det.window_size, -1)
+        x = rows[value_cols].to_numpy(dtype=np.float64)
+        stats, thr, drift, st = det.score_stream(x, st)
+        cols = _drift_cols(rows, prefix, "stat", stats, thr, drift)
+        return cols, (st.t, [float(v) for v in st.test_window.ravel()])
+
+    return step
+
+
+MMD_OUT_SCHEMA = _out(mmd_stat=DoubleType(), mmd_threshold=DoubleType(), mmd_is_drift=LongType())
+MMD_STATE_SCHEMA = _state(t=LongType(), window_flat=ArrayType(DoubleType()))
 
 
 def mmd_stream(
@@ -124,64 +216,14 @@ def mmd_stream(
     ``cd/base_online.py``); the state store carries (t, FIFO test window) per
     source, so trajectories bit-match the batch replay across micro-batches
     and restarts."""
-    import numpy as np
-
-    from ..functions.mmd import OnlineMMDState
-
-    def fn(key, pdf_iter, state):
-        (source,) = key
-        det = detectors.get(source)
-        if det is None:
-            return
-        if state.exists:
-            t, flat, last_ts = state.get
-            st = OnlineMMDState(t=int(t), test_window=np.asarray(flat, dtype=np.float64).reshape(det.window_size, -1))
-        else:
-            st, last_ts = det.initial_state(), -1
-        # gather ALL Arrow chunks of this group's micro-batch before sorting:
-        # chunk arrival order is nondeterministic (shuffle fetch), and a
-        # per-chunk last_ts filter would silently drop earlier-timestamped
-        # rows from later chunks, corrupting the carried state
-        chunks = [p for p in pdf_iter if len(p)]
-        whole = pd.concat(chunks) if chunks else None
-        for pdf in ([whole] if whole is not None else []):
-            pdf = pdf.sort_values("bucket_ts", kind="mergesort")
-            pdf = pdf[pdf["bucket_ts"] > last_ts]
-            if not len(pdf):
-                continue
-            x = pdf[value_col].to_numpy(dtype=np.float64)[:, None]
-            stats, thr, drift, st = det.score_stream(x, st)
-            last_ts = int(pdf["bucket_ts"].iloc[-1])
-            yield pd.DataFrame(
-                {
-                    "source": source,
-                    "bucket_ts": pdf["bucket_ts"].to_numpy(dtype=np.int64),
-                    "mmd_stat": stats,
-                    "mmd_threshold": thr,
-                    "mmd_is_drift": drift.astype(np.int64),
-                }
-            )
-        state.update((st.t, [float(v) for v in st.test_window.ravel()], last_ts))
-
-    return rollup.groupBy("source").applyInPandasWithState(
-        fn,
-        outputStructType=MMD_OUT_SCHEMA,
-        stateStructType=MMD_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf="NoTimeout",
+    step = _fifo_window_step([value_col], "mmd")
+    return _per_source(
+        rollup, "mmd_stream", MMD_OUT_SCHEMA, MMD_STATE_SCHEMA, (0, None, -1), step, detectors
     )
 
 
-EWMA_OUT_SCHEMA = StructType(
-    [
-        StructField("source", StringType()),
-        StructField("bucket_ts", LongType()),
-        StructField("ewma", DoubleType()),
-    ]
-)
-EWMA_STATE_SCHEMA = StructType(
-    [StructField("carry", DoubleType()), StructField("last_ts", LongType())]
-)
+EWMA_OUT_SCHEMA = _out(ewma=DoubleType())
+EWMA_STATE_SCHEMA = _state(carry=DoubleType())
 
 
 def ewma_stream(
@@ -196,61 +238,18 @@ def ewma_stream(
     watermark-ordered)."""
     from ..functions.ewma import ewma
 
-    def fn(key, pdf_iter, state):
-        (source,) = key
-        if state.exists:
-            carry, last_ts = state.get
-        else:
-            carry, last_ts = None, -1
-        # gather ALL Arrow chunks of this group's micro-batch before sorting:
-        # chunk arrival order is nondeterministic (shuffle fetch), and a
-        # per-chunk last_ts filter would silently drop earlier-timestamped
-        # rows from later chunks, corrupting the carried state
-        chunks = [p for p in pdf_iter if len(p)]
-        whole = pd.concat(chunks) if chunks else None
-        for pdf in ([whole] if whole is not None else []):
-            pdf = pdf.sort_values("bucket_ts", kind="mergesort")
-            pdf = pdf[pdf["bucket_ts"] > last_ts]
-            if not len(pdf):
-                continue
-            x = pdf[value_col].to_numpy(dtype=np.float64)
-            out = ewma(x, lam, carry=carry)
-            carry = float(out[-1])
-            last_ts = int(pdf["bucket_ts"].iloc[-1])
-            yield pd.DataFrame(
-                {
-                    "source": source,
-                    "bucket_ts": pdf["bucket_ts"].to_numpy(dtype=np.int64),
-                    "ewma": out,
-                }
-            )
-        state.update((carry if carry is not None else float("nan"), last_ts))
+    def step(_, rows, carry):
+        out = ewma(rows[value_col].to_numpy(dtype=np.float64), lam, carry=carry[0])
+        cols = {"bucket_ts": rows["bucket_ts"].to_numpy(dtype=np.int64), "ewma": out}
+        return cols, (float(out[-1]),)
 
-    return rollup.groupBy("source").applyInPandasWithState(
-        fn,
-        outputStructType=EWMA_OUT_SCHEMA,
-        stateStructType=EWMA_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf="NoTimeout",
-    )
+    return _per_source(rollup, "ewma_stream", EWMA_OUT_SCHEMA, EWMA_STATE_SCHEMA, (None, -1), step)
 
 
-CVM_OUT_SCHEMA = StructType(
-    [
-        StructField("source", StringType()),
-        StructField("bucket_ts", LongType()),
-        StructField("cvm_stats", ArrayType(DoubleType())),
-        StructField("cvm_threshold", DoubleType()),
-        StructField("cvm_is_drift", LongType()),
-    ]
+CVM_OUT_SCHEMA = _out(
+    cvm_stats=ArrayType(DoubleType()), cvm_threshold=DoubleType(), cvm_is_drift=LongType()
 )
-CVM_STATE_SCHEMA = StructType(
-    [
-        StructField("t", LongType()),
-        StructField("tail", ArrayType(DoubleType())),
-        StructField("last_ts", LongType()),
-    ]
-)
+CVM_STATE_SCHEMA = _state(t=LongType(), tail=ArrayType(DoubleType()))
 
 
 def cvm_stream(rollup: DataFrame, detectors: dict, value_col: str = "sum_n_tok") -> DataFrame:
@@ -260,147 +259,51 @@ def cvm_stream(rollup: DataFrame, detectors: dict, value_col: str = "sum_n_tok")
     closure; the state store carries (raw time t, the last ``max_ws−1``
     stream points) per source. Because the CVM window counts are integers,
     chunked micro-batch scoring reproduces the batch replay bit-for-bit."""
-    import numpy as np
 
-    def fn(key, pdf_iter, state):
-        (source,) = key
-        det = detectors.get(source)
-        if det is None:
-            return
-        if state.exists:
-            t0, tail, last_ts = state.get
-            warm = np.asarray(tail, dtype=np.float64)
-        else:
-            t0, warm, last_ts = 0, None, -1
-        # gather ALL Arrow chunks of this group's micro-batch before sorting:
-        # chunk arrival order is nondeterministic (shuffle fetch), and a
-        # per-chunk last_ts filter would silently drop earlier-timestamped
-        # rows from later chunks, corrupting the carried state
-        chunks = [p for p in pdf_iter if len(p)]
-        whole = pd.concat(chunks) if chunks else None
-        for pdf in ([whole] if whole is not None else []):
-            pdf = pdf.sort_values("bucket_ts", kind="mergesort")
-            pdf = pdf[pdf["bucket_ts"] > last_ts]
-            if not len(pdf):
-                continue
-            x = pdf[value_col].to_numpy(dtype=np.float64)
-            stats, thr, drift, carry = det.score_stream(x, t0=int(t0), warm=warm)
-            t0, warm = carry["t"], carry["tail"]
-            last_ts = int(pdf["bucket_ts"].iloc[-1])
-            yield pd.DataFrame(
-                {
-                    "source": source,
-                    "bucket_ts": pdf["bucket_ts"].to_numpy(dtype=np.int64),
-                    "cvm_stats": [list(row) for row in stats],
-                    "cvm_threshold": thr,
-                    "cvm_is_drift": drift.astype(np.int64),
-                }
-            )
-        state.update((int(t0), [float(v) for v in (warm if warm is not None else [])], last_ts))
+    def step(det, rows, carry):
+        t0, tail = carry
+        x = rows[value_col].to_numpy(dtype=np.float64)
+        stats, thr, drift, c = det.score_stream(x, t0=int(t0), warm=np.asarray(tail, dtype=np.float64))
+        cols = _drift_cols(rows, "cvm", "stats", [list(row) for row in stats], thr, drift)
+        return cols, (int(c["t"]), [float(v) for v in c["tail"]])
 
-    return rollup.groupBy("source").applyInPandasWithState(
-        fn,
-        outputStructType=CVM_OUT_SCHEMA,
-        stateStructType=CVM_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf="NoTimeout",
+    return _per_source(
+        rollup, "cvm_stream", CVM_OUT_SCHEMA, CVM_STATE_SCHEMA, (0, [], -1), step, detectors
     )
 
 
-FET_OUT_SCHEMA = StructType(
-    [
-        StructField("source", StringType()),
-        StructField("bucket_ts", LongType()),
-        StructField("fet_stats", ArrayType(DoubleType())),
-        StructField("fet_threshold", DoubleType()),
-        StructField("fet_is_drift", LongType()),
-    ]
+FET_OUT_SCHEMA = _out(
+    fet_stats=ArrayType(DoubleType()), fet_threshold=DoubleType(), fet_is_drift=LongType()
 )
-FET_STATE_SCHEMA = StructType(
-    [
-        StructField("t", LongType()),
-        StructField("ewma", ArrayType(DoubleType())),
-        StructField("tail", ArrayType(LongType())),
-        StructField("last_ts", LongType()),
-    ]
-)
+FET_STATE_SCHEMA = _state(t=LongType(), ewma=ArrayType(DoubleType()), tail=ArrayType(LongType()))
 
 
 def fet_stream(rollup: DataFrame, detectors: dict, bit_col: str = "bit") -> DataFrame:
     """Streaming online-FET drift (multi-window): state = (raw time, per-window
     EWMA carries, last ``max_ws−1`` bits). The EWMA recursion continues across
     micro-batches exactly, so trajectories bit-match the batch replay."""
-    import numpy as np
 
-    def fn(key, pdf_iter, state):
-        (source,) = key
-        det = detectors.get(source)
-        if det is None:
-            return
-        if state.exists:
-            t0, carry_e, tail, last_ts = state.get
-            carry = np.asarray(carry_e, dtype=np.float64) if len(carry_e) else None
-            warm = np.asarray(tail, dtype=np.int64)
-        else:
-            t0, carry, warm, last_ts = 0, None, None, -1
-        # gather ALL Arrow chunks of this group's micro-batch before sorting:
-        # chunk arrival order is nondeterministic (shuffle fetch), and a
-        # per-chunk last_ts filter would silently drop earlier-timestamped
-        # rows from later chunks, corrupting the carried state
-        chunks = [p for p in pdf_iter if len(p)]
-        whole = pd.concat(chunks) if chunks else None
-        for pdf in ([whole] if whole is not None else []):
-            pdf = pdf.sort_values("bucket_ts", kind="mergesort")
-            pdf = pdf[pdf["bucket_ts"] > last_ts]
-            if not len(pdf):
-                continue
-            bits = pdf[bit_col].to_numpy(dtype=np.int64)
-            stats, thr, drift, c = det.score_stream(bits, t0=int(t0), carry=carry, warm=warm)
-            t0, carry, warm = c["t"], c["ewma"], c["tail"]
-            last_ts = int(pdf["bucket_ts"].iloc[-1])
-            yield pd.DataFrame(
-                {
-                    "source": source,
-                    "bucket_ts": pdf["bucket_ts"].to_numpy(dtype=np.int64),
-                    "fet_stats": [list(row) for row in stats],
-                    "fet_threshold": thr,
-                    "fet_is_drift": drift.astype(np.int64),
-                }
-            )
-        state.update(
-            (
-                int(t0),
-                [float(v) for v in (carry if carry is not None else [])],
-                [int(v) for v in (warm if warm is not None else [])],
-                last_ts,
-            )
+    def step(det, rows, carry):
+        t0, ewma_c, tail = carry
+        bits = rows[bit_col].to_numpy(dtype=np.int64)
+        stats, thr, drift, c = det.score_stream(
+            bits,
+            t0=int(t0),
+            carry=np.asarray(ewma_c, dtype=np.float64) if len(ewma_c) else None,
+            warm=np.asarray(tail, dtype=np.int64),
         )
+        cols = _drift_cols(rows, "fet", "stats", [list(row) for row in stats], thr, drift)
+        return cols, (int(c["t"]), [float(v) for v in c["ewma"]], [int(v) for v in c["tail"]])
 
-    return rollup.groupBy("source").applyInPandasWithState(
-        fn,
-        outputStructType=FET_OUT_SCHEMA,
-        stateStructType=FET_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf="NoTimeout",
+    return _per_source(
+        rollup, "fet_stream", FET_OUT_SCHEMA, FET_STATE_SCHEMA, (0, [], [], -1), step, detectors
     )
 
 
-LSDD_OUT_SCHEMA = StructType(
-    [
-        StructField("source", StringType()),
-        StructField("bucket_ts", LongType()),
-        StructField("lsdd_stat", DoubleType()),
-        StructField("lsdd_threshold", DoubleType()),
-        StructField("lsdd_is_drift", LongType()),
-    ]
+LSDD_OUT_SCHEMA = _out(
+    lsdd_stat=DoubleType(), lsdd_threshold=DoubleType(), lsdd_is_drift=LongType()
 )
-LSDD_STATE_SCHEMA = StructType(
-    [
-        StructField("t", LongType()),
-        StructField("window_flat", ArrayType(DoubleType())),
-        StructField("last_ts", LongType()),
-    ]
-)
+LSDD_STATE_SCHEMA = _state(t=LongType(), window_flat=ArrayType(DoubleType()))
 
 
 def lsdd_stream(
@@ -410,72 +313,15 @@ def lsdd_stream(
     detectors fitted batch-side (kernel centers, λ-regularized H inverse,
     bootstrap thresholds), FIFO normalized test window carried in the state
     store — trajectories bit-match the batch replay across micro-batches."""
-    import numpy as np
-
-    from ..functions.lsdd import OnlineLSDDState
-
-    cols = value_cols or ["sum_n_tok"]
-
-    def fn(key, pdf_iter, state):
-        (source,) = key
-        det = detectors.get(source)
-        if det is None:
-            return
-        if state.exists:
-            t, flat, last_ts = state.get
-            st = OnlineLSDDState(
-                t=int(t),
-                test_window=np.asarray(flat, dtype=np.float64).reshape(det.window_size, -1),
-            )
-        else:
-            st, last_ts = det.initial_state(), -1
-        chunks = [p for p in pdf_iter if len(p)]
-        whole = pd.concat(chunks) if chunks else None
-        for pdf in ([whole] if whole is not None else []):
-            pdf = pdf.sort_values("bucket_ts", kind="mergesort")
-            pdf = pdf[pdf["bucket_ts"] > last_ts]
-            if not len(pdf):
-                continue
-            x = pdf[cols].to_numpy(dtype=np.float64)
-            stats, thr, drift, st = det.score_stream(x, st)
-            last_ts = int(pdf["bucket_ts"].iloc[-1])
-            yield pd.DataFrame(
-                {
-                    "source": source,
-                    "bucket_ts": pdf["bucket_ts"].to_numpy(dtype=np.int64),
-                    "lsdd_stat": stats,
-                    "lsdd_threshold": thr,
-                    "lsdd_is_drift": drift.astype(np.int64),
-                }
-            )
-        state.update((st.t, [float(v) for v in st.test_window.ravel()], last_ts))
-
-    return rollup.groupBy("source").applyInPandasWithState(
-        fn,
-        outputStructType=LSDD_OUT_SCHEMA,
-        stateStructType=LSDD_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf="NoTimeout",
+    step = _fifo_window_step(value_cols or ["sum_n_tok"], "lsdd")
+    return _per_source(
+        rollup, "lsdd_stream", LSDD_OUT_SCHEMA, LSDD_STATE_SCHEMA, (0, None, -1), step, detectors
     )
 
 
-MAHA_OUT_SCHEMA = StructType(
-    [
-        StructField("source", StringType()),
-        StructField("bucket_ts", LongType()),
-        StructField("maha_score", DoubleType()),
-    ]
-)
-MAHA_STATE_SCHEMA = StructType(
-    [
-        StructField("n", LongType()),
-        StructField("sv", LongType()),
-        StructField("svv", LongType()),
-        StructField("su", LongType()),
-        StructField("suu", LongType()),
-        StructField("svu", LongType()),
-        StructField("last_ts", LongType()),
-    ]
+MAHA_OUT_SCHEMA = _out(maha_score=DoubleType())
+MAHA_STATE_SCHEMA = _state(
+    n=LongType(), sv=LongType(), svv=LongType(), su=LongType(), suu=LongType(), svu=LongType()
 )
 
 
@@ -497,108 +343,70 @@ def mahalanobis_stream(
     vcol, ucol = value_cols
     q = float(quant)
 
-    def fn(key, pdf_iter, state):
-        (source,) = key
-        if state.exists:
-            n0, sv, svv, su, suu, svu, last_ts = state.get
-        else:
-            n0, sv, svv, su, suu, svu, last_ts = 0, 0, 0, 0, 0, 0, -(2**62)
-        chunks = [p for p in pdf_iter if len(p)]
-        if chunks:
-            whole = pd.concat(chunks).sort_values("bucket_ts", kind="mergesort")
-            whole = whole[whole["bucket_ts"] > last_ts]
-            if len(whole):
-                v = whole[vcol].to_numpy(dtype=np.float64)
-                u = whole[ucol].to_numpy(dtype=np.float64)
-                vq = np.round(v * quant).astype(np.int64)
-                uq = np.round(u * quant).astype(np.int64)
+    def cum(base, arr):
+        # object dtype = arbitrary-precision Python ints: the second-moment
+        # cumsums overflow int64 for large values (the batch twin accumulates
+        # in DECIMAL(38,0)); then convert each exact integer to its nearest
+        # double — bit-identical to the batch's decimal→double cast, BEFORE
+        # any division (int/float true division is correctly rounded and
+        # would differ by 1 ulp)
+        c = np.concatenate([np.zeros(1, dtype=object), np.cumsum(arr)])[:-1]
+        exact = base + c
+        return exact, np.array([float(t) for t in exact], dtype=np.float64)
 
-                def cum(base, arr):
-                    # object dtype = arbitrary-precision Python ints: the
-                    # second-moment cumsums overflow int64 for large values
-                    # (the batch twin accumulates in DECIMAL(38,0)); then
-                    # convert each exact integer to its nearest double —
-                    # bit-identical to the batch's decimal→double cast,
-                    # BEFORE any division (int/float true division is
-                    # correctly rounded and would differ by 1 ulp)
-                    c = np.concatenate(
-                        [np.zeros(1, dtype=object), np.cumsum(arr.astype(object))]
-                    )[:-1]
-                    exact = base + c
-                    return exact, np.array([float(t) for t in exact], dtype=np.float64)
+    def step(_, rows, carry):
+        n0, sv, svv, su, suu, svu = carry
+        v = rows[vcol].to_numpy(dtype=np.float64)
+        u = rows[ucol].to_numpy(dtype=np.float64)
+        pv = np.round(v * quant).astype(np.int64).astype(object)
+        pu = np.round(u * quant).astype(np.int64).astype(object)
+        csv_i, csv = cum(sv, pv)
+        csvv_i, csvv = cum(svv, pv * pv)
+        csu_i, csu = cum(su, pu)
+        csuu_i, csuu = cum(suu, pu * pu)
+        csvu_i, csvu = cum(svu, pv * pu)
+        cn = n0 + np.arange(len(v), dtype=np.int64)
+        cond = cn >= warmup
+        with np.errstate(divide="ignore", invalid="ignore"):
+            nn = cn.astype(np.float64)
+            mv = csv / (nn * q)
+            mu = csu / (nn * q)
+            a = (csvv / (nn * q * q) - mv * mv) + var_eps
+            b = (csuu / (nn * q * q) - mu * mu) + var_eps
+            c = csvu / (nn * q * q) - mv * mu
+            det = a * b - c * c
+            dx = v - mv
+            dy = u - mu
+            d2 = (b * dx * dx - 2.0 * c * dx * dy + a * dy * dy) / det
+        sc = np.round(d2, 6) + 0.0
+        n0 = int(n0 + len(v))
+        sv = int(csv_i[-1] + pv[-1])
+        svv = int(csvv_i[-1] + pv[-1] * pv[-1])
+        su = int(csu_i[-1] + pu[-1])
+        suu = int(csuu_i[-1] + pu[-1] * pu[-1])
+        svu = int(csvu_i[-1] + pv[-1] * pu[-1])
+        if max(abs(svv), abs(suu), abs(svu)) >= 2**62:
+            raise OverflowError(
+                "mahalanobis_stream moment state exceeds int64 — lower "
+                "`quant` for this value scale (state carries exact "
+                "integers in a LongType store)"
+            )
+        cols = None
+        if cond.any():
+            cols = {
+                "bucket_ts": rows["bucket_ts"].to_numpy(dtype=np.int64)[cond],
+                "maha_score": sc[cond],
+            }
+        return cols, (n0, sv, svv, su, suu, svu)
 
-                pv = vq.astype(object)
-                pu = uq.astype(object)
-                csv_i, csv = cum(sv, pv)
-                csvv_i, csvv = cum(svv, pv * pv)
-                csu_i, csu = cum(su, pu)
-                csuu_i, csuu = cum(suu, pu * pu)
-                csvu_i, csvu = cum(svu, pv * pu)
-                cn = n0 + np.arange(len(v), dtype=np.int64)
-                cond = cn >= warmup
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    nn = cn.astype(np.float64)
-                    mv = csv / (nn * q)
-                    mu = csu / (nn * q)
-                    a = (csvv / (nn * q * q) - mv * mv) + var_eps
-                    b = (csuu / (nn * q * q) - mu * mu) + var_eps
-                    c = csvu / (nn * q * q) - mv * mu
-                    det = a * b - c * c
-                    dx = v - mv
-                    dy = u - mu
-                    d2 = (b * dx * dx - 2.0 * c * dx * dy + a * dy * dy) / det
-                sc = np.round(d2, 6) + 0.0
-                n0 = int(n0 + len(v))
-                sv = int(csv_i[-1] + pv[-1])
-                svv = int(csvv_i[-1] + pv[-1] * pv[-1])
-                su = int(csu_i[-1] + pu[-1])
-                suu = int(csuu_i[-1] + pu[-1] * pu[-1])
-                svu = int(csvu_i[-1] + pv[-1] * pu[-1])
-                if max(abs(svv), abs(suu), abs(svu)) >= 2**62:
-                    raise OverflowError(
-                        "mahalanobis_stream moment state exceeds int64 — lower "
-                        "`quant` for this value scale (state carries exact "
-                        "integers in a LongType store)"
-                    )
-                last_ts = int(whole["bucket_ts"].iloc[-1])
-                if cond.any():
-                    yield pd.DataFrame(
-                        {
-                            "source": source,
-                            "bucket_ts": whole["bucket_ts"].to_numpy(dtype=np.int64)[cond],
-                            "maha_score": sc[cond],
-                        }
-                    )
-        state.update((n0, sv, svv, su, suu, svu, last_ts))
-
-    return rollup.groupBy("source").applyInPandasWithState(
-        fn,
-        outputStructType=MAHA_OUT_SCHEMA,
-        stateStructType=MAHA_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf="NoTimeout",
-    )
+    init = (0, 0, 0, 0, 0, 0, -(2**62))
+    return _per_source(rollup, "mahalanobis_stream", MAHA_OUT_SCHEMA, MAHA_STATE_SCHEMA, init, step)
 
 
-LSDDH_OUT_SCHEMA = StructType(
-    [
-        StructField("source", StringType()),
-        StructField("bucket_ts", LongType()),
-        StructField("lsdd_stat", DoubleType()),
-    ]
-)
-LSDDH_STATE_SCHEMA = StructType(
-    [
-        StructField("n", LongType()),
-        StructField("c1", DoubleType()),
-        StructField("c2", DoubleType()),
-        StructField("sr1", LongType()),
-        StructField("sr2", LongType()),
-        StructField("tail1", ArrayType(LongType())),
-        StructField("tail2", ArrayType(LongType())),
-        StructField("pend", ArrayType(DoubleType())),
-        StructField("last_ts", LongType()),
-    ]
+LSDDH_OUT_SCHEMA = _out(lsdd_stat=DoubleType())
+LSDDH_STATE_SCHEMA = _state(
+    n=LongType(), c1=DoubleType(), c2=DoubleType(), sr1=LongType(), sr2=LongType(),
+    tail1=ArrayType(LongType()), tail2=ArrayType(LongType()), pend=ArrayType(DoubleType()),
 )
 
 
@@ -633,134 +441,94 @@ def lsdd_hash_stream(
         # keep=0 would slice h[-0:] = the WHOLE array, growing the state
         # store unboundedly (and a 1-point LSDD window is degenerate anyway)
         raise ValueError(f"window_size must be >= 2, got {window_size}")
-    two_sig2 = 2.0 * sigma * sigma
-    four_sig2 = 4.0 * sigma * sigma
-    a = 1.0 + lam
-    keep = window_size - 1
-
-    def fn(key, pdf_iter, state):
-        (source,) = key
-        if state.exists:
-            n0, c1, c2, sr1, sr2, tail1, tail2, pend, last_ts = state.get
-            tail1, tail2, pend = list(tail1), list(tail2), list(pend)
-        else:
-            n0, c1, c2 = 0, float("nan"), float("nan")
-            sr1, sr2, tail1, tail2, pend, last_ts = 0, 0, [], [], [], -(2**62)
-        chunks = [p for p in pdf_iter if len(p)]
-        if chunks:
-            whole = pd.concat(chunks).sort_values("bucket_ts", kind="mergesort")
-            whole = whole[whole["bucket_ts"] > last_ts]
-            if len(whole):
-                v = whole[value_col].to_numpy(dtype=np.float64)
-                ts = whole["bucket_ts"].to_numpy(dtype=np.int64)
-                last_ts = int(ts[-1])
-                # rows seen before the centers are fixed wait in `pend`
-                # (both centers come from the first two rows in order)
-                n_seen = n0 + len(pend)
-                if n_seen < 2:
-                    need = 2 - n_seen
-                    pend.extend(float(x) for x in v[:need])
-                    n_seen = n0 + len(pend)
-                    if n_seen < 2:
-                        state.update((n0, c1, c2, sr1, sr2, tail1, tail2, pend, last_ts))
-                        return
-                    c1, c2 = pend[0], pend[1]
-                    # reprocess the pended rows plus the rest of this batch;
-                    # pended rows are ref rows 1..2 — they never emit, so
-                    # their timestamps are placeholders
-                    v = np.concatenate([np.array(pend, dtype=np.float64), v[need:]])
-                    ts = np.concatenate([np.zeros(len(pend), dtype=np.int64), ts[need:]])
-                    pend = []
-                kq1 = np.round(np.exp(-((v - c1) * (v - c1)) / two_sig2) * quant).astype(np.int64)
-                kq2 = np.round(np.exp(-((v - c2) * (v - c2)) / two_sig2) * quant).astype(np.int64)
-                rn = n0 + np.arange(len(v), dtype=np.int64) + 1
-                refm = rn <= n_ref
-                sr1 = int(sr1 + kq1[refm].sum())
-                sr2 = int(sr2 + kq2[refm].sum())
-                sm = rn > n_ref
-                if sm.any():
-                    h1 = np.concatenate([np.array(tail1, dtype=np.int64), kq1[sm]])
-                    h2 = np.concatenate([np.array(tail2, dtype=np.int64), kq2[sm]])
-                    t0 = len(tail1)
-                    cs1 = np.concatenate([[0], np.cumsum(h1)])
-                    cs2 = np.concatenate([[0], np.cumsum(h2)])
-                    idx = t0 + np.arange(int(sm.sum()))
-                    full = idx >= window_size - 1
-                    if full.any():
-                        i = idx[full]
-                        w1 = (cs1[i + 1] - cs1[i + 1 - window_size]).astype(np.float64)
-                        w2 = (cs2[i + 1] - cs2[i + 1 - window_size]).astype(np.float64)
-                        e = float(np.exp(-((c1 - c2) * (c1 - c2)) / four_sig2))
-                        det = (a * a) - e * e
-                        b11 = a / det
-                        b12 = (-e) / det
-                        bh11 = b11 + b12 * e
-                        bh12 = b11 * e + b12
-                        bhb11 = bh11 * b11 + bh12 * b12
-                        bhb12 = bh11 * b12 + bh12 * b11
-                        m11 = 2.0 * b11 - bhb11
-                        m12 = 2.0 * b12 - bhb12
-                        hh1 = sr1 / (n_ref * float(quant)) - w1 / (window_size * float(quant))
-                        hh2 = sr2 / (n_ref * float(quant)) - w2 / (window_size * float(quant))
-                        stat = m11 * (hh1 * hh1 + hh2 * hh2) + 2.0 * m12 * hh1 * hh2
-                        out_ts = ts[sm][full]
-                        row = {
-                            "source": source,
-                            "bucket_ts": out_ts,
-                            "lsdd_stat": np.round(stat, 9) + 0.0,
-                        }
-                        if decision_thresholds is not None:
-                            # 1-based step since the first full window, from
-                            # the ABSOLUTE row number (the kq tail only holds
-                            # the last window_size-1 features, so positions
-                            # within this batch cannot index the thresholds)
-                            t_step = rn[sm][full] - n_ref - window_size + 1
-                            t_idx = np.minimum(t_step, window_size) - 1
-                            thr = np.asarray(decision_thresholds, dtype=np.float64)[t_idx]
-                            row["lsdd_threshold"] = thr
-                            row["lsdd_is_drift"] = (row["lsdd_stat"] > thr).astype(np.int32)
-                        yield pd.DataFrame(row)
-                    tail1 = [int(x) for x in h1[-keep:]]
-                    tail2 = [int(x) for x in h2[-keep:]]
-                n0 = int(rn[-1])
-        state.update((n0, c1, c2, sr1, sr2, tail1, tail2, pend, last_ts))
-
     out_schema = LSDDH_OUT_SCHEMA
     if decision_thresholds is not None:
         if len(decision_thresholds) < window_size:
             raise ValueError(
                 f"decision_thresholds needs >= window_size={window_size} entries"
             )
-        out_schema = StructType(
-            list(LSDDH_OUT_SCHEMA.fields)
-            + [
-                StructField("lsdd_threshold", DoubleType()),
-                StructField("lsdd_is_drift", IntegerType()),
-            ]
+        out_schema = _out(
+            lsdd_stat=DoubleType(), lsdd_threshold=DoubleType(), lsdd_is_drift=IntegerType()
         )
-    return rollup.groupBy("source").applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=LSDDH_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf="NoTimeout",
-    )
+    two_sig2 = 2.0 * sigma * sigma
+    four_sig2 = 4.0 * sigma * sigma
+    a = 1.0 + lam
+    keep = window_size - 1
+
+    def step(_, rows, carry):
+        n0, c1, c2, sr1, sr2, tail1, tail2, pend = carry
+        tail1, tail2, pend = list(tail1), list(tail2), list(pend)
+        v = rows[value_col].to_numpy(dtype=np.float64)
+        ts = rows["bucket_ts"].to_numpy(dtype=np.int64)
+        # rows seen before the centers are fixed wait in `pend`
+        # (both centers come from the first two rows in order)
+        n_seen = n0 + len(pend)
+        if n_seen < 2:
+            need = 2 - n_seen
+            pend.extend(float(x) for x in v[:need])
+            if n0 + len(pend) < 2:
+                return None, (n0, c1, c2, sr1, sr2, tail1, tail2, pend)
+            c1, c2 = pend[0], pend[1]
+            # reprocess the pended rows plus the rest of this batch; pended
+            # rows are ref rows 1..2 — they never emit, so their timestamps
+            # are placeholders
+            v = np.concatenate([np.array(pend, dtype=np.float64), v[need:]])
+            ts = np.concatenate([np.zeros(len(pend), dtype=np.int64), ts[need:]])
+            pend = []
+        kq1 = np.round(np.exp(-((v - c1) * (v - c1)) / two_sig2) * quant).astype(np.int64)
+        kq2 = np.round(np.exp(-((v - c2) * (v - c2)) / two_sig2) * quant).astype(np.int64)
+        rn = n0 + np.arange(len(v), dtype=np.int64) + 1
+        refm = rn <= n_ref
+        sr1 = int(sr1 + kq1[refm].sum())
+        sr2 = int(sr2 + kq2[refm].sum())
+        sm = rn > n_ref
+        cols = None
+        if sm.any():
+            h1 = np.concatenate([np.array(tail1, dtype=np.int64), kq1[sm]])
+            h2 = np.concatenate([np.array(tail2, dtype=np.int64), kq2[sm]])
+            cs1 = np.concatenate([[0], np.cumsum(h1)])
+            cs2 = np.concatenate([[0], np.cumsum(h2)])
+            idx = len(tail1) + np.arange(int(sm.sum()))
+            full = idx >= window_size - 1
+            if full.any():
+                i = idx[full]
+                w1 = (cs1[i + 1] - cs1[i + 1 - window_size]).astype(np.float64)
+                w2 = (cs2[i + 1] - cs2[i + 1 - window_size]).astype(np.float64)
+                e = float(np.exp(-((c1 - c2) * (c1 - c2)) / four_sig2))
+                det = (a * a) - e * e
+                b11 = a / det
+                b12 = (-e) / det
+                bh11 = b11 + b12 * e
+                bh12 = b11 * e + b12
+                bhb11 = bh11 * b11 + bh12 * b12
+                bhb12 = bh11 * b12 + bh12 * b11
+                m11 = 2.0 * b11 - bhb11
+                m12 = 2.0 * b12 - bhb12
+                hh1 = sr1 / (n_ref * float(quant)) - w1 / (window_size * float(quant))
+                hh2 = sr2 / (n_ref * float(quant)) - w2 / (window_size * float(quant))
+                stat = m11 * (hh1 * hh1 + hh2 * hh2) + 2.0 * m12 * hh1 * hh2
+                cols = {"bucket_ts": ts[sm][full], "lsdd_stat": np.round(stat, 9) + 0.0}
+                if decision_thresholds is not None:
+                    # 1-based step since the first full window, from the
+                    # ABSOLUTE row number (the kq tail only holds the last
+                    # window_size-1 features, so positions within this batch
+                    # cannot index the thresholds)
+                    t_step = rn[sm][full] - n_ref - window_size + 1
+                    t_idx = np.minimum(t_step, window_size) - 1
+                    thr = np.asarray(decision_thresholds, dtype=np.float64)[t_idx]
+                    cols["lsdd_threshold"] = thr
+                    cols["lsdd_is_drift"] = (cols["lsdd_stat"] > thr).astype(np.int32)
+            tail1 = [int(x) for x in h1[-keep:]]
+            tail2 = [int(x) for x in h2[-keep:]]
+        return cols, (int(rn[-1]), c1, c2, sr1, sr2, tail1, tail2, pend)
+
+    init = (0, float("nan"), float("nan"), 0, 0, [], [], [], -(2**62))
+    return _per_source(rollup, "lsdd_hash_stream", out_schema, LSDDH_STATE_SCHEMA, init, step)
 
 
-SR_OUT_SCHEMA = StructType(
-    [
-        StructField("source", StringType()),
-        StructField("bucket_ts", LongType()),
-        StructField("sr_score", DoubleType()),
-    ]
-)
-SR_STATE_SCHEMA = StructType(
-    [
-        StructField("halo", ArrayType(DoubleType())),
-        StructField("pend_v", ArrayType(DoubleType())),
-        StructField("pend_ts", ArrayType(LongType())),
-        StructField("last_ts", LongType()),
-    ]
+SR_OUT_SCHEMA = _out(sr_score=DoubleType())
+SR_STATE_SCHEMA = _state(
+    halo=ArrayType(DoubleType()), pend_v=ArrayType(DoubleType()), pend_ts=ArrayType(LongType())
 )
 
 
@@ -799,42 +567,24 @@ def sr_stream(
         raise ValueError(f"halo must be >= 0, got {halo}")
     srp = dict(sr_params or {})
 
-    def fn(key, pdf_iter, state):
-        (source,) = key
-        if state.exists:
-            h, pv, pts, last_ts = state.get
-            h, pv, pts = list(h), list(pv), list(pts)
-        else:
-            h, pv, pts, last_ts = [], [], [], -(2**62)
-        chunks = [p for p in pdf_iter if len(p)]
-        if chunks:
-            whole = pd.concat(chunks).sort_values("bucket_ts", kind="mergesort")
-            whole = whole[whole["bucket_ts"] > last_ts]
-            if len(whole):
-                pv.extend(float(v) for v in whole[value_col].to_numpy(dtype=np.float64))
-                pts.extend(int(t) for t in whole["bucket_ts"].to_numpy(dtype=np.int64))
-                last_ts = int(whole["bucket_ts"].iloc[-1])
-                while len(pv) >= chunk_size:
-                    chunk = np.array(pv[:chunk_size], dtype=np.float64)
-                    cts = np.array(pts[:chunk_size], dtype=np.int64)
-                    scores = sr_chunk_scores(
-                        np.array(h, dtype=np.float64), chunk, **srp
-                    )
-                    yield pd.DataFrame(
-                        {"source": source, "bucket_ts": cts, "sr_score": scores}
-                    )
-                    # h[-0:] would be the WHOLE history — guard halo=0
-                    h = (h + [float(v) for v in chunk])[-halo:] if halo > 0 else []
-                    pv, pts = pv[chunk_size:], pts[chunk_size:]
-        state.update((h, pv, pts, last_ts))
+    def step(_, rows, carry):
+        h, pv, pts = (list(f) for f in carry)
+        pv.extend(float(v) for v in rows[value_col].to_numpy(dtype=np.float64))
+        pts.extend(int(t) for t in rows["bucket_ts"].to_numpy(dtype=np.int64))
+        out_ts, out_sc = [], []
+        while len(pv) >= chunk_size:
+            chunk = np.array(pv[:chunk_size], dtype=np.float64)
+            out_ts.append(np.array(pts[:chunk_size], dtype=np.int64))
+            out_sc.append(sr_chunk_scores(np.array(h, dtype=np.float64), chunk, **srp))
+            # h[-0:] would be the WHOLE history — guard halo=0
+            h = (h + [float(v) for v in chunk])[-halo:] if halo > 0 else []
+            pv, pts = pv[chunk_size:], pts[chunk_size:]
+        cols = None
+        if out_ts:
+            cols = {"bucket_ts": np.concatenate(out_ts), "sr_score": np.concatenate(out_sc)}
+        return cols, (h, pv, pts)
 
-    return rollup.groupBy("source").applyInPandasWithState(
-        fn,
-        outputStructType=SR_OUT_SCHEMA,
-        stateStructType=SR_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf="NoTimeout",
-    )
+    return _per_source(rollup, "sr_stream", SR_OUT_SCHEMA, SR_STATE_SCHEMA, ([], [], [], -(2**62)), step)
 
 
 def dedup_stream(
@@ -871,20 +621,9 @@ def dedup_stream(
     )
 
 
-SSA_OUT_SCHEMA = StructType(
-    [
-        StructField("source", StringType()),
-        StructField("bucket_ts", LongType()),
-        StructField("ssa4_score", DoubleType()),
-    ]
-)
-SSA_STATE_SCHEMA = StructType(
-    [
-        StructField("n", LongType()),
-        StructField("xs_tail", ArrayType(DoubleType())),
-        StructField("ts_pend", ArrayType(LongType())),
-        StructField("last_ts", LongType()),
-    ]
+SSA_OUT_SCHEMA = _out(ssa4_score=DoubleType())
+SSA_STATE_SCHEMA = _state(
+    n=LongType(), xs_tail=ArrayType(DoubleType()), ts_pend=ArrayType(LongType())
 )
 
 
@@ -917,95 +656,49 @@ def ssa_stream(
         # Decimal(val) directly would flip ~1% of 6dp digits at 1e8 scale
         return float(Decimal(repr(float(val))).quantize(Decimal("0.000001"), ROUND_HALF_UP)) + 0.0
 
-    def fn(key, pdf_iter, state):
-        import logging
-
-        log = logging.getLogger("alibi_detect_spark.ssa_stream")
-        (source,) = key
-        v = vectors.get(source)
-        if v is None:
-            # unfitted source: emit nothing, but OBSERVABLY — a new source
-            # appearing mid-stream otherwise disappears without a trace
-            # (message lands in the executor stderr log)
-            n_rows = sum(len(p) for p in pdf_iter)
-            log.warning(
-                "ssa_stream: source %r has no fitted vectors — dropping %d "
-                "row(s); re-fit to include it", source, n_rows,
-            )
-            return
-        if state.exists:
-            n, xs_tail, ts_pend, last_ts = state.get
-            n = int(n)
-            xs = [float(x) for x in xs_tail]
-            pend = [int(t) for t in ts_pend]
-            last_ts = int(last_ts)
-        else:
-            n, xs, pend, last_ts = 0, [], [], -1
-        chunks = [p for p in pdf_iter if len(p)]
-        whole = pd.concat(chunks) if chunks else None
+    def step(v, rows, carry):
+        n, xs, pend = int(carry[0]), [float(x) for x in carry[1]], [int(t) for t in carry[2]]
         out_ts, out_sc = [], []
-        for pdf in ([whole] if whole is not None else []):
-            pdf = pdf.sort_values("bucket_ts", kind="mergesort")
-            n_in = len(pdf)
-            pdf = pdf[pdf["bucket_ts"] > last_ts]
-            if n_in > len(pdf):
-                # late data behind the state high-water mark is dropped by
-                # design (exactly-once replay contract) — log it so the drop
-                # is observable in the executor logs
-                log.warning(
-                    "ssa_stream: source %r dropped %d late row(s) at or "
-                    "behind bucket_ts=%d", source, n_in - len(pdf), last_ts,
-                )
-            if not len(pdf):
-                continue
-            for ts, val in zip(
-                pdf["bucket_ts"].to_numpy(dtype=np.int64),
-                pdf[value_col].to_numpy(dtype=np.float64),
-            ):
-                xs.append(float(val))
-                pend.append(int(ts))
-                n += 1
-                q = n - w  # 0-based position finalized by this arrival
-                if q >= 0:
-                    # xs holds positions n-len(xs)..n-1; keep 2w-1 live
-                    off = n - len(xs)
+        for ts, val in zip(
+            rows["bucket_ts"].to_numpy(dtype=np.int64),
+            rows[value_col].to_numpy(dtype=np.float64),
+        ):
+            xs.append(float(val))
+            pend.append(int(ts))
+            n += 1
+            q = n - w  # 0-based position finalized by this arrival
+            if q >= 0:
+                # xs holds positions n-len(xs)..n-1; keep 2w-1 live
+                off = n - len(xs)
 
-                    def proj(t: int) -> float:
-                        acc = xs[t - off] * v[0]
-                        for i in range(1, w):
-                            acc = acc + xs[t - off + i] * v[i]
-                        return acc
+                def proj(t: int) -> float:
+                    acc = xs[t - off] * v[0]
+                    for i in range(1, w):
+                        acc = acc + xs[t - off + i] * v[i]
+                    return acc
 
-                    # mirror the batch fold: i ascending = newest window
-                    # first, missing leading windows contribute +0.0
-                    num, cnt = None, 0
-                    for i in range(w):
-                        t = q - i
-                        term = proj(t) * v[i] if t >= 0 else 0.0
-                        num = term if num is None else num + term
-                        cnt += 1 if t >= 0 else 0
-                    x_q = xs[q - off]
-                    d = x_q - num / cnt
-                    out_ts.append(pend[0])
-                    out_sc.append(_round6_half_up(d * d))
-                    pend = pend[1:]
-                if len(xs) > 2 * w - 1:
-                    xs = xs[-(2 * w - 1):]
-            last_ts = int(pdf["bucket_ts"].iloc[-1])
-        state.update((n, xs, pend, last_ts))
+                # mirror the batch fold: i ascending = newest window
+                # first, missing leading windows contribute +0.0
+                num, cnt = None, 0
+                for i in range(w):
+                    t = q - i
+                    term = proj(t) * v[i] if t >= 0 else 0.0
+                    num = term if num is None else num + term
+                    cnt += 1 if t >= 0 else 0
+                d = xs[q - off] - num / cnt
+                out_ts.append(pend[0])
+                out_sc.append(_round6_half_up(d * d))
+                pend = pend[1:]
+            if len(xs) > 2 * w - 1:
+                xs = xs[-(2 * w - 1):]
+        cols = None
         if out_ts:
-            yield pd.DataFrame(
-                {
-                    "source": source,
-                    "bucket_ts": np.asarray(out_ts, dtype=np.int64),
-                    "ssa4_score": np.asarray(out_sc, dtype=np.float64),
-                }
-            )
+            cols = {
+                "bucket_ts": np.asarray(out_ts, dtype=np.int64),
+                "ssa4_score": np.asarray(out_sc, dtype=np.float64),
+            }
+        return cols, (n, xs, pend)
 
-    return rollup.groupBy("source").applyInPandasWithState(
-        fn,
-        outputStructType=SSA_OUT_SCHEMA,
-        stateStructType=SSA_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf="NoTimeout",
+    return _per_source(
+        rollup, "ssa_stream", SSA_OUT_SCHEMA, SSA_STATE_SCHEMA, (0, [], [], -1), step, vectors
     )

@@ -264,68 +264,6 @@ def test_kpca_2land_flags_nonlinear_outlier(spark):
     assert [tuple(r) for r in a] == [tuple(r) for r in b]
 
 
-def test_mahalanobis_stream_bitmatches_batch(spark, tmp_path):
-    """Streaming online-Mahalanobis (six-integer prefix-moment state)
-    reproduces the batch operator bit-for-bit across micro-batches."""
-    import os
-
-    from alibi_detect_spark.operators.detect import mahalanobis_online_stats_over
-    from alibi_detect_spark.operators.rollup import rollup_tier1
-    from alibi_detect_spark.streaming.rollup_stream import mahalanobis_stream
-    from alibi_detect_spark.synth import SynthConfig, synth_batch
-
-    tmp = str(tmp_path)
-    cfg = SynthConfig(n_rows=40_000, n_sources=4, rows_per_bucket=64)
-    raw = spark.createDataFrame(
-        synth_batch(np.arange(0, 40_000, dtype=np.int64), cfg, with_tokens=False)
-    )
-    rollup = rollup_tier1(raw, "1h").toPandas().sort_values(["source", "bucket_ts"])
-    rollup["v2"] = rollup["n_docs"].astype(np.float64)
-    rollup["sum_n_tok"] = rollup["sum_n_tok"].astype(np.float64)
-
-    batch = (
-        mahalanobis_online_stats_over(
-            spark.createDataFrame(rollup),
-            "source",
-            "bucket_ts",
-            ("sum_n_tok", "v2"),
-            quant=100,  # sum_n_tok ~5e4: keep second moments well inside int64
-        )
-        .toPandas()
-        .sort_values(["source", "bucket_ts"])
-    )
-
-    cut = rollup["bucket_ts"].median()
-    os.makedirs(f"{tmp}/min", exist_ok=True)
-    rollup[rollup["bucket_ts"] <= cut].to_parquet(f"{tmp}/min/p0.parquet", index=False)
-    rollup[rollup["bucket_ts"] > cut].to_parquet(f"{tmp}/min/p1.parquet", index=False)
-    src = (
-        spark.readStream.schema(
-            "source string, bucket_ts long, n_docs long, sum_n_tok double,"
-            " min_n_tok int, max_n_tok int, mean_n_tok double, gapfilled boolean, v2 double"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{tmp}/min")
-    )
-    q = (
-        mahalanobis_stream(src, value_cols=("sum_n_tok", "v2"), quant=100)
-        .writeStream.format("parquet")
-        .option("path", f"{tmp}/mout")
-        .option("checkpointLocation", f"{tmp}/mckpt")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = spark.read.parquet(f"{tmp}/mout").toPandas().sort_values(["source", "bucket_ts"])
-    assert len(got) == len(batch) > 0
-    assert np.array_equal(got["bucket_ts"].to_numpy(), batch["bucket_ts"].to_numpy())
-    assert np.array_equal(
-        got["maha_score"].to_numpy(np.float64).view(np.uint64),
-        batch["maha_score"].to_numpy(np.float64).view(np.uint64),
-    )
-
-
 def test_ocsvm_mean_flags_far_points(spark):
     """Kernel-mean one-class score: points far from every landmark approach
     the 0 maximum and top the ranking; inliers sit well below."""
@@ -335,69 +273,6 @@ def test_ocsvm_mean_flags_far_points(spark):
     top = ocsvm_mean_2feat(df, ("v", "u"), "event_id").collect()
     assert set(range(6)) <= {r["event_id"] for r in top[:12]}
     assert all(r["ocsvm_score"] <= 0.0 for r in top)
-
-
-def test_lsdd_hash_stream_bitmatches_batch(spark, tmp_path):
-    """Streaming twin of the declarative online LSDD (centers + integer ref
-    sums + kq tail in the state store) reproduces the batch operator
-    bit-for-bit — including when a micro-batch boundary splits the first two
-    rows the centers derive from."""
-    import os
-
-    from alibi_detect_spark.operators.detect import lsdd_online_stats_over
-    from alibi_detect_spark.operators.rollup import rollup_tier1
-    from alibi_detect_spark.streaming.rollup_stream import lsdd_hash_stream
-    from alibi_detect_spark.synth import SynthConfig, synth_batch
-
-    tmp = str(tmp_path)
-    cfg = SynthConfig(n_rows=40_000, n_sources=4, rows_per_bucket=64)
-    raw = spark.createDataFrame(
-        synth_batch(np.arange(0, 40_000, dtype=np.int64), cfg, with_tokens=False)
-    )
-    rollup = rollup_tier1(raw, "1h").toPandas().sort_values(["source", "bucket_ts"])
-
-    batch = (
-        lsdd_online_stats_over(
-            spark.createDataFrame(rollup), "source", "bucket_ts", "mean_n_tok",
-            n_ref=40, window_size=6,
-        )
-        .toPandas()
-        .sort_values(["source", "bucket_ts"])
-    )
-
-    lo = rollup["bucket_ts"].min()
-    cut0, cut1 = lo + 3600, rollup["bucket_ts"].median()
-    os.makedirs(f"{tmp}/lin", exist_ok=True)
-    rollup[rollup["bucket_ts"] < cut0].to_parquet(f"{tmp}/lin/p0.parquet", index=False)
-    rollup[(rollup["bucket_ts"] >= cut0) & (rollup["bucket_ts"] <= cut1)].to_parquet(
-        f"{tmp}/lin/p1.parquet", index=False
-    )
-    rollup[rollup["bucket_ts"] > cut1].to_parquet(f"{tmp}/lin/p2.parquet", index=False)
-    src = (
-        spark.readStream.schema(
-            "source string, bucket_ts long, n_docs long, sum_n_tok long,"
-            " min_n_tok int, max_n_tok int, mean_n_tok double, gapfilled boolean"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{tmp}/lin")
-    )
-    q = (
-        lsdd_hash_stream(src, value_col="mean_n_tok", n_ref=40, window_size=6)
-        .writeStream.format("parquet")
-        .option("path", f"{tmp}/lhout")
-        .option("checkpointLocation", f"{tmp}/lhckpt")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = spark.read.parquet(f"{tmp}/lhout").toPandas().sort_values(["source", "bucket_ts"])
-    assert len(got) == len(batch) > 0
-    assert np.array_equal(got["bucket_ts"].to_numpy(), batch["bucket_ts"].to_numpy())
-    assert np.array_equal(
-        got["lsdd_stat"].to_numpy(np.float64).view(np.uint64),
-        batch["lsdd_stat"].to_numpy(np.float64).view(np.uint64),
-    )
 
 
 def test_iforest_hash_isolates_outliers(spark):

@@ -99,76 +99,6 @@ def test_decision_queries_shape(spark, sf_dir, name):
     assert (out["n_drift"] >= 0).all()
 
 
-def test_lsdd_hash_stream_decisions_match_batch(spark, tmp_path):
-    """lsdd_hash_stream with decision_thresholds emits the SAME decisions the
-    batch lsdd_decisions comparison produces: rounded stat > thr[min(t, W)]
-    with t the absolute step index — across micro-batch boundaries."""
-    import os
-
-    import numpy as np
-
-    from alibi_detect_spark.operators.detect import lsdd_online_stats_over
-    from alibi_detect_spark.operators.rollup import rollup_tier1
-    from alibi_detect_spark.streaming.rollup_stream import lsdd_hash_stream
-    from alibi_detect_spark.synth import SynthConfig, synth_batch
-
-    tmp = str(tmp_path)
-    cfg = SynthConfig(n_rows=40_000, n_sources=4, rows_per_bucket=64)
-    raw = spark.createDataFrame(
-        synth_batch(np.arange(0, 40_000, dtype=np.int64), cfg, with_tokens=False)
-    )
-    rollup = rollup_tier1(raw, "1h").toPandas().sort_values(["source", "bucket_ts"])
-    W = 6
-    thr = lsdd2_decision_thresholds(n_ref=40, window_size=W, n_bootstraps=200, lo=0.0, hi=200.0)
-
-    batch = (
-        lsdd_online_stats_over(
-            spark.createDataFrame(rollup), "source", "bucket_ts", "mean_n_tok",
-            n_ref=40, window_size=W,
-        )
-        .toPandas()
-        .sort_values(["source", "bucket_ts"])
-    )
-    batch["t"] = batch.groupby("source").cumcount() + 1
-    tarr = np.asarray(thr)[np.minimum(batch["t"].to_numpy(), W) - 1]
-    batch_drift = (batch["lsdd_stat"].to_numpy() > tarr).astype(np.int32)
-
-    cut = rollup["bucket_ts"].median()
-    os.makedirs(f"{tmp}/din", exist_ok=True)
-    rollup[rollup["bucket_ts"] <= cut].to_parquet(f"{tmp}/din/p0.parquet", index=False)
-    rollup[rollup["bucket_ts"] > cut].to_parquet(f"{tmp}/din/p1.parquet", index=False)
-    src = (
-        spark.readStream.schema(
-            "source string, bucket_ts long, n_docs long, sum_n_tok long,"
-            " min_n_tok int, max_n_tok int, mean_n_tok double, gapfilled boolean"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{tmp}/din")
-    )
-    q = (
-        lsdd_hash_stream(
-            src, value_col="mean_n_tok", n_ref=40, window_size=W,
-            decision_thresholds=thr,
-        )
-        .writeStream.format("parquet")
-        .option("path", f"{tmp}/dout")
-        .option("checkpointLocation", f"{tmp}/dckpt")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = spark.read.parquet(f"{tmp}/dout").toPandas().sort_values(["source", "bucket_ts"])
-    assert len(got) == len(batch) > 0
-    assert np.array_equal(got["bucket_ts"].to_numpy(), batch["bucket_ts"].to_numpy())
-    assert np.array_equal(
-        got["lsdd_stat"].to_numpy(np.float64).view(np.uint64),
-        batch["lsdd_stat"].to_numpy(np.float64).view(np.uint64),
-    )
-    assert np.array_equal(got["lsdd_is_drift"].to_numpy(np.int32), batch_drift)
-    assert got["lsdd_is_drift"].sum() > 0  # thresholds inside the stat range
-
-
 def test_text_pipeline_quality_ops(spark):
     """lm_unigram_score ranks an all-rare-words doc as less probable than a
     common-words doc; doc_repetition computes the exact duplicate-3-gram
@@ -286,46 +216,6 @@ def test_pca_outlier_emb_matches_numpy_rank1_residual(spark):
     resid = (xc**2).sum(axis=1) - (xc @ v1) ** 2
     np.testing.assert_allclose(got["pca_resid"].to_numpy(), resid, rtol=1e-3, atol=1e-3)
     assert got["pca_resid"].idxmax() == 0  # the off-subspace spike
-
-
-def test_dedup_stream_first_arrival_survives(spark, tmp_path):
-    """Streaming exact dedup: across micro-batches, exactly the first arrival
-    of each content hash is emitted; uniques all pass."""
-    import os
-
-    import pandas as pd
-
-    from alibi_detect_spark.streaming.rollup_stream import dedup_stream
-
-    tmp = str(tmp_path)
-    base_ts = pd.Timestamp("2024-01-01 00:00:00")
-    rows = []
-    for i in range(40):
-        text = f"doc number {i % 25}"  # ids 0..14 duplicated across batches
-        rows.append((i, text, base_ts + pd.Timedelta(seconds=i)))
-    pdf = pd.DataFrame(rows, columns=["doc_id", "text", "event_ts"])
-    os.makedirs(f"{tmp}/ddin", exist_ok=True)
-    pdf.iloc[:20].to_parquet(f"{tmp}/ddin/p0.parquet", index=False, coerce_timestamps="us", allow_truncated_timestamps=True)
-    pdf.iloc[20:].to_parquet(f"{tmp}/ddin/p1.parquet", index=False, coerce_timestamps="us", allow_truncated_timestamps=True)
-    src = (
-        spark.readStream.schema("doc_id long, text string, event_ts timestamp")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{tmp}/ddin")
-    )
-    q = (
-        dedup_stream(src, watermark_delay="1 hour")
-        .writeStream.format("parquet")
-        .option("path", f"{tmp}/ddout")
-        .option("checkpointLocation", f"{tmp}/ddckpt")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = spark.read.parquet(f"{tmp}/ddout").toPandas()
-    assert len(got) == 25  # one survivor per distinct text
-    # the survivor of each hash is its FIRST arrival (doc_id == i%25 index)
-    assert sorted(got["doc_id"]) == sorted(range(25))
 
 
 def test_embedding_width_ops_partitioning_invariant(spark):

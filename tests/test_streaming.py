@@ -1,7 +1,9 @@
 """Structured Streaming: watermarked rollup equals the batch rollup for every
-closed window; checkpoint resume emits the remainder exactly once; stateful
-streaming EWMA bit-matches the NumPy recursion."""
+closed window; checkpoint resume emits the remainder exactly once; every
+stateful streaming twin bit-matches its batch replay across micro-batches and
+restarts, and logs every row it drops; streaming dedup keeps first arrivals."""
 
+import logging
 import os
 
 import numpy as np
@@ -9,10 +11,16 @@ import pandas as pd
 import pytest
 
 from alibi_detect_spark.functions.ewma import ewma
+from alibi_detect_spark.functions.online_thresholds import lsdd2_decision_thresholds
 from alibi_detect_spark.operators.rollup import rollup_tier1
 from alibi_detect_spark.streaming.rollup_stream import (
+    cvm_stream,
     ewma_stream,
+    fet_stream,
+    lsdd_stream,
+    mmd_stream,
     run_stream_rollup_once,
+    ssa_stream,
 )
 from alibi_detect_spark.synth import SynthConfig, synth_batch
 
@@ -485,3 +493,371 @@ def test_ssa_stream_bitmatches_batch(spark, tmp_path, cfg):
             g["ssa4_score"].to_numpy(np.float64).view(np.uint64),
             bg["ssa4_score"].to_numpy(np.float64).view(np.uint64),
         ), source
+
+
+def test_mahalanobis_stream_bitmatches_batch(spark, tmp_path):
+    """Streaming online-Mahalanobis (six-integer prefix-moment state)
+    reproduces the batch operator bit-for-bit across micro-batches."""
+    import os
+
+    from alibi_detect_spark.operators.detect import mahalanobis_online_stats_over
+    from alibi_detect_spark.operators.rollup import rollup_tier1
+    from alibi_detect_spark.streaming.rollup_stream import mahalanobis_stream
+    from alibi_detect_spark.synth import SynthConfig, synth_batch
+
+    tmp = str(tmp_path)
+    cfg = SynthConfig(n_rows=40_000, n_sources=4, rows_per_bucket=64)
+    raw = spark.createDataFrame(
+        synth_batch(np.arange(0, 40_000, dtype=np.int64), cfg, with_tokens=False)
+    )
+    rollup = rollup_tier1(raw, "1h").toPandas().sort_values(["source", "bucket_ts"])
+    rollup["v2"] = rollup["n_docs"].astype(np.float64)
+    rollup["sum_n_tok"] = rollup["sum_n_tok"].astype(np.float64)
+
+    batch = (
+        mahalanobis_online_stats_over(
+            spark.createDataFrame(rollup),
+            "source",
+            "bucket_ts",
+            ("sum_n_tok", "v2"),
+            quant=100,  # sum_n_tok ~5e4: keep second moments well inside int64
+        )
+        .toPandas()
+        .sort_values(["source", "bucket_ts"])
+    )
+
+    cut = rollup["bucket_ts"].median()
+    os.makedirs(f"{tmp}/min", exist_ok=True)
+    rollup[rollup["bucket_ts"] <= cut].to_parquet(f"{tmp}/min/p0.parquet", index=False)
+    rollup[rollup["bucket_ts"] > cut].to_parquet(f"{tmp}/min/p1.parquet", index=False)
+    src = (
+        spark.readStream.schema(
+            "source string, bucket_ts long, n_docs long, sum_n_tok double,"
+            " min_n_tok int, max_n_tok int, mean_n_tok double, gapfilled boolean, v2 double"
+        )
+        .option("maxFilesPerTrigger", 1)
+        .parquet(f"{tmp}/min")
+    )
+    q = (
+        mahalanobis_stream(src, value_cols=("sum_n_tok", "v2"), quant=100)
+        .writeStream.format("parquet")
+        .option("path", f"{tmp}/mout")
+        .option("checkpointLocation", f"{tmp}/mckpt")
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    got = spark.read.parquet(f"{tmp}/mout").toPandas().sort_values(["source", "bucket_ts"])
+    assert len(got) == len(batch) > 0
+    assert np.array_equal(got["bucket_ts"].to_numpy(), batch["bucket_ts"].to_numpy())
+    assert np.array_equal(
+        got["maha_score"].to_numpy(np.float64).view(np.uint64),
+        batch["maha_score"].to_numpy(np.float64).view(np.uint64),
+    )
+
+
+def test_lsdd_hash_stream_bitmatches_batch(spark, tmp_path):
+    """Streaming twin of the declarative online LSDD (centers + integer ref
+    sums + kq tail in the state store) reproduces the batch operator
+    bit-for-bit — including when a micro-batch boundary splits the first two
+    rows the centers derive from."""
+    import os
+
+    from alibi_detect_spark.operators.detect import lsdd_online_stats_over
+    from alibi_detect_spark.operators.rollup import rollup_tier1
+    from alibi_detect_spark.streaming.rollup_stream import lsdd_hash_stream
+    from alibi_detect_spark.synth import SynthConfig, synth_batch
+
+    tmp = str(tmp_path)
+    cfg = SynthConfig(n_rows=40_000, n_sources=4, rows_per_bucket=64)
+    raw = spark.createDataFrame(
+        synth_batch(np.arange(0, 40_000, dtype=np.int64), cfg, with_tokens=False)
+    )
+    rollup = rollup_tier1(raw, "1h").toPandas().sort_values(["source", "bucket_ts"])
+
+    batch = (
+        lsdd_online_stats_over(
+            spark.createDataFrame(rollup), "source", "bucket_ts", "mean_n_tok",
+            n_ref=40, window_size=6,
+        )
+        .toPandas()
+        .sort_values(["source", "bucket_ts"])
+    )
+
+    lo = rollup["bucket_ts"].min()
+    cut0, cut1 = lo + 3600, rollup["bucket_ts"].median()
+    os.makedirs(f"{tmp}/lin", exist_ok=True)
+    rollup[rollup["bucket_ts"] < cut0].to_parquet(f"{tmp}/lin/p0.parquet", index=False)
+    rollup[(rollup["bucket_ts"] >= cut0) & (rollup["bucket_ts"] <= cut1)].to_parquet(
+        f"{tmp}/lin/p1.parquet", index=False
+    )
+    rollup[rollup["bucket_ts"] > cut1].to_parquet(f"{tmp}/lin/p2.parquet", index=False)
+    src = (
+        spark.readStream.schema(
+            "source string, bucket_ts long, n_docs long, sum_n_tok long,"
+            " min_n_tok int, max_n_tok int, mean_n_tok double, gapfilled boolean"
+        )
+        .option("maxFilesPerTrigger", 1)
+        .parquet(f"{tmp}/lin")
+    )
+    q = (
+        lsdd_hash_stream(src, value_col="mean_n_tok", n_ref=40, window_size=6)
+        .writeStream.format("parquet")
+        .option("path", f"{tmp}/lhout")
+        .option("checkpointLocation", f"{tmp}/lhckpt")
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    got = spark.read.parquet(f"{tmp}/lhout").toPandas().sort_values(["source", "bucket_ts"])
+    assert len(got) == len(batch) > 0
+    assert np.array_equal(got["bucket_ts"].to_numpy(), batch["bucket_ts"].to_numpy())
+    assert np.array_equal(
+        got["lsdd_stat"].to_numpy(np.float64).view(np.uint64),
+        batch["lsdd_stat"].to_numpy(np.float64).view(np.uint64),
+    )
+
+
+def test_lsdd_hash_stream_decisions_match_batch(spark, tmp_path):
+    """lsdd_hash_stream with decision_thresholds emits the SAME decisions the
+    batch lsdd_decisions comparison produces: rounded stat > thr[min(t, W)]
+    with t the absolute step index — across micro-batch boundaries."""
+    import os
+
+    import numpy as np
+
+    from alibi_detect_spark.operators.detect import lsdd_online_stats_over
+    from alibi_detect_spark.operators.rollup import rollup_tier1
+    from alibi_detect_spark.streaming.rollup_stream import lsdd_hash_stream
+    from alibi_detect_spark.synth import SynthConfig, synth_batch
+
+    tmp = str(tmp_path)
+    cfg = SynthConfig(n_rows=40_000, n_sources=4, rows_per_bucket=64)
+    raw = spark.createDataFrame(
+        synth_batch(np.arange(0, 40_000, dtype=np.int64), cfg, with_tokens=False)
+    )
+    rollup = rollup_tier1(raw, "1h").toPandas().sort_values(["source", "bucket_ts"])
+    W = 6
+    thr = lsdd2_decision_thresholds(n_ref=40, window_size=W, n_bootstraps=200, lo=0.0, hi=200.0)
+
+    batch = (
+        lsdd_online_stats_over(
+            spark.createDataFrame(rollup), "source", "bucket_ts", "mean_n_tok",
+            n_ref=40, window_size=W,
+        )
+        .toPandas()
+        .sort_values(["source", "bucket_ts"])
+    )
+    batch["t"] = batch.groupby("source").cumcount() + 1
+    tarr = np.asarray(thr)[np.minimum(batch["t"].to_numpy(), W) - 1]
+    batch_drift = (batch["lsdd_stat"].to_numpy() > tarr).astype(np.int32)
+
+    cut = rollup["bucket_ts"].median()
+    os.makedirs(f"{tmp}/din", exist_ok=True)
+    rollup[rollup["bucket_ts"] <= cut].to_parquet(f"{tmp}/din/p0.parquet", index=False)
+    rollup[rollup["bucket_ts"] > cut].to_parquet(f"{tmp}/din/p1.parquet", index=False)
+    src = (
+        spark.readStream.schema(
+            "source string, bucket_ts long, n_docs long, sum_n_tok long,"
+            " min_n_tok int, max_n_tok int, mean_n_tok double, gapfilled boolean"
+        )
+        .option("maxFilesPerTrigger", 1)
+        .parquet(f"{tmp}/din")
+    )
+    q = (
+        lsdd_hash_stream(
+            src, value_col="mean_n_tok", n_ref=40, window_size=W,
+            decision_thresholds=thr,
+        )
+        .writeStream.format("parquet")
+        .option("path", f"{tmp}/dout")
+        .option("checkpointLocation", f"{tmp}/dckpt")
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    got = spark.read.parquet(f"{tmp}/dout").toPandas().sort_values(["source", "bucket_ts"])
+    assert len(got) == len(batch) > 0
+    assert np.array_equal(got["bucket_ts"].to_numpy(), batch["bucket_ts"].to_numpy())
+    assert np.array_equal(
+        got["lsdd_stat"].to_numpy(np.float64).view(np.uint64),
+        batch["lsdd_stat"].to_numpy(np.float64).view(np.uint64),
+    )
+    assert np.array_equal(got["lsdd_is_drift"].to_numpy(np.int32), batch_drift)
+    assert got["lsdd_is_drift"].sum() > 0  # thresholds inside the stat range
+
+
+def test_dedup_stream_first_arrival_survives(spark, tmp_path):
+    """Streaming exact dedup: across micro-batches, exactly the first arrival
+    of each content hash is emitted; uniques all pass."""
+    import os
+
+    import pandas as pd
+
+    from alibi_detect_spark.streaming.rollup_stream import dedup_stream
+
+    tmp = str(tmp_path)
+    base_ts = pd.Timestamp("2024-01-01 00:00:00")
+    rows = []
+    for i in range(40):
+        text = f"doc number {i % 25}"  # ids 0..14 duplicated across batches
+        rows.append((i, text, base_ts + pd.Timedelta(seconds=i)))
+    pdf = pd.DataFrame(rows, columns=["doc_id", "text", "event_ts"])
+    os.makedirs(f"{tmp}/ddin", exist_ok=True)
+    pdf.iloc[:20].to_parquet(f"{tmp}/ddin/p0.parquet", index=False, coerce_timestamps="us", allow_truncated_timestamps=True)
+    pdf.iloc[20:].to_parquet(f"{tmp}/ddin/p1.parquet", index=False, coerce_timestamps="us", allow_truncated_timestamps=True)
+    src = (
+        spark.readStream.schema("doc_id long, text string, event_ts timestamp")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(f"{tmp}/ddin")
+    )
+    q = (
+        dedup_stream(src, watermark_delay="1 hour")
+        .writeStream.format("parquet")
+        .option("path", f"{tmp}/ddout")
+        .option("checkpointLocation", f"{tmp}/ddckpt")
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    got = spark.read.parquet(f"{tmp}/ddout").toPandas()
+    assert len(got) == 25  # one survivor per distinct text
+    # the survivor of each hash is its FIRST arrival (doc_id == i%25 index)
+    assert sorted(got["doc_id"]) == sorted(range(25))
+
+
+class _CaptureRollup:
+    """Stand-in rollup DataFrame: keeps the function a twin hands to
+    ``applyInPandasWithState`` so it can be driven without Spark."""
+
+    def groupBy(self, *cols):
+        return self
+
+    def applyInPandasWithState(self, fn, **kwargs):
+        self.fn = fn
+        return self
+
+
+class _State:
+    """Minimal ``GroupState``: ``exists``/``get``/``update``."""
+
+    def __init__(self, value=None):
+        self.value = value
+
+    @property
+    def exists(self):
+        return self.value is not None
+
+    @property
+    def get(self):
+        return tuple(self.value)
+
+    def update(self, value):
+        self.value = tuple(value)
+
+
+def _must_not_be_read():
+    raise AssertionError("the rows of an unfitted source were read")
+    yield  # makes this a generator: it raises only when iterated
+
+
+_ROWS = pd.DataFrame({"source": "s", "bucket_ts": [3600, 10800], "sum_n_tok": [1.0, 2.0]})
+
+
+@pytest.mark.parametrize(
+    "twin, make, state, batch, emitted_ts, message",
+    [
+        ("mmd_stream", lambda r: mmd_stream(r, {}), None, _must_not_be_read, [], "no fitted"),
+        ("cvm_stream", lambda r: cvm_stream(r, {}), None, _must_not_be_read, [], "no fitted"),
+        ("fet_stream", lambda r: fet_stream(r, {}), None, _must_not_be_read, [], "no fitted"),
+        ("lsdd_stream", lambda r: lsdd_stream(r, {}), None, _must_not_be_read, [], "no fitted"),
+        ("ssa_stream", lambda r: ssa_stream(r, {}), None, _must_not_be_read, [], "no fitted"),
+        # last_ts = 7200 is past the row at 3600: that row is late
+        ("ewma_stream", ewma_stream, (5.0, 7200), lambda: iter([_ROWS]), [10800], "late"),
+    ],
+    ids=["mmd-unfitted", "cvm-unfitted", "fet-unfitted", "lsdd-unfitted", "ssa-unfitted", "ewma-late"],
+)
+def test_stream_drops_are_logged(caplog, twin, make, state, batch, emitted_ts, message):
+    """Spark-free: an unfitted source is dropped with one warning naming the
+    twin and the source, without reading its rows; a late row is dropped with
+    a warning and never emitted."""
+    rollup = _CaptureRollup()
+    make(rollup)
+    st = _State(state)
+    with caplog.at_level(logging.WARNING):
+        out = list(rollup.fn(("s",), batch(), st))
+    emitted = [int(t) for o in out for t in o["bucket_ts"]]
+    assert emitted == emitted_ts
+    warnings = [r.getMessage() for r in caplog.records if r.levelno == logging.WARNING]
+    assert len(warnings) == 1, warnings
+    assert twin in warnings[0] and "'s'" in warnings[0] and message in warnings[0]
+    if emitted_ts:
+        assert st.value[-1] == emitted_ts[-1]  # high-water mark advanced
+
+
+@pytest.mark.parametrize("twin", ["ewma", "mmd"])
+def test_stream_restart_bitmatches_batch(spark, tmp_path, twin):
+    """Stop a stateful twin after its first input file, add the second and
+    restart from the same checkpoint: the output equals the uninterrupted
+    batch replay bit-for-bit."""
+    from alibi_detect_spark.functions.mmd import OnlineMMD
+    from alibi_detect_spark.operators.detect import source_seed
+
+    tmp = str(tmp_path)
+    rng = np.random.default_rng(3)
+    n, n_ref = 96, 32
+    rollup = pd.concat(
+        pd.DataFrame(
+            {
+                "source": s,
+                "bucket_ts": np.arange(n, dtype=np.int64) * 3600,
+                "sum_n_tok": rng.integers(900, 1100, n),
+            }
+        )
+        for s in ("s0", "s1", "s2")
+    )
+    want = {}
+    if twin == "ewma":
+        for s, g in rollup.groupby("source"):
+            want[s] = g["bucket_ts"].to_numpy(), ewma(g["sum_n_tok"].to_numpy(np.float64), 0.1)
+        make, col = (lambda src: ewma_stream(src, lam=0.1)), "ewma"
+    else:
+        dets = {}
+        for s, g in rollup.groupby("source"):
+            x = g["sum_n_tok"].to_numpy(np.float64)[:, None]
+            dets[s] = OnlineMMD.fit(
+                x[:n_ref], ert=40.0, window_size=6, n_bootstraps=50, seed=source_seed(s, 42)
+            )
+            want[s] = g["bucket_ts"].to_numpy()[n_ref:], dets[s].score_stream(x[n_ref:])[0]
+        rollup = rollup[rollup["bucket_ts"] >= n_ref * 3600]  # stream the post-ref rows
+        make, col = (lambda src: mmd_stream(src, dets)), "mmd_stat"
+
+    cut = rollup["bucket_ts"].median()
+    os.makedirs(f"{tmp}/in")
+    files = [rollup[rollup["bucket_ts"] <= cut], rollup[rollup["bucket_ts"] > cut]]
+    for i, part in enumerate(files):
+        part.to_parquet(f"{tmp}/in/p{i}.parquet", index=False)
+        src = spark.readStream.schema("source string, bucket_ts long, sum_n_tok long").parquet(
+            f"{tmp}/in"
+        )
+        (
+            make(src)
+            .writeStream.format("parquet")
+            .option("path", f"{tmp}/out")
+            .option("checkpointLocation", f"{tmp}/ckpt")
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
+        if i == 0:  # stopped after the first file
+            assert len(_read_out(spark, f"{tmp}/out")) == len(part)
+    got = _read_out(spark, f"{tmp}/out")
+    for s, (ts, vals) in want.items():
+        g = got[got["source"] == s]
+        assert np.array_equal(g["bucket_ts"].to_numpy(), ts), s
+        assert np.array_equal(g[col].to_numpy(np.float64).view(np.uint64), vals.view(np.uint64)), s
