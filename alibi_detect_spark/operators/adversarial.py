@@ -28,7 +28,9 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
+
+from .closed_form import dec_sum, ranked_top_k, recon_par
 
 _TWO_PI = 2.0 * math.pi
 _PLO = 1e-12
@@ -77,38 +79,6 @@ def _p1(vc, uc):
     return F.least(F.greatest(raw, F.lit(_PLO)), F.lit(_PHI))
 
 
-def _pca_recon_par(df: DataFrame) -> DataFrame:
-    """1-row relation (mx, my, w1, w2, nrm2): rank-1 PCA reconstruction
-    parameters from the closed-form 2×2 eigendecomposition — major
-    eigenvalue ``λ₊``, direction ``w = (c, λ₊−a)``, ``nrm2 = |w|²``."""
-    dx_in = F.col("v").cast("decimal(18,4)")
-    dy_in = F.col("u").cast("decimal(18,4)")
-    mo = df.agg(
-        F.count(F.lit(1)).cast("double").alias("n"),
-        F.sum(dx_in).cast("double").alias("sx"),
-        F.sum(dy_in).cast("double").alias("sy"),
-        F.sum(dx_in * dx_in).cast("double").alias("sxx_r"),
-        F.sum(dy_in * dy_in).cast("double").alias("syy_r"),
-        F.sum(dx_in * dy_in).cast("double").alias("sxy_r"),
-    ).select(
-        (F.col("sx") / F.col("n")).alias("mx"),
-        (F.col("sy") / F.col("n")).alias("my"),
-        (F.col("sxx_r") / F.col("n") - (F.col("sx") / F.col("n")) * (F.col("sx") / F.col("n"))).alias("a"),
-        (F.col("syy_r") / F.col("n") - (F.col("sy") / F.col("n")) * (F.col("sy") / F.col("n"))).alias("b"),
-        (F.col("sxy_r") / F.col("n") - (F.col("sx") / F.col("n")) * (F.col("sy") / F.col("n"))).alias("c"),
-    )
-    lamp = (F.col("a") + F.col("b") + F.sqrt(
-        (F.col("a") - F.col("b")) * (F.col("a") - F.col("b")) + F.lit(4.0) * F.col("c") * F.col("c")
-    )) / F.lit(2.0)
-    return mo.select(
-        "mx",
-        "my",
-        F.col("c").alias("w1"),
-        (lamp - F.col("a")).alias("w2"),
-        (F.col("c") * F.col("c") + (lamp - F.col("a")) * (lamp - F.col("a"))).alias("nrm2"),
-    )
-
-
 def adversarial_ae_2feat(
     df: DataFrame,
     cols: tuple[str, str],
@@ -130,7 +100,7 @@ def adversarial_ae_2feat(
     )
     j = (
         base.crossJoin(F.broadcast(_nb2_wide(base)))
-        .crossJoin(F.broadcast(_pca_recon_par(base)))
+        .crossJoin(F.broadcast(recon_par(base, "v", "u")))
     )
     # rank-1 reconstruction: x_rec = mean + (w·(x−mean)/|w|²)·w
     proj = (F.col("v") - F.col("mx")) * F.col("w1") + (F.col("u") - F.col("my")) * F.col("w2")
@@ -145,12 +115,7 @@ def adversarial_ae_2feat(
     r0 = F.lit(1.0) - r1
     score = t0 * F.log(t0 / r0) + t1 * F.log(t1 / r1)
     scored = j.select(id_col, (F.round(score, 6) + F.lit(0.0)).alias("adv_score"))
-    order = [F.col("adv_score").desc(), F.col(id_col)]
-    top = scored.orderBy(*order).limit(top_k)
-    w = Window.orderBy(*order)
-    return top.withColumn("rank", F.row_number().over(w)).select(
-        id_col, "adv_score", F.col("rank").cast("int").alias("rank")
-    )
+    return ranked_top_k(scored, "adv_score", [id_col], top_k)
 
 
 def model_distillation_2feat(
@@ -185,13 +150,12 @@ def model_distillation_2feat(
         F.round(F.col("v") * 10000).cast("long").alias("vq"),
         F.round(F.col("p1") * 1000000000).cast("long").alias("pq"),
     )
-    big = lambda c: F.sum(c.cast("decimal(38,0)")).cast("double")  # noqa: E731
     mom = q.agg(
         F.count(F.lit(1)).cast("double").alias("n"),
-        big(F.col("vq")).alias("sv_r"),
-        big(F.col("vq") * F.col("vq")).alias("svv_r"),
-        big(F.col("pq")).alias("sp_r"),
-        big(F.col("vq") * F.col("pq")).alias("svp_r"),
+        dec_sum(F.col("vq")).alias("sv_r"),
+        dec_sum(F.col("vq") * F.col("vq")).alias("svv_r"),
+        dec_sum(F.col("pq")).alias("sp_r"),
+        dec_sum(F.col("vq") * F.col("pq")).alias("svp_r"),
     ).select(
         "n",
         (F.col("sv_r") / F.lit(1e4)).alias("sv"),
@@ -210,9 +174,4 @@ def model_distillation_2feat(
     p0 = F.lit(1.0) - p1
     score = p0 * F.log(p0 / (F.lit(1.0) - yhat)) + p1 * F.log(p1 / yhat)
     scored = sj.select(id_col, (F.round(score, 6) + F.lit(0.0)).alias("distill_score"))
-    order = [F.col("distill_score").desc(), F.col(id_col)]
-    top = scored.orderBy(*order).limit(top_k)
-    w = Window.orderBy(*order)
-    return top.withColumn("rank", F.row_number().over(w)).select(
-        id_col, "distill_score", F.col("rank").cast("int").alias("rank")
-    )
+    return ranked_top_k(scored, "distill_score", [id_col], top_k)

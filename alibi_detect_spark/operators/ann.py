@@ -35,6 +35,24 @@ def _collect_matrix(emb: DataFrame, pred, id_col: str, extra: list[str] | None =
     return pdf, ids, m
 
 
+def score_scan(emb: DataFrame, id_col: str, score_col: str, score) -> DataFrame:
+    """One ``mapInPandas`` corpus scan ``(vec_id, score_col)``:
+    ``score(x, ids)`` maps each Arrow batch's float64 ``[batch × d]``
+    embedding matrix and its ids to one double per row. The fitted state
+    travels in the ``score`` closure (a broadcast); the corpus never
+    shuffles."""
+
+    def fn(batches):
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            x = np.stack(pdf[EMB_COL].to_numpy()).astype(np.float64)
+            ids = pdf[id_col].to_numpy()
+            yield pd.DataFrame({"vec_id": ids, score_col: score(x, ids)})
+
+    return emb.select(id_col, EMB_COL).mapInPandas(fn, schema=f"vec_id long, {score_col} double")
+
+
 def knn_ensemble_scores(
     emb: DataFrame,
     ref_pred,
@@ -172,20 +190,14 @@ def knn_outlier_scores(
     _, ref_ids, r = _collect_matrix(emb, ref_pred, id_col)
     r2 = np.einsum("ij,ij->i", r, r)
 
-    def fn(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            x = np.stack(pdf[EMB_COL].to_numpy()).astype(np.float64)
-            ids = pdf[id_col].to_numpy()
-            d2 = np.maximum(np.einsum("ij,ij->i", x, x)[:, None] + r2[None, :] - 2.0 * (x @ r.T), 0.0)
-            d = np.round(np.sqrt(d2), 6)
-            d[ids[:, None] == ref_ids[None, :]] = np.inf  # exclude self
-            order = np.lexsort((np.broadcast_to(ref_ids, d.shape), d), axis=-1)
-            kth = order[:, k - 1]
-            yield pd.DataFrame({"vec_id": ids, "knn_dist": d[np.arange(len(ids)), kth]})
+    def score(x, ids):
+        d2 = np.maximum(np.einsum("ij,ij->i", x, x)[:, None] + r2[None, :] - 2.0 * (x @ r.T), 0.0)
+        d = np.round(np.sqrt(d2), 6)
+        d[ids[:, None] == ref_ids[None, :]] = np.inf  # exclude self
+        order = np.lexsort((np.broadcast_to(ref_ids, d.shape), d), axis=-1)
+        return d[np.arange(len(ids)), order[:, k - 1]]
 
-    return emb.select(id_col, EMB_COL).mapInPandas(fn, schema="vec_id long, knn_dist double")
+    return score_scan(emb, id_col, "knn_dist", score)
 
 
 def _topk_scan(emb: DataFrame, q_ids, qm, q_cells, k: int, id_col: str, cell_col: str | None):

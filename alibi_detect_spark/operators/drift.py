@@ -19,6 +19,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from .closed_form import mahalanobis_2x2, moments_2x2, ranked_top_k
+
 KS_SF_TERMS = 100
 
 
@@ -568,36 +570,11 @@ def mahalanobis_scores(
     so ranking is reproducible across engines.
     """
     x, y = cols
-    dx_in = F.col(x).cast("decimal(18,4)")
-    dy_in = F.col(y).cast("decimal(18,4)")
-    stats = df.agg(
-        F.count(F.lit(1)).cast("double").alias("n"),
-        F.sum(dx_in).cast("double").alias("sx"),
-        F.sum(dy_in).cast("double").alias("sy"),
-        F.sum(dx_in * dx_in).cast("double").alias("sxx_r"),
-        F.sum(dy_in * dy_in).cast("double").alias("syy_r"),
-        F.sum(dx_in * dy_in).cast("double").alias("sxy_r"),
-    ).select(
-        (F.col("sx") / F.col("n")).alias("mx"),
-        (F.col("sy") / F.col("n")).alias("my"),
-        (F.col("sxx_r") / F.col("n") - (F.col("sx") / F.col("n")) * (F.col("sx") / F.col("n"))).alias("sxx"),
-        (F.col("syy_r") / F.col("n") - (F.col("sy") / F.col("n")) * (F.col("sy") / F.col("n"))).alias("syy"),
-        (F.col("sxy_r") / F.col("n") - (F.col("sx") / F.col("n")) * (F.col("sy") / F.col("n"))).alias("sxy"),
-    )
-    j = df.crossJoin(F.broadcast(stats))
-    det = F.col("sxx") * F.col("syy") - F.col("sxy") * F.col("sxy")
+    j = df.crossJoin(F.broadcast(moments_2x2(df, x, y)))
     dx = F.col(x).cast("double") - F.col("mx")
     dy = F.col(y).cast("double") - F.col("my")
-    score = (F.col("syy") * dx * dx - 2 * F.col("sxy") * dx * dy + F.col("sxx") * dy * dy) / det
-    scored = j.select(*id_cols, F.round(score, 6).alias("maha_score"))
-    # orderBy+limit → TakeOrderedAndProject: a distributed per-partition top-k
-    # + tiny driver merge, NOT a global sort. row_number runs on k rows only.
-    order = [F.col("maha_score").desc(), *[F.col(c) for c in id_cols]]
-    top = scored.orderBy(*order).limit(top_k)
-    w = Window.orderBy(*order)
-    return top.withColumn("rank", F.row_number().over(w)).select(
-        *id_cols, "maha_score", "rank"
-    )
+    scored = j.select(*id_cols, F.round(mahalanobis_2x2(dx, dy), 6).alias("maha_score"))
+    return ranked_top_k(scored, "maha_score", id_cols, top_k)
 
 
 def mmd_perm_test(

@@ -32,7 +32,9 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
+
+from .closed_form import ranked_top_k
 
 _TWO_PI = 2.0 * math.pi
 
@@ -107,9 +109,4 @@ def llr_outlier_2feat(
     f1 = neg_ll("u", "u") - neg_ll("u", "ub")
     score = (f0 + f1) / F.lit(2.0)
     scored = j.select(id_col, (F.round(score, 6) + F.lit(0.0)).alias("llr_score"))
-    order = [F.col("llr_score").desc(), F.col(id_col)]
-    top = scored.orderBy(*order).limit(top_k)
-    w = Window.orderBy(*order)
-    return top.withColumn("rank", F.row_number().over(w)).select(
-        id_col, "llr_score", F.col("rank").cast("int").alias("rank")
-    )
+    return ranked_top_k(scored, "llr_score", [id_col], top_k)

@@ -1,17 +1,58 @@
-"""Batch outlier detectors over embedding columns (SURVEY §2.3 new-API ops).
+"""Batch outlier detectors (SURVEY §2.3 new-API ops): every operator fits
+once on a reference, then scores each instance. Two plan families:
 
-Same plan shape as :mod:`.ann`: the reference set is collected once (small by
-alibi-detect's own contract), the fit happens in NumPy, and scoring is a pure
-``mapInPandas`` corpus scan — no shuffle of the corpus.
+- **NumPy fit + corpus scan** (``*_outlier_scores``, rows-only): the
+  reference set is collected once (small by alibi-detect's own contract),
+  the fit happens in NumPy, and scoring is one :func:`.ann.score_scan`
+  ``mapInPandas`` pass — no shuffle of the corpus.
+- **Closed form** (``*_2feat``, ``*_dfeat``, ``*_emb``, hash-checked against
+  the DuckDB oracle): exact DECIMAL / quantized-integer moment aggregates,
+  driver-side scalar math or broadcast 1-row parameter relations, and
+  whole-stage-codegen scoring — no UDF on the scoring path.
+
+The closed forms share their fit-and-score blocks: the 2×2 moment relation,
+rank-1 / pPCA parameters, ranked top-k, landmark kernels and isolation-forest
+leaf maps from :mod:`.closed_form`; the fixed-iteration power method from
+:func:`..functions.abdm.power_top`; and, at embedding width, the one-pass
+quantized moments (:func:`_emb_quant_moments`) and the per-dimension
+posexplode moments (:func:`_dim_moments`).
 """
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, functions as F
 
-from .ann import EMB_COL, _collect_matrix
+from ..functions.abdm import (
+    abdm_dpair,
+    classical_mds_dabs,
+    combine_abdm_mvdm,
+    deflate,
+    mvdm_dpair,
+    power_top,
+)
+from ..functions.gmm import GMMOutlier
+from ..functions.iforest import IsolationForest
+from ..functions.mmd import median_heuristic_sigma, rbf_kernel, squared_pairwise_distance
+from ..functions.svm import OneClassSVM
+from .ann import _collect_matrix, score_scan
+from .closed_form import (
+    GAMMA,
+    c_of,
+    check_iforest_size,
+    dec_sum,
+    eig_2x2,
+    iforest_score,
+    landmark_kernels,
+    mahalanobis_2x2,
+    moments_2x2,
+    ppca_par,
+    ranked_top_k,
+    recon_par,
+)
 
 
 def pca_outlier_scores(
@@ -33,21 +74,9 @@ def pca_outlier_scores(
     cov = (rc.T @ rc) / (len(rc) - 1)
     _, v = np.linalg.eigh(cov)  # ascending — invariant dims are the head
     pcs = v[:, : -n_components]
-
-    def fn(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            x = np.stack(pdf[EMB_COL].to_numpy()).astype(np.float64)
-            proj = (x - mean) @ pcs
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf[id_col].to_numpy(),
-                    "pca_score": np.round((proj**2).sum(axis=1), 6),
-                }
-            )
-
-    return emb.select(id_col, EMB_COL).mapInPandas(fn, schema="vec_id long, pca_score double")
+    return score_scan(
+        emb, id_col, "pca_score", lambda x, _: np.round((((x - mean) @ pcs) ** 2).sum(axis=1), 6)
+    )
 
 
 def gmm_outlier_scores(
@@ -60,24 +89,9 @@ def gmm_outlier_scores(
     """GMM outlier score (``alibi_detect/od/_gmm.py:22-231``): seeded EM fit
     on the broadcast reference, score = negative log-likelihood, one corpus
     scan."""
-    from ..functions.gmm import GMMOutlier
-
     _, _, r = _collect_matrix(emb, ref_pred, id_col)
     det = GMMOutlier(n_components=n_components, seed=seed).fit(r)
-
-    def fn(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            x = np.stack(pdf[EMB_COL].to_numpy()).astype(np.float64)
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf[id_col].to_numpy(),
-                    "gmm_score": np.round(det.score(x), 6),
-                }
-            )
-
-    return emb.select(id_col, EMB_COL).mapInPandas(fn, schema="vec_id long, gmm_score double")
+    return score_scan(emb, id_col, "gmm_score", lambda x, _: np.round(det.score(x), 6))
 
 
 def lof_outlier_scores(
@@ -116,32 +130,24 @@ def lof_outlier_scores(
 
     r2 = np.einsum("ij,ij->i", r, r)
 
-    def fn(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            x = np.stack(pdf[EMB_COL].to_numpy()).astype(np.float64)
-            d = np.round(
-                np.sqrt(
-                    np.maximum(
-                        np.einsum("ij,ij->i", x, x)[:, None] + r2[None, :] - 2.0 * (x @ r.T), 0.0
-                    )
-                ),
-                6,
-            )
-            # NOTE: a scanned point that IS a reference point keeps its 0-dist
-            # self pair (fitted-reference semantics of od/_lof.py: the test
-            # batch is scored against the fitted set as-is)
-            idx = np.lexsort((np.broadcast_to(ref_ids, d.shape), d), axis=-1)[:, :k]
-            rws = np.arange(len(x))[:, None]
-            reach = np.maximum(kdist[idx], d[rws, idx])
-            lrd_p = 1.0 / (reach.mean(axis=1) + 1e-12)
-            lof = lrd_ref[idx].mean(axis=1) / lrd_p
-            yield pd.DataFrame(
-                {"vec_id": pdf[id_col].to_numpy(), "lof_score": np.round(lof, 6)}
-            )
+    def score(x, _):
+        d = np.round(
+            np.sqrt(
+                np.maximum(
+                    np.einsum("ij,ij->i", x, x)[:, None] + r2[None, :] - 2.0 * (x @ r.T), 0.0
+                )
+            ),
+            6,
+        )
+        # NOTE: a scanned point that IS a reference point keeps its 0-dist
+        # self pair (fitted-reference semantics of od/_lof.py: the test
+        # batch is scored against the fitted set as-is)
+        idx = np.lexsort((np.broadcast_to(ref_ids, d.shape), d), axis=-1)[:, :k]
+        reach = np.maximum(kdist[idx], d[np.arange(len(x))[:, None], idx])
+        lrd_p = 1.0 / (reach.mean(axis=1) + 1e-12)
+        return np.round(lrd_ref[idx].mean(axis=1) / lrd_p, 6)
 
-    return emb.select(id_col, EMB_COL).mapInPandas(fn, schema="vec_id long, lof_score double")
+    return score_scan(emb, id_col, "lof_score", score)
 
 
 def infer_threshold(
@@ -171,8 +177,6 @@ def infer_threshold(
     - ``"approx"``: single ``approx_percentile`` — for scale runs where a
       rank-bounded approximation is acceptable.
     """
-    from pyspark.sql import functions as F
-
     p = threshold_perc / 100.0
     if mode == "exact":
         # materialize the score relation once (lazy checkpoint — no extra
@@ -210,8 +214,6 @@ def _exact_percentile_2pass(
     interpolation on the ≤``collect_cap`` survivors. 10^12 rows converge in
     ≤3 refinement rounds; nothing larger than the histogram (``accuracy``
     rows) or the final survivor set ever reaches the driver."""
-    from pyspark.sql import functions as F
-
     col = F.col(score_col)
     margin = 3.0 / accuracy
     qlo, qhi = max(0.0, p - margin), min(1.0, p + margin)
@@ -289,44 +291,17 @@ def pca_outlier_2feat(
     one partial+final DECIMAL moment aggregate (exact under any order), one
     broadcast join, no UDF. The d-dimensional eigendecomposition variant is
     :func:`pca_outlier_scores`."""
-    from pyspark.sql import Window, functions as F
-
     x, y = cols
-    dx_in = F.col(x).cast("decimal(18,4)")
-    dy_in = F.col(y).cast("decimal(18,4)")
-    stats = df.agg(
-        F.count(F.lit(1)).cast("double").alias("n"),
-        F.sum(dx_in).cast("double").alias("sx"),
-        F.sum(dy_in).cast("double").alias("sy"),
-        F.sum(dx_in * dx_in).cast("double").alias("sxx_r"),
-        F.sum(dy_in * dy_in).cast("double").alias("syy_r"),
-        F.sum(dx_in * dy_in).cast("double").alias("sxy_r"),
-    ).select(
-        (F.col("sx") / F.col("n")).alias("mx"),
-        (F.col("sy") / F.col("n")).alias("my"),
-        (F.col("sxx_r") / F.col("n") - (F.col("sx") / F.col("n")) * (F.col("sx") / F.col("n"))).alias("a"),
-        (F.col("syy_r") / F.col("n") - (F.col("sy") / F.col("n")) * (F.col("sy") / F.col("n"))).alias("b"),
-        (F.col("sxy_r") / F.col("n") - (F.col("sx") / F.col("n")) * (F.col("sy") / F.col("n"))).alias("c"),
-    )
-    j = df.crossJoin(F.broadcast(stats))
-    lam = (F.col("a") + F.col("b") - F.sqrt(
-        (F.col("a") - F.col("b")) * (F.col("a") - F.col("b")) + F.lit(4.0) * F.col("c") * F.col("c")
-    )) / F.lit(2.0)
+    j = df.crossJoin(F.broadcast(moments_2x2(df, x, y)))
+    disc, _ = eig_2x2()
+    lam = (F.col("a") + F.col("b") - disc) / F.lit(2.0)
     v1, v2 = F.col("c"), lam - F.col("a")
     dx = F.col(x).cast("double") - F.col("mx")
     dy = F.col(y).cast("double") - F.col("my")
     proj = dx * v1 + dy * v2
     score = (proj * proj) / (v1 * v1 + v2 * v2)
     scored = j.select(*id_cols, F.round(score, 6).alias("pca2_score"))
-    # orderBy+limit → TakeOrderedAndProject: distributed per-partition top-k
-    # + tiny driver merge (same shape as drift.mahalanobis_scores) — NOT a
-    # single-partition global-window sort. row_number runs on k rows only.
-    order = [F.col("pca2_score").desc(), *[F.col(c) for c in id_cols]]
-    top = scored.orderBy(*order).limit(top_k)
-    w = Window.orderBy(*order)
-    return top.withColumn("rank", F.row_number().over(w)).select(
-        *id_cols, "pca2_score", F.col("rank").cast("int").alias("rank")
-    )
+    return ranked_top_k(scored, "pca2_score", id_cols, top_k)
 
 
 def pca_outlier_dfeat(
@@ -356,10 +331,6 @@ def pca_outlier_dfeat(
     Scale shape: ONE partial+final moment aggregate (d + d(d+1)/2 + 1 exact
     sums), all remaining math on the driver, then one codegen scan with the
     (μ, v) literals in the closure — no joins, no Python stages."""
-    import math
-
-    from pyspark.sql import functions as F
-
     d = len(cols)
     dec = [F.col(c).cast("decimal(18,4)") for c in cols]
     aggs = [F.count(F.lit(1)).cast("double").alias("n")]
@@ -376,20 +347,7 @@ def pca_outlier_dfeat(
         for k in range(j, d):
             cjk = g[f"s{j}{k}"] / n - (g[f"s{j}"] / n) * (g[f"s{k}"] / n)
             cmat[j][k] = cmat[k][j] = cjk
-
-    v = [1.0] + [0.0] * (d - 1)
-    for _ in range(n_iter):
-        w = []
-        for j in range(d):
-            acc = cmat[j][0] * v[0]
-            for k in range(1, d):
-                acc = acc + cmat[j][k] * v[k]
-            w.append(acc)
-        nrm2 = w[0] * w[0]
-        for k in range(1, d):
-            nrm2 = nrm2 + w[k] * w[k]
-        nrm = math.sqrt(nrm2)
-        v = [wj / nrm for wj in w]
+    v, _ = power_top(cmat, n_iter)
 
     xc = [F.col(c).cast("double") - F.lit(m) for c, m in zip(cols, mu)]
     tot = xc[0] * xc[0]
@@ -408,9 +366,6 @@ def _emb_quant_moments(emb, vec_col: str, d: int, quant: int):
     batch, int64-safe per batch, exact DECIMAL total) → the (n, μ, Σ) fit
     moments on the driver. The 100 TB shape shared by every emb-width
     closed form (see :func:`pca_outlier_emb` docstring)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import functions as F
 
     def moments_fn(batches):
         for pdf in batches:
@@ -458,6 +413,58 @@ def _emb_quant_moments(emb, vec_col: str, d: int, quant: int):
     return n, mu, cmat
 
 
+def _emb_base(emb, id_col: str, vec_col: str):
+    """``(__id, v)`` with the embedding components cast to double."""
+    return emb.select(
+        F.col(id_col).alias("__id"),
+        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
+    )
+
+
+def _check_dims(counts: dict, dim: int, vec_col: str) -> None:
+    """Fail fast on ragged or wrong-width vectors: ``counts[j]`` is the
+    number of vectors with a component ``j``, and every vector must have
+    exactly ``dim`` components (a short one would otherwise surface as an
+    executor-side ARRAY_INDEX_OUT_OF_BOUNDS in the scoring folds)."""
+    n = counts.get(0)
+    bad = [j for j in sorted(set(counts) | set(range(dim))) if j >= dim or counts.get(j) != n]
+    if bad:
+        raise ValueError(
+            f"{vec_col}: every vector must have dim={dim} components, but component "
+            f"index {bad[0]} is present in {counts.get(bad[0], 0)} of {n} vectors"
+        )
+
+
+def _dim_moments(base, vec_col: str, dim: int, quant: int):
+    """Per-dimension exact moments of ``base``'s quantized components: one
+    posexplode + ``dim``-group DECIMAL aggregate (codegen, map-side partials).
+    Returns ``(ex, mu, var)`` — ``ex`` = ``(__id, j, xq)`` with
+    ``xq = round(x·quant)``, and the population mean / variance per
+    dimension (no epsilon)."""
+    q = float(quant)
+    ex = base.select("__id", F.posexplode("v").alias("j", "x")).select(
+        "__id", "j", F.round(F.col("x") * quant).cast("long").alias("xq")
+    )
+    gl = (
+        ex.groupBy("j")
+        .agg(
+            F.count(F.lit(1)).cast("double").alias("n"),
+            dec_sum(F.col("xq")).alias("s"),
+            dec_sum(F.col("xq") * F.col("xq")).alias("ss"),
+        )
+        .collect()
+    )
+    gm = {int(r["j"]): r for r in gl}
+    _check_dims({j: int(r["n"]) for j, r in gm.items()}, dim, vec_col)
+    n = gm[0]["n"]
+    mu = [gm[j]["s"] / (n * q) for j in range(dim)]
+    var = [
+        gm[j]["ss"] / (n * q * q) - (gm[j]["s"] / (n * q)) * (gm[j]["s"] / (n * q))
+        for j in range(dim)
+    ]
+    return ex, mu, var
+
+
 def pca_outlier_emb(
     emb,
     id_col: str = "vec_id",
@@ -480,71 +487,8 @@ def pca_outlier_emb(
     associations; scoring uses ``F.aggregate`` (a sequential fold, exactly
     DuckDB's ``list_reduce`` order) so the per-row reductions are
     bit-identical too."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    d = dim
-
-    def moments_fn(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            x = np.stack(pdf[vec_col].to_numpy()).astype(np.float64) * float(quant)
-            xq = np.where(x >= 0, np.floor(x + 0.5), -np.floor(-x + 0.5)).astype(np.int64)
-            # enforce the "int64-safe per batch" claim: |xq| ≤ B with
-            # rows·B² < 2⁶³ guarantees the per-batch accumulation cannot
-            # wrap (numpy wraps silently); fail loudly instead of corrupting
-            # the fit moments
-            mx = int(np.abs(xq).max(initial=0))
-            if mx and len(xq) * mx * mx >= 2**63:
-                raise ValueError(
-                    f"emb quantized moments: |component*quant| up to {mx} over "
-                    f"{len(xq)} rows/batch can overflow int64 — lower "
-                    "spark.sql.execution.arrow.maxRecordsPerBatch or quant"
-                )
-            s1 = xq.sum(axis=0)
-            s2 = xq.T @ xq  # [d, d] int64 — asserted safe per Arrow batch
-            rows = {"j": [], "k": [], "v": []}
-            rows["j"].append(-1); rows["k"].append(-1); rows["v"].append(len(xq))
-            for j in range(d):
-                rows["j"].append(j); rows["k"].append(-1); rows["v"].append(int(s1[j]))
-                for k in range(j, d):
-                    rows["j"].append(j); rows["k"].append(k); rows["v"].append(int(s2[j, k]))
-            yield pd.DataFrame(rows)
-
-    mom = (
-        emb.select(vec_col)
-        .mapInPandas(moments_fn, schema="j int, k int, v long")
-        .groupBy("j", "k")
-        .agg(F.sum(F.col("v").cast("decimal(38,0)")).cast("double").alias("s"))
-        .collect()
-    )
-    s = {(int(r["j"]), int(r["k"])): r["s"] for r in mom}
-    n = s[(-1, -1)]
-    q = float(quant)
-    mu = [s[(j, -1)] / (n * q) for j in range(d)]
-    cmat = [[0.0] * d for _ in range(d)]
-    for j in range(d):
-        for k in range(j, d):
-            cjk = s[(j, k)] / (n * q * q) - mu[j] * mu[k]
-            cmat[j][k] = cmat[k][j] = cjk
-
-    import math
-
-    v = [1.0] + [0.0] * (d - 1)
-    for _ in range(n_iter):
-        w = []
-        for j in range(d):
-            acc = cmat[j][0] * v[0]
-            for k in range(1, d):
-                acc = acc + cmat[j][k] * v[k]
-            w.append(acc)
-        nrm2 = w[0] * w[0]
-        for k in range(1, d):
-            nrm2 = nrm2 + w[k] * w[k]
-        nrm = math.sqrt(nrm2)
-        v = [wj / nrm for wj in w]
+    _, mu, cmat = _emb_quant_moments(emb, vec_col, dim, quant)
+    v, _ = power_top(cmat, n_iter)
 
     # per-row reductions as SEQUENTIAL folds (F.aggregate ≡ list_reduce):
     # tot = Σ (x_j − μ_j)², proj = Σ (x_j − μ_j)·v_j over the raw doubles
@@ -589,39 +533,11 @@ def gmm_outlier_emb(
     Per iteration: one posexplode + 64-group aggregate (codegen, map-side
     partials — no corpus joins); the scoring plan is one scan of fold
     expressions with the (μ, σ², w) literal arrays in the closure."""
-    import math
-
-    from pyspark.sql import functions as F
-
     d = dim
     q = float(quant_x)
-    qr = float(quant_r)
-    base = emb.select(
-        F.col(id_col).alias("__id"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
-    )
-    ex = base.select(
-        "__id", F.posexplode("v").alias("j", "x")
-    ).select(
-        "__id", "j", F.round(F.col("x") * quant_x).cast("long").alias("xq")
-    )
-    big = lambda c: F.sum(c.cast("decimal(38,0)")).cast("double")  # noqa: E731
-
-    gl = (
-        ex.groupBy("j")
-        .agg(
-            F.count(F.lit(1)).cast("double").alias("n"),
-            big(F.col("xq")).alias("s"),
-            big(F.col("xq") * F.col("xq")).alias("ss"),
-        )
-        .collect()
-    )
-    gm = {int(r["j"]): r for r in gl}
-    n = gm[0]["n"]
-    pop_var = [
-        gm[j]["ss"] / (n * q * q) - (gm[j]["s"] / (n * q)) * (gm[j]["s"] / (n * q)) + eps
-        for j in range(d)
-    ]
+    base = _emb_base(emb, id_col, vec_col)
+    ex, _, var = _dim_moments(base, vec_col, dim, quant_x)
+    pop_var = [v + eps for v in var]
     # init probes in ONE job: min/max over the (first-component, id, v) struct
     # is the lexicographic order the former two orderBy().limit(1).collect()
     # jobs used (ties impossible — id unique), so the selected rows are
@@ -663,12 +579,12 @@ def gmm_outlier_emb(
         mom = (
             e.groupBy("j")
             .agg(
-                big(F.col("q0")).alias("r0j"),
-                big(F.col("q1")).alias("r1j"),
-                big(F.col("q0") * F.col("xq")).alias("s0"),
-                big((F.col("q0") * F.col("xq")) * F.col("xq")).alias("ss0"),
-                big(F.col("q1") * F.col("xq")).alias("s1"),
-                big((F.col("q1") * F.col("xq")) * F.col("xq")).alias("ss1"),
+                dec_sum(F.col("q0")).alias("r0j"),
+                dec_sum(F.col("q1")).alias("r1j"),
+                dec_sum(F.col("q0") * F.col("xq")).alias("s0"),
+                dec_sum((F.col("q0") * F.col("xq")) * F.col("xq")).alias("ss0"),
+                dec_sum(F.col("q1") * F.col("xq")).alias("s1"),
+                dec_sum((F.col("q1") * F.col("xq")) * F.col("xq")).alias("ss1"),
             )
             .collect()
         )
@@ -715,36 +631,11 @@ def ocsvm_emb(
     squared distances are SEQUENTIAL index folds (``F.aggregate`` ≡ DuckDB
     ``list_reduce``), the landmark sum an explicit left-associated chain —
     both engines walk identical IEEE expressions."""
-    import math  # noqa: F401
-
-    from pyspark.sql import functions as F
-
     d = dim
-    q = float(quant)
-    base = emb.select(
-        F.col(id_col).alias("__id"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
-    )
-    ex = base.select("__id", F.posexplode("v").alias("j", "x")).select(
-        "j", F.round(F.col("x") * quant).cast("long").alias("xq")
-    )
-    big = lambda c: F.sum(c.cast("decimal(38,0)")).cast("double")  # noqa: E731
-    gl = (
-        ex.groupBy("j")
-        .agg(
-            F.count(F.lit(1)).cast("double").alias("n"),
-            big(F.col("xq")).alias("s"),
-            big(F.col("xq") * F.col("xq")).alias("ss"),
-        )
-        .collect()
-    )
-    gm = {int(r["j"]): r for r in gl}
-    n = gm[0]["n"]
+    base = _emb_base(emb, id_col, vec_col)
     s2 = 0.0
-    for j in range(d):
-        s2 = s2 + (
-            gm[j]["ss"] / (n * q * q) - (gm[j]["s"] / (n * q)) * (gm[j]["s"] / (n * q))
-        )
+    for v in _dim_moments(base, vec_col, dim, quant)[2]:
+        s2 = s2 + v
     s2 = s2 + var_eps
 
     pr = F.md5(F.concat(F.lit("ocsvm:"), F.col("__id").cast("string")))
@@ -790,100 +681,29 @@ def iforest_emb(
     (driver-computed from exact min/max aggregates — the SQL twin derives
     the identical doubles in-engine), so every tree is a bit-string column
     and the isolation depth comes from prefix counts over the ≤2^depth-row
-    leaf relation, exactly the 2-feature operator's plan shape."""
-    import hashlib
-    import math
+    leaf relation, exactly the 2-feature operator's plan shape.
 
-    from pyspark.sql import functions as F
-
-    gamma = 0.5772156649015329
-    base = emb.select(
-        F.col(id_col).alias("__id"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
-    )
-    ex = base.select(F.posexplode("v").alias("j", "x"))
+    The literal leaf maps hold up to ``n_trees · 2^depth`` entries, bounded
+    by ``2^16`` (:data:`.closed_form.IFOREST_MAX_LEAVES`): larger forests
+    raise ``ValueError`` before any Spark job runs."""
+    check_iforest_size(n_trees, depth)
+    base = _emb_base(emb, id_col, vec_col)
     rg = (
-        ex.groupBy("j")
+        base.select(F.posexplode("v").alias("j", "x"))
+        .groupBy("j")
         .agg(F.min("x").alias("mn"), F.max("x").alias("mx"), F.count(F.lit(1)).alias("c"))
         .collect()
     )
     rgm = {int(r["j"]): r for r in rg}
+    _check_dims({j: r["c"] for j, r in rgm.items()}, dim, vec_col)
     nn = float(rgm[0]["c"])
 
-    j = base
-    for t in range(n_trees):
-        bits = None
-        for lv in range(depth):
-            hd = hashlib.md5(f"ife:{t}:{lv}".encode()).hexdigest()
-            dml = int(hd[:4], 16) % dim
-            frac = (int(hd[4:12], 16) % 1000000) / 1e6
-            lo, hi = rgm[dml]["mn"], rgm[dml]["mx"]
-            thr = lo + frac * (hi - lo)
-            bit = F.when(
-                F.element_at(F.col("v"), dml + 1) <= F.lit(thr), F.lit("0")
-            ).otherwise(F.lit("1"))
-            bits = bit if bits is None else F.concat(bits, bit)
-        j = j.withColumn(f"b{t}", bits)
+    def cut(h, frac):
+        lo, hi = rgm[h % dim]["mn"], rgm[h % dim]["mx"]
+        return F.element_at(F.col("v"), h % dim + 1) <= F.lit(lo + frac * (hi - lo))
 
-    def c_of(s):
-        return F.when(s == 2.0, F.lit(1.0)).otherwise(
-            F.lit(2.0) * (F.log(s - F.lit(1.0)) + F.lit(gamma))
-            - F.lit(2.0) * (s - F.lit(1.0)) / s
-        )
-
-    def c_py(s):
-        return 1.0 if s == 2.0 else 2.0 * (math.log(s - 1.0) + gamma) - 2.0 * (s - 1.0) / s
-
-    # leaf-count maps for ALL trees in ONE grouping-sets job (≤ 2^depth rows
-    # per tree, bounded regardless of data size), then re-injected as literal
-    # create_map lookups: the previous shape — an eager localCheckpoint plus
-    # depth−1 broadcast joins PER TREE — planned 120 Exchanges / 64 broadcast
-    # joins and ran ~160 jobs at build time. The isolation-depth expression h
-    # itself is unchanged (same F.when/F.log chain over the same exact
-    # integer prefix sums, so scores are bit-identical); only where the leaf
-    # counts come from changed.
-    bcols = [f"b{t}" for t in range(n_trees)]
-    cnt_rows = (
-        j.groupingSets([[F.col(b)] for b in bcols], *[F.col(b) for b in bcols])
-        .agg(F.count(F.lit(1)).alias("c"))
-        .collect()
-    )
-    leaf_counts: list[dict[str, int]] = [{} for _ in range(n_trees)]
-    for r in cnt_rows:
-        for t, b in enumerate(bcols):
-            if r[b] is not None:
-                leaf_counts[t][r[b]] = int(r["c"])
-                break
-    h_cols = []
-    for t in range(n_trees):
-        lc = leaf_counts[t]
-        # exact integer prefix sums over the leaf strings (driver-side)
-        pref: list[dict[str, int]] = [dict() for _ in range(depth)]
-        for leaf, c in lc.items():
-            for lv in range(1, depth):
-                p = leaf[:lv]
-                pref[lv][p] = pref[lv].get(p, 0) + c
-        # one F.expr parse of the whole literal map (a per-leaf F.lit storm
-        # costs thousands of py4j round trips); values are integer-valued
-        # doubles, so repr() round-trips exactly through the SQL parser
-        entries = []
-        for leaf, c in sorted(lc.items()):
-            s_arr = [float(pref[lv][leaf[:lv]]) for lv in range(1, depth)] + [float(c)]
-            arr_sql = ",".join(repr(s) for s in s_arr)
-            entries.append(f"'{leaf}',array({arr_sql})")
-        sarr = F.element_at(F.expr("map(" + ",".join(entries) + ")"), F.col(f"b{t}"))
-        h = F.when(F.element_at(sarr, 1) == 1.0, F.lit(1.0))
-        for lv in range(2, depth):
-            h = h.when(F.element_at(sarr, lv) == 1.0, F.lit(float(lv)))
-        h = h.when(F.element_at(sarr, depth) == 1.0, F.lit(float(depth))).otherwise(
-            F.lit(float(depth)) + c_of(F.element_at(sarr, depth))
-        )
-        h_cols.append(h)
-    avg_h = h_cols[0]
-    for t in range(1, n_trees):
-        avg_h = avg_h + h_cols[t]
-    avg_h = avg_h / F.lit(float(n_trees))
-    score = F.pow(F.lit(2.0), -(avg_h / F.lit(c_py(nn))))
+    c_n = 1.0 if nn == 2.0 else 2.0 * (math.log(nn - 1.0) + GAMMA) - 2.0 * (nn - 1.0) / nn
+    j, score = iforest_score(base, "ife", n_trees, depth, cut, F.lit(c_n))
     return j.select(
         F.col("__id").alias(id_col),
         (F.round(score, 6) + F.lit(0.0)).alias("if_score"),
@@ -906,39 +726,12 @@ def mahalanobis_emb(
     variances: ``score = Σ_j (x_j − μ_j)²/(var_j + ε)``, with μ/var from
     exact quantized moments and the per-row reduction a SEQUENTIAL index
     fold (``F.aggregate`` ≡ ``list_reduce``)."""
-    from pyspark.sql import functions as F
-
-    d = dim
-    q = float(quant)
-    base = emb.select(
-        F.col(id_col).alias("__id"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
-    )
-    ex = base.select(F.posexplode("v").alias("j", "x")).select(
-        "j", F.round(F.col("x") * quant).cast("long").alias("xq")
-    )
-    big = lambda c: F.sum(c.cast("decimal(38,0)")).cast("double")  # noqa: E731
-    gl = (
-        ex.groupBy("j")
-        .agg(
-            F.count(F.lit(1)).cast("double").alias("n"),
-            big(F.col("xq")).alias("s"),
-            big(F.col("xq") * F.col("xq")).alias("ss"),
-        )
-        .collect()
-    )
-    gm = {int(r["j"]): r for r in gl}
-    n = gm[0]["n"]
-    mu = [gm[j]["s"] / (n * q) for j in range(d)]
-    vr = [
-        gm[j]["ss"] / (n * q * q) - (gm[j]["s"] / (n * q)) * (gm[j]["s"] / (n * q))
-        + var_eps
-        for j in range(d)
-    ]
+    base = _emb_base(emb, id_col, vec_col)
+    _, mu, var = _dim_moments(base, vec_col, dim, quant)
     mu_arr = F.array(*[F.lit(m) for m in mu])
-    vr_arr = F.array(*[F.lit(x) for x in vr])
+    vr_arr = F.array(*[F.lit(v + var_eps) for v in var])
     score = F.aggregate(
-        F.sequence(F.lit(1), F.lit(d)),
+        F.sequence(F.lit(1), F.lit(dim)),
         F.lit(0.0),
         lambda acc, i: acc
         + (F.element_at(F.col("v"), i) - F.element_at(mu_arr, i))
@@ -973,47 +766,8 @@ def vae_outlier_2feat(
     Plan: one partial+final DECIMAL moment aggregate, broadcast of the 1-row
     parameter relation, codegen column math, ``TakeOrderedAndProject`` top-k
     (same shape as :func:`pca_outlier_2feat`)."""
-    from pyspark.sql import Window, functions as F
-
     x, y = cols
-    dx_in = F.col(x).cast("decimal(18,4)")
-    dy_in = F.col(y).cast("decimal(18,4)")
-    mo = df.agg(
-        F.count(F.lit(1)).cast("double").alias("n"),
-        F.sum(dx_in).cast("double").alias("sx"),
-        F.sum(dy_in).cast("double").alias("sy"),
-        F.sum(dx_in * dx_in).cast("double").alias("sxx_r"),
-        F.sum(dy_in * dy_in).cast("double").alias("syy_r"),
-        F.sum(dx_in * dy_in).cast("double").alias("sxy_r"),
-    ).select(
-        (F.col("sx") / F.col("n")).alias("mx"),
-        (F.col("sy") / F.col("n")).alias("my"),
-        (F.col("sxx_r") / F.col("n") - (F.col("sx") / F.col("n")) * (F.col("sx") / F.col("n"))).alias("a"),
-        (F.col("syy_r") / F.col("n") - (F.col("sy") / F.col("n")) * (F.col("sy") / F.col("n"))).alias("b"),
-        (F.col("sxy_r") / F.col("n") - (F.col("sx") / F.col("n")) * (F.col("sy") / F.col("n"))).alias("c"),
-    )
-    disc = F.sqrt(
-        (F.col("a") - F.col("b")) * (F.col("a") - F.col("b")) + F.lit(4.0) * F.col("c") * F.col("c")
-    )
-    par = mo.select(
-        "mx",
-        "my",
-        "a",
-        "c",
-        ((F.col("a") + F.col("b") - disc) / F.lit(2.0) + F.lit(eps)).alias("sig2"),
-        ((F.col("a") + F.col("b") + disc) / F.lit(2.0)).alias("lamp"),
-    ).select(
-        "mx",
-        "my",
-        "sig2",
-        # unit major eigvec scaled by sqrt(λ₊ − σ²) — the pPCA loading W
-        (F.col("c") / F.sqrt(F.col("c") * F.col("c") + (F.col("lamp") - F.col("a")) * (F.col("lamp") - F.col("a")))
-         * F.sqrt(F.greatest(F.col("lamp") - F.col("sig2"), F.lit(0.0)))).alias("w1"),
-        ((F.col("lamp") - F.col("a")) / F.sqrt(F.col("c") * F.col("c") + (F.col("lamp") - F.col("a")) * (F.col("lamp") - F.col("a")))
-         * F.sqrt(F.greatest(F.col("lamp") - F.col("sig2"), F.lit(0.0)))).alias("w2"),
-        (F.greatest(F.col("lamp") - F.col("sig2"), F.lit(0.0)) + F.col("sig2")).alias("m_cap"),
-    )
-    j = df.crossJoin(F.broadcast(par))
+    j = df.crossJoin(F.broadcast(ppca_par(df, x, y, eps)))
     dx = F.col(x).cast("double") - F.col("mx")
     dy = F.col(y).cast("double") - F.col("my")
     mz = (F.col("w1") * dx + F.col("w2") * dy) / F.col("m_cap")
@@ -1022,12 +776,7 @@ def vae_outlier_2feat(
     e2 = (dy - F.col("w2") * mz) * (dy - F.col("w2") * mz) + F.col("w2") * F.col("w2") * pv
     score = (e1 + e2) / F.lit(2.0)
     scored = j.select(id_col, (F.round(score, 6) + F.lit(0.0)).alias("vae_score"))
-    order = [F.col("vae_score").desc(), F.col(id_col)]
-    top = scored.orderBy(*order).limit(top_k)
-    w = Window.orderBy(*order)
-    return top.withColumn("rank", F.row_number().over(w)).select(
-        id_col, "vae_score", F.col("rank").cast("int").alias("rank")
-    )
+    return ranked_top_k(scored, "vae_score", [id_col], top_k)
 
 
 def ae_outlier_scores(
@@ -1064,23 +813,12 @@ def ae_outlier_scores(
     pcs = v[:, -n_components:]
     k_top = max(1, int(np.ceil(d * outlier_perc / 100.0)))
 
-    def fn(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            x = np.stack(pdf[EMB_COL].to_numpy()).astype(np.float64)
-            xc = x - mean
-            recon = (xc @ pcs) @ pcs.T
-            ferr = (xc - recon) ** 2  # feature-level scores, od/ae.py:181
-            top = np.sort(ferr, axis=1)[:, -k_top:]
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf[id_col].to_numpy(),
-                    "ae_score": np.round(top.mean(axis=1), 6),
-                }
-            )
+    def score(x, _):
+        xc = x - mean
+        ferr = (xc - (xc @ pcs) @ pcs.T) ** 2  # feature-level scores, od/ae.py:181
+        return np.round(np.sort(ferr, axis=1)[:, -k_top:].mean(axis=1), 6)
 
-    return emb.select(id_col, EMB_COL).mapInPandas(fn, schema="vec_id long, ae_score double")
+    return score_scan(emb, id_col, "ae_score", score)
 
 
 def gmm_outlier_dfeat(
@@ -1113,10 +851,6 @@ def gmm_outlier_dfeat(
     Scale shape: per iteration one corpus scan + one tiny aggregate (the
     2-component moment row, 2·(2d+1) numbers regardless of corpus size),
     params travel by closure — no corpus joins, no full-value buffering."""
-    import math
-
-    from pyspark.sql import functions as F
-
     q = float(quant)
     names = [f"x{i}" for i in range(len(cols))]
     sel = [F.col(id_col)]
@@ -1247,36 +981,8 @@ def ae_outlier_2feat(
     instance aggregation (``od/ae.py:208``): with d=2, ``perc<=50`` keeps
     the single worst feature error (``greatest``), ``perc>50`` averages
     both. Returns the top-k ``(id, ae2_score, rank)``."""
-    from pyspark.sql import Window, functions as F
-
     x, y = cols
-    dx_in = F.col(x).cast("decimal(18,4)")
-    dy_in = F.col(y).cast("decimal(18,4)")
-    mo = df.agg(
-        F.count(F.lit(1)).cast("double").alias("n"),
-        F.sum(dx_in).cast("double").alias("sx"),
-        F.sum(dy_in).cast("double").alias("sy"),
-        F.sum(dx_in * dx_in).cast("double").alias("sxx_r"),
-        F.sum(dy_in * dy_in).cast("double").alias("syy_r"),
-        F.sum(dx_in * dy_in).cast("double").alias("sxy_r"),
-    ).select(
-        (F.col("sx") / F.col("n")).alias("mx"),
-        (F.col("sy") / F.col("n")).alias("my"),
-        (F.col("sxx_r") / F.col("n") - (F.col("sx") / F.col("n")) * (F.col("sx") / F.col("n"))).alias("a"),
-        (F.col("syy_r") / F.col("n") - (F.col("sy") / F.col("n")) * (F.col("sy") / F.col("n"))).alias("b"),
-        (F.col("sxy_r") / F.col("n") - (F.col("sx") / F.col("n")) * (F.col("sy") / F.col("n"))).alias("c"),
-    )
-    lamp = (F.col("a") + F.col("b") + F.sqrt(
-        (F.col("a") - F.col("b")) * (F.col("a") - F.col("b")) + F.lit(4.0) * F.col("c") * F.col("c")
-    )) / F.lit(2.0)
-    par = mo.select(
-        "mx",
-        "my",
-        F.col("c").alias("w1"),
-        (lamp - F.col("a")).alias("w2"),
-        (F.col("c") * F.col("c") + (lamp - F.col("a")) * (lamp - F.col("a"))).alias("nrm2"),
-    )
-    j = df.crossJoin(F.broadcast(par))
+    j = df.crossJoin(F.broadcast(recon_par(df, x, y)))
     dx = F.col(x).cast("double") - F.col("mx")
     dy = F.col(y).cast("double") - F.col("my")
     proj = dx * F.col("w1") + dy * F.col("w2")
@@ -1286,12 +992,7 @@ def ae_outlier_2feat(
     fu = eu * eu
     score = F.greatest(fv, fu) if outlier_perc <= 50.0 else (fv + fu) / F.lit(2.0)
     scored = j.select(id_col, (F.round(score, 6) + F.lit(0.0)).alias("ae2_score"))
-    order = [F.col("ae2_score").desc(), F.col(id_col)]
-    top = scored.orderBy(*order).limit(top_k)
-    w = Window.orderBy(*order)
-    return top.withColumn("rank", F.row_number().over(w)).select(
-        id_col, "ae2_score", F.col("rank").cast("int").alias("rank")
-    )
+    return ranked_top_k(scored, "ae2_score", [id_col], top_k)
 
 
 def kpca_outlier_2land(
@@ -1311,50 +1012,8 @@ def kpca_outlier_2land(
     and the PCA-off-manifold score is :func:`pca_outlier_2feat`'s closed-form
     2×2 eigendecomposition applied to φ — exact DECIMAL moments, broadcast
     parameter relations, ``TakeOrderedAndProject`` top-k, no UDF."""
-    from pyspark.sql import Window, functions as F
-
-    x, y = cols
-    base = df.select(
-        F.col(id_col),
-        F.col(x).cast("double").alias("v"),
-        F.col(y).cast("double").alias("u"),
-    )
-    pr = F.md5(F.concat(F.lit("kpca:"), F.col(id_col).cast("string")))
-    two = base.withColumn("pr", pr).orderBy("pr", id_col).limit(2)
-    wv = Window.orderBy("pr", id_col)
-    land = (
-        two.withColumn("rn", F.row_number().over(wv))
-        .agg(
-            F.max(F.when(F.col("rn") == 1, F.col("v"))).alias("l1v"),
-            F.max(F.when(F.col("rn") == 1, F.col("u"))).alias("l1u"),
-            F.max(F.when(F.col("rn") == 2, F.col("v"))).alias("l2v"),
-            F.max(F.when(F.col("rn") == 2, F.col("u"))).alias("l2u"),
-        )
-    )
-    dv = F.col("v").cast("decimal(18,4)")
-    du = F.col("u").cast("decimal(18,4)")
-    gs = base.agg(
-        F.count(F.lit(1)).cast("double").alias("n"),
-        F.sum(dv).cast("double").alias("sv"),
-        F.sum(dv * dv).cast("double").alias("svv"),
-        F.sum(du).cast("double").alias("su"),
-        F.sum(du * du).cast("double").alias("suu"),
-    ).select(
-        (
-            (F.col("svv") / F.col("n") - (F.col("sv") / F.col("n")) * (F.col("sv") / F.col("n")))
-            + (F.col("suu") / F.col("n") - (F.col("su") / F.col("n")) * (F.col("su") / F.col("n")))
-            + F.lit(var_eps)
-        ).alias("s2")
-    )
-    j = base.crossJoin(F.broadcast(land)).crossJoin(F.broadcast(gs))
-    kern = lambda lv, lu: F.exp(  # noqa: E731
-        -((F.col("v") - F.col(lv)) * (F.col("v") - F.col(lv))
-          + (F.col("u") - F.col(lu)) * (F.col("u") - F.col(lu)))
-        / (F.lit(2.0) * F.col("s2"))
-    )
-    feats = j.select(
-        id_col, kern("l1v", "l1u").alias("f1"), kern("l2v", "l2u").alias("f2")
-    )
+    j, kern = landmark_kernels(df, cols, id_col, "kpca:", 2, var_eps)
+    feats = j.select(id_col, kern(1).alias("f1"), kern(2).alias("f2"))
     return pca_outlier_2feat(feats, ("f1", "f2"), [id_col], top_k).withColumnRenamed(
         "pca2_score", "kpca2_score"
     )
@@ -1382,58 +1041,13 @@ def ocsvm_mean_2feat(
     Plan: a ``TakeOrdered`` 8-row landmark relation + 1-row bandwidth
     relation broadcast onto the stream, codegen kernel sum,
     ``TakeOrderedAndProject`` top-k — no UDF, no collect."""
-    from pyspark.sql import Window, functions as F
-
-    x, y = cols
-    base = df.select(
-        F.col(id_col),
-        F.col(x).cast("double").alias("v"),
-        F.col(y).cast("double").alias("u"),
-    )
-    pr = F.md5(F.concat(F.lit("ocsvm:"), F.col(id_col).cast("string")))
-    land_rows = base.withColumn("pr", pr).orderBy("pr", id_col).limit(n_landmarks)
-    wv = Window.orderBy("pr", id_col)
-    land = land_rows.withColumn("rn", F.row_number().over(wv)).agg(
-        *[
-            F.max(F.when(F.col("rn") == i, F.col(c))).alias(f"l{i}{c}")
-            for i in range(1, n_landmarks + 1)
-            for c in ("v", "u")
-        ]
-    )
-    dv = F.col("v").cast("decimal(18,4)")
-    du = F.col("u").cast("decimal(18,4)")
-    gs = base.agg(
-        F.count(F.lit(1)).cast("double").alias("n"),
-        F.sum(dv).cast("double").alias("sv"),
-        F.sum(dv * dv).cast("double").alias("svv"),
-        F.sum(du).cast("double").alias("su"),
-        F.sum(du * du).cast("double").alias("suu"),
-    ).select(
-        (
-            (F.col("svv") / F.col("n") - (F.col("sv") / F.col("n")) * (F.col("sv") / F.col("n")))
-            + (F.col("suu") / F.col("n") - (F.col("su") / F.col("n")) * (F.col("su") / F.col("n")))
-            + F.lit(var_eps)
-        ).alias("s2")
-    )
-    j = base.crossJoin(F.broadcast(land)).crossJoin(F.broadcast(gs))
-    kern = lambda i: F.exp(  # noqa: E731
-        -(
-            (F.col("v") - F.col(f"l{i}v")) * (F.col("v") - F.col(f"l{i}v"))
-            + (F.col("u") - F.col(f"l{i}u")) * (F.col("u") - F.col(f"l{i}u"))
-        )
-        / (F.lit(2.0) * F.col("s2"))
-    )
+    j, kern = landmark_kernels(df, cols, id_col, "ocsvm:", n_landmarks, var_eps)
     total = kern(1)
     for i in range(2, n_landmarks + 1):
         total = total + kern(i)
     score = -(total / F.lit(float(n_landmarks)))
     scored = j.select(id_col, (F.round(score, 6) + F.lit(0.0)).alias("ocsvm_score"))
-    order = [F.col("ocsvm_score").desc(), F.col(id_col)]
-    top = scored.orderBy(*order).limit(top_k)
-    w = Window.orderBy(*order)
-    return top.withColumn("rank", F.row_number().over(w)).select(
-        id_col, "ocsvm_score", F.col("rank").cast("int").alias("rank")
-    )
+    return ranked_top_k(scored, "ocsvm_score", [id_col], top_k)
 
 
 def iforest_hash_2feat(
@@ -1461,15 +1075,16 @@ def iforest_hash_2feat(
       ``c(s)=2(ln(s−1)+γ)−2(s−1)/s``).
 
     Plan shape at scale: one codegen pass builds the leaf bit-string per
-    tree, one tiny groupBy per tree (≤ 2^depth rows), prefix counts are
-    aggregations OVER THE LEAF RELATION (never the data), and the
-    (leaf → h) map broadcast-joins back — the corpus is scanned once per
-    tree aggregate plus once for scoring, with no wide shuffle."""
-    import hashlib
+    tree, one grouping-sets job counts the leaves of every tree (≤ 2^depth
+    rows per tree), prefix counts are sums OVER THE LEAF RELATION (never
+    the data), and the (leaf → h) map returns as a literal lookup — the
+    corpus is scanned once for the leaf counts plus once for scoring, with
+    no wide shuffle (see :func:`.closed_form.iforest_score`).
 
-    from pyspark.sql import Window, functions as F
-
-    gamma = 0.5772156649015329
+    The literal leaf maps hold up to ``n_trees · 2^depth`` entries, bounded
+    by ``2^16`` (:data:`.closed_form.IFOREST_MAX_LEAVES`): larger forests
+    raise ``ValueError`` before any Spark job runs."""
+    check_iforest_size(n_trees, depth)
     x, y = cols
     base = df.select(
         F.col(id_col),
@@ -1483,79 +1098,16 @@ def iforest_hash_2feat(
         F.min("u").alias("umin"),
         F.max("u").alias("umax"),
     )
-    j = base.crossJoin(F.broadcast(rng))
-    for t in range(n_trees):
-        bits = None
-        for lv in range(depth):
-            hd = hashlib.md5(f"ift:{t}:{lv}".encode()).hexdigest()
-            feat = int(hd[:4], 16) % 2
-            frac = (int(hd[4:12], 16) % 1000000) / 1e6
-            c0, lo, hi = ("v", "vmin", "vmax") if feat == 0 else ("u", "umin", "umax")
-            thr = F.col(lo) + F.lit(frac) * (F.col(hi) - F.col(lo))
-            bit = F.when(F.col(c0) <= thr, F.lit("0")).otherwise(F.lit("1"))
-            bits = bit if bits is None else F.concat(bits, bit)
-        j = j.withColumn(f"b{t}", bits)
 
-    def c_of(s):
-        return F.when(s == 2.0, F.lit(1.0)).otherwise(
-            F.lit(2.0) * (F.log(s - F.lit(1.0)) + F.lit(gamma))
-            - F.lit(2.0) * (s - F.lit(1.0)) / s
-        )
+    def cut(h, frac):
+        c0, lo, hi = ("v", "vmin", "vmax") if h % 2 == 0 else ("u", "umin", "umax")
+        return F.col(c0) <= F.col(lo) + F.lit(frac) * (F.col(hi) - F.col(lo))
 
-    # leaf-count maps for ALL trees in ONE grouping-sets job (≤ 2^depth rows
-    # per tree, bounded regardless of data size), re-injected as literal
-    # create_map lookups — replaces the per-tree eager localCheckpoint +
-    # depth−1 broadcast joins (48 Exchanges / 24 broadcast joins, ~45 build
-    # jobs). The isolation-depth expression h is unchanged (same F.when/F.log
-    # chain over the same exact integer prefix sums → bit-identical scores).
-    bcols = [f"b{t}" for t in range(n_trees)]
-    cnt_rows = (
-        j.groupingSets([[F.col(b)] for b in bcols], *[F.col(b) for b in bcols])
-        .agg(F.count(F.lit(1)).alias("c"))
-        .collect()
+    j, score = iforest_score(
+        base.crossJoin(F.broadcast(rng)), "ift", n_trees, depth, cut, c_of(F.col("nn"))
     )
-    leaf_counts: list[dict[str, int]] = [{} for _ in range(n_trees)]
-    for r in cnt_rows:
-        for t, b in enumerate(bcols):
-            if r[b] is not None:
-                leaf_counts[t][r[b]] = int(r["c"])
-                break
-    h_cols = []
-    for t in range(n_trees):
-        lc = leaf_counts[t]
-        pref: list[dict[str, int]] = [dict() for _ in range(depth)]
-        for leaf, c in lc.items():
-            for lv in range(1, depth):
-                p = leaf[:lv]
-                pref[lv][p] = pref[lv].get(p, 0) + c
-        # one F.expr parse of the whole literal map (a per-leaf F.lit storm
-        # costs thousands of py4j round trips); values are integer-valued
-        # doubles, so repr() round-trips exactly through the SQL parser
-        entries = []
-        for leaf, c in sorted(lc.items()):
-            s_arr = [float(pref[lv][leaf[:lv]]) for lv in range(1, depth)] + [float(c)]
-            arr_sql = ",".join(repr(s) for s in s_arr)
-            entries.append(f"'{leaf}',array({arr_sql})")
-        sarr = F.element_at(F.expr("map(" + ",".join(entries) + ")"), F.col(f"b{t}"))
-        h = F.when(F.element_at(sarr, 1) == 1.0, F.lit(1.0))
-        for lv in range(2, depth):
-            h = h.when(F.element_at(sarr, lv) == 1.0, F.lit(float(lv)))
-        h = h.when(F.element_at(sarr, depth) == 1.0, F.lit(float(depth))).otherwise(
-            F.lit(float(depth)) + c_of(F.element_at(sarr, depth))
-        )
-        h_cols.append(h)
-    avg_h = h_cols[0]
-    for t in range(1, n_trees):
-        avg_h = avg_h + h_cols[t]
-    avg_h = avg_h / F.lit(float(n_trees))
-    score = F.pow(F.lit(2.0), -(avg_h / c_of(F.col("nn"))))
     scored = j.select(id_col, (F.round(score, 6) + F.lit(0.0)).alias("if_score"))
-    order = [F.col("if_score").desc(), F.col(id_col)]
-    top = scored.orderBy(*order).limit(top_k)
-    w = Window.orderBy(*order)
-    return top.withColumn("rank", F.row_number().over(w)).select(
-        id_col, "if_score", F.col("rank").cast("int").alias("rank")
-    )
+    return ranked_top_k(scored, "if_score", [id_col], top_k)
 
 
 def aegmm_features(
@@ -1581,46 +1133,14 @@ def aegmm_features(
     Returns ``(id, zl, zr)`` — feed to :func:`gmm_outlier_2feat` for the
     ``gmm_energy`` scoring stage (``od/aegmm.py:172-174``). Everything is
     broadcast-join column math mirrored in the DuckDB oracle."""
-    from pyspark.sql import functions as F
-
     x, y = cols
     base = df.select(
         F.col(id_col),
         F.col(x).cast("double").alias("x0"),
         F.col(y).cast("double").alias("y0"),
     )
-    dx_in = F.col("x0").cast("decimal(18,4)")
-    dy_in = F.col("y0").cast("decimal(18,4)")
-    mo = base.agg(
-        F.count(F.lit(1)).cast("double").alias("n"),
-        F.sum(dx_in).cast("double").alias("sx"),
-        F.sum(dy_in).cast("double").alias("sy"),
-        F.sum(dx_in * dx_in).cast("double").alias("sxx_r"),
-        F.sum(dy_in * dy_in).cast("double").alias("syy_r"),
-        F.sum(dx_in * dy_in).cast("double").alias("sxy_r"),
-    ).select(
-        (F.col("sx") / F.col("n")).alias("mx"),
-        (F.col("sy") / F.col("n")).alias("my"),
-        (F.col("sxx_r") / F.col("n") - (F.col("sx") / F.col("n")) * (F.col("sx") / F.col("n"))).alias("a"),
-        (F.col("syy_r") / F.col("n") - (F.col("sy") / F.col("n")) * (F.col("sy") / F.col("n"))).alias("b"),
-        (F.col("sxy_r") / F.col("n") - (F.col("sx") / F.col("n")) * (F.col("sy") / F.col("n"))).alias("c"),
-    )
-    disc = F.sqrt(
-        (F.col("a") - F.col("b")) * (F.col("a") - F.col("b")) + F.lit(4.0) * F.col("c") * F.col("c")
-    )
-    lamp = (F.col("a") + F.col("b") + disc) / F.lit(2.0)
     if variational:
-        sig2 = (F.col("a") + F.col("b") - disc) / F.lit(2.0) + F.lit(eps)
-        g = F.greatest(lamp - sig2, F.lit(0.0))
-        nrm = F.sqrt(F.col("c") * F.col("c") + (lamp - F.col("a")) * (lamp - F.col("a")))
-        par = mo.select(
-            "mx",
-            "my",
-            (F.col("c") / nrm * F.sqrt(g)).alias("w1"),
-            ((lamp - F.col("a")) / nrm * F.sqrt(g)).alias("w2"),
-            (g + sig2).alias("m_cap"),
-        )
-        j = base.crossJoin(F.broadcast(par))
+        j = base.crossJoin(F.broadcast(ppca_par(base, "x0", "y0", eps)))
         zl = (F.col("w1") * (F.col("x0") - F.col("mx")) + F.col("w2") * (F.col("y0") - F.col("my"))) / F.col("m_cap")
         f1 = j.select(
             id_col,
@@ -1631,14 +1151,7 @@ def aegmm_features(
             (F.col("my") + F.col("w2") * zl).alias("ru"),
         )
     else:
-        par = mo.select(
-            "mx",
-            "my",
-            F.col("c").alias("w1"),
-            (lamp - F.col("a")).alias("w2"),
-            (F.col("c") * F.col("c") + (lamp - F.col("a")) * (lamp - F.col("a"))).alias("nrm2"),
-        )
-        j = base.crossJoin(F.broadcast(par))
+        j = base.crossJoin(F.broadcast(recon_par(base, "x0", "y0")))
         proj = (F.col("x0") - F.col("mx")) * F.col("w1") + (F.col("y0") - F.col("my")) * F.col("w2")
         f1 = j.select(
             id_col,
@@ -1681,24 +1194,9 @@ def iforest_outlier_scores(
     on the broadcast reference (sklearn-free — see
     :mod:`..functions.iforest`), scored in one ``mapInPandas`` corpus scan —
     the same no-corpus-shuffle shape as every other outlier scan here."""
-    from ..functions.iforest import IsolationForest
-
     _, _, r = _collect_matrix(emb, ref_pred, id_col)
     det = IsolationForest.fit(r, n_trees=n_trees, max_samples=max_samples, seed=seed)
-
-    def fn(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            x = np.stack(pdf[EMB_COL].to_numpy()).astype(np.float64)
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf[id_col].to_numpy(),
-                    "iforest_score": np.round(det.score(x), 6),
-                }
-            )
-
-    return emb.select(id_col, EMB_COL).mapInPandas(fn, schema="vec_id long, iforest_score double")
+    return score_scan(emb, id_col, "iforest_score", lambda x, _: np.round(det.score(x), 6))
 
 
 def svm_outlier_scores(
@@ -1714,24 +1212,9 @@ def svm_outlier_scores(
     higher = more anomalous). Seeded NumPy Nyström + primal GD fit on the
     broadcast reference (:mod:`..functions.svm`), one ``mapInPandas`` corpus
     scan — a [batch × m] kernel block per Arrow batch, no corpus shuffle."""
-    from ..functions.svm import OneClassSVM
-
     _, _, r = _collect_matrix(emb, ref_pred, id_col)
     det = OneClassSVM.fit(r, nu=nu, n_components=n_components, seed=seed)
-
-    def fn(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            x = np.stack(pdf[EMB_COL].to_numpy()).astype(np.float64)
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf[id_col].to_numpy(),
-                    "svm_score": np.round(det.score(x), 6),
-                }
-            )
-
-    return emb.select(id_col, EMB_COL).mapInPandas(fn, schema="vec_id long, svm_score double")
+    return score_scan(emb, id_col, "svm_score", lambda x, _: np.round(det.score(x), 6))
 
 
 def kernel_pca_outlier_scores(
@@ -1746,8 +1229,6 @@ def kernel_pca_outlier_scores(
     principal components normalized by 1/√eigenvalue, score =
     ``−2·mean(k_xr) − ‖projection‖²`` (unlike the linear case, the TOP
     components are kept). Fit on the broadcast reference, one corpus scan."""
-    from ..functions.mmd import median_heuristic_sigma, rbf_kernel, squared_pairwise_distance
-
     _, _, r = _collect_matrix(emb, ref_pred, id_col)
     n = r.shape[0]
     if n_components >= n:
@@ -1767,32 +1248,23 @@ def kernel_pca_outlier_scores(
     d_eig = np.maximum(d_eig, 1e-12)
     pcs = (v / np.sqrt(d_eig)[None, :])[:, -n_components:]
 
-    def fn(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            x = np.stack(pdf[EMB_COL].to_numpy()).astype(np.float64)
-            k_xr = rbf_kernel(x, r, sigma)
-            row_sums = k_xr.sum(axis=1)
-            m = k_xr.shape[1]
-            # Batch-independent centering: every term is normalized by the
-            # REFERENCE size m, never the Arrow batch size, so scores are
-            # invariant to partitioning/batch boundaries. (The reference's
-            # od/pytorch/pca.py:239-243 divides the row term by the test batch
-            # size; in exact arithmetic that term cancels against the
-            # projection — top eigenvectors of the centered kernel are
-            # orthogonal to 1 — so this deviation only removes the ulp-level
-            # batch sensitivity, it does not change the scores.)
-            k_xr_cen = (
-                k_xr - k_col_sums[None, :] / m - row_sums[:, None] / m + k_sum / (m * m)
-            )
-            proj = k_xr_cen @ pcs
-            scores = -2.0 * k_xr.mean(axis=-1) - (proj**2).sum(axis=1)
-            yield pd.DataFrame(
-                {"vec_id": pdf[id_col].to_numpy(), "kpca_score": np.round(scores, 6)}
-            )
+    def score(x, _):
+        k_xr = rbf_kernel(x, r, sigma)
+        row_sums = k_xr.sum(axis=1)
+        m = k_xr.shape[1]
+        # Batch-independent centering: every term is normalized by the
+        # REFERENCE size m, never the Arrow batch size, so scores are
+        # invariant to partitioning/batch boundaries. (The reference's
+        # od/pytorch/pca.py:239-243 divides the row term by the test batch
+        # size; in exact arithmetic that term cancels against the
+        # projection — top eigenvectors of the centered kernel are
+        # orthogonal to 1 — so this deviation only removes the ulp-level
+        # batch sensitivity, it does not change the scores.)
+        k_xr_cen = k_xr - k_col_sums[None, :] / m - row_sums[:, None] / m + k_sum / (m * m)
+        proj = k_xr_cen @ pcs
+        return np.round(-2.0 * k_xr.mean(axis=-1) - (proj**2).sum(axis=1), 6)
 
-    return emb.select(id_col, EMB_COL).mapInPandas(fn, schema="vec_id long, kpca_score double")
+    return score_scan(emb, id_col, "kpca_score", score)
 
 
 def mahalanobis_cat_scores(
@@ -1833,15 +1305,6 @@ def mahalanobis_cat_scores(
     the SQL twin; scoring is one moment aggregate + one codegen scan with the
     k category literals in a CASE chain. Nothing unbounded ever reaches the
     driver and the corpus never shuffles."""
-    from pyspark.sql import functions as F
-
-    from ..functions.abdm import (
-        abdm_dpair,
-        classical_mds_dabs,
-        combine_abdm_mvdm,
-        mvdm_dpair,
-    )
-
     if d_type not in ("abdm", "mvdm", "abdm-mvdm"):
         raise ValueError(f"unsupported d_type: {d_type!r}")
 
@@ -1922,29 +1385,10 @@ def mahalanobis_cat_scores(
     for cval, dval in zip(cats[1:], dabs[1:]):
         mapping = mapping.when(F.col(cat_col) == F.lit(cval), F.lit(dval))
     feat = df.select(id_col, mapping.alias("x0"), F.col(value_col).alias("x1"))
-    d0 = F.col("x0").cast("decimal(18,8)")
-    d1 = F.col("x1").cast("decimal(18,4)")
-    stats = feat.agg(
-        F.count(F.lit(1)).cast("double").alias("n"),
-        F.sum(d0).cast("double").alias("sx"),
-        F.sum(d1).cast("double").alias("sy"),
-        F.sum(d0 * d0).cast("double").alias("sxx_r"),
-        F.sum(d1 * d1).cast("double").alias("syy_r"),
-        F.sum(d0 * d1).cast("double").alias("sxy_r"),
-    ).select(
-        (F.col("sx") / F.col("n")).alias("mx"),
-        (F.col("sy") / F.col("n")).alias("my"),
-        (F.col("sxx_r") / F.col("n") - (F.col("sx") / F.col("n")) * (F.col("sx") / F.col("n"))).alias("sxx"),
-        (F.col("syy_r") / F.col("n") - (F.col("sy") / F.col("n")) * (F.col("sy") / F.col("n"))).alias("syy"),
-        (F.col("sxy_r") / F.col("n") - (F.col("sx") / F.col("n")) * (F.col("sy") / F.col("n"))).alias("sxy"),
-    )
-    j = feat.crossJoin(F.broadcast(stats))
-    det = F.col("sxx") * F.col("syy") - F.col("sxy") * F.col("sxy")
+    j = feat.crossJoin(F.broadcast(moments_2x2(feat, "x0", "x1", x_cast="decimal(18,8)")))
     dx = F.col("x0").cast("double") - F.col("mx")
     dy = F.col("x1").cast("double") - F.col("my")
-    score = (
-        F.col("syy") * dx * dx - 2 * F.col("sxy") * dx * dy + F.col("sxx") * dy * dy
-    ) / det
+    score = mahalanobis_2x2(dx, dy)
     return j.select(id_col, (F.round(score, 6) + F.lit(0.0)).alias("maha_cat"))
 
 
@@ -1952,8 +1396,6 @@ def _emb_top_eigvecs(cmat, n_comp: int, n_iter: int):
     """Leading eigenpairs of a small dense covariance via fixed-iteration
     power method + rank-1 deflation (functions/abdm.power_top — the same
     sequential-fold scalar chains the SQL twins mirror)."""
-    from ..functions.abdm import deflate, power_top
-
     vs, b = [], cmat
     for _ in range(n_comp):
         u, lam = power_top(b, n_iter)
@@ -1981,8 +1423,6 @@ def pca_outlier_sub_emb(
     fixed-iteration power + rank-1 deflation on the driver; scoring
     subtracts each component's squared projection in sequence (all
     ``F.aggregate`` sequential folds ≡ ``list_reduce``)."""
-    from pyspark.sql import functions as F
-
     _, mu, cmat = _emb_quant_moments(emb, vec_col, dim, quant)
     vs = _emb_top_eigvecs(cmat, n_comp, n_iter)
 
@@ -2022,10 +1462,6 @@ def ae_outlier_emb(
     analog — SURVEY §8 ledger); the top-error selection is a pure SORT of
     identical doubles, so both engines pick the same features and the
     sequential-fold mean hash-matches."""
-    import math
-
-    from pyspark.sql import functions as F
-
     if n_comp != 4:
         raise ValueError("the mirrored pairwise recon grouping is fixed at n_comp=4")
     _, mu, cmat = _emb_quant_moments(emb, vec_col, dim, quant)
@@ -2088,47 +1524,7 @@ def kpca_outlier_4land(
     off-manifold score is :func:`pca_outlier_dfeat`'s fixed-iteration power
     method over the 4-dim feature space — exact DECIMAL feature moments,
     broadcast parameter relations, no UDF."""
-    from pyspark.sql import Window, functions as F
-
-    x, y = cols
-    base = df.select(
-        F.col(id_col),
-        F.col(x).cast("double").alias("v"),
-        F.col(y).cast("double").alias("u"),
-    )
-    pr = F.md5(F.concat(F.lit("kpca4:"), F.col(id_col).cast("string")))
-    four = base.withColumn("pr", pr).orderBy("pr", id_col).limit(4)
-    wv = Window.orderBy("pr", id_col)
-    land = four.withColumn("rn", F.row_number().over(wv)).agg(
-        *[
-            F.max(F.when(F.col("rn") == i, F.col(c))).alias(f"l{i}{c}")
-            for i in range(1, 5)
-            for c in ("v", "u")
-        ]
-    )
-    dv = F.col("v").cast("decimal(18,4)")
-    du = F.col("u").cast("decimal(18,4)")
-    gs = base.agg(
-        F.count(F.lit(1)).cast("double").alias("n"),
-        F.sum(dv).cast("double").alias("sv"),
-        F.sum(dv * dv).cast("double").alias("svv"),
-        F.sum(du).cast("double").alias("su"),
-        F.sum(du * du).cast("double").alias("suu"),
-    ).select(
-        (
-            (F.col("svv") / F.col("n") - (F.col("sv") / F.col("n")) * (F.col("sv") / F.col("n")))
-            + (F.col("suu") / F.col("n") - (F.col("su") / F.col("n")) * (F.col("su") / F.col("n")))
-            + F.lit(var_eps)
-        ).alias("s2")
-    )
-    j = base.crossJoin(F.broadcast(land)).crossJoin(F.broadcast(gs))
-    kern = lambda i: F.exp(  # noqa: E731
-        -(
-            (F.col("v") - F.col(f"l{i}v")) * (F.col("v") - F.col(f"l{i}v"))
-            + (F.col("u") - F.col(f"l{i}u")) * (F.col("u") - F.col(f"l{i}u"))
-        )
-        / (F.lit(2.0) * F.col("s2"))
-    )
+    j, kern = landmark_kernels(df, cols, id_col, "kpca4:", 4, var_eps)
     feats = j.select(id_col, *[kern(i).alias(f"f{i}") for i in range(1, 5)])
     return pca_outlier_dfeat(
         feats, ("f1", "f2", "f3", "f4"), id_col, n_iter

@@ -1,0 +1,84 @@
+"""Outlier-family operators (``operators/outlier.py``, ``adversarial.py``,
+``llr.py``, ``drift.mahalanobis_scores``): partition invariance of every
+2-feature closed form built on the shared :mod:`.closed_form` blocks, and
+the fail-fast guards of the embedding-width operators."""
+
+import numpy as np
+import pytest
+
+from alibi_detect_spark.operators import drift, llr, outlier
+
+
+def _cluster_with_ood(spark, n: int = 2000, n_ood: int = 8, seed: int = 11):
+    """Tight central cluster + a few far-out rows (the OOD instances)."""
+    rng = np.random.default_rng(seed)
+    v = rng.normal(50.0, 3.0, n)
+    u = rng.normal(20.0, 2.0, n)
+    v[:n_ood] = rng.uniform(180.0, 200.0, n_ood)
+    u[:n_ood] = rng.uniform(90.0, 99.0, n_ood)
+    rows = [(int(i), float(v[i]), float(u[i])) for i in range(n)]
+    return spark.createDataFrame(rows, "event_id long, v double, u double")
+
+
+_TWO_FEAT = {
+    "pca_outlier_2feat": lambda df: outlier.pca_outlier_2feat(df, ("v", "u"), ["event_id"]),
+    "vae_outlier_2feat": lambda df: outlier.vae_outlier_2feat(df, ("v", "u"), "event_id"),
+    "ae_outlier_2feat": lambda df: outlier.ae_outlier_2feat(df, ("v", "u"), "event_id"),
+    "kpca_outlier_2land": lambda df: outlier.kpca_outlier_2land(df, ("v", "u"), "event_id"),
+    "kpca_outlier_4land": lambda df: outlier.kpca_outlier_4land(df, ("v", "u"), "event_id"),
+    "ocsvm_mean_2feat": lambda df: outlier.ocsvm_mean_2feat(df, ("v", "u"), "event_id"),
+    "iforest_hash_2feat": lambda df: outlier.iforest_hash_2feat(df, ("v", "u"), "event_id"),
+    "llr_outlier_2feat": lambda df: llr.llr_outlier_2feat(df, ("v", "u"), "event_id"),
+    "mahalanobis_scores": lambda df: drift.mahalanobis_scores(df, ("v", "u"), ["event_id"]),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_TWO_FEAT))
+def test_2feat_partitioning_invariance(spark, name):
+    """Exact DECIMAL moments, md5 landmarks / cuts / mutations and integer
+    leaf counts make every fit order-free: any repartitioning yields the
+    identical relation (top-k rows carry their rank)."""
+    df = _cluster_with_ood(spark, n=1000)
+    a = sorted(map(tuple, _TWO_FEAT[name](df.repartition(1)).collect()))
+    b = sorted(map(tuple, _TWO_FEAT[name](df.repartition(16, "v")).collect()))
+    assert a == b
+
+
+def _emb(spark, vecs):
+    rows = [(i, [float(x) for x in v]) for i, v in enumerate(vecs)]
+    return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+
+
+def test_iforest_leaf_map_bound_raises_before_any_job(spark):
+    """n_trees · 2^depth above 2^16 literal leaf-map entries is refused up
+    front, by both isolation-forest closed forms, without running a job."""
+    emb = _emb(spark, np.random.default_rng(0).normal(size=(50, 4)))
+    df = _cluster_with_ood(spark, n=50)
+    sc = spark.sparkContext
+    sc.setJobGroup("iforest-bound", "iforest-bound")
+    try:
+        with pytest.raises(ValueError, match=r"n_trees \* 2\*\*depth = 4 \* 2\*\*20"):
+            outlier.iforest_emb(emb, dim=4, depth=20)
+        with pytest.raises(ValueError, match=r"n_trees \* 2\*\*depth = 2 \* 2\*\*20"):
+            outlier.iforest_hash_2feat(df, ("v", "u"), "event_id", depth=20)
+        assert list(sc.statusTracker().getJobIdsForGroup("iforest-bound")) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+@pytest.mark.parametrize(
+    "fn",
+    [outlier.mahalanobis_emb, outlier.iforest_emb],
+    ids=lambda fn: fn.__name__,
+)
+def test_emb_ops_reject_ragged_and_wrong_width_vectors(spark, fn):
+    """A short vector, or a width other than ``dim``, fails at fit time with
+    a message naming the component and the count — not as an executor-side
+    ARRAY_INDEX_OUT_OF_BOUNDS while scoring."""
+    vecs = [list(v) for v in np.random.default_rng(5).normal(size=(40, 4))]
+    vecs[7] = vecs[7][:2]
+    with pytest.raises(ValueError, match="dim=4 components, but component index 2 is present in 39 of 40"):
+        fn(_emb(spark, vecs), dim=4)
+    with pytest.raises(ValueError, match="dim=8 components, but component index 4 is present in 0 of 40"):
+        fn(_emb(spark, np.ones((40, 4))), dim=8)

@@ -5,18 +5,9 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from test_outlier_ops import _cluster_with_ood
+
 from alibi_detect_spark.operators import llr
-
-
-def _cluster_with_ood(spark, n: int = 2000, n_ood: int = 8, seed: int = 11):
-    """Tight central cluster + a few far-out rows (the OOD instances)."""
-    rng = np.random.default_rng(seed)
-    v = rng.normal(50.0, 3.0, n)
-    u = rng.normal(20.0, 2.0, n)
-    v[:n_ood] = rng.uniform(180.0, 200.0, n_ood)
-    u[:n_ood] = rng.uniform(90.0, 99.0, n_ood)
-    rows = [(int(i), float(v[i]), float(u[i])) for i in range(n)]
-    return spark.createDataFrame(rows, "event_id long, v double, u double")
 
 
 def test_llr_flags_ood(spark):
@@ -325,12 +316,3 @@ def test_context_mmd_hash_h0_h1(spark):
         _ctx_df(spark, 3.0).repartition(16, "cx"), "v", "cx", order_col="event_id"
     ).collect()[0]
     assert tuple(h1b) == tuple(h1)
-
-
-def test_llr_partitioning_invariance(spark):
-    """Exact DECIMAL moments + md5 mutation make the fit order-free: any
-    repartitioning yields the identical top-k relation."""
-    df = _cluster_with_ood(spark, n=1000)
-    a = llr.llr_outlier_2feat(df.repartition(1), ("v", "u"), "event_id").collect()
-    b = llr.llr_outlier_2feat(df.repartition(16, "v"), ("v", "u"), "event_id").collect()
-    assert [tuple(r) for r in a] == [tuple(r) for r in b]

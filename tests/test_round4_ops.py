@@ -219,7 +219,7 @@ def test_pca_outlier_emb_matches_numpy_rank1_residual(spark):
 
 
 def test_embedding_width_ops_partitioning_invariant(spark):
-    """pca_outlier_emb / gmm_outlier_emb: exact integer moments make the fit
+    """Embedding-width closed forms: exact integer moments make the fit
     (and therefore every score) identical under any partitioning."""
     import pandas as pd
 
@@ -235,7 +235,14 @@ def test_embedding_width_ops_partitioning_invariant(spark):
             }
         )
     )
-    for fn in (outlier.pca_outlier_emb, outlier.gmm_outlier_emb):
+    for fn in (
+        outlier.pca_outlier_emb,
+        outlier.gmm_outlier_emb,
+        outlier.ocsvm_emb,
+        outlier.mahalanobis_emb,
+        outlier.pca_outlier_sub_emb,
+        outlier.ae_outlier_emb,
+    ):
         a = sorted(map(tuple, fn(emb).collect()))
         b = sorted(map(tuple, fn(emb.repartition(16, "vec_id")).collect()))
         assert a == b, fn.__name__
