@@ -27,8 +27,9 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
+from .closed_form import dec_sum
 from .drift import ks_2samp
 
 _TWO_PI = 2.0 * math.pi
@@ -173,20 +174,18 @@ def classifier_drift_logit(
         F.round(F.col(u_col).cast("double") / scale * xq).cast("long").alias("uq"),
         F.when(F.col(sample) == "ref", F.lit(-1)).otherwise(F.lit(1)).cast("long").alias("t"),
     )
-    big = lambda c: F.sum(c.cast("decimal(38,0)")).cast("double")  # noqa: E731
-
     m1 = (
         lab.groupBy("fold")
         .agg(
             F.count(F.lit(1)).cast("double").alias("n"),
-            big(F.col("vq")).alias("sv"),
-            big(F.col("uq")).alias("su"),
-            big(F.col("vq") * F.col("vq")).alias("svv"),
-            big(F.col("vq") * F.col("uq")).alias("svu"),
-            big(F.col("uq") * F.col("uq")).alias("suu"),
-            big(F.col("t")).alias("st"),
-            big(F.col("t") * F.col("vq")).alias("stv"),
-            big(F.col("t") * F.col("uq")).alias("stu"),
+            dec_sum(F.col("vq")).alias("sv"),
+            dec_sum(F.col("uq")).alias("su"),
+            dec_sum(F.col("vq") * F.col("vq")).alias("svv"),
+            dec_sum(F.col("vq") * F.col("uq")).alias("svu"),
+            dec_sum(F.col("uq") * F.col("uq")).alias("suu"),
+            dec_sum(F.col("t")).alias("st"),
+            dec_sum(F.col("t") * F.col("vq")).alias("stv"),
+            dec_sum(F.col("t") * F.col("uq")).alias("stu"),
         )
         .collect()
     )
@@ -233,15 +232,15 @@ def classifier_drift_logit(
     m2 = (
         it2.groupBy("fold")
         .agg(
-            big(F.col("wq")).alias("sw"),
-            big(F.col("wq") * F.col("vq")).alias("swv"),
-            big(F.col("wq") * F.col("uq")).alias("swu"),
-            big((F.col("wq") * F.col("vq")) * F.col("vq")).alias("swvv"),
-            big((F.col("wq") * F.col("vq")) * F.col("uq")).alias("swvu"),
-            big((F.col("wq") * F.col("uq")) * F.col("uq")).alias("swuu"),
-            big(F.col("rzq")).alias("sz"),
-            big(F.col("rzq") * F.col("vq")).alias("szv"),
-            big(F.col("rzq") * F.col("uq")).alias("szu"),
+            dec_sum(F.col("wq")).alias("sw"),
+            dec_sum(F.col("wq") * F.col("vq")).alias("swv"),
+            dec_sum(F.col("wq") * F.col("uq")).alias("swu"),
+            dec_sum((F.col("wq") * F.col("vq")) * F.col("vq")).alias("swvv"),
+            dec_sum((F.col("wq") * F.col("vq")) * F.col("uq")).alias("swvu"),
+            dec_sum((F.col("wq") * F.col("uq")) * F.col("uq")).alias("swuu"),
+            dec_sum(F.col("rzq")).alias("sz"),
+            dec_sum(F.col("rzq") * F.col("vq")).alias("szv"),
+            dec_sum(F.col("rzq") * F.col("uq")).alias("szu"),
         )
         .collect()
     )
@@ -271,9 +270,100 @@ def classifier_drift_logit(
         F.round(p_oof, 9).alias("value"),
         F.when(F.col("t") < 0, F.lit("ref")).otherwise(F.lit("test")).alias(sample),
     )
-    from .drift import ks_2samp
-
     return ks_2samp(probs, "feature", "value", sample)
+
+
+def _ridge_head(
+    feat: DataFrame,
+    gstats: DataFrame,
+    diffs: list[Column],
+    feature: str,
+    sample: str,
+    n_folds: int,
+    lam: float,
+    fscale: int,
+) -> DataFrame:
+    """Leave-fold-out ridge head of both SpotTheDiff operators: fits
+    ``y ≈ a0 + b1·f1 + b2·f2`` on the quantized kernel features
+    ``f1q, f2q`` (scale ``fscale``) of ``feat`` (``s, fold, y, f1q, f2q``), scores
+    each row with the model that did not see its fold, KS-tests ref vs test
+    scores under ``feature``, and appends the final fold's coefficients and
+    the caller's ``diffs`` (columns over the 1-row ``gstats``).
+
+    Per-fold moments are exact DECIMAL(38,0) sums; the leave-fold-out
+    training moments are totals minus the fold, so the fit is order-free
+    under any partitioning and the 2×2 ridge system is solved as column
+    math."""
+    fs = float(fscale)
+    f1, f2, yy = F.col("f1q"), F.col("f2q"), F.col("y")
+    sums = {
+        "s1": f1, "s2": f2, "s11": f1 * f1, "s22": f2 * f2, "s12": f1 * f2,
+        "sy": yy, "s1y": f1 * yy, "s2y": f2 * yy,
+    }
+    per_fold = feat.groupBy("fold").agg(
+        F.count(F.lit(1)).alias("cnt"),
+        *[F.sum(e.cast("decimal(38,0)")).alias(c) for c, e in sums.items()],
+    )
+    # n_folds-row relation consumed by three branches (totals, coef,
+    # final_coef) — materialize once so each branch does not re-derive the
+    # full feature scan (lazy: no separate build job, first action computes)
+    per_fold = per_fold.localCheckpoint(eager=False)
+    tot_cols = ["cnt", *sums]
+    totals = per_fold.agg(*[F.sum(c).alias(f"t_{c}") for c in tot_cols])
+    # leave-fold-out training moments = totals − own fold (exact int math)
+    train = per_fold.crossJoin(F.broadcast(totals)).select(
+        "fold",
+        *[((F.col(f"t_{c}") - F.col(c)).cast("double")).alias(c) for c in tot_cols],
+    )
+    n = F.col("cnt")
+    m1, m2, my = F.col("s1") / (n * fs), F.col("s2") / (n * fs), F.col("sy") / n
+    cov = lambda c, a, b: F.col(c) / (n * fs * fs) - a * b  # noqa: E731
+    mom = train.select(
+        "fold",
+        m1.alias("m1"),
+        m2.alias("m2"),
+        my.alias("my"),
+        cov("s11", m1, m1).alias("c11"),
+        cov("s22", m2, m2).alias("c22"),
+        cov("s12", m1, m2).alias("c12"),
+        (F.col("s1y") / (n * fs) - m1 * my).alias("c1y"),
+        (F.col("s2y") / (n * fs) - m2 * my).alias("c2y"),
+    )
+    c11, c22, c12, c1y, c2y = (F.col(c) for c in ("c11", "c22", "c12", "c1y", "c2y"))
+    det = (c11 + F.lit(lam)) * (c22 + F.lit(lam)) - c12 * c12
+    coef = mom.select(
+        "fold",
+        "m1",
+        "m2",
+        "my",
+        (((c22 + F.lit(lam)) * c1y - c12 * c2y) / det).alias("b1"),
+        (((c11 + F.lit(lam)) * c2y - c12 * c1y) / det).alias("b2"),
+    ).select(
+        "fold",
+        "b1",
+        "b2",
+        (F.col("my") - F.col("b1") * F.col("m1") - F.col("b2") * F.col("m2")).alias("a0"),
+    )
+    scored = feat.join(F.broadcast(coef), "fold").select(
+        F.lit(feature).alias("feature"),
+        F.round(
+            F.col("a0")
+            + F.col("b1") * (F.col("f1q") / F.lit(fs))
+            + F.col("b2") * (F.col("f2q") / F.lit(fs)),
+            9,
+        ).alias("value"),
+        F.col("s").alias(sample),
+    )
+    ks = ks_2samp(scored, "feature", "value", sample)
+    # interpretable outputs: the final fold's model (the reference returns
+    # the final fold's diffs, cd/pytorch/spot_the_diff.py:124) + the frozen
+    # probe offsets
+    final_coef = coef.where(F.col("fold") == n_folds - 1).crossJoin(F.broadcast(gstats)).select(
+        (F.round("b1", 6) + F.lit(0.0)).alias("coef_hi"),
+        (F.round("b2", 6) + F.lit(0.0)).alias("coef_lo"),
+        *diffs,
+    )
+    return ks.crossJoin(F.broadcast(final_coef))
 
 
 def spot_the_diff_drift(
@@ -314,7 +404,6 @@ def spot_the_diff_drift(
     column math. One partial+final aggregate, one broadcast join of the
     (n_folds)-row coefficient table, then the relational KS — nothing
     iterative, nothing driver-side, hash-checkable in ANSI SQL."""
-    fs = float(fscale)
     lab = df.select(
         F.col(sample).alias("s"),
         _hash_fold(id_col, n_folds),
@@ -346,77 +435,19 @@ def spot_the_diff_drift(
         F.round(kern(F.col("gm") - F.col("gsd")) * fscale).cast("long").alias("f2q"),
         (F.col("gsd") + F.lit(0.0)).alias("gsd"),
     )
-    big = lambda c: F.sum(c.cast("decimal(38,0)"))  # noqa: E731
-    f1, f2, yy = F.col("f1q"), F.col("f2q"), F.col("y")
-    per_fold = feat.groupBy("fold").agg(
-        F.count(F.lit(1)).alias("cnt"),
-        big(f1).alias("s1"),
-        big(f2).alias("s2"),
-        big(f1 * f1).alias("s11"),
-        big(f2 * f2).alias("s22"),
-        big(f1 * f2).alias("s12"),
-        big(yy).alias("sy"),
-        big(f1 * yy).alias("s1y"),
-        big(f2 * yy).alias("s2y"),
+    return _ridge_head(
+        feat,
+        gstats,
+        [
+            (F.round("gsd", 6) + F.lit(0.0)).alias("diff_hi"),
+            (-F.round("gsd", 6) + F.lit(0.0)).alias("diff_lo"),
+        ],
+        "spot_diff",
+        sample,
+        n_folds,
+        lam,
+        fscale,
     )
-    # n_folds-row relation consumed by three branches (totals, coef,
-    # final_coef) — materialize once so each branch does not re-derive the
-    # full feature scan (lazy: no separate build job, first action computes)
-    per_fold = per_fold.localCheckpoint(eager=False)
-    tot_cols = ["cnt", "s1", "s2", "s11", "s22", "s12", "sy", "s1y", "s2y"]
-    totals = per_fold.agg(*[F.sum(c).alias(f"t_{c}") for c in tot_cols])
-    # leave-fold-out training moments = totals − own fold (exact int math)
-    train = per_fold.crossJoin(F.broadcast(totals)).select(
-        "fold",
-        *[((F.col(f"t_{c}") - F.col(c)).cast("double")).alias(c) for c in tot_cols],
-    )
-    n = F.col("cnt")
-    mom = train.select(
-        "fold",
-        (F.col("s1") / (n * fs)).alias("m1"),
-        (F.col("s2") / (n * fs)).alias("m2"),
-        (F.col("sy") / n).alias("my"),
-        (F.col("s11") / (n * fs * fs) - (F.col("s1") / (n * fs)) * (F.col("s1") / (n * fs))).alias("c11"),
-        (F.col("s22") / (n * fs * fs) - (F.col("s2") / (n * fs)) * (F.col("s2") / (n * fs))).alias("c22"),
-        (F.col("s12") / (n * fs * fs) - (F.col("s1") / (n * fs)) * (F.col("s2") / (n * fs))).alias("c12"),
-        (F.col("s1y") / (n * fs) - (F.col("s1") / (n * fs)) * (F.col("sy") / n)).alias("c1y"),
-        (F.col("s2y") / (n * fs) - (F.col("s2") / (n * fs)) * (F.col("sy") / n)).alias("c2y"),
-    )
-    det = (F.col("c11") + F.lit(lam)) * (F.col("c22") + F.lit(lam)) - F.col("c12") * F.col("c12")
-    coef = mom.select(
-        "fold",
-        "m1",
-        "m2",
-        "my",
-        (((F.col("c22") + F.lit(lam)) * F.col("c1y") - F.col("c12") * F.col("c2y")) / det).alias("b1"),
-        (((F.col("c11") + F.lit(lam)) * F.col("c2y") - F.col("c12") * F.col("c1y")) / det).alias("b2"),
-    ).select(
-        "fold",
-        "b1",
-        "b2",
-        (F.col("my") - F.col("b1") * F.col("m1") - F.col("b2") * F.col("m2")).alias("a0"),
-    )
-    scored = feat.join(F.broadcast(coef), "fold").select(
-        F.lit("spot_diff").alias("feature"),
-        F.round(
-            F.col("a0")
-            + F.col("b1") * (F.col("f1q") / F.lit(fs))
-            + F.col("b2") * (F.col("f2q") / F.lit(fs)),
-            9,
-        ).alias("value"),
-        F.col("s").alias(sample),
-    )
-    ks = ks_2samp(scored, "feature", "value", sample)
-    # interpretable outputs: the final fold's model (the reference returns
-    # the final fold's diffs, cd/pytorch/spot_the_diff.py:124) + the frozen
-    # probe offsets diff_j = w_j − mean = ±std
-    final_coef = coef.where(F.col("fold") == n_folds - 1).crossJoin(F.broadcast(gstats)).select(
-        (F.round("b1", 6) + F.lit(0.0)).alias("coef_hi"),
-        (F.round("b2", 6) + F.lit(0.0)).alias("coef_lo"),
-        (F.round("gsd", 6) + F.lit(0.0)).alias("diff_hi"),
-        (-F.round("gsd", 6) + F.lit(0.0)).alias("diff_lo"),
-    )
-    return ks.crossJoin(F.broadcast(final_coef))
 
 
 def spot_the_diff_drift_2d(
@@ -439,7 +470,6 @@ def spot_the_diff_drift_2d(
     (``diff_hi_v, diff_hi_u, …`` — the reference's per-dimension diff maps,
     ``spot_the_diff.py:50-55``). Ridge head, leave-fold-out scoring and the
     KS test are the same exact-integer-moment machinery."""
-    fs = float(fscale)
     v_col, u_col = values
     lab = df.select(
         F.col(sample).alias("s"),
@@ -489,75 +519,21 @@ def spot_the_diff_drift_2d(
         (F.col("gsd_v") + F.lit(0.0)).alias("gsd_v"),
         (F.col("gsd_u") + F.lit(0.0)).alias("gsd_u"),
     )
-    big = lambda c: F.sum(c.cast("decimal(38,0)"))  # noqa: E731
-    f1, f2, yy = F.col("f1q"), F.col("f2q"), F.col("y")
-    per_fold = feat.groupBy("fold").agg(
-        F.count(F.lit(1)).alias("cnt"),
-        big(f1).alias("s1"),
-        big(f2).alias("s2"),
-        big(f1 * f1).alias("s11"),
-        big(f2 * f2).alias("s22"),
-        big(f1 * f2).alias("s12"),
-        big(yy).alias("sy"),
-        big(f1 * yy).alias("s1y"),
-        big(f2 * yy).alias("s2y"),
+    return _ridge_head(
+        feat,
+        gstats,
+        [
+            (F.round("gsd_v", 6) + F.lit(0.0)).alias("diff_hi_v"),
+            (F.round("gsd_u", 6) + F.lit(0.0)).alias("diff_hi_u"),
+            (-F.round("gsd_v", 6) + F.lit(0.0)).alias("diff_lo_v"),
+            (-F.round("gsd_u", 6) + F.lit(0.0)).alias("diff_lo_u"),
+        ],
+        "spot_diff_2d",
+        sample,
+        n_folds,
+        lam,
+        fscale,
     )
-    # n_folds-row relation consumed by three branches (totals, coef,
-    # final_coef) — materialize once so each branch does not re-derive the
-    # full feature scan (lazy: no separate build job, first action computes)
-    per_fold = per_fold.localCheckpoint(eager=False)
-    tot_cols = ["cnt", "s1", "s2", "s11", "s22", "s12", "sy", "s1y", "s2y"]
-    totals = per_fold.agg(*[F.sum(c).alias(f"t_{c}") for c in tot_cols])
-    train = per_fold.crossJoin(F.broadcast(totals)).select(
-        "fold",
-        *[((F.col(f"t_{c}") - F.col(c)).cast("double")).alias(c) for c in tot_cols],
-    )
-    n = F.col("cnt")
-    mom = train.select(
-        "fold",
-        (F.col("s1") / (n * fs)).alias("m1"),
-        (F.col("s2") / (n * fs)).alias("m2"),
-        (F.col("sy") / n).alias("my"),
-        (F.col("s11") / (n * fs * fs) - (F.col("s1") / (n * fs)) * (F.col("s1") / (n * fs))).alias("c11"),
-        (F.col("s22") / (n * fs * fs) - (F.col("s2") / (n * fs)) * (F.col("s2") / (n * fs))).alias("c22"),
-        (F.col("s12") / (n * fs * fs) - (F.col("s1") / (n * fs)) * (F.col("s2") / (n * fs))).alias("c12"),
-        (F.col("s1y") / (n * fs) - (F.col("s1") / (n * fs)) * (F.col("sy") / n)).alias("c1y"),
-        (F.col("s2y") / (n * fs) - (F.col("s2") / (n * fs)) * (F.col("sy") / n)).alias("c2y"),
-    )
-    det = (F.col("c11") + F.lit(lam)) * (F.col("c22") + F.lit(lam)) - F.col("c12") * F.col("c12")
-    coef = mom.select(
-        "fold",
-        "m1",
-        "m2",
-        "my",
-        (((F.col("c22") + F.lit(lam)) * F.col("c1y") - F.col("c12") * F.col("c2y")) / det).alias("b1"),
-        (((F.col("c11") + F.lit(lam)) * F.col("c2y") - F.col("c12") * F.col("c1y")) / det).alias("b2"),
-    ).select(
-        "fold",
-        "b1",
-        "b2",
-        (F.col("my") - F.col("b1") * F.col("m1") - F.col("b2") * F.col("m2")).alias("a0"),
-    )
-    scored = feat.join(F.broadcast(coef), "fold").select(
-        F.lit("spot_diff_2d").alias("feature"),
-        F.round(
-            F.col("a0")
-            + F.col("b1") * (F.col("f1q") / F.lit(fs))
-            + F.col("b2") * (F.col("f2q") / F.lit(fs)),
-            9,
-        ).alias("value"),
-        F.col("s").alias(sample),
-    )
-    ks = ks_2samp(scored, "feature", "value", sample)
-    final_coef = coef.where(F.col("fold") == n_folds - 1).crossJoin(F.broadcast(gstats)).select(
-        (F.round("b1", 6) + F.lit(0.0)).alias("coef_hi"),
-        (F.round("b2", 6) + F.lit(0.0)).alias("coef_lo"),
-        (F.round("gsd_v", 6) + F.lit(0.0)).alias("diff_hi_v"),
-        (F.round("gsd_u", 6) + F.lit(0.0)).alias("diff_hi_u"),
-        (-F.round("gsd_v", 6) + F.lit(0.0)).alias("diff_lo_v"),
-        (-F.round("gsd_u", 6) + F.lit(0.0)).alias("diff_lo_u"),
-    )
-    return ks.crossJoin(F.broadcast(final_coef))
 
 
 def classifier_drift_lr(

@@ -23,6 +23,7 @@ from ..functions.mmd import OnlineMMD, OnlineMMDState
 from ..functions.sr import sr_score
 from ..schemas import SCORE_SCHEMA
 from ..synth import mix64
+from .closed_form import dec_sum
 
 
 def source_seed(source: str, base_seed: int) -> int:
@@ -321,7 +322,7 @@ def trend_band_outliers(
     )
     # DECIMAL(38,0) moments end-to-end: int64 products (ns*sxx, sx*sx) wrap
     # silently past ~2M buckets per key while the DuckDB twin's HUGEINT stays
-    # exact — the big() recipe keeps both engines exact at any series length
+    # exact — the dec_sum() recipe keeps both engines exact at any series length
     rl = F.col("rn").cast("decimal(38,0)")
     yq = F.col("y").cast("decimal(18,6)")
     mom = base.groupBy(key, "seg").agg(
@@ -523,9 +524,8 @@ def lsdd_online_stats_over(
     kf = base.join(F.broadcast(cen), key).select(
         key, order_col, "rn", kq("c1").alias("k1q"), kq("c2").alias("k2q")
     )
-    big = lambda c: F.sum(c.cast("decimal(38,0)")).cast("double")  # noqa: E731
     refs = kf.where(F.col("rn") <= n_ref).groupBy(key).agg(
-        big(F.col("k1q")).alias("sr1"), big(F.col("k2q")).alias("sr2")
+        dec_sum(F.col("k1q")).alias("sr1"), dec_sum(F.col("k2q")).alias("sr2")
     )
     wwin = Window.partitionBy(key).orderBy("rn").rowsBetween(-(window_size - 1), 0)
     strm = (

@@ -13,13 +13,44 @@ Numeric parity contract: every statistic is derived from exact integer counts
 exact in binary); the only float ops are final divisions/exp, applied in the
 same order as the SQL oracle, then rounded — so DuckDB value-hash comparison
 is stable.
+
+The kernel family (MMD, LSDD, learned-kernel, context-MMD) runs through one
+subsample → kernel → permutation-p-value path (reference
+``cd/pytorch/mmd.py:113-145``, ``utils/statstest.py:5-38``), each step one
+shared block:
+
+- :func:`_head` — the deterministic per-side head subsample
+  (``row_number`` over ``s`` ordered by ``o``, rows ``rn ≤ n``);
+- :func:`_mmd2_tail` — the Spark-side unbiased-MMD² block sums over a
+  ``(sa, ia, sb, ib, k)`` pair relation (:func:`mmd_2samp`,
+  :func:`mmd_2samp_vec`);
+- :func:`_one_group` — the single-group Arrow stage: the whole subsample in
+  one ``applyInPandas`` group, mergesorted by ``(s, rn)``;
+- :func:`_perm_row` over :func:`_masked_mmd2` — the md5 ``"{p}:{gid}"``
+  relabeling p-value (pooled ids from :func:`_gid`) and the unbiased MMD² of
+  a label mask over a precomputed kernel matrix.
+
+The in-UDF tests need at least 2 rows on each side (and on each side of the
+learned-kernel holdout): an unbiased within-side sum has no pairs below
+that. :func:`_one_group` and :func:`_perm_row` raise ``ValueError`` naming
+the operator, the side and its row count instead of returning a NULL
+statistic or a spurious ``p_value = 0``.
 """
 
 from __future__ import annotations
 
+import hashlib
+import math
+
+import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
-from .closed_form import mahalanobis_2x2, moments_2x2, ranked_top_k
+from ..functions.context_mmd import context_mmd_2samp
+from ..functions.fet import hypergeom_sf_ge
+from ..functions.lsdd import lsdd_2samp
+from ..functions.perturbation import mmd2_unbiased, permutation_test
+from .closed_form import dec_sum, mahalanobis_2x2, moments_2x2, ranked_top_k
 
 KS_SF_TERMS = 100
 
@@ -161,6 +192,132 @@ def chi2_contingency(df: DataFrame, feature: str, sample: str = "sample") -> Dat
     return stat
 
 
+def _head(rel: DataFrame, n: int) -> DataFrame:
+    """Deterministic head subsample: the first ``n`` rows of each side ``s``
+    in ``o`` order, numbered ``rn`` from 1. At 100 TB this is the only full
+    scan of every kernel test; all later stages see ≤ n rows per side."""
+    w = Window.partitionBy("s").orderBy("o")
+    return rel.withColumn("rn", F.row_number().over(w)).where(F.col("rn") <= n)
+
+
+def _side_head(
+    df: DataFrame, sample: str, value: str, order_col: str | None, n: int, *extra: Column
+) -> DataFrame:
+    """:func:`_head` of the scalar kernel tests: ``(s, v, *extra, o)`` with
+    ``v`` the value as double, ordered by ``order_col`` (default ``value``)."""
+    return _head(
+        df.select(
+            F.col(sample).alias("s"),
+            F.col(value).cast("double").alias("v"),
+            *extra,
+            F.col(order_col or value).alias("o"),
+        ),
+        n,
+    )
+
+
+def _vec_head(emb: DataFrame, id_col: str, vec_col: str, n: int) -> DataFrame:
+    """:func:`_head` of the embedding kernel tests: even ids are the
+    reference side, rows ``(s, o = id, v = vector)``."""
+    s = F.when(F.col(id_col) % 2 == 0, F.lit("ref")).otherwise(F.lit("test"))
+    return _head(emb.select(s.alias("s"), F.col(id_col).alias("o"), F.col(vec_col).alias("v")), n)
+
+
+def _mmd2_tail(pairs: DataFrame) -> DataFrame:
+    """Unbiased MMD² (``utils/pytorch/distance.py:96-128``) from a pair
+    relation ``(sa, ia, sb, ib, k)``: within-side kernel sums without the
+    diagonal, the cross sum, and the pair counts, in one aggregate; the
+    side sizes are the square roots of the within-side pair counts."""
+    xx = (F.col("sa") == "ref") & (F.col("sb") == "ref")
+    yy = (F.col("sa") != "ref") & (F.col("sb") != "ref")
+    xy = (F.col("sa") == "ref") & (F.col("sb") != "ref")
+    off = F.col("ia") != F.col("ib")
+    ksum = {"kxx": xx & off, "kyy": yy & off, "kxy": xy}
+    count = {"nn": xx, "mm": yy, "nm": xy}
+    agg = pairs.agg(
+        *[F.sum(F.when(c, F.col("k")).otherwise(0.0)).alias(a) for a, c in ksum.items()],
+        *[F.sum(F.when(c, 1).otherwise(0)).alias(a) for a, c in count.items()],
+    )
+    n = F.sqrt(F.col("nn").cast("double"))
+    m = F.sqrt(F.col("mm").cast("double"))
+    mmd2 = (
+        F.col("kxx") / (n * (n - 1)) + F.col("kyy") / (m * (m - 1)) - 2 * F.col("kxy") / F.col("nm")
+    )
+    return agg.select(
+        n.cast("long").alias("n_ref"),
+        m.cast("long").alias("n_test"),
+        (F.round(mmd2, 6) + F.lit(0.0)).alias("mmd2"),
+    )
+
+
+def _check_sides(op: str, obs: np.ndarray, of: str = "") -> None:
+    """The in-UDF kernel tests' rule: at least 2 rows on each side."""
+    for side, k in (("ref", int(obs.sum())), ("test", int((~obs).sum()))):
+        if k < 2:
+            raise ValueError(
+                f"{op}: {side} side{of} has {k} row(s); the test needs at least 2 rows on each side"
+            )
+
+
+def _one_group(sub: DataFrame, op: str, schema: str, stat) -> DataFrame:
+    """One Arrow group over the whole subsample ``sub`` (``s``, ``rn``, …):
+    rows mergesorted by ``(s, rn)`` so the order is independent of how Spark
+    delivered them, both sides checked by :func:`_check_sides`, then
+    ``stat(pdf)`` returns the output row's values in ``schema`` order."""
+    names = [c.split()[0] for c in schema.split(",")]
+
+    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values(["s", "rn"], kind="mergesort")
+        _check_sides(op, (pdf["s"] == "ref").to_numpy())
+        return pd.DataFrame({c: [x] for c, x in zip(names, stat(pdf))})
+
+    return sub.groupBy().applyInPandas(fn, schema=schema)
+
+
+def _gid(pdf: pd.DataFrame, n_per_side: int) -> tuple[np.ndarray, np.ndarray]:
+    """``(ref mask, pooled id)``: ref rows keep ``rn``, test rows follow at
+    ``n_per_side + rn`` — the ids the md5 relabelings and the oracle share."""
+    obs = (pdf["s"] == "ref").to_numpy()
+    return obs, np.where(obs, pdf["rn"].to_numpy(), n_per_side + pdf["rn"].to_numpy())
+
+
+def _masked_mmd2(k: np.ndarray):
+    """Unbiased MMD² of the split ``x`` (ref) / ``~x`` (test) over the
+    precomputed pooled kernel matrix ``k``."""
+
+    def mmd2(x: np.ndarray) -> float:
+        kxx = k[np.ix_(x, x)]
+        kyy = k[np.ix_(~x, ~x)]
+        kxy = k[np.ix_(x, ~x)]
+        nn, mm = int(x.sum()), int((~x).sum())
+        return (
+            (kxx.sum() - np.trace(kxx)) / (nn * (nn - 1.0))
+            + (kyy.sum() - np.trace(kyy)) / (mm * (mm - 1.0))
+            - 2.0 * kxy.sum() / (nn * float(mm))
+        )
+
+    return mmd2
+
+
+def _perm_row(stat, obs: np.ndarray, gid: np.ndarray, n_permutations: int, op: str, of: str = ""):
+    """``(n_ref, n_test, stat, p_value)`` of the md5 permutation test
+    (``utils/statstest.py:5-38``): permutation ``p`` puts the first
+    ``n_ref`` rows of the md5 order of ``"{p}:{gid}"`` on the ref side, and
+    ``p_value`` is the share of permutations whose ``stat`` reaches the
+    observed one. md5 orders are exchangeable under H0 like RNG shuffles
+    but identical in Spark and DuckDB."""
+    _check_sides(op, obs, of)
+    n = int(obs.sum())
+    observed = stat(obs)
+    hits = 0
+    for p in range(1, n_permutations + 1):
+        pri = np.array([hashlib.md5(f"{p}:{g}".encode()).hexdigest() for g in gid])
+        mask = np.zeros(len(gid), dtype=bool)
+        mask[np.argsort(pri, kind="stable")[:n]] = True
+        hits += int(observed <= stat(mask))
+    return n, len(gid) - n, round(observed, 6) + 0.0, round(hits / n_permutations, 6)
+
+
 def mmd_2samp(
     df: DataFrame,
     value: str,
@@ -179,37 +336,13 @@ def mmd_2samp(
     the statistic is a closed-form function of the sample — the heuristic
     variant lives in the online detector (``functions/mmd.py``).
     """
-    oc = order_col or value
-    w = Window.partitionBy("s").orderBy("o")
-    sub = (
-        df.select(F.col(sample).alias("s"), F.col(value).cast("double").alias("v"), F.col(oc).alias("o"))
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= n_per_side)
-    )
+    sub = _side_head(df, sample, value, order_col, n_per_side)
     a = sub.select(F.col("s").alias("sa"), F.col("v").alias("va"), F.col("rn").alias("ia"))
     b = sub.select(F.col("s").alias("sb"), F.col("v").alias("vb"), F.col("rn").alias("ib"))
     gamma = 1.0 / (2.0 * sigma * sigma)
-    pairs = (
+    return _mmd2_tail(
         a.join(F.broadcast(b))
         .withColumn("k", F.exp(F.lit(-gamma) * (F.col("va") - F.col("vb")) * (F.col("va") - F.col("vb"))))
-    )
-    agg = pairs.agg(
-        F.sum(F.when((F.col("sa") == "ref") & (F.col("sb") == "ref") & (F.col("ia") != F.col("ib")), F.col("k")).otherwise(0.0)).alias("kxx"),
-        F.sum(F.when((F.col("sa") != "ref") & (F.col("sb") != "ref") & (F.col("ia") != F.col("ib")), F.col("k")).otherwise(0.0)).alias("kyy"),
-        F.sum(F.when((F.col("sa") == "ref") & (F.col("sb") != "ref"), F.col("k")).otherwise(0.0)).alias("kxy"),
-        F.sum(F.when((F.col("sa") == "ref") & (F.col("sb") == "ref"), 1).otherwise(0)).alias("nn"),
-        F.sum(F.when((F.col("sa") != "ref") & (F.col("sb") != "ref"), 1).otherwise(0)).alias("mm"),
-        F.sum(F.when((F.col("sa") == "ref") & (F.col("sb") != "ref"), 1).otherwise(0)).alias("nm"),
-    )
-    n = F.sqrt(F.col("nn").cast("double"))
-    m = F.sqrt(F.col("mm").cast("double"))
-    mmd2 = (
-        F.col("kxx") / (n * (n - 1)) + F.col("kyy") / (m * (m - 1)) - 2 * F.col("kxy") / F.col("nm")
-    )
-    return agg.select(
-        n.cast("long").alias("n_ref"),
-        m.cast("long").alias("n_test"),
-        (F.round(mmd2, 6) + F.lit(0.0)).alias("mmd2"),
     )
 
 
@@ -237,13 +370,7 @@ def mmd_2samp_vec(
     Scale shape: the subsample head (n ≤ n_per_side per side) is the only
     full scan; the pair relation is bounded by (2n)²·d regardless of corpus
     size, with map-side partial aggregation on the pair keys."""
-    s = F.when(F.col(id_col) % 2 == 0, F.lit("ref")).otherwise(F.lit("test"))
-    w = Window.partitionBy("s").orderBy("o")
-    sub = (
-        emb.select(s.alias("s"), F.col(id_col).alias("o"), F.col(vec_col).alias("v"))
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= n_per_side)
-    )
+    sub = _vec_head(emb, id_col, vec_col, n_per_side)
     ex = sub.select("s", "rn", F.posexplode("v").alias("j", "x")).select(
         "s",
         "rn",
@@ -261,29 +388,11 @@ def mmd_2samp_vec(
     d2 = (
         a.join(F.broadcast(b), F.col("j") == F.col("jb"))
         .groupBy("sa", "ia", "sb", "ib")
-        .agg(F.sum((diff * diff).cast("decimal(38,0)")).cast("double").alias("d2q"))
+        .agg(dec_sum(diff * diff).alias("d2q"))
     )
     gamma = 1.0 / (2.0 * sigma * sigma)
     qq = float(quant) * float(quant)
-    pairs = d2.withColumn("k", F.exp(F.lit(-gamma) * (F.col("d2q") / F.lit(qq))))
-    agg = pairs.agg(
-        F.sum(F.when((F.col("sa") == "ref") & (F.col("sb") == "ref") & (F.col("ia") != F.col("ib")), F.col("k")).otherwise(0.0)).alias("kxx"),
-        F.sum(F.when((F.col("sa") != "ref") & (F.col("sb") != "ref") & (F.col("ia") != F.col("ib")), F.col("k")).otherwise(0.0)).alias("kyy"),
-        F.sum(F.when((F.col("sa") == "ref") & (F.col("sb") != "ref"), F.col("k")).otherwise(0.0)).alias("kxy"),
-        F.sum(F.when((F.col("sa") == "ref") & (F.col("sb") == "ref"), 1).otherwise(0)).alias("nn"),
-        F.sum(F.when((F.col("sa") != "ref") & (F.col("sb") != "ref"), 1).otherwise(0)).alias("mm"),
-        F.sum(F.when((F.col("sa") == "ref") & (F.col("sb") != "ref"), 1).otherwise(0)).alias("nm"),
-    )
-    n = F.sqrt(F.col("nn").cast("double"))
-    m = F.sqrt(F.col("mm").cast("double"))
-    mmd2 = (
-        F.col("kxx") / (n * (n - 1)) + F.col("kyy") / (m * (m - 1)) - 2 * F.col("kxy") / F.col("nm")
-    )
-    return agg.select(
-        n.cast("long").alias("n_ref"),
-        m.cast("long").alias("n_test"),
-        (F.round(mmd2, 6) + F.lit(0.0)).alias("mmd2"),
-    )
+    return _mmd2_tail(d2.withColumn("k", F.exp(F.lit(-gamma) * (F.col("d2q") / F.lit(qq)))))
 
 
 def mmd_perm_test_vec(
@@ -305,65 +414,23 @@ def mmd_perm_test_vec(
     distances (``Σ_j (x_j − y_j)²`` over 1e-6-rounded components — exactly
     the relation the SQL twin aggregates), and every md5-ordered relabeling
     re-indexes it; the subsample head is the only full scan."""
-    import hashlib
-
-    import numpy as np
-    import pandas as pd
-
-    s = F.when(F.col(id_col) % 2 == 0, F.lit("ref")).otherwise(F.lit("test"))
-    w = Window.partitionBy("s").orderBy("o")
-    sub = (
-        emb.select(s.alias("s"), F.col(id_col).alias("o"), F.col(vec_col).alias("v"))
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= n_per_side)
-        .select("s", "rn", "v")
-    )
     gamma = 1.0 / (2.0 * sigma * sigma)
     qq = float(quant) * float(quant)
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["s", "rn"], kind="mergesort")
+    def stat(pdf: pd.DataFrame):
         x = np.stack(pdf["v"].to_numpy()).astype(np.float64) * float(quant)
         # HALF-AWAY-FROM-ZERO to match Spark/DuckDB round() (np.round is
         # half-even and would diverge on exact .5 products)
         xq = np.where(x >= 0, np.floor(x + 0.5), -np.floor(-x + 0.5)).astype(np.int64)
         d2q = ((xq[:, None, :] - xq[None, :, :]) ** 2).sum(axis=-1).astype(np.float64)
         k = np.exp(-gamma * (d2q / qq))
-        n = int((pdf["s"] == "ref").sum())
-        m = len(xq) - n
+        return _perm_row(_masked_mmd2(k), *_gid(pdf, n_per_side), n_permutations, "mmd_perm_test_vec")
 
-        def mmd2(x_mask: np.ndarray) -> float:
-            kxx = k[np.ix_(x_mask, x_mask)]
-            kyy = k[np.ix_(~x_mask, ~x_mask)]
-            kxy = k[np.ix_(x_mask, ~x_mask)]
-            nn, mm = int(x_mask.sum()), int((~x_mask).sum())
-            return (
-                (kxx.sum() - np.trace(kxx)) / (nn * (nn - 1.0))
-                + (kyy.sum() - np.trace(kyy)) / (mm * (mm - 1.0))
-                - 2.0 * kxy.sum() / (nn * float(mm))
-            )
-
-        obs_mask = (pdf["s"] == "ref").to_numpy()
-        stat = mmd2(obs_mask)
-        gid = np.where(obs_mask, pdf["rn"].to_numpy(), n_per_side + pdf["rn"].to_numpy())
-        hits = 0
-        for p in range(1, n_permutations + 1):
-            pri = np.array([hashlib.md5(f"{p}:{g}".encode()).hexdigest() for g in gid])
-            order = np.argsort(pri, kind="stable")
-            mask = np.zeros(len(xq), dtype=bool)
-            mask[order[:n]] = True
-            hits += int(stat <= mmd2(mask))
-        return pd.DataFrame(
-            {
-                "n_ref": [n],
-                "n_test": [m],
-                "mmd2": [round(stat, 6) + 0.0],
-                "p_value": [round(hits / n_permutations, 6)],
-            }
-        )
-
-    return sub.groupBy().applyInPandas(
-        fn, schema="n_ref long, n_test long, mmd2 double, p_value double"
+    return _one_group(
+        _vec_head(emb, id_col, vec_col, n_per_side).select("s", "rn", "v"),
+        "mmd_perm_test_vec",
+        "n_ref long, n_test long, mmd2 double, p_value double",
+        stat,
     )
 
 
@@ -419,10 +486,6 @@ def fet_2samp(df: DataFrame, bit_col: str, sample: str = "sample") -> DataFrame:
     row (partial+final agg, nothing leaves the JVM until then); the
     hypergeometric tail is then computed on that single row in an Arrow UDF
     with the shared scipy-free kernel (``functions/fet.py``)."""
-    import pandas as pd
-
-    from ..functions.fet import hypergeom_sf_ge
-
     counts = df.agg(
         F.sum(F.when(F.col(sample) == "ref", F.col(bit_col)).otherwise(0)).alias("hits_ref"),
         F.sum(F.when(F.col(sample) == "ref", 1).otherwise(0)).alias("n_ref"),
@@ -436,8 +499,6 @@ def fet_2samp(df: DataFrame, bit_col: str, sample: str = "sample") -> DataFrame:
             b = int(pdf["hits_test"].iloc[0])
             n_ref = int(pdf["n_ref"].iloc[0])
             n_test = int(pdf["n_test"].iloc[0])
-            import numpy as np
-
             p = hypergeom_sf_ge(np.array([a]), n_ref + n_test, np.array([a + b]), n_ref)[0]
             yield pd.DataFrame(
                 {
@@ -593,37 +654,20 @@ def mmd_perm_test(
     Arrow group computing the observed unbiased MMD² and the seeded
     label-shuffle null. Everything before the tiny final group is
     relational."""
-    import pandas as pd
 
-    from ..functions.perturbation import mmd2_unbiased, permutation_test
-
-    oc = order_col or value
-    w = Window.partitionBy("s").orderBy("o")
-    sub = (
-        df.select(F.col(sample).alias("s"), F.col(value).cast("double").alias("v"), F.col(oc).alias("o"))
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= n_per_side)
-        .select("s", "v", "rn")
-    )
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["s", "rn"], kind="mergesort")
+    def stat(pdf: pd.DataFrame):
         x = pdf[pdf["s"] == "ref"]["v"].to_numpy()[:, None]
         y = pdf[pdf["s"] != "ref"]["v"].to_numpy()[:, None]
-        p, stat, _ = permutation_test(
+        p, mmd2, _ = permutation_test(
             x, y, mmd2_unbiased, n_permutations=n_permutations, seed=seed, sigma=sigma
         )
-        return pd.DataFrame(
-            {
-                "n_ref": [len(x)],
-                "n_test": [len(y)],
-                "mmd2": [round(stat, 6) + 0.0],
-                "p_value": [round(p, 6)],
-            }
-        )
+        return len(x), len(y), round(mmd2, 6) + 0.0, round(p, 6)
 
-    return sub.groupBy().applyInPandas(
-        fn, schema="n_ref long, n_test long, mmd2 double, p_value double"
+    return _one_group(
+        _side_head(df, sample, value, order_col, n_per_side).select("s", "v", "rn"),
+        "mmd_perm_test",
+        "n_ref long, n_test long, mmd2 double, p_value double",
+        stat,
     )
 
 
@@ -645,27 +689,10 @@ def context_mmd_drift(
     are bounded by ``n_per_side``, matching the reference's in-memory
     contract. Seeded permutations → rows-only driver check + behavioral
     pytest."""
-    import pandas as pd
-
-    from ..functions.context_mmd import context_mmd_2samp
-
-    oc = order_col or value
-    w = Window.partitionBy("s").orderBy("o")
-    sub = (
-        df.select(
-            F.col(sample).alias("s"),
-            F.col(value).cast("double").alias("v"),
-            *[F.col(c).cast("double").alias(f"c{i}") for i, c in enumerate(context_cols)],
-            F.col(oc).alias("o"),
-        )
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= n_per_side)
-        .drop("o")
-    )
     c_cols = [f"c{i}" for i in range(len(context_cols))]
+    ctx = [F.col(c).cast("double").alias(a) for c, a in zip(context_cols, c_cols)]
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["s", "rn"], kind="mergesort")
+    def stat(pdf: pd.DataFrame):
         ref = pdf[pdf["s"] == "ref"]
         test = pdf[pdf["s"] != "ref"]
         res = context_mmd_2samp(
@@ -676,18 +703,13 @@ def context_mmd_drift(
             n_permutations=n_permutations,
             seed=seed,
         )
-        return pd.DataFrame(
-            {
-                "n_ref": [res.n_ref],
-                "n_test": [res.n_test],
-                "cmmd_stat": [round(res.stat, 6)],
-                "threshold": [round(res.threshold, 6)],
-                "p_value": [round(res.p_value, 6)],
-            }
-        )
+        return res.n_ref, res.n_test, round(res.stat, 6), round(res.threshold, 6), round(res.p_value, 6)
 
-    return sub.groupBy().applyInPandas(
-        fn, schema="n_ref long, n_test long, cmmd_stat double, threshold double, p_value double"
+    return _one_group(
+        _side_head(df, sample, value, order_col, n_per_side, *ctx).drop("o"),
+        "context_mmd_drift",
+        "n_ref long, n_test long, cmmd_stat double, threshold double, p_value double",
+        stat,
     )
 
 
@@ -710,61 +732,19 @@ def mmd_perm_test_hash(
     in Spark and DuckDB, making the whole test hash-checkable. Statistically
     equivalent (md5 orders are exchangeable under H0); the seeded-RNG variant
     stays for reference-faithful semantics in pytest."""
-    import hashlib
-
-    import numpy as np
-    import pandas as pd
-
-    oc = order_col or value
-    w = Window.partitionBy("s").orderBy("o")
-    sub = (
-        df.select(F.col(sample).alias("s"), F.col(value).cast("double").alias("v"), F.col(oc).alias("o"))
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= n_per_side)
-        .select("s", "v", "rn")
-    )
     two_sig2 = 2.0 * sigma * sigma
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["s", "rn"], kind="mergesort")
+    def stat(pdf: pd.DataFrame):
         v = pdf["v"].to_numpy()
-        n = int((pdf["s"] == "ref").sum())
-        m = len(v) - n
         d = v[:, None] - v[None, :]
         k = np.exp(-(d * d) / two_sig2)
+        return _perm_row(_masked_mmd2(k), *_gid(pdf, n_per_side), n_permutations, "mmd_perm_test_hash")
 
-        def mmd2(x_mask: np.ndarray) -> float:
-            kxx = k[np.ix_(x_mask, x_mask)]
-            kyy = k[np.ix_(~x_mask, ~x_mask)]
-            kxy = k[np.ix_(x_mask, ~x_mask)]
-            nn, mm = int(x_mask.sum()), int((~x_mask).sum())
-            return (
-                (kxx.sum() - np.trace(kxx)) / (nn * (nn - 1.0))
-                + (kyy.sum() - np.trace(kyy)) / (mm * (mm - 1.0))
-                - 2.0 * kxy.sum() / (nn * float(mm))
-            )
-
-        obs_mask = (pdf["s"] == "ref").to_numpy()
-        stat = mmd2(obs_mask)
-        gid = np.where(obs_mask, pdf["rn"].to_numpy(), n_per_side + pdf["rn"].to_numpy())
-        hits = 0
-        for p in range(1, n_permutations + 1):
-            pri = np.array([hashlib.md5(f"{p}:{g}".encode()).hexdigest() for g in gid])
-            order = np.argsort(pri, kind="stable")
-            mask = np.zeros(len(v), dtype=bool)
-            mask[order[:n]] = True
-            hits += int(stat <= mmd2(mask))
-        return pd.DataFrame(
-            {
-                "n_ref": [n],
-                "n_test": [m],
-                "mmd2": [round(stat, 6) + 0.0],
-                "p_value": [round(hits / n_permutations, 6)],
-            }
-        )
-
-    return sub.groupBy().applyInPandas(
-        fn, schema="n_ref long, n_test long, mmd2 double, p_value double"
+    return _one_group(
+        _side_head(df, sample, value, order_col, n_per_side).select("s", "v", "rn"),
+        "mmd_perm_test_hash",
+        "n_ref long, n_test long, mmd2 double, p_value double",
+        stat,
     )
 
 
@@ -857,28 +837,12 @@ def learned_kernel_drift_hash(
 
     Everything is a closed-form function of the data → hash-checkable
     against the DuckDB oracle (scalar arithmetic mirrored term-for-term)."""
-    import hashlib
-    import math
-
-    import numpy as np
-    import pandas as pd
-
-    oc = order_col or value
-    w = Window.partitionBy("s").orderBy("o")
-    sub = (
-        df.select(F.col(sample).alias("s"), F.col(value).cast("double").alias("v"), F.col(oc).alias("o"))
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= n_per_side)
-        .select("s", "v", "rn")
-    )
     two_sig2 = 2.0 * sigma * sigma
     one_m_eps = 1.0 - eps_mix
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["s", "rn"], kind="mergesort")
+    def stat(pdf: pd.DataFrame):
         v = pdf["v"].to_numpy()
-        ref_mask = (pdf["s"] == "ref").to_numpy()
-        gid = np.where(ref_mask, pdf["rn"].to_numpy(), n_per_side + pdf["rn"].to_numpy())
+        ref_mask, gid = _gid(pdf, n_per_side)
         fold = np.array(
             [int(hashlib.md5(f"lk:{g}".encode()).hexdigest()[:4], 16) % 2 for g in gid]
         )
@@ -906,43 +870,21 @@ def learned_kernel_drift_hash(
         b2 = ((c11 + lam) * c2y - c12 * c1y) / det
         a0 = my - b1 * m1 - b2 * m2
 
-        vh, hmask, hgid = v[ho], ref_mask[ho], gid[ho]
+        vh = v[ho]
         h1, h2 = phi(vh)
         sc = a0 + b1 * h1 + b2 * h2
         d = vh[:, None] - vh[None, :]
         k = one_m_eps * (sc[:, None] * sc[None, :]) + eps_mix * np.exp(-(d * d) / two_sig2)
-        nh, mh = int(hmask.sum()), int((~hmask).sum())
-
-        def mmd2(x_mask: np.ndarray) -> float:
-            kxx = k[np.ix_(x_mask, x_mask)]
-            kyy = k[np.ix_(~x_mask, ~x_mask)]
-            kxy = k[np.ix_(x_mask, ~x_mask)]
-            nn, mm = float(x_mask.sum()), float((~x_mask).sum())
-            return (
-                (kxx.sum() - np.trace(kxx)) / (nn * (nn - 1.0))
-                + (kyy.sum() - np.trace(kyy)) / (mm * (mm - 1.0))
-                - 2.0 * kxy.sum() / (nn * mm)
-            )
-
-        stat = mmd2(hmask)
-        hits = 0
-        for p in range(1, n_permutations + 1):
-            pri = np.array([hashlib.md5(f"{p}:{g}".encode()).hexdigest() for g in hgid])
-            order = np.argsort(pri, kind="stable")
-            mask = np.zeros(len(vh), dtype=bool)
-            mask[order[:nh]] = True
-            hits += int(stat <= mmd2(mask))
-        return pd.DataFrame(
-            {
-                "n_ref": [nh],
-                "n_test": [mh],
-                "lk_stat": [round(stat, 6) + 0.0],
-                "p_value": [round(hits / n_permutations, 6)],
-            }
+        return _perm_row(
+            _masked_mmd2(k), ref_mask[ho], gid[ho], n_permutations,
+            "learned_kernel_drift_hash", " of the holdout",
         )
 
-    return sub.groupBy().applyInPandas(
-        fn, schema="n_ref long, n_test long, lk_stat double, p_value double"
+    return _one_group(
+        _side_head(df, sample, value, order_col, n_per_side).select("s", "v", "rn"),
+        "learned_kernel_drift_hash",
+        "n_ref long, n_test long, lk_stat double, p_value double",
+        stat,
     )
 
 
@@ -983,30 +925,15 @@ def lsdd_perm_test_hash(
     All quadratic-form arithmetic is spelled out scalar-by-scalar (no
     np.linalg) so the oracle's SQL evaluates the identical expression tree.
     """
-    import hashlib
-
-    import numpy as np
-    import pandas as pd
-
-    oc = order_col or value
-    w = Window.partitionBy("s").orderBy("o")
-    sub = (
-        df.select(F.col(sample).alias("s"), F.col(value).cast("double").alias("v"), F.col(oc).alias("o"))
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= n_per_side)
-        .select("s", "v", "rn")
-    )
     two_sig2 = 2.0 * sigma * sigma
     four_sig2 = 4.0 * sigma * sigma  # (√2·σ)² · 2
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["s", "rn"], kind="mergesort")
-        ref = pdf[pdf["s"] == "ref"]
+    def stat(pdf: pd.DataFrame):
+        obs, gid = _gid(pdf, n_per_side)
         v = pdf["v"].to_numpy()
-        n = int((pdf["s"] == "ref").sum())
+        n = int(obs.sum())
         m = len(v) - n
-        c1 = float(ref[ref["rn"] == 1]["v"].iloc[0])
-        c2 = float(ref[ref["rn"] == 2]["v"].iloc[0])
+        c1, c2 = map(float, v[obs][:2])  # ref rows rn = 1, 2
         k1 = np.exp(-((v - c1) ** 2) / two_sig2)
         k2 = np.exp(-((v - c2) ** 2) / two_sig2)
         # H = k_{√2σ}(centers, centers) = [[1, e], [e, 1]];
@@ -1027,27 +954,13 @@ def lsdd_perm_test_hash(
             h2 = float(k2[x_mask].sum() / n - k2[~x_mask].sum() / m)
             return m11 * (h1 * h1 + h2 * h2) + 2.0 * m12 * h1 * h2
 
-        obs_mask = (pdf["s"] == "ref").to_numpy()
-        stat = lsdd(obs_mask)
-        gid = np.where(obs_mask, pdf["rn"].to_numpy(), n_per_side + pdf["rn"].to_numpy())
-        hits = 0
-        for p in range(1, n_permutations + 1):
-            pri = np.array([hashlib.md5(f"{p}:{g}".encode()).hexdigest() for g in gid])
-            order = np.argsort(pri, kind="stable")
-            mask = np.zeros(len(v), dtype=bool)
-            mask[order[:n]] = True
-            hits += int(stat <= lsdd(mask))
-        return pd.DataFrame(
-            {
-                "n_ref": [n],
-                "n_test": [m],
-                "lsdd_stat": [round(stat, 6) + 0.0],
-                "p_value": [round(hits / n_permutations, 6)],
-            }
-        )
+        return _perm_row(lsdd, obs, gid, n_permutations, "lsdd_perm_test_hash")
 
-    return sub.groupBy().applyInPandas(
-        fn, schema="n_ref long, n_test long, lsdd_stat double, p_value double"
+    return _one_group(
+        _side_head(df, sample, value, order_col, n_per_side).select("s", "v", "rn"),
+        "lsdd_perm_test_hash",
+        "n_ref long, n_test long, lsdd_stat double, p_value double",
+        stat,
     )
 
 
@@ -1063,35 +976,18 @@ def lsdd_perm_test(
     """Offline LSDD drift with a permutation p-value
     (``alibi_detect/cd/pytorch/lsdd.py:13-135``): deterministic head
     subsamples per side, one Arrow group running the seeded NumPy kernel."""
-    import pandas as pd
 
-    from ..functions.lsdd import lsdd_2samp
-
-    oc = order_col or value
-    w = Window.partitionBy("s").orderBy("o")
-    sub = (
-        df.select(F.col(sample).alias("s"), F.col(value).cast("double").alias("v"), F.col(oc).alias("o"))
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= n_per_side)
-        .select("s", "v", "rn")
-    )
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["s", "rn"], kind="mergesort")
+    def stat(pdf: pd.DataFrame):
         x = pdf[pdf["s"] == "ref"]["v"].to_numpy()[:, None]
         y = pdf[pdf["s"] != "ref"]["v"].to_numpy()[:, None]
-        p, stat = lsdd_2samp(x, y, n_permutations=n_permutations, seed=seed)
-        return pd.DataFrame(
-            {
-                "n_ref": [len(x)],
-                "n_test": [len(y)],
-                "lsdd_stat": [round(stat, 6) + 0.0],
-                "p_value": [round(p, 6)],
-            }
-        )
+        p, lsdd = lsdd_2samp(x, y, n_permutations=n_permutations, seed=seed)
+        return len(x), len(y), round(lsdd, 6) + 0.0, round(p, 6)
 
-    return sub.groupBy().applyInPandas(
-        fn, schema="n_ref long, n_test long, lsdd_stat double, p_value double"
+    return _one_group(
+        _side_head(df, sample, value, order_col, n_per_side).select("s", "v", "rn"),
+        "lsdd_perm_test",
+        "n_ref long, n_test long, lsdd_stat double, p_value double",
+        stat,
     )
 
 
@@ -1196,17 +1092,9 @@ def context_mmd_hash(
     shift is only approximate here — the reference-faithful property lives
     in :func:`context_mmd_drift` (rows-only, pytest-covered including the
     context-shift-quiet case)."""
-    oc = order_col or value
-    w = Window.partitionBy("s").orderBy("o")
-    base = (
-        df.select(
-            F.col(sample).alias("s"),
-            F.col(value).cast("double").alias("v"),
-            F.col(context).cast("double").alias("cx"),
-            F.col(oc).alias("o"),
-        )
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= n_per_side + n_held_per_side)
+    base = _side_head(
+        df, sample, value, order_col, n_per_side + n_held_per_side,
+        F.col(context).cast("double").alias("cx"),
     )
     pooled = base.where(F.col("rn") <= n_per_side)
     held = base.where(F.col("rn") > n_per_side)
@@ -1232,12 +1120,11 @@ def context_mmd_hash(
         return out
 
     qd = float(quant) * float(quant)
-    big = lambda c: F.sum(c.cast("decimal(38,0)")).cast("double")  # noqa: E731
     hrel = feats(held).agg(
         F.count(F.lit(1)).cast("double").alias("hm"),
-        (big(F.col("pa") * F.col("pa")) / F.lit(qd)).alias("haa"),
-        (big(F.col("pa") * F.col("pb")) / F.lit(qd)).alias("hab"),
-        (big(F.col("pb") * F.col("pb")) / F.lit(qd)).alias("hbb"),
+        (dec_sum(F.col("pa") * F.col("pa")) / F.lit(qd)).alias("haa"),
+        (dec_sum(F.col("pa") * F.col("pb")) / F.lit(qd)).alias("hab"),
+        (dec_sum(F.col("pb") * F.col("pb")) / F.lit(qd)).alias("hbb"),
     )
     pf = feats(pooled).withColumn(
         "gid",
@@ -1272,7 +1159,7 @@ def context_mmd_hash(
             (f"g{p}ba", F.col("qb") * F.col("pa")),
             (f"g{p}bb", F.col("qb") * F.col("pb")),
         ):
-            agg.append((big(F.when(m, e)) / F.lit(qd)).alias(nm))
+            agg.append((dec_sum(F.when(m, e)) / F.lit(qd)).alias(nm))
     mom = lab.groupBy("perm").agg(*agg).crossJoin(F.broadcast(hrel))
     out = mom
     for group in cmmd2_layers(lam):

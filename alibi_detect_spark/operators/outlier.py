@@ -863,13 +863,12 @@ def gmm_outlier_dfeat(
         # expensive derived relation (the AEGMM feature map re-derives the
         # eigenbasis per scan), cut the lineage once up front
         base = base.localCheckpoint()
-    big = lambda c: F.sum(c.cast("decimal(38,0)")).cast("double")  # noqa: E731
 
     aggs = [F.count(F.lit(1)).cast("double").alias("n")]
     for nm in names:
         aggs += [
-            big(F.col(f"{nm}q")).alias(f"s_{nm}"),
-            big(F.col(f"{nm}q") * F.col(f"{nm}q")).alias(f"ss_{nm}"),
+            dec_sum(F.col(f"{nm}q")).alias(f"s_{nm}"),
+            dec_sum(F.col(f"{nm}q") * F.col(f"{nm}q")).alias(f"ss_{nm}"),
         ]
     # init probes in the SAME job as the moment aggregate: min/max over the
     # (first-feature, id, features…) struct is the lexicographic order the
@@ -913,11 +912,11 @@ def gmm_outlier_dfeat(
         aggs = []
         for k in ("q0", "q1"):
             r = F.col(k)
-            aggs.append(big(r).alias(f"r_{k}"))
+            aggs.append(dec_sum(r).alias(f"r_{k}"))
             for nm in names:
                 aggs += [
-                    big(r * F.col(f"{nm}q")).alias(f"s_{nm}_{k}"),
-                    big(r * F.col(f"{nm}q") * F.col(f"{nm}q")).alias(f"ss_{nm}_{k}"),
+                    dec_sum(r * F.col(f"{nm}q")).alias(f"s_{nm}_{k}"),
+                    dec_sum(r * F.col(f"{nm}q") * F.col(f"{nm}q")).alias(f"ss_{nm}_{k}"),
                 ]
         s = e.agg(*aggs).collect()[0]
         tot = s["r_q0"] + s["r_q1"]

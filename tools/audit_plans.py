@@ -265,6 +265,16 @@ def main() -> None:
         "shuffles only for the final KS ECDF groupBy.",
     )
     audit(
+        "spot_the_diff_2d",
+        qs["spot_the_diff_2d"](spark, SF),
+        requires=["BroadcastHashJoin", "HashAggregate"],
+        forbids=["SortMergeJoin", "CartesianProduct"],
+        note="Two-feature SpotTheDiff: the same shared leave-fold-out ridge "
+        "head as spot_the_diff over 2-d kernel features — 1-2-row moment "
+        "and coefficient relations broadcast; only the KS ECDF shuffles the "
+        "data.",
+    )
+    audit(
         "trend_bands",
         qs["trend_bands"](spark, SF),
         requires=["BroadcastHashJoin"],
@@ -467,6 +477,16 @@ def main() -> None:
     # 6n. round-4 second half: multivariate MMD pair relation must broadcast
     #     the exploded dim side (never a shuffle join on the 64 dim keys —
     #     that would single-task per key), no cartesian anywhere
+    audit(
+        "mmd_drift",
+        qs["mmd_drift"](spark, SF),
+        requires=["BroadcastNestedLoopJoin"],
+        forbids=["CartesianProduct", "SortMergeJoin"],
+        note="Scalar MMD: two bounded head subsamples, the pair relation a "
+        "broadcast nested-loop join of at most (2n)^2 rows feeding the same "
+        "unbiased-MMD^2 block-sum aggregate as mmd_drift_vec — never a "
+        "shuffle join or a cartesian product of the data.",
+    )
     audit(
         "mmd_drift_vec",
         qs["mmd_drift_vec"](spark, SF),
