@@ -3,9 +3,9 @@
 Semantics match ``alibi_detect/cd/fet_online.py:225-233`` (``_exp_moving_avg``):
 ``out[0] = x[0]; out[i] = (1-lam)*out[i-1] + lam*x[i]`` over the final axis.
 Non-associative recursion → in Spark this runs per-key inside a sorted
-``applyInPandas`` group, with the carry (last ewma value) persisted in the
-lineage/checkpoint table so page-chunked and resumed runs reproduce identical
-trajectories bit-for-bit.
+``applyInPandas`` group, with the carry (last ewma value) handed back in by
+the caller (a carry dict, or a streaming twin's checkpointed state) so
+page-chunked and resumed runs reproduce identical trajectories bit-for-bit.
 """
 
 from __future__ import annotations

@@ -22,6 +22,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from .partitioning import spread
+
 MINHASH_K = 8  # signature length
 LSH_BANDS = 4  # bands of MINHASH_K / LSH_BANDS rows each
 SIMHASH_BITS = 32
@@ -32,21 +34,6 @@ MINHASH_AB = [
     (745_291, 911), (993_319, 8_191), (614_657, 127), (826_663, 524_287),
     (336_671, 2_047), (481_231, 31), (705_187, 65_535), (199_933, 4_095),
 ]
-
-
-def _spread(df: DataFrame, *keys: str) -> DataFrame:
-    """Hash-repartition a small relation to the session's default parallelism
-    when it carries fewer partitions (the sandbox's single-file scans produce
-    1-partition relations, which single-threads the CPU-bound band self-joins
-    and verification scans downstream). Guarded by the CURRENT partition
-    count, so at warehouse scale — where the scan already has thousands of
-    partitions — this is a no-op; the key-hash partitioning is deterministic
-    (guide §2.5: never repartition on rand()) and results are
-    partitioning-invariant by construction."""
-    par = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < par:
-        return df.repartition(par, *keys)
-    return df
 
 
 def words_col(text: str = "text"):
@@ -116,7 +103,7 @@ def exploded_shingles(docs: DataFrame, text: str = "text", n: int = 3) -> DataFr
 
     # spread the doc batches BEFORE the python stage: a single-file scan is
     # one partition, which would run the whole md5 shingling on one worker
-    return _spread(docs.select("doc_id", text), "doc_id").mapInPandas(
+    return spread(docs.select("doc_id", text), "doc_id").mapInPandas(
         fn, schema="doc_id long, h60 long, h32 long"
     )
 
@@ -176,7 +163,7 @@ def ngram_jaccard_pairs(
     # a long-lived session (a bare persist() is never unpersisted here).
     # The production analog at warehouse scale is writing the (doc_id, h60)
     # index table and joining against it.
-    sh = _spread(
+    sh = spread(
         exploded_shingles(docs, text, n).select("doc_id", "h60"), "h60"
     ).localCheckpoint()
     if max_df is not None:
@@ -252,7 +239,7 @@ def minhash_lsh_pairs(
     # and candidate verification all reuse it (cf. ngram_jaccard_pairs note)
     # localCheckpoint(eager) not persist(): blocks are freed by the
     # ContextCleaner when the result is dropped (no unpersist obligation)
-    shidx = _spread(exploded_shingles(docs, text, n), "doc_id").localCheckpoint()
+    shidx = spread(exploded_shingles(docs, text, n), "doc_id").localCheckpoint()
     sigs = minhash_signatures(None, text, n, k, index=shidx).localCheckpoint()
     band_arr = F.array(
         *[
@@ -454,7 +441,7 @@ def embedding_near_pairs(
     # materialize the tiny (id, sketch) relation once — both band sides and
     # the candidate join reuse it instead of re-running the projection scan
     # (localCheckpoint: blocks freed on GC of the result, no unpersist debt)
-    sk = _spread(
+    sk = spread(
         emb.select(id_col, emb_col).mapInPandas(fn, schema="vec_id long, sketch long"),
         "vec_id",
     ).localCheckpoint()
@@ -518,7 +505,7 @@ def simhash32(docs: DataFrame, text: str = "text") -> DataFrame:
     signs. bit b is set iff Σ_words(±1 on bit b) > 0."""
     # spread doc rows before the explode: a 1-partition scan would otherwise
     # md5-hash every word occurrence in a single task
-    w = _spread(docs.select("doc_id", text), "doc_id").select(
+    w = spread(docs.select("doc_id", text), "doc_id").select(
         "doc_id", F.explode(words_col(text)).alias("word")
     )
     w = w.select("doc_id", _h32(F.col("word")).alias("h"))
@@ -547,7 +534,7 @@ def simhash_near_pairs(docs: DataFrame, text: str = "text", max_hamming: int = 3
     # one materialized pass for the 32-bit fingerprints; both band sides
     # reuse it instead of re-exploding the word stream (localCheckpoint:
     # blocks freed on GC of the result, no unpersist debt)
-    s = _spread(simhash32(docs, text), "doc_id").localCheckpoint()
+    s = spread(simhash32(docs, text), "doc_id").localCheckpoint()
     width = SIMHASH_BITS // SIMHASH_BANDS
     bandv = F.array(
         *[

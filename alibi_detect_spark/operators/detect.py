@@ -8,8 +8,8 @@ trajectories are bit-identical.
 Determinism at scale: per-source randomized configuration (the online-MMD
 bootstrap) is seeded by a stable hash of the source name, NOT by task order,
 so results are invariant to partitioning, retries, and executor count. The
-EWMA / MMD carries needed for resume are tiny per-source blobs persisted via
-:mod:`alibi_detect_spark.plans.lineage`.
+EWMA / MMD carries needed for resume are tiny per-source dicts the caller
+passes back in (the streaming twins keep them in their checkpoint state).
 """
 
 from __future__ import annotations

@@ -22,26 +22,30 @@ from ..schemas import TIER_SECONDS
 
 
 def gapfill(rollup: DataFrame, tier: str = "1h") -> DataFrame:
+    return fill_grid(
+        rollup.drop("gapfilled"), "source", tier,
+        zeros={"n_docs": 0, "sum_n_tok": 0}, nulls=("min_n_tok", "max_n_tok", "mean_n_tok"),
+    )
+
+
+def fill_grid(rollup: DataFrame, key: str, tier: str, zeros: dict, nulls: tuple) -> DataFrame:
+    """Per-``key`` bucket grid from its first to its last bucket, LEFT joined
+    to ``rollup``: each ``zeros`` column is filled with its zero, ``nulls``
+    columns stay null, and ``gapfilled`` flags the grid rows the rollup
+    lacked (where the first ``zeros`` column, its count, is null)."""
     secs = TIER_SECONDS[tier]
     grid = (
-        rollup.groupBy("source")
+        rollup.groupBy(key)
         .agg(F.min("bucket_ts").alias("lo"), F.max("bucket_ts").alias("hi"))
         .select(
-            "source",
+            key,
             F.explode(F.sequence(F.col("lo"), F.col("hi"), F.lit(secs))).alias("bucket_ts"),
         )
     )
-    filled = (
-        grid.join(rollup.drop("gapfilled"), ["source", "bucket_ts"], "left")
-        .select(
-            "source",
-            "bucket_ts",
-            F.coalesce(F.col("n_docs"), F.lit(0)).alias("n_docs"),
-            F.coalesce(F.col("sum_n_tok"), F.lit(0)).alias("sum_n_tok"),
-            "min_n_tok",
-            "max_n_tok",
-            "mean_n_tok",
-            F.col("n_docs").isNull().alias("gapfilled"),
-        )
+    return grid.join(rollup, [key, "bucket_ts"], "left").select(
+        key,
+        "bucket_ts",
+        *(F.coalesce(F.col(c), F.lit(z)).alias(c) for c, z in zeros.items()),
+        *nulls,
+        F.col(next(iter(zeros))).isNull().alias("gapfilled"),
     )
-    return filled

@@ -21,6 +21,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
+from .partitioning import spread
+
 MEDIA_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.StringType(), False),
@@ -198,9 +200,7 @@ def extract_features(media: DataFrame) -> DataFrame:
     # spread the payload batches before the python stage: a single-file scan
     # is one partition, which would serialize every decode on one worker
     # (partition-count-guarded — a no-op when the scan is already parallel)
-    from .dedup import _spread
-
-    return _spread(media, "media_id").mapInPandas(fn, schema=schema)
+    return spread(media, "media_id").mapInPandas(fn, schema=schema)
 
 
 def resize_images(media: DataFrame, out_w: int = 4, out_h: int = 4) -> DataFrame:

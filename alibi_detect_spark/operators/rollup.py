@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..schemas import TIER_SECONDS
+from .gapfill import fill_grid
 
 
 def _bucket_col(ts_col: str, tier_seconds: int):
@@ -30,13 +31,24 @@ def _bucket_col(ts_col: str, tier_seconds: int):
     return (F.floor(epoch / tier_seconds) * tier_seconds).cast("long")
 
 
-def _aggs():
+def tier_aggs():
+    """The tier-1 aggregates of ``n_tok`` per cell (batch and streaming)."""
     # built lazily: Column construction requires an active SparkContext
     return [
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(F.col("n_tok").cast("long")).alias("sum_n_tok"),
         F.min("n_tok").alias("min_n_tok"),
         F.max("n_tok").alias("max_n_tok"),
+    ]
+
+
+def _merge_aggs():
+    """Merge :func:`tier_aggs` cells into coarser ones (exact: all integer)."""
+    return [
+        F.sum("n_docs").alias("n_docs"),
+        F.sum("sum_n_tok").alias("sum_n_tok"),
+        F.min("min_n_tok").alias("min_n_tok"),
+        F.max("max_n_tok").alias("max_n_tok"),
     ]
 
 
@@ -60,16 +72,11 @@ def rollup_tier1(
         partial = (
             base.withColumn("_salt", F.pmod(F.xxhash64("doc_id"), F.lit(salt_buckets)))
             .groupBy("source", "bucket_ts", "_salt")
-            .agg(*_aggs())
+            .agg(*tier_aggs())
         )
-        agg = partial.groupBy("source", "bucket_ts").agg(
-            F.sum("n_docs").alias("n_docs"),
-            F.sum("sum_n_tok").alias("sum_n_tok"),
-            F.min("min_n_tok").alias("min_n_tok"),
-            F.max("max_n_tok").alias("max_n_tok"),
-        )
+        agg = partial.groupBy("source", "bucket_ts").agg(*_merge_aggs())
     else:
-        agg = base.groupBy("source", "bucket_ts").agg(*_aggs())
+        agg = base.groupBy("source", "bucket_ts").agg(*tier_aggs())
     return agg.select(
         "source",
         "bucket_ts",
@@ -96,12 +103,7 @@ def downsample(rollup: DataFrame, from_tier: str, to_tier: str) -> DataFrame:
             "source",
             (F.floor(F.col("bucket_ts") / secs) * secs).cast("long").alias("bucket_ts"),
         )
-        .agg(
-            F.sum("n_docs").alias("n_docs"),
-            F.sum("sum_n_tok").alias("sum_n_tok"),
-            F.min("min_n_tok").alias("min_n_tok"),
-            F.max("max_n_tok").alias("max_n_tok"),
-        )
+        .agg(*_merge_aggs())
         .select(
             "source",
             "bucket_ts",
@@ -187,26 +189,10 @@ def metric_downsample(rollup: DataFrame, key: str, from_tier: str, to_tier: str)
 
 def metric_gapfill(rollup: DataFrame, key: str, tier: str = "1h") -> DataFrame:
     """Generic gap-fill twin of :func:`..gapfill.gapfill` for metric rollups:
-    per-key bucket grid via ``sequence + explode``, zero-filled counts/sums,
-    null min/max/avg, explicit ``gapfilled`` flag."""
-    secs = TIER_SECONDS[tier]
-    grid = (
-        rollup.groupBy(key)
-        .agg(F.min("bucket_ts").alias("lo"), F.max("bucket_ts").alias("hi"))
-        .select(
-            key,
-            F.explode(F.sequence(F.col("lo"), F.col("hi"), F.lit(secs))).alias("bucket_ts"),
-        )
-    )
-    return grid.join(rollup, [key, "bucket_ts"], "left").select(
-        key,
-        "bucket_ts",
-        F.coalesce(F.col("n_events"), F.lit(0)).alias("n_events"),
-        F.coalesce(F.col("sum_value"), F.lit(0.0)).alias("sum_value"),
-        "min_value",
-        "max_value",
-        "avg_value",
-        F.col("n_events").isNull().alias("gapfilled"),
+    zero-filled counts/sums, null min/max/avg, explicit ``gapfilled`` flag."""
+    return fill_grid(
+        rollup, key, tier,
+        zeros={"n_events": 0, "sum_value": 0.0}, nulls=("min_value", "max_value", "avg_value"),
     )
 
 

@@ -10,6 +10,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from .partitioning import spread
+
 # tiny function-word inventory: presence/ratio of these is the classic
 # n-gram-free language-ID heuristic for English
 EN_STOPWORDS = ("the", "a", "an", "and", "of", "to", "in", "is", "it", "on", "for", "with")
@@ -187,9 +189,7 @@ def doc_repetition(docs: DataFrame, text: str = "text", n: int = 3) -> DataFrame
                 uniqs.append(uniq)
             yield pd.DataFrame({"doc_id": ids, "total": totals, "uniq": uniqs})
 
-    from .dedup import _spread
-
-    per_doc = _spread(docs.select("doc_id", text), "doc_id").mapInPandas(
+    per_doc = spread(docs.select("doc_id", text), "doc_id").mapInPandas(
         fn, schema="doc_id long, total long, uniq long"
     )
     return per_doc.select(

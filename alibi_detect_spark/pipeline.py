@@ -1,13 +1,15 @@
 """End-to-end engine job: synth/raw → tier rollups → gap-fill → pages → scores.
 
 ``run_pipeline`` is the spark-submit entrypoint body; it returns the handles
-the driver/tests need. Stages write through the :class:`TierCatalog` and stamp
-the :class:`LineageLog`, so a killed job resumes from the last completed stage
-(idempotent overwrite-by-stage; per-source detector state carries via blobs).
+the driver/tests need. Every stage commits through one helper: the
+:class:`TierCatalog` write counts the rows it writes, and the
+:class:`LineageLog` row stamped after it records them, so a killed job
+resumes from the last completed stage (idempotent overwrite-by-stage).
 """
 
 from __future__ import annotations
 
+import functools
 import time
 
 from pyspark.sql import DataFrame, SparkSession
@@ -48,70 +50,49 @@ def run_pipeline(
     metrics: dict[str, float] = {}
     fp = f"{job_fingerprint}/page={page_size}/salted={salted}"
 
-    def timed(stage, fn):
-        t0 = time.monotonic()
-        out = fn()
-        metrics[stage] = time.monotonic() - t0
-        return out
-
-    def done(stage: str, table: str) -> bool:
-        ok = resume and cat.exists(table) and fp in log.done_fingerprints(stage)
-        if ok:
+    def commit(stage, table, key, seconds, build, write=cat.write_rollup):
+        """Write ``build()`` to ``table``, timed as ``metrics[seconds]``, and
+        record its lineage row with the rows the write counted — or, on
+        resume, skip a stage this job already committed. Returns the table
+        read back."""
+        if resume and cat.exists(table) and fp in log.done_fingerprints(stage):
             metrics[stage] = 0.0
             metrics[f"{stage}_skipped"] = True
-        return ok
+        else:
+            df = build()
+            t0 = time.monotonic()
+            rows = write(df, table)
+            metrics[seconds] = time.monotonic() - t0
+            log.record(stage, key, fp, rows, metrics={"sec": metrics[seconds]})
+        return cat.read(spark, table)
 
-    if done("rollup_1h", "rollup_1h"):
-        t1f = cat.read(spark, "rollup_1h")
-    else:
-        # persist the (tier-sized, bounded: sources × buckets) rollup so the
-        # gap-fill grid agg + left join don't recompute the raw scan twice
-        t1 = rollup_tier1(raw, "1h", salted=salted).persist()
-        t1f = gapfill(t1, "1h")
-        timed("tier_1h", lambda: cat.write_rollup(t1f, "rollup_1h"))
-        t1.unpersist()
-        t1f = cat.read(spark, "rollup_1h")
-        log.record("rollup_1h", "1h", fp, t1f.count(), metrics={"sec": metrics["tier_1h"]})
-
-    tiers = {"1h": t1f}
+    # persisted while its stage runs (tier-sized, bounded: sources × buckets)
+    # so the gap-fill grid agg + left join don't recompute the raw scan twice
+    t1 = rollup_tier1(raw, "1h", salted=salted)
+    tiers = {
+        "1h": commit("rollup_1h", "rollup_1h", "1h", "tier_1h", lambda: gapfill(t1.persist(), "1h"))
+    }
+    t1.unpersist()
     out = {"tiers": tiers, "metrics": metrics, "catalog": cat, "pages": None, "scores": None}
     if stop_after == "rollup_1h":
         return out
 
     for src, dst in TIER_CHAIN:
-        stage = f"rollup_{dst}"
-        if done(stage, stage):
-            tiers[dst] = cat.read(spark, stage)
-            continue
-        t = downsample(tiers[src], src, dst)
-        timed(f"tier_{dst}", lambda t=t, dst=dst: cat.write_rollup(t, f"rollup_{dst}"))
-        tiers[dst] = cat.read(spark, f"rollup_{dst}")
-        log.record(stage, dst, fp, tiers[dst].count(), metrics={"sec": metrics[f"tier_{dst}"]})
+        build = functools.partial(downsample, tiers[src], src, dst)
+        tiers[dst] = commit(f"rollup_{dst}", f"rollup_{dst}", dst, f"tier_{dst}", build)
     if stop_after == "downsample":
         return out
 
-    if done("encode", "pages"):
-        pages = cat.read(spark, "pages")
-    else:
-        pages = None
-        for tier, df in tiers.items():
-            p = encode_pages(df, tier, page_size=page_size)
-            pages = p if pages is None else pages.unionByName(p)
-        timed("pages", lambda: cat.write_pages(pages, "pages"))
-        pages = cat.read(spark, "pages")
-        log.record("encode", "all", fp, pages.count(), metrics={"sec": metrics["pages"]})
-    out["pages"] = pages
+    def pages():
+        per_tier = [encode_pages(df, tier, page_size=page_size) for tier, df in tiers.items()]
+        return functools.reduce(DataFrame.unionByName, per_tier)
+
+    out["pages"] = commit("encode", "pages", "all", "pages", pages, write=cat.write_pages)
     if stop_after == "encode":
         return out
 
-    if done("detect", "scores_1h"):
-        scores = cat.read(spark, "scores_1h")
-    else:
-        scores = score_rollup(tiers["1h"], **(detect_kwargs or {}))
-        timed("scores", lambda: cat.write_rollup(scores, "scores_1h"))
-        scores = cat.read(spark, "scores_1h")
-        log.record("detect", "1h", fp, scores.count(), metrics={"sec": metrics["scores"]})
-    out["scores"] = scores
+    scores = functools.partial(score_rollup, tiers["1h"], **(detect_kwargs or {}))
+    out["scores"] = commit("detect", "scores_1h", "1h", "scores", scores)
     return out
 
 
@@ -183,15 +164,15 @@ def main(argv: list[str] | None = None) -> None:
     # report per-stage MIN across repeats: steady-state throughput with
     # JIT warm-up and sandbox noise excluded (standard JVM-bench practice)
     out["metrics"] = best
-    rows_1h = out["tiers"]["1h"].count()
-    n_pages = out["pages"].count()
-    n_scores = out["scores"].count()
+    # row counts as the last run's writes counted them (its lineage rows)
+    log = LineageLog(f"{args.warehouse}/_lineage")
+    rows = {s: int(log.latest(s)["rows_out"].iloc[0]) for s in ("rollup_1h", "encode", "detect")}
     print(
         json.dumps(
             {
-                "rollup_1h_rows": rows_1h,
-                "pages": n_pages,
-                "scores": n_scores,
+                "rollup_1h_rows": rows["rollup_1h"],
+                "pages": rows["encode"],
+                "scores": rows["detect"],
                 "stage_seconds": {k: round(v, 3) for k, v in out["metrics"].items()},
             }
         )

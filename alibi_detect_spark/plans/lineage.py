@@ -1,47 +1,24 @@
-"""Per-partition lineage + checkpoint state + metrics tables.
+"""Per-stage lineage + metrics table.
 
-The reference checkpoints online-detector state to ``.npz`` via
-``StateMixin.save_state/load_state`` (``alibi_detect/utils/state/state.py:14-61``)
-keyed by ``online_state_keys``. The engine's analog is a *lineage table*: one
-row per (job, stage, partition key) recording the input fingerprint, row
-counts, and a small binary state blob (EWMA carry, MMD FIFO window, encode
-cursor). Resume = read latest blobs, filter already-fingerprinted inputs,
-process the remainder — idempotent because writes are keyed MERGEs
-(emulated here by latest-timestamp-wins over an append-only parquet log;
-Iceberg deployment uses a real ``MERGE INTO``).
+One row per (stage, partition key) records the job fingerprint the stage
+was committed under, the rows it wrote (counted by the ``TierCatalog`` write
+itself) and its metrics. Resume skips every stage whose latest row carries
+this job's fingerprint and whose table exists; a stage that died mid-write
+is redone, which is idempotent because every tier write is an overwrite.
+Latest-timestamp-wins reads over an append-only parquet log emulate the
+keyed MERGE (the Iceberg deployment uses a real ``MERGE INTO``). Detector
+state is not kept here: batch carries are per-source dicts the caller hands
+back, and the streaming twins keep theirs in their checkpoint directories.
 """
 
 from __future__ import annotations
 
-import io
 import json
 import os
 import time
 import uuid
 
-import numpy as np
 import pandas as pd
-
-
-def pack_state(state: dict) -> bytes:
-    """Serialize a {str: scalar|ndarray} state dict (npz, no pickle)."""
-    arrays = {}
-    scalars = {}
-    for k, v in state.items():
-        if isinstance(v, np.ndarray):
-            arrays[k] = v
-        elif v is not None:
-            scalars[k] = v
-    buf = io.BytesIO()
-    np.savez(buf, __scalars__=np.frombuffer(json.dumps(scalars).encode(), dtype=np.uint8), **arrays)
-    return buf.getvalue()
-
-
-def unpack_state(blob: bytes) -> dict:
-    with np.load(io.BytesIO(blob)) as z:
-        out: dict = {k: z[k] for k in z.files if k != "__scalars__"}
-        out.update(json.loads(z["__scalars__"].tobytes().decode()))
-    return out
 
 
 class LineageLog:
@@ -57,7 +34,6 @@ class LineageLog:
         partition_key: str,
         input_fingerprint: str,
         rows_out: int,
-        state: dict | None = None,
         metrics: dict | None = None,
     ) -> None:
         row = pd.DataFrame(
@@ -67,7 +43,6 @@ class LineageLog:
                     "partition_key": partition_key,
                     "input_fingerprint": input_fingerprint,
                     "rows_out": rows_out,
-                    "state": pack_state(state) if state else None,
                     "metrics": json.dumps(metrics or {}),
                     "updated_at": time.time_ns(),
                 }
@@ -90,16 +65,10 @@ class LineageLog:
         df = self._load()
         if df is None:
             return pd.DataFrame(
-                columns=["stage", "partition_key", "input_fingerprint", "rows_out", "state", "metrics", "updated_at"]
+                columns=["stage", "partition_key", "input_fingerprint", "rows_out", "metrics",
+                         "updated_at"]
             )
         return df[df["stage"] == stage].reset_index(drop=True)
-
-    def state_for(self, stage: str, partition_key: str) -> dict | None:
-        df = self.latest(stage)
-        hit = df[df["partition_key"] == partition_key]
-        if hit.empty or hit["state"].iloc[0] is None:
-            return None
-        return unpack_state(hit["state"].iloc[0])
 
     def done_fingerprints(self, stage: str) -> set[str]:
         return set(self.latest(stage)["input_fingerprint"])

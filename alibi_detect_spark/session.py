@@ -73,9 +73,6 @@ def get_spark(
         # a single sandbox disk doesn't serialize an IO-bound shuffle
         .config("spark.local.dir", os.environ.get("SPARK_GRAFT_LOCAL_DIR", "/tmp"))
         .config("spark.ui.enabled", "false")
-        # local mode defaults to maxFailures=1 — one flaky python-worker
-        # crash kills the job; match the cluster default instead
-        .config("spark.task.maxFailures", "4")
         .config("spark.sql.parquet.compression.codec", "zstd")
     )
     for k, v in (extra_conf or {}).items():

@@ -22,7 +22,7 @@ from __future__ import annotations
 import os
 import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 
 def iceberg_session_conf(warehouse: str, catalog: str = "tiers") -> dict[str, str]:
@@ -43,23 +43,29 @@ class TierCatalog:
     def _path(self, name: str) -> str:
         return os.path.join(self.root, name)
 
-    def write_raw(self, df: DataFrame, name: str = "raw") -> None:
-        """Iceberg: ``CREATE TABLE ... PARTITIONED BY (days(event_ts), bucket(64, source))``."""
-        # local parquet: write as generated (generation partitions are already
-        # balanced); rely on file-level min/max stats for pruning
-        df.write.mode("overwrite").parquet(self._path(name))
-
-    def write_rollup(self, df: DataFrame, name: str, sorted_within: bool = True) -> None:
+    def write_rollup(self, df: DataFrame, name: str) -> int:
         """Iceberg: ``ALTER TABLE ... WRITE ORDERED BY (source, bucket_ts)`` +
-        ``REPLACE`` snapshot. Range distribution keeps series runs contiguous."""
+        ``REPLACE`` snapshot. Range distribution keeps series runs contiguous.
+        Returns the rows written."""
         out = df.repartitionByRange("source", "bucket_ts")
-        if sorted_within:
-            out = out.sortWithinPartitions("source", "bucket_ts")
-        out.write.mode("overwrite").parquet(self._path(name))
+        return self._write(out.sortWithinPartitions("source", "bucket_ts"), name)
 
-    def write_pages(self, df: DataFrame, name: str = "pages") -> None:
-        """Iceberg: append/merge into the page table partitioned by ``tier``."""
-        df.write.mode("overwrite").partitionBy("tier").parquet(self._path(name))
+    def write_pages(self, df: DataFrame, name: str = "pages") -> int:
+        """Iceberg: append/merge into the page table partitioned by ``tier``.
+        Returns the rows written."""
+        return self._write(df, name, "tier")
+
+    def _write(self, df: DataFrame, name: str, *partition_by: str) -> int:
+        """Overwrite table ``name`` with ``df`` and return its row count,
+        observed by the write job itself (no second scan). The observation
+        must sit above any range exchange: the range partitioner's sampling
+        job also runs the plan below it, which would count every row twice."""
+        rows = Observation()
+        writer = df.observe(rows, F.count(F.lit(1)).alias("n")).write.mode("overwrite")
+        if partition_by:
+            writer = writer.partitionBy(*partition_by)
+        writer.parquet(self._path(name))
+        return rows.get["n"]
 
     def read(self, spark: SparkSession, name: str) -> DataFrame:
         return spark.read.parquet(self._path(name))

@@ -32,6 +32,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..operators.rollup import tier_aggs
 from ..schemas import TIER_SECONDS
 
 _log = logging.getLogger(__name__)
@@ -62,12 +63,7 @@ def stream_rollup(
     agg = (
         raw.withWatermark("event_ts", watermark_delay)
         .groupBy("source", F.window("event_ts", f"{secs} seconds").alias("win"))
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum(F.col("n_tok").cast("long")).alias("sum_n_tok"),
-            F.min("n_tok").alias("min_n_tok"),
-            F.max("n_tok").alias("max_n_tok"),
-        )
+        .agg(*tier_aggs())
         .select(
             "source",
             F.unix_timestamp(F.col("win.start")).alias("bucket_ts"),

@@ -8,10 +8,16 @@ import pandas as pd
 import pytest
 
 from alibi_detect_spark.pipeline import run_pipeline
+from alibi_detect_spark.plans.lineage import LineageLog
 from alibi_detect_spark.synth import SynthConfig, synth_dataframe
 
 CFG = SynthConfig(n_rows=30_000, n_sources=4, rows_per_bucket=64)
 DETECT = dict(mmd_params=dict(n_ref=32, ert=40.0, window_size=5, n_bootstraps=80))
+# lineage stage -> the table it writes
+STAGE_TABLES = {
+    "rollup_1h": "rollup_1h", "rollup_6h": "rollup_6h", "rollup_1d": "rollup_1d",
+    "encode": "pages", "detect": "scores_1h",
+}
 
 
 @pytest.fixture(scope="module")
@@ -69,6 +75,24 @@ def test_resume_ignores_other_fingerprint(spark, raw, tmp_path):
                        job_fingerprint="jobB", resume=True)
     assert out["metrics"].get("rollup_1h_skipped") is None
     assert out["metrics"]["tier_1h"] > 0
+
+
+@pytest.mark.parametrize("stop_after", [None, "downsample"])
+def test_lineage_rows_out_equal_written_rows(spark, raw, tmp_path, stop_after):
+    """Each stage's lineage ``rows_out`` is the row count of the table it
+    wrote, on a straight run and on one stopped after ``downsample`` and
+    resumed (the rollup rows then come from the stopped job)."""
+    wh = str(tmp_path / "wh")
+    if stop_after:
+        run_pipeline(spark, raw, wh, page_size=128, detect_kwargs=DETECT, stop_after=stop_after)
+    out = run_pipeline(spark, raw, wh, page_size=128, detect_kwargs=DETECT, resume=bool(stop_after))
+    skipped = {k for k in out["metrics"] if k.endswith("_skipped")}
+    assert skipped == ({"rollup_1h_skipped", "rollup_6h_skipped", "rollup_1d_skipped"}
+                       if stop_after else set())
+    log = LineageLog(f"{wh}/_lineage")
+    for stage, table in STAGE_TABLES.items():
+        rows_out = int(log.latest(stage)["rows_out"].iloc[0])
+        assert rows_out == spark.read.parquet(f"{wh}/{table}").count(), stage
 
 
 def test_retention_expiry(spark, raw, tmp_path):
