@@ -13,9 +13,12 @@ once on a reference, then scores each instance. Two plan families:
 The closed forms share their fit-and-score blocks: the 2×2 moment relation,
 rank-1 / pPCA parameters, ranked top-k, landmark kernels and isolation-forest
 leaf maps from :mod:`.closed_form`; the fixed-iteration power method from
-:func:`..functions.abdm.power_top`; and, at embedding width, the one-pass
-quantized moments (:func:`_emb_quant_moments`) and the per-dimension
-posexplode moments (:func:`_dim_moments`).
+:func:`..functions.abdm.power_top`; the quantized-EM loop of both GMM
+closed forms (:func:`_quant_em`); and, at embedding width, the one-pass
+quantized moments (:func:`_emb_quant_moments`), the per-dimension
+posexplode moments (:func:`_dim_moments`) and one sequential fold
+(:func:`_fold`) under every per-row reduction — the centred projections
+(:func:`_centred`, :func:`_dot`) and the index folds (:func:`_index_fold`).
 """
 
 from __future__ import annotations
@@ -24,7 +27,7 @@ import math
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from ..functions.abdm import (
     abdm_dpair,
@@ -421,6 +424,42 @@ def _emb_base(emb, id_col: str, vec_col: str):
     )
 
 
+def _lits(xs) -> Column:
+    """The fitted parameters ``xs`` as a literal array column."""
+    return F.array(*[F.lit(x) for x in xs])
+
+
+def _fold(arr: Column, term=lambda t: t) -> Column:
+    """``Σ term(t)`` over the array ``arr`` as a SEQUENTIAL left fold from
+    0.0 (``F.aggregate`` ≡ DuckDB ``list_reduce``) — the one per-row
+    reduction of every embedding-width closed form, so both engines walk
+    identical IEEE chains."""
+    return F.aggregate(arr, F.lit(0.0), lambda acc, t: acc + term(t))
+
+
+def _centred(vec_col: str, mu) -> Column:
+    """``x − μ`` over the raw doubles of ``vec_col``, ``μ`` a literal array."""
+    xd = F.transform(F.col(vec_col), lambda x: x.cast("double"))
+    return F.zip_with(xd, _lits(mu), lambda a, b: a - b)
+
+
+def _dot(a: Column, b: Column) -> Column:
+    """``Σ_j a_j·b_j`` as a :func:`_fold` (a centred projection when ``a``
+    is :func:`_centred` and ``b`` a literal direction)."""
+    return _fold(F.zip_with(a, b, lambda s, t: s * t))
+
+
+def _index_fold(dim: int, term, *params) -> Column:
+    """``Σ_{i=1..dim} term(v_i, p_i, …)`` as a :func:`_fold` over
+    ``sequence(1, dim)``: ``v`` is :func:`_emb_base`'s vector column and
+    each ``p`` a list of fitted parameters, indexed as a literal array."""
+    arrs = [_lits(p) for p in params]
+    return _fold(
+        F.sequence(F.lit(1), F.lit(dim)),
+        lambda i: term(F.element_at(F.col("v"), i), *[F.element_at(a, i) for a in arrs]),
+    )
+
+
 def _check_dims(counts: dict, dim: int, vec_col: str) -> None:
     """Fail fast on ragged or wrong-width vectors: ``counts[j]`` is the
     number of vectors with a component ``j``, and every vector must have
@@ -436,17 +475,15 @@ def _check_dims(counts: dict, dim: int, vec_col: str) -> None:
 
 
 def _dim_moments(base, vec_col: str, dim: int, quant: int):
-    """Per-dimension exact moments of ``base``'s quantized components: one
-    posexplode + ``dim``-group DECIMAL aggregate (codegen, map-side partials).
-    Returns ``(ex, mu, var)`` — ``ex`` = ``(__id, j, xq)`` with
-    ``xq = round(x·quant)``, and the population mean / variance per
-    dimension (no epsilon)."""
+    """Per-dimension exact moments of ``base``'s quantized components
+    ``xq = round(x·quant)``: one posexplode + ``dim``-group DECIMAL
+    aggregate (codegen, map-side partials). Returns ``(mu, var)``, the
+    population mean / variance per dimension (no epsilon)."""
     q = float(quant)
-    ex = base.select("__id", F.posexplode("v").alias("j", "x")).select(
-        "__id", "j", F.round(F.col("x") * quant).cast("long").alias("xq")
-    )
     gl = (
-        ex.groupBy("j")
+        base.select(F.posexplode("v").alias("j", "x"))
+        .select("j", F.round(F.col("x") * quant).cast("long").alias("xq"))
+        .groupBy("j")
         .agg(
             F.count(F.lit(1)).cast("double").alias("n"),
             dec_sum(F.col("xq")).alias("s"),
@@ -462,7 +499,71 @@ def _dim_moments(base, vec_col: str, dim: int, quant: int):
         gm[j]["ss"] / (n * q * q) - (gm[j]["s"] / (n * q)) * (gm[j]["s"] / (n * q))
         for j in range(dim)
     ]
-    return ex, mu, var
+    return mu, var
+
+
+def _resp_aggs(xq_cols: list[str]) -> list[Column]:
+    """The M-step sums of :func:`_quant_em`: for each rounded responsibility
+    column ``k`` in ``q0, q1``, ``r_k = Σ k`` and, per quantized column
+    ``c``, ``s_c_k = Σ k·c`` and ``ss_c_k = Σ k·c·c`` — exact DECIMAL sums,
+    order-free under any partitioning."""
+    aggs = []
+    for k in ("q0", "q1"):
+        r = F.col(k)
+        aggs.append(dec_sum(r).alias(f"r_{k}"))
+        for c in xq_cols:
+            x = F.col(c)
+            aggs += [dec_sum(r * x).alias(f"s_{c}_{k}"), dec_sum(r * x * x).alias(f"ss_{c}_{k}")]
+    return aggs
+
+
+def _quant_em(params, ld, moments, n_iter: int, quant: int, quant_r: int, eps: float) -> Column:
+    """The quantized-EM loop of the 2-component diagonal GMM closed forms
+    (:func:`gmm_outlier_dfeat`, :func:`gmm_outlier_emb`); returns the
+    rounded ``gmm_nll`` column of the fitted mixture.
+
+    ``params`` is the initial ``[(means, variances, weight)] × 2``. The
+    caller supplies the two things the oracle pins per operator:
+    ``ld(p)``, the per-row ``log(w·N(x; μ, σ²))`` column in its own
+    association, and ``moments(q0, q1)``, its per-iteration aggregate of
+    :func:`_resp_aggs` over the responsibility columns ``q0``/``q1``
+    (quantized inputs at scale ``quant``), returned as one ``(row, c)``
+    cell per dimension.
+
+    Each iteration's E-step rounds the component-0 responsibility to a
+    ``quant_r`` integer (identical rounding in DuckDB), so every M-step
+    moment is an exact integer sum divided once and both engines derive
+    bit-identical means / variances / weights. A component whose rounded
+    responsibilities sum to 0 has no M-step (its parameters would go NaN
+    in every score, the oracle's identically) and raises ``ValueError``."""
+    q = float(quant)
+    for _ in range(n_iter):
+        q0 = F.round(
+            F.lit(1.0) / (F.lit(1.0) + F.exp(ld(params[1]) - ld(params[0]))) * quant_r
+        ).cast("long")
+        cells = moments(q0, F.lit(quant_r) - F.col("q0"))
+        rs = [cells[0][0][f"r_{k}"] for k in ("q0", "q1")]
+        if 0 in rs:
+            raise ValueError(
+                "GMM EM degenerate: component responsibility sum is 0 at component "
+                f"{rs.index(0)}; use fewer components or rescale"
+            )
+        new = []
+        for k, r in zip(("q0", "q1"), rs):
+            s = [row[f"s_{c}_{k}"] for row, c in cells]
+            ss = [row[f"ss_{c}_{k}"] for row, c in cells]
+            means = [sj / (r * q) for sj in s]
+            vs = [
+                ssj / (r * q * q) - (sj / (r * q)) * (sj / (r * q)) + eps
+                for sj, ssj in zip(s, ss)
+            ]
+            new.append((means, vs, r / (rs[0] + rs[1])))
+        params = new
+
+    ld0, ld1 = ld(params[0]), ld(params[1])
+    mx = F.greatest(ld0, ld1)
+    nll = -(mx + F.log(F.exp(ld0 - mx) + F.exp(ld1 - mx)))
+    return (F.round(nll, 6) + F.lit(0.0)).alias("gmm_nll")
 
 
 def pca_outlier_emb(
@@ -475,7 +576,9 @@ def pca_outlier_emb(
 ):
     """:func:`pca_outlier_dfeat` at the reference's REAL embedding width —
     rank-1 principal direction over a d-dim ``array<float>`` column via the
-    fixed-iteration power method, fully oracle-checkable at d = 64.
+    fixed-iteration power method, fully oracle-checkable at d = 64: the
+    ``n_comp = 1`` case of :func:`pca_outlier_sub_emb`, score
+    ``Σ (x_j − μ_j)² − (Σ (x_j − μ_j)·v_j)²`` as ``pca_resid``.
 
     Moments come from ONE Arrow pass emitting per-batch partial integer
     sums of the quantized components (``Σ xq_j``, ``Σ xq_j·xq_k`` — a
@@ -484,26 +587,11 @@ def pca_outlier_emb(
     The SQL twin derives the SAME integers from a posexplode pair join —
     value-identical because integer sums are order-free. The power
     iteration is driver-side scalar math with sequential left-fold
-    associations; scoring uses ``F.aggregate`` (a sequential fold, exactly
+    associations; scoring uses :func:`_fold` (a sequential fold, exactly
     DuckDB's ``list_reduce`` order) so the per-row reductions are
     bit-identical too."""
-    _, mu, cmat = _emb_quant_moments(emb, vec_col, dim, quant)
-    v, _ = power_top(cmat, n_iter)
-
-    # per-row reductions as SEQUENTIAL folds (F.aggregate ≡ list_reduce):
-    # tot = Σ (x_j − μ_j)², proj = Σ (x_j − μ_j)·v_j over the raw doubles
-    mu_arr = F.array(*[F.lit(m) for m in mu])
-    v_arr = F.array(*[F.lit(x) for x in v])
-    xd = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    c = F.zip_with(xd, mu_arr, lambda a, b: a - b)
-    tot = F.aggregate(
-        F.zip_with(c, c, lambda a, b: a * b), F.lit(0.0), lambda acc, t: acc + t
-    )
-    proj = F.aggregate(
-        F.zip_with(c, v_arr, lambda a, b: a * b), F.lit(0.0), lambda acc, t: acc + t
-    )
-    return emb.select(
-        id_col, (F.round(tot - proj * proj, 6) + F.lit(0.0)).alias("pca_resid")
+    return pca_outlier_sub_emb(emb, id_col, vec_col, dim, 1, n_iter, quant).withColumnRenamed(
+        "pca_sub_resid", "pca_resid"
     )
 
 
@@ -522,22 +610,19 @@ def gmm_outlier_emb(
     column, fully oracle-checkable at d = 64 (the seeded-EM variant over the
     same table is :func:`gmm_outlier_scores`, rows-only).
 
-    Same exactness scheme as the feature-tuple twin: responsibilities are
-    rounded to ``quant_r`` integers, every M-step moment is an exact DECIMAL
-    sum of quantized components, and the per-row log-densities are
-    SEQUENTIAL index folds (``F.aggregate`` over ``sequence(1, d)`` ≡
-    DuckDB ``list_reduce``), so both engines walk identical IEEE chains.
+    The same :func:`_quant_em` loop as the feature-tuple twin, with the
+    per-row log-densities as SEQUENTIAL index folds (:func:`_index_fold` ≡
+    DuckDB ``list_reduce``) and components quantized at ``quant_x``.
     Init: component means at the two extreme rows of the FIRST component
     (ties by id), shared per-dim population variance, equal weights.
 
-    Per iteration: one posexplode + 64-group aggregate (codegen, map-side
-    partials — no corpus joins); the scoring plan is one scan of fold
-    expressions with the (μ, σ², w) literal arrays in the closure."""
-    d = dim
-    q = float(quant_x)
+    Per iteration: the responsibility ``q0`` is a projection of each
+    vector BELOW its posexplode (the two ``ld`` folds run once per vector,
+    not once per component), then one ``dim``-group aggregate (codegen,
+    map-side partials — no corpus joins); the scoring plan is one scan of
+    fold expressions with the (μ, σ², w) literal arrays in the closure."""
     base = _emb_base(emb, id_col, vec_col)
-    ex, _, var = _dim_moments(base, vec_col, dim, quant_x)
-    pop_var = [v + eps for v in var]
+    pop_var = [v + eps for v in _dim_moments(base, vec_col, dim, quant_x)[1]]
     # init probes in ONE job: min/max over the (first-component, id, v) struct
     # is the lexicographic order the former two orderBy().limit(1).collect()
     # jobs used (ties impossible — id unique), so the selected rows are
@@ -554,64 +639,29 @@ def gmm_outlier_emb(
 
     def ld(p):
         means, vs, wgt = p
-        m_arr = F.array(*[F.lit(m) for m in means])
-        v_arr = F.array(*[F.lit(x) for x in vs])
-        xe = lambda i: F.element_at(F.col("v"), i)  # noqa: E731
-        me = lambda i: F.element_at(m_arr, i)  # noqa: E731
-        ve = lambda i: F.element_at(v_arr, i)  # noqa: E731
-        fold = F.aggregate(
-            F.sequence(F.lit(1), F.lit(d)),
-            F.lit(0.0),
-            lambda acc, i: acc
-            + (
-                F.lit(-0.5) * F.log(F.lit(2 * math.pi) * ve(i))
-                - (xe(i) - me(i)) * (xe(i) - me(i)) / (F.lit(2.0) * ve(i))
-            ),
+        fold = _index_fold(
+            dim,
+            lambda x, m, v: F.lit(-0.5) * F.log(F.lit(2 * math.pi) * v)
+            - (x - m) * (x - m) / (F.lit(2.0) * v),
+            means,
+            vs,
         )
         return fold + F.lit(math.log(wgt))
 
-    for _ in range(n_iter):
-        q0 = F.round(
-            F.lit(1.0) / (F.lit(1.0) + F.exp(ld(params[1]) - ld(params[0]))) * quant_r
-        ).cast("long")
-        resp = base.select("__id", q0.alias("q0"))
-        e = ex.join(resp, "__id").withColumn("q1", F.lit(quant_r) - F.col("q0"))
-        mom = (
-            e.groupBy("j")
-            .agg(
-                dec_sum(F.col("q0")).alias("r0j"),
-                dec_sum(F.col("q1")).alias("r1j"),
-                dec_sum(F.col("q0") * F.col("xq")).alias("s0"),
-                dec_sum((F.col("q0") * F.col("xq")) * F.col("xq")).alias("ss0"),
-                dec_sum(F.col("q1") * F.col("xq")).alias("s1"),
-                dec_sum((F.col("q1") * F.col("xq")) * F.col("xq")).alias("ss1"),
-            )
+    def moments(q0, q1):
+        e = base.select("v", q0.alias("q0")).select("q0", F.posexplode("v").alias("j", "x"))
+        xq = F.round(F.col("x") * quant_x).cast("long").alias("xq")
+        rows = (
+            e.select("j", "q0", q1.alias("q1"), xq)
+            .groupBy("j")
+            .agg(*_resp_aggs(["xq"]))
             .collect()
         )
-        mm = {int(r["j"]): r for r in mom}
-        r0, r1 = mm[0]["r0j"], mm[0]["r1j"]
-        if r0 == 0 or r1 == 0:
-            raise ValueError("GMM EM degenerate: a component's responsibility sum is 0")
-        tot = r0 + r1
-        new = []
-        for k, r in (("0", r0), ("1", r1)):
-            means = [mm[j][f"s{k}"] / (r * q) for j in range(d)]
-            vs = [
-                mm[j][f"ss{k}"] / (r * q * q)
-                - (mm[j][f"s{k}"] / (r * q)) * (mm[j][f"s{k}"] / (r * q))
-                + eps
-                for j in range(d)
-            ]
-            new.append((means, vs, r / tot))
-        params = new
+        mm = {int(r["j"]): r for r in rows}
+        return [(mm[j], "xq") for j in range(dim)]
 
-    ld0, ld1 = ld(params[0]), ld(params[1])
-    mx = F.greatest(ld0, ld1)
-    nll = -(mx + F.log(F.exp(ld0 - mx) + F.exp(ld1 - mx)))
-    return base.select(
-        F.col("__id").alias(id_col),
-        (F.round(nll, 6) + F.lit(0.0)).alias("gmm_nll"),
-    )
+    nll = _quant_em(params, ld, moments, n_iter, quant_x, quant_r, eps)
+    return base.select(F.col("__id").alias(id_col), nll)
 
 
 def ocsvm_emb(
@@ -631,10 +681,9 @@ def ocsvm_emb(
     squared distances are SEQUENTIAL index folds (``F.aggregate`` ≡ DuckDB
     ``list_reduce``), the landmark sum an explicit left-associated chain —
     both engines walk identical IEEE expressions."""
-    d = dim
     base = _emb_base(emb, id_col, vec_col)
     s2 = 0.0
-    for v in _dim_moments(base, vec_col, dim, quant)[2]:
+    for v in _dim_moments(base, vec_col, dim, quant)[1]:
         s2 = s2 + v
     s2 = s2 + var_eps
 
@@ -645,14 +694,7 @@ def ocsvm_emb(
     lands = [[float(x) for x in r["v"]] for r in lrows]
 
     def d2_to(landmark):
-        arr = F.array(*[F.lit(x) for x in landmark])
-        return F.aggregate(
-            F.sequence(F.lit(1), F.lit(d)),
-            F.lit(0.0),
-            lambda acc, i: acc
-            + (F.element_at(F.col("v"), i) - F.element_at(arr, i))
-            * (F.element_at(F.col("v"), i) - F.element_at(arr, i)),
-        )
+        return _index_fold(dim, lambda x, a: (x - a) * (x - a), landmark)
 
     ks = F.exp(-d2_to(lands[0]) / F.lit(2.0 * s2))
     for landmark in lands[1:]:
@@ -727,16 +769,9 @@ def mahalanobis_emb(
     exact quantized moments and the per-row reduction a SEQUENTIAL index
     fold (``F.aggregate`` ≡ ``list_reduce``)."""
     base = _emb_base(emb, id_col, vec_col)
-    _, mu, var = _dim_moments(base, vec_col, dim, quant)
-    mu_arr = F.array(*[F.lit(m) for m in mu])
-    vr_arr = F.array(*[F.lit(v + var_eps) for v in var])
-    score = F.aggregate(
-        F.sequence(F.lit(1), F.lit(dim)),
-        F.lit(0.0),
-        lambda acc, i: acc
-        + (F.element_at(F.col("v"), i) - F.element_at(mu_arr, i))
-        * (F.element_at(F.col("v"), i) - F.element_at(mu_arr, i))
-        / F.element_at(vr_arr, i),
+    mu, var = _dim_moments(base, vec_col, dim, quant)
+    score = _index_fold(
+        dim, lambda x, m, v: (x - m) * (x - m) / v, mu, [v + var_eps for v in var]
     )
     return base.select(
         F.col("__id").alias(id_col),
@@ -838,19 +873,19 @@ def gmm_outlier_dfeat(
     (rows-only).
 
     Exactness-by-construction (the EM analog of ``ann.kmeans_cells``'s
-    quantized Lloyd): each E-step's responsibilities are ROUNDED to integers
-    (``round(r·10³)``, identical rounding in DuckDB), so every M-step moment
-    is an exact integer sum (accumulated as DECIMAL(38,0) — order-free under
-    any partitioning) divided once — both engines derive bit-identical
-    means/variances/weights at every iteration, and the final NLL is a
-    deterministic closed-form column of the data. Init is deterministic:
-    component means at the extreme rows of the first feature (ties by id),
-    shared per-dim population variance (exact decimal moments), equal
-    weights.
+    quantized Lloyd) is :func:`_quant_em`'s: responsibilities ROUNDED to
+    ``quant`` integers, exact DECIMAL(38,0) M-step sums divided once, so
+    both engines derive bit-identical means/variances/weights at every
+    iteration and the final NLL is a deterministic closed-form column of
+    the data. This operator's log-density is a left-associated chain over
+    the feature columns. Init is deterministic: component means at the
+    extreme rows of the first feature (ties by id), shared per-dim
+    population variance (exact decimal moments), equal weights.
 
     Scale shape: per iteration one corpus scan + one tiny aggregate (the
     2-component moment row, 2·(2d+1) numbers regardless of corpus size),
-    params travel by closure — no corpus joins, no full-value buffering."""
+    params travel by closure — no corpus joins, no full-value buffering.
+    :func:`gmm_outlier_2feat` is this operator under its two-feature name."""
     q = float(quant)
     names = [f"x{i}" for i in range(len(cols))]
     sel = [F.col(id_col)]
@@ -904,65 +939,17 @@ def gmm_outlier_dfeat(
             expr = expr - (F.col(nm) - F.lit(m)) * (F.col(nm) - F.lit(m)) / F.lit(2 * vv)
         return expr + F.lit(math.log(w))
 
-    for _ in range(n_iter):
-        q0 = F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(ld(params[1]) - ld(params[0]))) * quant).cast(
-            "long"
-        )
-        e = base.withColumn("q0", q0).withColumn("q1", F.lit(quant) - F.col("q0"))
-        aggs = []
-        for k in ("q0", "q1"):
-            r = F.col(k)
-            aggs.append(dec_sum(r).alias(f"r_{k}"))
-            for nm in names:
-                aggs += [
-                    dec_sum(r * F.col(f"{nm}q")).alias(f"s_{nm}_{k}"),
-                    dec_sum(r * F.col(f"{nm}q") * F.col(f"{nm}q")).alias(f"ss_{nm}_{k}"),
-                ]
-        s = e.agg(*aggs).collect()[0]
-        tot = s["r_q0"] + s["r_q1"]
-        new = []
-        for k in ("q0", "q1"):
-            r = s[f"r_{k}"]
-            if r == 0:
-                # a component whose rounded responsibilities sum to 0 has no
-                # M-step: means/variances would go NaN and propagate silently
-                # through every score (the oracle diverges identically)
-                raise ValueError(
-                    "GMM EM degenerate: component responsibility sum is 0 "
-                    f"at component {k}; use fewer components or rescale"
-                )
-            means = [s[f"s_{nm}_{k}"] / (r * q) for nm in names]
-            vs = [
-                s[f"ss_{nm}_{k}"] / (r * q * q)
-                - (s[f"s_{nm}_{k}"] / (r * q)) * (s[f"s_{nm}_{k}"] / (r * q))
-                + eps
-                for nm in names
-            ]
-            new.append((means, vs, r / tot))
-        params = new
+    def moments(q0, q1):
+        xq_cols = [f"{nm}q" for nm in names]
+        row = base.withColumn("q0", q0).withColumn("q1", q1).agg(*_resp_aggs(xq_cols)).collect()[0]
+        return [(row, c) for c in xq_cols]
 
-    ld0, ld1 = ld(params[0]), ld(params[1])
-    mx = F.greatest(ld0, ld1)
-    nll = -(mx + F.log(F.exp(ld0 - mx) + F.exp(ld1 - mx)))
-    return base.select(id_col, (F.round(nll, 6) + F.lit(0.0)).alias("gmm_nll"))
+    return base.select(id_col, _quant_em(params, ld, moments, n_iter, quant, quant, eps))
 
 
-def gmm_outlier_2feat(
-    df,
-    cols: tuple[str, str],
-    id_col: str = "event_id",
-    n_iter: int = 2,
-    quant: int = 1000,
-    eps: float = 1e-9,
-    materialize: bool = False,
-):
-    """Two-feature instance of :func:`gmm_outlier_dfeat` (kept as the named
-    entry point for the AEGMM/VAEGMM feature-map pipelines and the
-    ``gmm_outlier_2c`` oracle query)."""
-    return gmm_outlier_dfeat(
-        df, cols, id_col=id_col, n_iter=n_iter, quant=quant, eps=eps,
-        materialize=materialize,
-    )
+# the two-feature instance: the named entry point of the AEGMM/VAEGMM
+# feature-map pipelines and the ``gmm_outlier_2c`` oracle query
+gmm_outlier_2feat = gmm_outlier_dfeat
 
 
 def ae_outlier_2feat(
@@ -1423,20 +1410,10 @@ def pca_outlier_sub_emb(
     subtracts each component's squared projection in sequence (all
     ``F.aggregate`` sequential folds ≡ ``list_reduce``)."""
     _, mu, cmat = _emb_quant_moments(emb, vec_col, dim, quant)
-    vs = _emb_top_eigvecs(cmat, n_comp, n_iter)
-
-    mu_arr = F.array(*[F.lit(m) for m in mu])
-    xd = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    c = F.zip_with(xd, mu_arr, lambda a, b: a - b)
-    tot = F.aggregate(
-        F.zip_with(c, c, lambda a, b: a * b), F.lit(0.0), lambda acc, t: acc + t
-    )
-    score = tot
-    for v in vs:
-        v_arr = F.array(*[F.lit(x) for x in v])
-        p = F.aggregate(
-            F.zip_with(c, v_arr, lambda a, b: a * b), F.lit(0.0), lambda acc, t: acc + t
-        )
+    c = _centred(vec_col, mu)
+    score = _dot(c, c)
+    for v in _emb_top_eigvecs(cmat, n_comp, n_iter):
+        p = _dot(c, _lits(v))
         score = score - p * p
     return emb.select(
         id_col, (F.round(score, 6) + F.lit(0.0)).alias("pca_sub_resid")
@@ -1467,21 +1444,8 @@ def ae_outlier_emb(
     vs = _emb_top_eigvecs(cmat, n_comp, n_iter)
     n_top = int(math.ceil(0.01 * outlier_perc * dim))
 
-    mu_arr = F.array(*[F.lit(m) for m in mu])
-    xd = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    c = F.zip_with(xd, mu_arr, lambda a, b: a - b)
-    projs = []
-    v_arrs = []
-    for v in vs:
-        v_arr = F.array(*[F.lit(x) for x in v])
-        v_arrs.append(v_arr)
-        projs.append(
-            F.aggregate(
-                F.zip_with(c, v_arr, lambda a, b: a * b),
-                F.lit(0.0),
-                lambda acc, t: acc + t,
-            )
-        )
+    c = _centred(vec_col, mu)
+    v_arrs = [_lits(v) for v in vs]
     # materialize the projections as COLUMNS before the recon lambdas: a
     # proj referenced inside a HOF lambda body is re-evaluated per array
     # element (64x the 64-fold — a 6x slowdown), and CollapseProject would
@@ -1490,7 +1454,7 @@ def ae_outlier_emb(
     # 68-double-per-row corpus copy — at real scale persist it or fuse the
     # scoring into the moment Arrow pass instead)
     proj_df = emb.select(
-        id_col, c.alias("cl"), *[projs[i].alias(f"p{i + 1}") for i in range(4)]
+        id_col, c.alias("cl"), *[_dot(c, v_arrs[i]).alias(f"p{i + 1}") for i in range(4)]
     ).localCheckpoint()
     p1, p2, p3, p4 = [F.col(f"p{i}") for i in range(1, 5)]
     # recon_j − μ_j = (v1[j]·p1 + v2[j]·p2) + (v3[j]·p3 + v4[j]·p4) —
@@ -1500,9 +1464,7 @@ def ae_outlier_emb(
     rec = F.zip_with(r12, r34, lambda a, b: a + b)
     err = F.zip_with(F.col("cl"), rec, lambda a, b: (a - b) * (a - b))
     top = F.slice(F.sort_array(err, asc=False), 1, n_top)
-    score = (
-        F.aggregate(top, F.lit(0.0), lambda acc, t: acc + t) / F.lit(float(n_top))
-    )
+    score = _fold(top) / F.lit(float(n_top))
     return proj_df.select(
         id_col, (F.round(score, 6) + F.lit(0.0)).alias("ae_emb_score")
     )

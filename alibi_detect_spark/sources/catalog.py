@@ -24,6 +24,16 @@ import shutil
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
+from ..schemas import PAGE_SCHEMA, ROLLUP_SCHEMA, SCORE_SCHEMA, TIER_SECONDS
+
+# every table the catalog writes has a fixed schema, so a read needs no
+# footer inference (partition columns, like ``pages``' ``tier``, read last)
+TABLE_SCHEMAS = {
+    **{f"rollup_{tier}": ROLLUP_SCHEMA for tier in TIER_SECONDS},
+    "pages": PAGE_SCHEMA,
+    "scores_1h": SCORE_SCHEMA,
+}
+
 
 def iceberg_session_conf(warehouse: str, catalog: str = "tiers") -> dict[str, str]:
     """SparkSession config for the Iceberg deployment (needs iceberg-spark-runtime jar)."""
@@ -68,7 +78,7 @@ class TierCatalog:
         return rows.get["n"]
 
     def read(self, spark: SparkSession, name: str) -> DataFrame:
-        return spark.read.parquet(self._path(name))
+        return spark.read.schema(TABLE_SCHEMAS[name]).parquet(self._path(name))
 
     def expire(self, name: str, tier: str) -> None:
         """Retention expiry — Iceberg: ``DELETE WHERE tier=... AND bucket_ts < cutoff``

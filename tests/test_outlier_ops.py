@@ -82,3 +82,25 @@ def test_emb_ops_reject_ragged_and_wrong_width_vectors(spark, fn):
         fn(_emb(spark, vecs), dim=4)
     with pytest.raises(ValueError, match="dim=8 components, but component index 4 is present in 0 of 40"):
         fn(_emb(spark, np.ones((40, 4))), dim=8)
+
+
+def test_quant_em_callers_agree(spark):
+    """The one quantized-EM loop serves both GMM closed forms: at d = 4 the
+    embedding operator (index-fold log-densities, per-component moment
+    groups) and the feature-tuple operator over the same four components as
+    columns (left-associated chain, one wide moment row) fit the same
+    mixture; their ``ld`` associations differ only in the last bits."""
+    from pyspark.sql import functions as F
+
+    rng = np.random.default_rng(3)
+    vecs = np.vstack([rng.normal(0.0, 1.0, (120, 4)), rng.normal(4.0, 0.5, (80, 4))])
+    emb = _emb(spark, vecs)
+    cols = ("a", "b", "c", "d")
+    feats = emb.select(
+        "vec_id", *[F.element_at("embedding", i + 1).alias(c) for i, c in enumerate(cols)]
+    )
+    got = outlier.gmm_outlier_emb(emb, dim=4, n_iter=2, quant_x=1000, quant_r=1000).toPandas()
+    want = outlier.gmm_outlier_dfeat(feats, cols, "vec_id", n_iter=2, quant=1000).toPandas()
+    got, want = (d.sort_values("vec_id")["gmm_nll"].to_numpy() for d in (got, want))
+    assert len(got) == 200 and np.isfinite(got).all()
+    np.testing.assert_allclose(got, want, rtol=0, atol=1e-6 + 1e-12)

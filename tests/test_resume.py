@@ -106,3 +106,23 @@ def test_retention_expiry(spark, raw, tmp_path):
     remaining = spark.read.parquet(f"{wh}/pages")
     tiers_after = {r["tier"] for r in remaining.select("tier").distinct().collect()}
     assert tiers_after == tiers_before - {"1h"}
+
+
+def test_catalog_read_schema_matches_inferred(spark, raw, tmp_path):
+    """``TierCatalog.read`` reads each table with its fixed schema
+    (``schemas.py``) instead of inferring one from the parquet footers; the
+    columns, their types and order (``tier`` last in ``pages``, as a
+    partition column) and the rows equal those of an inferring read."""
+    wh = str(tmp_path / "wh")
+    out = run_pipeline(spark, raw, wh, page_size=128, detect_kwargs=DETECT)
+    for table in STAGE_TABLES.values():
+        got = out["catalog"].read(spark, table)
+        want = spark.read.parquet(f"{wh}/{table}")
+        assert [(f.name, f.dataType) for f in got.schema] == [
+            (f.name, f.dataType) for f in want.schema
+        ], table
+        key = [c for c in want.columns if c != "page"]
+        pd.testing.assert_frame_equal(
+            got.toPandas().sort_values(key).reset_index(drop=True),
+            want.toPandas().sort_values(key).reset_index(drop=True),
+        )

@@ -152,7 +152,7 @@ def test_mmd_stream_bitmatches_batch(spark, tmp_path, cfg):
         batch_out[source] = (grp["bucket_ts"].to_numpy()[n_ref:], stats, thr, drift)
 
     # stream only the post-ref rows, two files in time order
-    post = rollup.groupby("source", group_keys=False).apply(lambda g: g.iloc[n_ref:])
+    post = rollup[rollup.groupby("source").cumcount() >= n_ref]
     cut = post["bucket_ts"].median()
     os.makedirs(f"{tmp}/min", exist_ok=True)
     post[post["bucket_ts"] <= cut].to_parquet(f"{tmp}/min/p0.parquet", index=False)
@@ -209,7 +209,7 @@ def test_cvm_stream_bitmatches_batch(spark, tmp_path, cfg):
         stats, thr, drift, _ = det.score_stream(x[n_ref:])
         batch_out[source] = (grp["bucket_ts"].to_numpy()[n_ref:], stats, drift)
 
-    post = rollup.groupby("source", group_keys=False).apply(lambda g: g.iloc[n_ref:])
+    post = rollup[rollup.groupby("source").cumcount() >= n_ref]
     cut = post["bucket_ts"].median()
     os.makedirs(f"{tmp}/cin", exist_ok=True)
     post[post["bucket_ts"] <= cut].to_parquet(f"{tmp}/cin/p0.parquet", index=False)
@@ -270,7 +270,7 @@ def test_fet_stream_bitmatches_batch(spark, tmp_path, cfg):
         stats, thr, drift, _ = det.score_stream(bits[n_ref:])
         batch_out[source] = (grp["bucket_ts"].to_numpy()[n_ref:], stats, drift)
 
-    post = rollup.groupby("source", group_keys=False).apply(lambda g: g.iloc[n_ref:])
+    post = rollup[rollup.groupby("source").cumcount() >= n_ref]
     cut = post["bucket_ts"].median()
     os.makedirs(f"{tmp}/fin", exist_ok=True)
     post[post["bucket_ts"] <= cut].to_parquet(f"{tmp}/fin/p0.parquet", index=False)
@@ -330,7 +330,7 @@ def test_lsdd_stream_bitmatches_batch(spark, tmp_path, cfg):
         stats, thr, drift, _ = det.score_stream(x[n_ref:])
         batch_out[source] = (grp["bucket_ts"].to_numpy()[n_ref:], stats, drift)
 
-    post = rollup.groupby("source", group_keys=False).apply(lambda g: g.iloc[n_ref:])
+    post = rollup[rollup.groupby("source").cumcount() >= n_ref]
     cut = post["bucket_ts"].median()
     os.makedirs(f"{tmp}/lin", exist_ok=True)
     post[post["bucket_ts"] <= cut].to_parquet(f"{tmp}/lin/p0.parquet", index=False)

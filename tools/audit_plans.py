@@ -499,8 +499,11 @@ def main() -> None:
     )
 
     # 6o. embedding-width closed forms: the SCORING plan is one corpus scan
-    #     of fold expressions (fit artifacts travel by closure)
-    for qname in ("gmm_outlier_emb", "ocsvm_emb"):
+    #     of the shared fold / centred-projection expressions (fit artifacts
+    #     travel by closure)
+    for qname in (
+        "gmm_outlier_emb", "ocsvm_emb", "pca_outlier_emb", "pca_outlier_sub", "mahalanobis_emb",
+    ):
         df = qs[qname](spark, SF)
         p = plan_of(df)
         n_scans = p.count(") Scan parquet")
