@@ -30,11 +30,13 @@ shared block:
   relabeling p-value (pooled ids from :func:`_gid`) and the unbiased MMD² of
   a label mask over a precomputed kernel matrix.
 
-The in-UDF tests need at least 2 rows on each side (and on each side of the
+The kernel tests need at least 2 rows on each side (and on each side of the
 learned-kernel holdout): an unbiased within-side sum has no pairs below
 that. :func:`_one_group` and :func:`_perm_row` raise ``ValueError`` naming
 the operator, the side and its row count instead of returning a NULL
-statistic or a spurious ``p_value = 0``.
+statistic or a spurious ``p_value = 0``; :func:`_mmd2_tail` raises the same
+message from its final select (``raise_error``) instead of ANSI's bare
+``DIVIDE_BY_ZERO``.
 """
 
 from __future__ import annotations
@@ -223,11 +225,16 @@ def _vec_head(emb: DataFrame, id_col: str, vec_col: str, n: int) -> DataFrame:
     return _head(emb.select(s.alias("s"), F.col(id_col).alias("o"), F.col(vec_col).alias("v")), n)
 
 
-def _mmd2_tail(pairs: DataFrame) -> DataFrame:
+_SIDES_RULE = "{op}: {side} side{of} has {k} row(s); the test needs at least 2 rows on each side"
+
+
+def _mmd2_tail(pairs: DataFrame, op: str) -> DataFrame:
     """Unbiased MMD² (``utils/pytorch/distance.py:96-128``) from a pair
     relation ``(sa, ia, sb, ib, k)``: within-side kernel sums without the
     diagonal, the cross sum, and the pair counts, in one aggregate; the
-    side sizes are the square roots of the within-side pair counts."""
+    side sizes are the square roots of the within-side pair counts. A side
+    below 2 rows raises :func:`_check_sides`' error from the final select
+    instead of dividing by ``n·(n−1) = 0``."""
     xx = (F.col("sa") == "ref") & (F.col("sb") == "ref")
     yy = (F.col("sa") != "ref") & (F.col("sb") != "ref")
     xy = (F.col("sa") == "ref") & (F.col("sb") != "ref")
@@ -243,20 +250,23 @@ def _mmd2_tail(pairs: DataFrame) -> DataFrame:
     mmd2 = (
         F.col("kxx") / (n * (n - 1)) + F.col("kyy") / (m * (m - 1)) - 2 * F.col("kxy") / F.col("nm")
     )
+    stat = F.round(mmd2, 6) + F.lit(0.0)
+    # ref ends outermost, so it is checked first, as in _check_sides
+    for side, size in (("test", m), ("ref", n)):
+        msg = F.format_string(_SIDES_RULE.format(op=op, side=side, of="", k="%d"), size.cast("long"))
+        stat = F.when(size < 2, F.raise_error(msg)).otherwise(stat)
     return agg.select(
         n.cast("long").alias("n_ref"),
         m.cast("long").alias("n_test"),
-        (F.round(mmd2, 6) + F.lit(0.0)).alias("mmd2"),
+        stat.alias("mmd2"),
     )
 
 
 def _check_sides(op: str, obs: np.ndarray, of: str = "") -> None:
-    """The in-UDF kernel tests' rule: at least 2 rows on each side."""
+    """The kernel tests' rule: at least 2 rows on each side."""
     for side, k in (("ref", int(obs.sum())), ("test", int((~obs).sum()))):
         if k < 2:
-            raise ValueError(
-                f"{op}: {side} side{of} has {k} row(s); the test needs at least 2 rows on each side"
-            )
+            raise ValueError(_SIDES_RULE.format(op=op, side=side, of=of, k=k))
 
 
 def _one_group(sub: DataFrame, op: str, schema: str, stat) -> DataFrame:
@@ -342,7 +352,8 @@ def mmd_2samp(
     gamma = 1.0 / (2.0 * sigma * sigma)
     return _mmd2_tail(
         a.join(F.broadcast(b))
-        .withColumn("k", F.exp(F.lit(-gamma) * (F.col("va") - F.col("vb")) * (F.col("va") - F.col("vb"))))
+        .withColumn("k", F.exp(F.lit(-gamma) * (F.col("va") - F.col("vb")) * (F.col("va") - F.col("vb")))),
+        "mmd_2samp",
     )
 
 
@@ -392,7 +403,9 @@ def mmd_2samp_vec(
     )
     gamma = 1.0 / (2.0 * sigma * sigma)
     qq = float(quant) * float(quant)
-    return _mmd2_tail(d2.withColumn("k", F.exp(F.lit(-gamma) * (F.col("d2q") / F.lit(qq)))))
+    return _mmd2_tail(
+        d2.withColumn("k", F.exp(F.lit(-gamma) * (F.col("d2q") / F.lit(qq)))), "mmd_2samp_vec"
+    )
 
 
 def mmd_perm_test_vec(

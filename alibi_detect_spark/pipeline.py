@@ -2,9 +2,18 @@
 
 ``run_pipeline`` is the spark-submit entrypoint body; it returns the handles
 the driver/tests need. Every stage commits through one helper: the
-:class:`TierCatalog` write counts the rows it writes, and the
-:class:`LineageLog` row stamped after it records them, so a killed job
-resumes from the last completed stage (idempotent overwrite-by-stage).
+:class:`TierCatalog` write counts the rows it writes (the pages write also
+the points and bytes it encodes), and the :class:`LineageLog` row stamped
+after it records them, so a killed job resumes from the last completed
+stage (idempotent overwrite-by-stage).
+
+Each stage build owns its frame's distribution; the catalog write only
+sorts. The rollup tiers range-partition their JVM output by
+``(source, bucket_ts)``. The detect stage range-partitions its *input*, the
+1h tier, by ``source``, below the per-source Arrow stage: that partitioning
+already clusters each source's group, so the plan has one exchange, its
+range sampler scans the 1h table instead of re-running the detectors, and
+the scores inherit it (each file holds whole source runs).
 """
 
 from __future__ import annotations
@@ -50,35 +59,40 @@ def run_pipeline(
     metrics: dict[str, float] = {}
     fp = f"{job_fingerprint}/page={page_size}/salted={salted}"
 
-    def commit(stage, table, key, seconds, build, write=cat.write_rollup):
+    def commit(stage, table, key, seconds, build, write=cat.write_rollup, stats=lambda o: {}):
         """Write ``build()`` to ``table``, timed as ``metrics[seconds]``, and
-        record its lineage row with the rows the write counted — or, on
-        resume, skip a stage this job already committed. Returns the table
-        read back."""
+        record its lineage row with the rows the write counted and
+        ``stats`` of what else it observed — or, on resume, skip a stage
+        this job already committed. Returns the table read back."""
         if resume and cat.exists(table) and fp in log.done_fingerprints(stage):
             metrics[stage] = 0.0
             metrics[f"{stage}_skipped"] = True
         else:
             df = build()
             t0 = time.monotonic()
-            rows = write(df, table)
+            observed = write(df, table)
             metrics[seconds] = time.monotonic() - t0
-            log.record(stage, key, fp, rows, metrics={"sec": metrics[seconds]})
+            row = {"sec": metrics[seconds], **stats(observed)}
+            log.record(stage, key, fp, observed["rows"], metrics=row)
         return cat.read(spark, table)
+
+    def series_runs(build, *args):
+        """The build of a rollup tier: ``build(*args)`` range-distributed on
+        its JVM rows, in contiguous (source, bucket_ts) runs."""
+        return lambda: build(*args).repartitionByRange("source", "bucket_ts")
 
     # persisted while its stage runs (tier-sized, bounded: sources × buckets)
     # so the gap-fill grid agg + left join don't recompute the raw scan twice
     t1 = rollup_tier1(raw, "1h", salted=salted)
-    tiers = {
-        "1h": commit("rollup_1h", "rollup_1h", "1h", "tier_1h", lambda: gapfill(t1.persist(), "1h"))
-    }
+    tier1 = series_runs(lambda: gapfill(t1.persist(), "1h"))
+    tiers = {"1h": commit("rollup_1h", "rollup_1h", "1h", "tier_1h", tier1)}
     t1.unpersist()
     out = {"tiers": tiers, "metrics": metrics, "catalog": cat, "pages": None, "scores": None}
     if stop_after == "rollup_1h":
         return out
 
     for src, dst in TIER_CHAIN:
-        build = functools.partial(downsample, tiers[src], src, dst)
+        build = series_runs(downsample, tiers[src], src, dst)
         tiers[dst] = commit(f"rollup_{dst}", f"rollup_{dst}", dst, f"tier_{dst}", build)
     if stop_after == "downsample":
         return out
@@ -87,11 +101,22 @@ def run_pipeline(
         per_tier = [encode_pages(df, tier, page_size=page_size) for tier, df in tiers.items()]
         return functools.reduce(DataFrame.unionByName, per_tier)
 
-    out["pages"] = commit("encode", "pages", "all", "pages", pages, write=cat.write_pages)
+    def compression(observed: dict) -> dict:
+        """The encode row's compression ratio, from the pages write's own sums."""
+        points = observed["points"] or 0
+        bits = 8.0 * observed["page_bytes"] / points if points else None
+        return {"points": points, "bits_per_point": bits}
+
+    out["pages"] = commit(
+        "encode", "pages", "all", "pages", pages, write=cat.write_pages, stats=compression
+    )
     if stop_after == "encode":
         return out
 
-    scores = functools.partial(score_rollup, tiers["1h"], **(detect_kwargs or {}))
+    # ranged by source BELOW the Arrow stage: it satisfies the group's
+    # clustering, so the range sampler scans the 1h table, not the detectors
+    by_source = tiers["1h"].repartitionByRange("source")
+    scores = functools.partial(score_rollup, by_source, **(detect_kwargs or {}))
     out["scores"] = commit("detect", "scores_1h", "1h", "scores", scores)
     return out
 

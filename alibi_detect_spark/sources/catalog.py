@@ -12,9 +12,19 @@ Physical layout (both backends):
 
 - raw table partition spec: ``days(event_ts), bucket(source, 64)`` — partition
   pruning serves both time-range retention scans and single-source reads.
-- tier tables: ``tier`` partition + range distribution on
-  ``(source, bucket_ts)`` so each file holds contiguous series runs (page
-  decode locality, min/max file skipping on bucket_ts).
+- tier tables: ``tier`` partition + range distribution + a sort on
+  ``(source, bucket_ts)`` within each file, so each file holds contiguous,
+  sorted series runs (page decode locality, min/max file skipping on
+  bucket_ts).
+
+The write side owns the order, the stage that builds a frame owns its
+distribution: :meth:`TierCatalog.write_rollup` only sorts within
+partitions, and each stage range-distributes where that is cheapest. The
+rollup tiers range their JVM output on ``(source, bucket_ts)``; the
+scores stage ranges its *input* on ``source``, below the Arrow stage, so
+the range sampler reads the 1h table and never runs a detector (a range
+partitioning on ``source`` satisfies the per-source group's distribution,
+and the UDF output inherits it).
 """
 
 from __future__ import annotations
@@ -22,7 +32,7 @@ from __future__ import annotations
 import os
 import shutil
 
-from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, functions as F
 
 from ..schemas import PAGE_SCHEMA, ROLLUP_SCHEMA, SCORE_SCHEMA, TIER_SECONDS
 
@@ -53,29 +63,35 @@ class TierCatalog:
     def _path(self, name: str) -> str:
         return os.path.join(self.root, name)
 
-    def write_rollup(self, df: DataFrame, name: str) -> int:
+    def write_rollup(self, df: DataFrame, name: str) -> dict:
         """Iceberg: ``ALTER TABLE ... WRITE ORDERED BY (source, bucket_ts)`` +
-        ``REPLACE`` snapshot. Range distribution keeps series runs contiguous.
-        Returns the rows written."""
-        out = df.repartitionByRange("source", "bucket_ts")
-        return self._write(out.sortWithinPartitions("source", "bucket_ts"), name)
+        ``REPLACE`` snapshot. ``df`` comes range-distributed by the stage
+        that built it (see the module notes); the write sorts each
+        partition by ``(source, bucket_ts)``, so every file holds
+        contiguous, sorted series runs. Returns ``{"rows": ...}`` written."""
+        return self._write(df.sortWithinPartitions("source", "bucket_ts"), name)
 
-    def write_pages(self, df: DataFrame, name: str = "pages") -> int:
+    def write_pages(self, df: DataFrame, name: str = "pages") -> dict:
         """Iceberg: append/merge into the page table partitioned by ``tier``.
-        Returns the rows written."""
-        return self._write(df, name, "tier")
+        Returns the rows written, the points their pages hold and the pages'
+        encoded bytes: ``{"rows", "points", "page_bytes"}``."""
+        return self._write(
+            df, name, "tier", points=F.sum("n_points"), page_bytes=F.sum(F.length("page"))
+        )
 
-    def _write(self, df: DataFrame, name: str, *partition_by: str) -> int:
-        """Overwrite table ``name`` with ``df`` and return its row count,
-        observed by the write job itself (no second scan). The observation
-        must sit above any range exchange: the range partitioner's sampling
-        job also runs the plan below it, which would count every row twice."""
-        rows = Observation()
-        writer = df.observe(rows, F.count(F.lit(1)).alias("n")).write.mode("overwrite")
+    def _write(self, df: DataFrame, name: str, *partition_by: str, **sums: Column) -> dict:
+        """Overwrite table ``name`` with ``df`` and return its row count
+        (``rows``) and the ``sums`` aggregates, observed by the write job
+        itself (no second scan). The observation must sit above any range
+        exchange: the range partitioner's sampling job also runs the plan
+        below it, which would count every row twice."""
+        obs = Observation()
+        aggs = [F.count(F.lit(1)).alias("rows"), *(c.alias(k) for k, c in sums.items())]
+        writer = df.observe(obs, *aggs).write.mode("overwrite")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(self._path(name))
-        return rows.get["n"]
+        return obs.get
 
     def read(self, spark: SparkSession, name: str) -> DataFrame:
         return spark.read.schema(TABLE_SCHEMAS[name]).parquet(self._path(name))

@@ -5,7 +5,7 @@ at-least-2-rows-per-side rule of the in-UDF kernel tests."""
 
 import numpy as np
 import pytest
-from pyspark.errors import PythonException
+from pyspark.errors import PythonException, SparkRuntimeException
 
 from alibi_detect_spark.operators import classifier, drift
 
@@ -89,6 +89,20 @@ def test_kernel_tests_reject_a_side_below_two_rows(spark, name):
     msg = rf"ValueError: {name}: ref side has 1 row\(s\); the test needs at least 2 rows on each side"
     with pytest.raises(PythonException, match=msg):
         _IN_UDF[name](df).collect()
+
+
+@pytest.mark.parametrize("name", ["mmd_2samp", "mmd_2samp_vec"])
+def test_mmd2_tail_rejects_a_side_below_two_rows(spark, name):
+    """The Spark-side MMD² divides each within-side sum by ``n·(n−1)``: one
+    ref row against 39 test rows fails with the kernel tests' message from
+    the final select, not a bare ANSI ``DIVIDE_BY_ZERO``."""
+    if name == "mmd_2samp_vec":
+        rel = drift.mmd_2samp_vec(_emb(spark, n=40, even_ids=1))
+    else:
+        rel = drift.mmd_2samp(_two_sample(spark, 40, 1), "v")
+    msg = rf"\[USER_RAISED_EXCEPTION\] {name}: ref side has 1 row\(s\); the test needs at least 2 rows on each side"
+    with pytest.raises(SparkRuntimeException, match=msg):
+        rel.collect()
 
 
 def test_learned_kernel_rejects_a_holdout_side_below_two_rows(spark):

@@ -3,12 +3,18 @@ produces outputs identical to an uninterrupted run, without recomputing the
 completed stages (BASELINE.json: "resumable from checkpoint with
 per-partition lineage and metrics tables")."""
 
+import io
+import json
+import re
+from contextlib import redirect_stdout
+
 import numpy as np
 import pandas as pd
 import pytest
 
 from alibi_detect_spark.pipeline import run_pipeline
 from alibi_detect_spark.plans.lineage import LineageLog
+from alibi_detect_spark.sources.catalog import TierCatalog
 from alibi_detect_spark.synth import SynthConfig, synth_dataframe
 
 CFG = SynthConfig(n_rows=30_000, n_sources=4, rows_per_bucket=64)
@@ -93,6 +99,54 @@ def test_lineage_rows_out_equal_written_rows(spark, raw, tmp_path, stop_after):
     for stage, table in STAGE_TABLES.items():
         rows_out = int(log.latest(stage)["rows_out"].iloc[0])
         assert rows_out == spark.read.parquet(f"{wh}/{table}").count(), stage
+
+
+def test_encode_lineage_records_the_compression_ratio(spark, raw, tmp_path):
+    """The ``encode`` lineage row carries the points the pages hold and
+    their bits per point, observed by the pages write itself; both equal
+    what the written ``pages`` table gives."""
+    wh = str(tmp_path / "wh")
+    run_pipeline(spark, raw, wh, page_size=128, detect_kwargs=DETECT)
+    row = json.loads(LineageLog(f"{wh}/_lineage").latest("encode")["metrics"].iloc[0])
+    pages = pd.read_parquet(f"{wh}/pages", columns=["n_points", "page"])
+    points = int(pages["n_points"].sum())
+    assert row["points"] == points
+    assert row["bits_per_point"] == 8.0 * sum(len(bytes(p)) for p in pages["page"]) / points
+
+
+def _plan(df) -> tuple[list[str], str]:
+    """``df``'s formatted physical plan: its operator tree, one node a line
+    with parents above their children, and the whole text."""
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        df.explain("formatted")
+    return buf.getvalue().split("\n\n")[0].splitlines()[1:], buf.getvalue()
+
+
+def test_write_plans_distribute_below_the_detectors(spark, raw, tmp_path, monkeypatch):
+    """The scores frame the catalog writes has one exchange, a range
+    partitioning on ``source`` below the per-source Arrow stage, so the
+    range sampler never runs the detectors; the rollup tiers keep their
+    ``(source, bucket_ts)`` range exchange."""
+    plans = {}
+    write = TierCatalog._write
+
+    def capture(self, df, name, *args, **kwargs):
+        plans[name] = _plan(df)
+        return write(self, df, name, *args, **kwargs)
+
+    monkeypatch.setattr(TierCatalog, "_write", capture)
+    run_pipeline(spark, raw, str(tmp_path / "wh"), page_size=128, detect_kwargs=DETECT)
+
+    tree, text = plans["scores_1h"]
+    udf = [i for i, line in enumerate(tree) if "FlatMapGroupsInPandas" in line]
+    exchanges = [i for i, line in enumerate(tree) if re.search(r"\bExchange \(", line)]
+    assert len(udf) == 1 and len(exchanges) == 1, tree
+    assert exchanges[0] > udf[0], tree
+    assert re.search(r"Arguments: rangepartitioning\(source#\d+ ASC NULLS FIRST, \d+\)", text)
+    for table in ("rollup_1h", "rollup_6h", "rollup_1d"):
+        ranged = r"rangepartitioning\(source#\d+ ASC NULLS FIRST, bucket_ts#"
+        assert re.search(ranged, plans[table][1]), table
 
 
 def test_retention_expiry(spark, raw, tmp_path):

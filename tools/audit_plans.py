@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import io
 import os
+import re
 import sys
 from contextlib import redirect_stdout
 
@@ -19,11 +20,31 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 SF = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.01")
 
 
+# ids Spark draws from session-wide counters: expression ids (``source#123``),
+# exchange plan ids and RDD ids (``MapPartitionsRDD[32]`` of a checkpoint)
+RUN_IDS = (re.compile(r"#(\d+)"), re.compile(r"\[plan_id=(\d+)\]"), re.compile(r"RDD\[(\d+)\]"))
+
+
+def stable_ids(plan: str) -> str:
+    """``plan`` with every run-dependent id renumbered 1, 2, … in order of
+    first appearance, per kind: the same plan prints the same text on every
+    run, so a PLANS.md diff shows only plan changes."""
+    for pattern in RUN_IDS:
+        seen: dict[str, str] = {}
+
+        def renumber(m: re.Match) -> str:
+            new = seen.setdefault(m.group(1), str(len(seen) + 1))
+            return m.group(0).replace(m.group(1), new)
+
+        plan = pattern.sub(renumber, plan)
+    return plan
+
+
 def plan_of(df) -> str:
     buf = io.StringIO()
     with redirect_stdout(buf):
         df.explain("formatted")
-    return buf.getvalue()
+    return stable_ids(buf.getvalue())
 
 
 def main() -> None:
