@@ -433,7 +433,16 @@ def embedding_near_pairs(
         for pdf in batches:
             if not len(pdf):
                 continue
-            x = np.stack(pdf[emb_col].to_numpy()).astype(np.float64)
+            vecs = pdf[emb_col].to_numpy()
+            lens = np.fromiter((0 if v is None else len(v) for v in vecs), np.int64, len(vecs))
+            bad = np.flatnonzero(lens != dim)
+            if bad.size:
+                i = bad[0]
+                raise ValueError(
+                    f"embedding_near_pairs: every {emb_col} vector must have dim={dim} "
+                    f"components, but {id_col} {pdf[id_col].iloc[i]} has {lens[i]}"
+                )
+            x = np.stack(vecs).astype(np.float64)
             bits = (x @ g.T) >= 0.0  # [n, bits]
             sketch = (bits.astype(np.int64) << np.arange(HP_BITS, dtype=np.int64)[None, :]).sum(axis=1)
             yield pd.DataFrame({"vec_id": pdf[id_col].to_numpy(), "sketch": sketch})

@@ -32,18 +32,6 @@ def source_seed(source: str, base_seed: int) -> int:
     return int(mix64(h ^ np.uint64(base_seed))[0])
 
 
-def _fill_series(pdf: pd.DataFrame, value_col: str, fill: str) -> np.ndarray:
-    v = pdf[value_col].to_numpy(dtype=np.float64)
-    if fill == "zero":
-        return np.nan_to_num(v, nan=0.0)
-    if fill == "ffill":
-        s = pd.Series(v).ffill().bfill()
-        return s.to_numpy(dtype=np.float64)
-    if fill == "none":
-        return v
-    raise ValueError(f"unknown fill {fill!r}")
-
-
 def _ordered_over(df: DataFrame, key: str, order_col: str, cols, replay, out_ddl: str) -> DataFrame:
     """Per-key ordered replay: one ``applyInPandas`` group per key over
     ``(key, order_col, *cols)``, stable-sorted by ``order_col``. ``replay(pdf,
@@ -91,7 +79,6 @@ def _head_fit_over(
 def score_series(
     pdf: pd.DataFrame,
     value_col: str = "sum_n_tok",
-    fill: str = "zero",
     sr_params: dict | None = None,
     sr_threshold: float = 3.0,
     mmd_params: dict | None = None,
@@ -107,7 +94,8 @@ def score_series(
     """
     pdf = pdf.sort_values("bucket_ts", kind="mergesort")
     source = pdf["source"].iloc[0]
-    x = _fill_series(pdf, value_col, fill)
+    # a NULL value (e.g. a gap-filled cell's mean) scores as 0
+    x = np.nan_to_num(pdf[value_col].to_numpy(dtype=np.float64), nan=0.0)
     n = len(x)
     out = pd.DataFrame(
         {
@@ -801,7 +789,6 @@ def mmd_online_stats_over(
 def score_rollup(
     rollup: DataFrame,
     value_col: str = "sum_n_tok",
-    fill: str = "zero",
     sr_params: dict | None = None,
     sr_threshold: float = 3.0,
     mmd_params: dict | None = None,
@@ -814,7 +801,6 @@ def score_rollup(
         scored, _ = score_series(
             pdf,
             value_col=value_col,
-            fill=fill,
             sr_params=sr_params,
             sr_threshold=sr_threshold,
             mmd_params=mmd_params,

@@ -153,132 +153,28 @@ def lof_outlier_scores(
     return score_scan(emb, id_col, "lof_score", score)
 
 
-def infer_threshold(
-    scores, score_col: str, threshold_perc: float = 95.0, mode: str = "exact"
-):
+def infer_threshold(scores, score_col: str, threshold_perc: float = 95.0):
     """The reference's ``infer_threshold``/``predict`` contract
     (``alibi_detect/base.py`` ThresholdMixin; e.g. ``od/_knn.py:110``,
     ``od/isolationforest.py:100``) as a generic relational wrapper over ANY
     score relation: threshold = type-7 percentile of the scores,
     ``is_outlier = score > threshold``.
 
-    Modes (all produce the same rounded threshold on the same data; they
-    differ in how the order statistic is computed):
-
-    - ``"exact"`` (default, the oracle-gate path): one ``percentile(...)``
-      aggregate. Exact and lazy, but Spark's exact percentile buffers EVERY
-      value in one aggregation buffer — fine for bounded score relations
-      (the reference's own contract: scores of a fitted batch), NOT for a
-      10^12-row scan.
-    - ``"exact_2pass"``: exact at any scale with bounded memory —
-      (1) count + ``approx_percentile`` bracket whose rank error is bounded
-      by n/accuracy, (2) iterative distributed histogram refinement inside
-      the bracket until the surviving range collects, then the exact type-7
-      interpolation driver-side. Every pass is a scan + tiny aggregate; no
-      full-value buffering anywhere. Eager (returns with a literal
-      threshold).
-    - ``"approx"``: single ``approx_percentile`` — for scale runs where a
-      rank-bounded approximation is acceptable.
-    """
+    One exact ``percentile(...)`` aggregate, lazy (no driver job at build
+    time). Spark's exact percentile buffers every value in one aggregation
+    buffer, which fits the reference's own contract: the scores of a fitted
+    batch, a bounded relation."""
     p = threshold_perc / 100.0
-    if mode == "exact":
-        # materialize the score relation once (lazy checkpoint — no extra
-        # build job): it feeds BOTH the percentile aggregate and the output
-        # rows; upstream python/Arrow score stages would otherwise run twice
-        scores = scores.localCheckpoint(eager=False)
-        thr = scores.agg(
-            F.round(F.expr(f"percentile({score_col}, {p})"), 6).alias("threshold")
-        )
-        return scores.crossJoin(F.broadcast(thr)).withColumn(
-            "is_outlier", (F.col(score_col) > F.col("threshold")).cast("int")
-        )
-    if mode == "approx":
-        thr = scores.agg(
-            F.round(F.expr(f"approx_percentile({score_col}, {p}, 10000)"), 6).alias("threshold")
-        )
-        return scores.crossJoin(F.broadcast(thr)).withColumn(
-            "is_outlier", (F.col(score_col) > F.col("threshold")).cast("int")
-        )
-    if mode != "exact_2pass":
-        raise ValueError(f"unknown mode {mode!r}")
-    thr_val = _exact_percentile_2pass(scores, score_col, p)
-    return scores.withColumn("threshold", F.lit(round(thr_val, 6))).withColumn(
+    # materialize the score relation once (lazy checkpoint — no extra
+    # build job): it feeds BOTH the percentile aggregate and the output
+    # rows; upstream python/Arrow score stages would otherwise run twice
+    scores = scores.localCheckpoint(eager=False)
+    thr = scores.agg(
+        F.round(F.expr(f"percentile({score_col}, {p})"), 6).alias("threshold")
+    )
+    return scores.crossJoin(F.broadcast(thr)).withColumn(
         "is_outlier", (F.col(score_col) > F.col("threshold")).cast("int")
     )
-
-
-def _exact_percentile_2pass(
-    scores, score_col: str, p: float, accuracy: int = 10000, collect_cap: int = 100_000
-) -> float:
-    """Exact type-7 percentile without full-value buffering: approx bracket
-    (rank error ≤ n/accuracy) → distributed equal-width histogram refinement
-    (each round narrows the candidate range ~accuracy×; every round is one
-    scan of the cached bracket slice + one tiny aggregate) → exact
-    interpolation on the ≤``collect_cap`` survivors. 10^12 rows converge in
-    ≤3 refinement rounds; nothing larger than the histogram (``accuracy``
-    rows) or the final survivor set ever reaches the driver."""
-    col = F.col(score_col)
-    margin = 3.0 / accuracy
-    qlo, qhi = max(0.0, p - margin), min(1.0, p + margin)
-    head = scores.agg(
-        F.count(col).alias("n"),
-        F.expr(f"approx_percentile({score_col}, {qlo}, {accuracy})").alias("blo"),
-        F.expr(f"approx_percentile({score_col}, {qhi}, {accuracy})").alias("bhi"),
-    ).collect()[0]
-    n, blo, bhi = head["n"], float(head["blo"]), float(head["bhi"])
-    if n == 0:
-        raise ValueError("cannot infer a threshold from an empty score relation")
-    k = (n - 1) * p
-    k1 = int(k)  # 0-based lower order statistic
-    frac = k - k1
-    k2 = min(k1 + 1, n - 1)
-    # rank error of approx_percentile ≤ n/accuracy < margin·n ⇒ the true
-    # k1/k2 order statistics lie in [blo, bhi]
-    sl = scores.select(col.alias("v")).where((col >= blo) & (col <= bhi)).localCheckpoint()
-    below = scores.where(col < blo).count()
-    lo, hi = blo, bhi
-    while True:
-        if lo == hi:  # every surviving value is identical — no collect needed
-            return lo
-        cnt = sl.count()
-        if cnt <= collect_cap:
-            break
-        width = (hi - lo) / accuracy
-        if width <= 0.0:
-            return lo
-        b = F.least(
-            F.floor((F.col("v") - F.lit(lo)) / F.lit(width)), F.lit(accuracy - 1)
-        ).cast("long")
-        hist = (
-            sl.groupBy(b.alias("b"))
-            .agg(F.count(F.lit(1)).alias("c"), F.min("v").alias("mn"), F.max("v").alias("mx"))
-            .orderBy("b")
-            .collect()
-        )
-        # walk the histogram to the bucket span covering ranks k1..k2
-        run = below
-        first = last = None
-        for r in hist:
-            if run <= k2 and run + r["c"] > k1:
-                if first is None:
-                    first = r
-                last = r
-            run += r["c"]
-        new_lo, new_hi = float(first["mn"]), float(last["mx"])
-        # identical values land in the same bucket, so every bucket before
-        # `first` is strictly below new_lo — the histogram already gives the
-        # new below-count without another full scan
-        run = below
-        for r in hist:
-            if r["b"] == first["b"]:
-                break
-            run += r["c"]
-        nxt = sl.where((F.col("v") >= new_lo) & (F.col("v") <= new_hi)).localCheckpoint()
-        sl, lo, hi, below = nxt, new_lo, new_hi, run
-    vals = sorted(r["v"] for r in sl.select("v").collect())
-    v1 = vals[k1 - below]
-    v2 = vals[k2 - below] if k2 != k1 else v1
-    return float(v1 + frac * (v2 - v1))
 
 
 def pca_outlier_2feat(

@@ -13,9 +13,10 @@ integers. This is what makes "bit-match the NumPy reference" compatible with
 
 Skew: a hot source does NOT bottleneck this stage — hash partial aggregation
 collapses each (source, bucket) to one row per map task before the shuffle.
-An explicit salted two-stage variant is provided anyway (``salted=True``) for
-the pathological case of a single (source, bucket) cell dominating a task at
-10^12 scale; integer aggregates make the two-stage recombination exact.
+An explicit salted two-stage variant is provided anyway (``salted=True``,
+``SALT_BUCKETS`` salts per cell) for the pathological case of a single
+(source, bucket) cell dominating a task at 10^12 scale; integer aggregates
+make the two-stage recombination exact. The tier pipeline runs unsalted.
 """
 
 from __future__ import annotations
@@ -24,6 +25,8 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..schemas import TIER_SECONDS
 from .gapfill import fill_grid
+
+SALT_BUCKETS = 32
 
 
 def _bucket_col(ts_col: str, tier_seconds: int):
@@ -52,25 +55,19 @@ def _merge_aggs():
     ]
 
 
-def rollup_tier1(
-    raw: DataFrame,
-    tier: str = "1h",
-    ts_col: str = "event_ts",
-    salted: bool = False,
-    salt_buckets: int = 32,
-) -> DataFrame:
+def rollup_tier1(raw: DataFrame, tier: str = "1h", salted: bool = False) -> DataFrame:
     """Tier-1 rollup of the raw token table → one row per (source, bucket)."""
     secs = TIER_SECONDS[tier]
     base = raw.select(
         "source",
-        _bucket_col(ts_col, secs).alias("bucket_ts"),
+        _bucket_col("event_ts", secs).alias("bucket_ts"),
         "n_tok",
         *(["doc_id"] if salted else []),
     )
     if salted:
         # two-stage: partial agg per (source, bucket, salt) → exact final merge
         partial = (
-            base.withColumn("_salt", F.pmod(F.xxhash64("doc_id"), F.lit(salt_buckets)))
+            base.withColumn("_salt", F.pmod(F.xxhash64("doc_id"), F.lit(SALT_BUCKETS)))
             .groupBy("source", "bucket_ts", "_salt")
             .agg(*tier_aggs())
         )

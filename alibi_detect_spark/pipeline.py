@@ -14,6 +14,11 @@ sorts. The rollup tiers range-partition their JVM output by
 already clusters each source's group, so the plan has one exchange, its
 range sampler scans the 1h table instead of re-running the detectors, and
 the scores inherit it (each file holds whole source runs).
+
+The tier-1 rollup runs unsalted: partial hash aggregation already collapses
+a hot source map-side (:mod:`.operators.rollup`), and the skew that matters
+downstream is in the per-source Arrow groups, which salting the rollup does
+not reach. The salted variant is an operator option, ``rollup_tier1(salted=True)``.
 """
 
 from __future__ import annotations
@@ -40,7 +45,6 @@ def run_pipeline(
     warehouse: str,
     page_size: int = 1024,
     detect_kwargs: dict | None = None,
-    salted: bool = False,
     job_fingerprint: str = "job",
     resume: bool = False,
     stop_after: str | None = None,
@@ -52,12 +56,13 @@ def run_pipeline(
     path (each write is an idempotent overwrite, so a stage that died
     mid-write is simply redone). ``stop_after`` ends the job after the named
     stage — the test hook that simulates a mid-job kill, and the operational
-    hook for stage-targeted backfills.
+    hook for stage-targeted backfills. A stage's lineage fingerprint is
+    ``{job_fingerprint}/page={page_size}``.
     """
     cat = TierCatalog(warehouse)
     log = LineageLog(f"{warehouse}/_lineage")
     metrics: dict[str, float] = {}
-    fp = f"{job_fingerprint}/page={page_size}/salted={salted}"
+    fp = f"{job_fingerprint}/page={page_size}"
 
     def commit(stage, table, key, seconds, build, write=cat.write_rollup, stats=lambda o: {}):
         """Write ``build()`` to ``table``, timed as ``metrics[seconds]``, and
@@ -83,7 +88,7 @@ def run_pipeline(
 
     # persisted while its stage runs (tier-sized, bounded: sources × buckets)
     # so the gap-fill grid agg + left join don't recompute the raw scan twice
-    t1 = rollup_tier1(raw, "1h", salted=salted)
+    t1 = rollup_tier1(raw, "1h")
     tier1 = series_runs(lambda: gapfill(t1.persist(), "1h"))
     tiers = {"1h": commit("rollup_1h", "rollup_1h", "1h", "tier_1h", tier1)}
     t1.unpersist()
@@ -136,13 +141,14 @@ def main(argv: list[str] | None = None) -> None:
     import argparse
     import json
 
-    ap = argparse.ArgumentParser(description="tier rollup + encode + detect job")
+    ap = argparse.ArgumentParser(
+        description="tier rollup + gap-fill + encode + detect job (unsalted tier-1 rollup)"
+    )
     ap.add_argument("--rows", type=int, default=1_000_000)
     ap.add_argument("--sources", type=int, default=32)
     ap.add_argument("--rows-per-bucket", type=int, default=512)
     ap.add_argument("--warehouse", required=True)
     ap.add_argument("--page-size", type=int, default=1024)
-    ap.add_argument("--salted", action="store_true")
     ap.add_argument(
         "--raw-path",
         default=None,
@@ -171,7 +177,6 @@ def main(argv: list[str] | None = None) -> None:
                 spark.read.parquet(args.raw_path),
                 args.warehouse,
                 page_size=args.page_size,
-                salted=args.salted,
             )
         else:
             out = run_synthetic(
@@ -181,7 +186,6 @@ def main(argv: list[str] | None = None) -> None:
                 n_sources=args.sources,
                 rows_per_bucket=args.rows_per_bucket,
                 page_size=args.page_size,
-                salted=args.salted,
             )
         for k, v in out["metrics"].items():
             if isinstance(v, float):

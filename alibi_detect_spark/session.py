@@ -57,17 +57,11 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         # tier pages / detector chunks are bounded; keep file splits big enough
-        # that a 100 TB scan doesn't explode into tiny tasks. Overridable for
-        # small-input parallelism studies (zstd synth compresses ~100x, so a
-        # fixed 256 MB split can underfeed the cores on sandbox-sized data).
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "268435456"),
-        )
-        .config(
-            "spark.sql.files.openCostInBytes",
-            os.environ.get("SPARK_GRAFT_OPEN_COST_BYTES", "4194304"),
-        )
+        # that a 100 TB scan doesn't explode into tiny tasks (Spark's default
+        # is 128 MiB; its 4 MiB openCostInBytes default is kept). Another
+        # split size, e.g. for a small-input parallelism study, goes through
+        # ``extra_conf``.
+        .config("spark.sql.files.maxPartitionBytes", "268435456")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
         # shuffle/spill scratch — point at tmpfs for parallelism studies so
         # a single sandbox disk doesn't serialize an IO-bound shuffle

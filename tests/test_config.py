@@ -47,6 +47,8 @@ def test_config_validation_errors():
         C.validate({"kind": "nope"})
     with pytest.raises(ValueError, match="unknown params"):
         C.validate({"kind": "ks_2samp", "params": {"key": "a", "value": "b", "bogus": 1}})
+    with pytest.raises(ValueError, match="unknown params"):
+        C.validate({"kind": "infer_threshold", "params": {"score_col": "s", "mode": "exact_2pass"}})
     with pytest.raises(ValueError, match="missing required"):
         C.validate({"kind": "ks_2samp", "params": {"key": "a"}})
     with pytest.raises(ValueError, match="predicate"):

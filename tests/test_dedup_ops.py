@@ -1,6 +1,8 @@
 """Edge-case tests for the dedup operators and the outlier-scan invariants."""
 
 import numpy as np
+import pytest
+from pyspark.errors import PythonException
 from pyspark.sql import functions as F
 
 from alibi_detect_spark.operators import dedup
@@ -89,3 +91,19 @@ def test_dedup_clusters_components_and_survivors(spark):
     assert by == {1: 1, 5: 1, 9: 1, 12: 1, 20: 20, 21: 20, 30: 30, 31: 30, 32: 30}
     surv = set(got[got["is_survivor"] == 1]["doc_id"])
     assert surv == {1, 20, 30}
+
+
+def test_embedding_near_pairs_rejects_ragged_and_wrong_width_vectors(spark):
+    """A vector whose length is not ``dim`` fails in the sketch stage with a
+    message naming the operator, the row and both widths, not an executor
+    trace from ``np.stack`` or the hyperplane matmul."""
+    x = np.random.default_rng(5).normal(size=(40, 32))
+    rows = [(int(i), [float(v) for v in r[: 31 if i == 17 else 32]]) for i, r in enumerate(x)]
+    ragged = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    msg = r"ValueError: embedding_near_pairs: every embedding vector must have dim=32 components, but vec_id 17 has 31"
+    with pytest.raises(PythonException, match=msg):
+        dedup.embedding_near_pairs(ragged, dim=32).collect()
+    narrow = spark.createDataFrame([(i, r[:32]) for i, r in rows if i != 17], ragged.schema)
+    msg = r"ValueError: embedding_near_pairs: every embedding vector must have dim=64 components, but vec_id \d+ has 32"
+    with pytest.raises(PythonException, match=msg):
+        dedup.embedding_near_pairs(narrow).collect()

@@ -88,7 +88,7 @@ def test_tier1_rollup_bitmatch(spark, raw_spark, oracle):
 
 
 def test_tier1_salted_rollup_identical(spark, raw_spark, oracle):
-    got = rollup_tier1(raw_spark, "1h", salted=True, salt_buckets=16).toPandas()
+    got = rollup_tier1(raw_spark, "1h", salted=True).toPandas()
     assert_frames_bitequal(got, oracle["t1"])
 
 
