@@ -63,17 +63,24 @@ EPOCH0 = 1_704_067_200  # 2024-01-01T00:00:00Z, matches the events table epoch
 # costs ~150 ms of driver-side file listing + schema inference per call
 # (guide §6 — repeated listings), and the suite builds ~150 readers. Reusing
 # the unresolved plan object skips only that metadata work — every execution
-# still scans the parquet input; nothing is persisted or cached.
-_READERS: dict[tuple, DataFrame] = {}
+# still scans the parquet input; nothing is persisted or cached. The inputs
+# are static: a file replaced at the same path mid-session is not re-listed.
+# The memo holds the readers of ONE session, keyed by path: each reader holds
+# its session (DataFrame._session), so a memo keyed weakly on the session
+# would free nothing, and is cleared instead when another session asks.
+_READERS: dict[str, DataFrame] = {}
+_READERS_SESSION: SparkSession | None = None
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    # keyed by session identity (the session object itself, so a restarted
-    # session can never alias a stale entry) + path
-    key = (spark, f"{sf_dir}/{name}.parquet")
-    df = _READERS.get(key)
+    global _READERS_SESSION
+    if spark is not _READERS_SESSION:
+        _READERS.clear()
+        _READERS_SESSION = spark
+    path = f"{sf_dir}/{name}.parquet"
+    df = _READERS.get(path)
     if df is None:
-        df = _READERS[key] = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        df = _READERS[path] = spark.read.parquet(path)
     return df
 
 

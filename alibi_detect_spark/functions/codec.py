@@ -229,9 +229,6 @@ def decode_values(data: bytes) -> np.ndarray:
     return out_bits.view(np.float64)
 
 
-CANONICAL_NAN = np.float64(np.nan)  # np.nan is the canonical quiet NaN 0x7ff8...
-
-
 _PAGE_MAGIC = b"ADS1"
 
 

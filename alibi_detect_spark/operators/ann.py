@@ -12,7 +12,10 @@ interpreted higher-order-function path) with vectorized BLAS.
 Numeric contract: float32 promoted to float64 (exact), scores rounded to 6dp
 BEFORE ranking, ties broken by id — so ranking is reproducible against the
 DuckDB oracle even though matmul and a sequential fold differ in the last
-ulps (absorbed by the rounding).
+ulps (absorbed by the rounding). The k-NN scans here and LOF in
+:mod:`.outlier` share that contract as one block each: the collected
+reference set (:func:`_ref_set`), the rounded distance matrix
+(:func:`_ref_dists`) and the neighbour order (:func:`_nn_order`).
 """
 
 from __future__ import annotations
@@ -33,6 +36,29 @@ def _collect_matrix(emb: DataFrame, pred, id_col: str, extra: list[str] | None =
     ids = pdf[id_col].to_numpy()
     m = np.stack(pdf[EMB_COL].to_numpy()).astype(np.float64)
     return pdf, ids, m
+
+
+def _ref_set(emb: DataFrame, pred, id_col: str):
+    """The collected reference set of the k-NN scans: ``(ref_ids, r, r2)``,
+    ``r2`` being the squared row norms that :func:`_ref_dists` reuses for
+    every batch."""
+    _, ref_ids, r = _collect_matrix(emb, pred, id_col)
+    return ref_ids, r, np.einsum("ij,ij->i", r, r)
+
+
+def _ref_dists(x: np.ndarray, r: np.ndarray, r2: np.ndarray) -> np.ndarray:
+    """Euclidean distances ``[len(x) × len(r)]`` by the expansion trick
+    ‖x‖² + ‖r‖² − 2x·r (clamped at 0), rounded to 6dp BEFORE any ranking
+    so that the matmul's last-ulp differences from the oracle's sequential
+    fold are absorbed."""
+    d2 = np.maximum(np.einsum("ij,ij->i", x, x)[:, None] + r2[None, :] - 2.0 * (x @ r.T), 0.0)
+    return np.round(np.sqrt(d2), 6)
+
+
+def _nn_order(d: np.ndarray, ref_ids: np.ndarray) -> np.ndarray:
+    """Column indices of each row of ``d`` from nearest to farthest, ties
+    broken by ref id."""
+    return np.lexsort((np.broadcast_to(ref_ids, d.shape), d), axis=-1)
 
 
 def score_scan(emb: DataFrame, id_col: str, score_col: str, score) -> DataFrame:
@@ -65,8 +91,7 @@ def knn_ensemble_scores(
     EXACT decimal moments of the rounded distances (bit-stable across
     engines), and Avg/Max/Min/TopK aggregators (``:157-248``) as column math.
     One corpus scan + one tiny broadcast of the global moments."""
-    _, ref_ids, r = _collect_matrix(emb, ref_pred, id_col)
-    r2 = np.einsum("ij,ij->i", r, r)
+    ref_ids, r, r2 = _ref_set(emb, ref_pred, id_col)
     kmax = max(ks)
 
     def fn(batches):
@@ -75,10 +100,9 @@ def knn_ensemble_scores(
                 continue
             x = np.stack(pdf[EMB_COL].to_numpy()).astype(np.float64)
             ids = pdf[id_col].to_numpy()
-            d2 = np.maximum(np.einsum("ij,ij->i", x, x)[:, None] + r2[None, :] - 2.0 * (x @ r.T), 0.0)
-            d = np.round(np.sqrt(d2), 6)
+            d = _ref_dists(x, r, r2)
             d[ids[:, None] == ref_ids[None, :]] = np.inf
-            order = np.lexsort((np.broadcast_to(ref_ids, d.shape), d), axis=-1)
+            order = _nn_order(d, ref_ids)
             rows = {"vec_id": ids}
             top = d[np.arange(len(ids))[:, None], order[:, :kmax]]
             for k in ks:
@@ -187,15 +211,12 @@ def knn_outlier_scores(
     """KNN outlier score (``od/_knn.py``): Euclidean distance to the k-th
     nearest reference vector. One corpus scan, one [batch × n_ref] matmul per
     Arrow batch, no shuffle at all."""
-    _, ref_ids, r = _collect_matrix(emb, ref_pred, id_col)
-    r2 = np.einsum("ij,ij->i", r, r)
+    ref_ids, r, r2 = _ref_set(emb, ref_pred, id_col)
 
     def score(x, ids):
-        d2 = np.maximum(np.einsum("ij,ij->i", x, x)[:, None] + r2[None, :] - 2.0 * (x @ r.T), 0.0)
-        d = np.round(np.sqrt(d2), 6)
+        d = _ref_dists(x, r, r2)
         d[ids[:, None] == ref_ids[None, :]] = np.inf  # exclude self
-        order = np.lexsort((np.broadcast_to(ref_ids, d.shape), d), axis=-1)
-        return d[np.arange(len(ids)), order[:, k - 1]]
+        return d[np.arange(len(ids)), _nn_order(d, ref_ids)[:, k - 1]]
 
     return score_scan(emb, id_col, "knn_dist", score)
 

@@ -11,6 +11,12 @@ array expressions, no cross joins, nothing driver-side. Candidate generation
 is always bounded by an LSH bucket or an inverted index; verification joins
 touch candidate pairs only.
 
+Shared blocks: the three LSH paths (MinHash, embedding random-hyperplane,
+SimHash) generate candidates through one banded self-equi-join,
+:func:`_band_pairs`, whose integer-sketch bands come from
+:func:`_bit_bands`; the exact and MinHash shingle paths verify through one
+Jaccard tail, :func:`_jaccard_pairs`.
+
 Portability contract: per-shingle/word hashing is md5-based (identical in
 Spark and DuckDB: ``conv(md5[:k],16,10)``), and the k MinHash permutations
 are affine integer mixes ``(a_j·h + b_j) mod P`` with a_j < 2²⁰, h < 2³²,
@@ -128,6 +134,64 @@ def exact_dup_groups(
     )
 
 
+def _jaccard_pairs(common: DataFrame, sizes: DataFrame, threshold: float) -> DataFrame:
+    """The verify tail of both shingle-Jaccard paths: ``common`` holds
+    ``(doc_a, doc_b, common)`` shared-shingle counts and ``sizes`` holds
+    ``(doc_id, n_sh)``; a pair is kept when ``round(common / (n_a + n_b −
+    common), 6) ≥ threshold`` (the 6dp rounding is the oracle's)."""
+    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_a"))
+    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_b"))
+    return (
+        common.join(sa, "doc_a")
+        .join(sb, "doc_b")
+        .select(
+            "doc_a",
+            "doc_b",
+            F.round(
+                F.col("common") / (F.col("n_a") + F.col("n_b") - F.col("common")), 6
+            ).alias("jaccard"),
+        )
+        .where(F.col("jaccard") >= threshold)
+    )
+
+
+def _band_pairs(
+    df: DataFrame, id_col: str, a: str, b: str, bands: list, carry: tuple[str, ...] = ()
+) -> DataFrame:
+    """LSH candidate pairs, shared by the MinHash, embedding and SimHash
+    paths: one ``(band_id, band_key)`` struct per column of ``bands``,
+    exploded to one row per (id, band), then a self-equi-join on
+    ``(band_id, band_key)`` keeping ``a < b`` — shuffle on the band key
+    only, never a cross join. Each ``carry`` column of ``df`` comes through
+    as ``<name>_a`` / ``<name>_b``. A pair that shares several bands appears
+    once per shared band; the caller dedups it."""
+    arr = F.array(
+        *[F.struct(F.lit(i).alias("band_id"), key.alias("band_key")) for i, key in enumerate(bands)]
+    )
+    banded = df.select(id_col, *carry, F.explode(arr).alias("bk")).select(
+        id_col, *carry, F.col("bk.band_id").alias("band_id"), F.col("bk.band_key").alias("band_key")
+    )
+
+    def side(suffix: str, name: str) -> DataFrame:
+        return banded.select(
+            F.col(id_col).alias(name),
+            *[F.col(c).alias(f"{c}_{suffix}") for c in carry],
+            "band_id",
+            "band_key",
+        )
+
+    return side("a", a).join(side("b", b), ["band_id", "band_key"]).where(F.col(a) < F.col(b))
+
+
+def _bit_bands(col: str, bits: int, bands: int) -> list:
+    """``bands`` equal-width bit slices of the ``bits``-bit integer sketch
+    ``col``, lowest bits first — the band columns of :func:`_band_pairs`."""
+    width = bits // bands
+    return [
+        F.shiftright(F.col(col), i * width).bitwiseAND(F.lit((1 << width) - 1)) for i in range(bands)
+    ]
+
+
 def ngram_jaccard_pairs(
     docs: DataFrame, text: str = "text", n: int = 3, threshold: float = 0.05,
     max_df: int | None = None,
@@ -183,20 +247,7 @@ def ngram_jaccard_pairs(
         .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).alias("common"))
     )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_b"))
-    return (
-        common.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(
-                F.col("common") / (F.col("n_a") + F.col("n_b") - F.col("common")), 6
-            ).alias("jaccard"),
-        )
-        .where(F.col("jaccard") >= threshold)
-    )
+    return _jaccard_pairs(common, sizes, threshold)
 
 
 def minhash_signatures(
@@ -241,26 +292,10 @@ def minhash_lsh_pairs(
     # ContextCleaner when the result is dropped (no unpersist obligation)
     shidx = spread(exploded_shingles(docs, text, n), "doc_id").localCheckpoint()
     sigs = minhash_signatures(None, text, n, k, index=shidx).localCheckpoint()
-    band_arr = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band_id"),
-                F.concat_ws(",", *[F.col(f"sig{b * rows + r}") for r in range(rows)]).alias("band_key"),
-            )
-            for b in range(bands)
-        ]
-    )
-    banded = sigs.select("doc_id", F.explode(band_arr).alias("bk")).select(
-        "doc_id", F.col("bk.band_id").alias("band_id"), F.col("bk.band_key").alias("band_key")
-    )
-    a = banded.select(F.col("doc_id").alias("doc_a"), "band_id", "band_key")
-    b = banded.select(F.col("doc_id").alias("doc_b"), "band_id", "band_key")
-    cand = (
-        a.join(b, ["band_id", "band_key"])
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
+    band_keys = [
+        F.concat_ws(",", *[F.col(f"sig{b * rows + r}") for r in range(rows)]) for b in range(bands)
+    ]
+    cand = _band_pairs(sigs, "doc_id", "doc_a", "doc_b", band_keys).select("doc_a", "doc_b").distinct()
     # verify: count common shingles of candidate pairs via the inverted index;
     # sizes come straight from the signatures (n_sh already aggregated there)
     sh = shidx.select("doc_id", "h60")
@@ -272,20 +307,7 @@ def minhash_lsh_pairs(
         .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).alias("common"))
     )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_b"))
-    return (
-        common.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(
-                F.col("common") / (F.col("n_a") + F.col("n_b") - F.col("common")), 6
-            ).alias("jaccard"),
-        )
-        .where(F.col("jaccard") >= threshold)
-    )
+    return _jaccard_pairs(common, sizes, threshold)
 
 
 def contamination_check(
@@ -454,24 +476,8 @@ def embedding_near_pairs(
         emb.select(id_col, emb_col).mapInPandas(fn, schema="vec_id long, sketch long"),
         "vec_id",
     ).localCheckpoint()
-    width = HP_BITS // HP_BANDS
-    bandv = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band_id"),
-                F.shiftright(F.col("sketch"), b * width).bitwiseAND(F.lit((1 << width) - 1)).alias("band_val"),
-            )
-            for b in range(HP_BANDS)
-        ]
-    )
-    banded = sk.select("vec_id", F.explode(bandv).alias("bk")).select(
-        "vec_id", F.col("bk.band_id").alias("band_id"), F.col("bk.band_val").alias("band_val")
-    )
-    a = banded.select(F.col("vec_id").alias("vec_a"), "band_id", "band_val")
-    b = banded.select(F.col("vec_id").alias("vec_b"), "band_id", "band_val")
     cand = (
-        a.join(b, ["band_id", "band_val"])
-        .where(F.col("vec_a") < F.col("vec_b"))
+        _band_pairs(sk, "vec_id", "vec_a", "vec_b", _bit_bands("sketch", HP_BITS, HP_BANDS))
         .select("vec_a", "vec_b")
         .distinct()
     )
@@ -544,26 +550,13 @@ def simhash_near_pairs(docs: DataFrame, text: str = "text", max_hamming: int = 3
     # reuse it instead of re-exploding the word stream (localCheckpoint:
     # blocks freed on GC of the result, no unpersist debt)
     s = spread(simhash32(docs, text), "doc_id").localCheckpoint()
-    width = SIMHASH_BITS // SIMHASH_BANDS
-    bandv = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band_id"),
-                F.shiftright(F.col("simhash"), b * width).bitwiseAND(F.lit((1 << width) - 1)).alias("band_val"),
-            )
-            for b in range(SIMHASH_BANDS)
-        ]
-    )
-    banded = s.select("doc_id", "simhash", F.explode(bandv).alias("bk")).select(
-        "doc_id", "simhash", F.col("bk.band_id").alias("band_id"), F.col("bk.band_val").alias("band_val")
-    )
-    a = banded.select(F.col("doc_id").alias("doc_a"), F.col("simhash").alias("sim_a"), "band_id", "band_val")
-    b = banded.select(F.col("doc_id").alias("doc_b"), F.col("simhash").alias("sim_b"), "band_id", "band_val")
-    pairs = (
-        a.join(b, ["band_id", "band_val"])
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b"))).alias("hamming"))
+    xor = F.col("simhash_a").bitwiseXOR(F.col("simhash_b"))
+    return (
+        _band_pairs(
+            s, "doc_id", "doc_a", "doc_b", _bit_bands("simhash", SIMHASH_BITS, SIMHASH_BANDS),
+            carry=("simhash",),
+        )
+        .select("doc_a", "doc_b", F.bit_count(xor).alias("hamming"))
         .dropDuplicates(["doc_a", "doc_b"])
         .where(F.col("hamming") <= max_hamming)
     )
-    return pairs

@@ -7,9 +7,11 @@ trajectories are bit-identical.
 
 Determinism at scale: per-source randomized configuration (the online-MMD
 bootstrap) is seeded by a stable hash of the source name, NOT by task order,
-so results are invariant to partitioning, retries, and executor count. The
-EWMA / MMD carries needed for resume are tiny per-source dicts the caller
-passes back in (the streaming twins keep them in their checkpoint state).
+so results are invariant to partitioning, retries, and executor count. A
+batch pass scores each whole series from its start, so it keeps no detector
+state; the resumable per-source carries live with the kernels
+(``ewma(carry=)``, ``OnlineMMD.score_stream(state)``) and the streaming
+twins keep them in their checkpoint state.
 """
 
 from __future__ import annotations
@@ -19,7 +21,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
 from ..functions.ewma import ewma
-from ..functions.mmd import OnlineMMD, OnlineMMDState
+from ..functions.mmd import OnlineMMD
 from ..functions.sr import sr_score
 from ..schemas import SCORE_SCHEMA
 from ..synth import mix64
@@ -84,14 +86,9 @@ def score_series(
     mmd_params: dict | None = None,
     ewma_lam: float = 0.1,
     base_seed: int = 42,
-    carry: dict | None = None,
-) -> tuple[pd.DataFrame, dict]:
-    """Shared kernel: score ONE source's ordered series. Returns (scores, new carry).
-
-    ``carry`` holds resume state: ``{"ewma": float, "mmd_t": int,
-    "mmd_window": ndarray}`` — restoring it reproduces the uninterrupted
-    trajectory bit-for-bit (FIXTURES.md F5).
-    """
+) -> pd.DataFrame:
+    """Shared kernel: score ONE source's whole ordered series (SR, online
+    MMD with the series head as reference, EWMA)."""
     pdf = pdf.sort_values("bucket_ts", kind="mergesort")
     source = pdf["source"].iloc[0]
     # a NULL value (e.g. a gap-filled cell's mean) scores as 0
@@ -104,7 +101,6 @@ def score_series(
             "value": x,
         }
     )
-    carry = carry or {}
 
     # --- Spectral Residual (stateless per chunk; chunk = whole series here) ---
     srp = dict(window_amp=20, window_local=20, n_est_points=10, n_grad_points=5)
@@ -125,27 +121,21 @@ def score_series(
         det = OnlineMMD.fit(
             x[:n_ref, None], seed=source_seed(source, base_seed), **mp
         )
-        state = None
-        if "mmd_t" in carry:
-            state = OnlineMMDState(t=carry["mmd_t"], test_window=carry["mmd_window"])
-        stats, thr, drift, new_state = det.score_stream(x[n_ref:, None], state)
+        stats, thr, drift, _ = det.score_stream(x[n_ref:, None])
         pad = np.full(n_ref, np.nan)
         out["mmd_stat"] = np.concatenate([pad, stats])
         out["mmd_threshold"] = np.concatenate([pad, thr])
         out["mmd_is_drift"] = np.concatenate(
             [np.zeros(n_ref, dtype=np.int32), drift]
         ).astype(np.int32)
-        carry_out = {"mmd_t": new_state.t, "mmd_window": new_state.test_window}
     else:
         out["mmd_stat"] = np.nan
         out["mmd_threshold"] = np.nan
         out["mmd_is_drift"] = np.int32(0)
-        carry_out = {}
 
     # --- EWMA smoothing of the value series (fet_online.py:225-233 recursion) ---
-    out["ewma_stat"] = ewma(x, ewma_lam, carry=carry.get("ewma"))
-    carry_out["ewma"] = float(out["ewma_stat"].iloc[-1]) if n else None
-    return out, carry_out
+    out["ewma_stat"] = ewma(x, ewma_lam)
+    return out
 
 
 def ewma_over(
@@ -161,6 +151,26 @@ def ewma_over(
         return out
 
     return _ordered_over(df, key, order_col, [value], replay, "ewma double")
+
+
+def _quantile_bands(rel: DataFrame, key: str, y: str, q_lo: float, q_hi: float):
+    """Per-(key, phase) exact quantile band of ``y`` joined back onto
+    ``rel``, plus the distance-outside-band score ``greatest(y − band_hi,
+    band_lo − y)`` (positive = outside). Returns ``(scored, score)``.
+
+    The percentile runs over exact MICRO-UNIT INTEGERS (``y`` is 6dp by
+    contract): an interpolation midpoint of two ints is an exactly
+    representable x.5, so the band's 6dp rounding tie-breaks identically in
+    both engines — percentile over raw doubles left a 1-ulp interpolation
+    difference that flipped a half-boundary at small SF."""
+    bands = rel.withColumn("yq", F.round(F.col(y) * 1000000).cast("long")).groupBy(
+        key, "phase"
+    ).agg(
+        (F.round(F.expr(f"percentile(yq, {q_lo})")) / F.lit(1e6) + F.lit(0.0)).alias("band_lo"),
+        (F.round(F.expr(f"percentile(yq, {q_hi})")) / F.lit(1e6) + F.lit(0.0)).alias("band_hi"),
+    )
+    score = F.greatest(F.col(y) - F.col("band_hi"), F.col("band_lo") - F.col(y))
+    return rel.join(bands, [key, "phase"]), score
 
 
 def seasonal_band_outliers(
@@ -186,19 +196,7 @@ def seasonal_band_outliers(
     vals = rollup.select(
         key, "bucket_ts", F.col(value).alias("y"), phase.alias("phase")
     ).localCheckpoint()
-    # percentile over exact MICRO-UNIT INTEGERS (y is 6dp by the rollup
-    # contract): an interpolation midpoint of two ints is an exactly
-    # representable x.5, so the band's 6dp rounding tie-breaks identically
-    # in both engines — percentile over raw doubles left a 1-ulp
-    # interpolation difference that flipped a half-boundary at small SF
-    bands = vals.withColumn("yq", F.round(F.col("y") * 1000000).cast("long")).groupBy(
-        key, "phase"
-    ).agg(
-        (F.round(F.expr(f"percentile(yq, {q_lo})")) / F.lit(1e6) + F.lit(0.0)).alias("band_lo"),
-        (F.round(F.expr(f"percentile(yq, {q_hi})")) / F.lit(1e6) + F.lit(0.0)).alias("band_hi"),
-    )
-    scored = vals.join(bands, [key, "phase"])
-    score = F.greatest(F.col("y") - F.col("band_hi"), F.col("band_lo") - F.col("y"))
+    scored, score = _quantile_bands(vals, key, "y", q_lo, q_hi)
     return scored.select(
         key,
         "bucket_ts",
@@ -345,17 +343,8 @@ def trend_band_outliers(
         F.round(F.col("y") - (F.col("a") + F.col("b") * F.col("rn")), 6).alias("resid"),
         ((F.col("bucket_ts") / bucket_seconds).cast("long") % period_buckets).alias("phase"),
     )
-    # micro-unit integer percentile: see seasonal_band_outliers — midpoint
-    # interpolation ties become exactly representable halves, identical in
-    # both engines (resid is already rounded to 6dp)
-    bands = dt.withColumn("rq", F.round(F.col("resid") * 1000000).cast("long")).groupBy(
-        key, "phase"
-    ).agg(
-        (F.round(F.expr(f"percentile(rq, {q_lo})")) / F.lit(1e6) + F.lit(0.0)).alias("band_lo"),
-        (F.round(F.expr(f"percentile(rq, {q_hi})")) / F.lit(1e6) + F.lit(0.0)).alias("band_hi"),
-    )
-    scored = dt.join(bands, [key, "phase"])
-    score = F.greatest(F.col("resid") - F.col("band_hi"), F.col("band_lo") - F.col("resid"))
+    # resid is already rounded to 6dp, as the micro-unit bands need
+    scored, score = _quantile_bands(dt, key, "resid", q_lo, q_hi)
     return scored.select(
         key,
         "bucket_ts",
@@ -798,7 +787,7 @@ def score_rollup(
     """Distributed scoring: one ordered ``applyInPandas`` group per source."""
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        scored, _ = score_series(
+        return score_series(
             pdf,
             value_col=value_col,
             sr_params=sr_params,
@@ -807,7 +796,6 @@ def score_rollup(
             ewma_lam=ewma_lam,
             base_seed=base_seed,
         )
-        return scored
 
     cols = ["source", "bucket_ts", value_col] + (
         [] if value_col in ("n_docs", "sum_n_tok") else ["n_docs"]

@@ -4,7 +4,9 @@ once on a reference, then scores each instance. Two plan families:
 - **NumPy fit + corpus scan** (``*_outlier_scores``, rows-only): the
   reference set is collected once (small by alibi-detect's own contract),
   the fit happens in NumPy, and scoring is one :func:`.ann.score_scan`
-  ``mapInPandas`` pass — no shuffle of the corpus.
+  ``mapInPandas`` pass — no shuffle of the corpus. LOF ranks neighbours
+  with the k-NN scans' reference-set, distance and order blocks
+  (:func:`.ann._ref_set`, :func:`.ann._ref_dists`, :func:`.ann._nn_order`).
 - **Closed form** (``*_2feat``, ``*_dfeat``, ``*_emb``, hash-checked against
   the DuckDB oracle): exact DECIMAL / quantized-integer moment aggregates,
   driver-side scalar math or broadcast 1-row parameter relations, and
@@ -41,7 +43,7 @@ from ..functions.gmm import GMMOutlier
 from ..functions.iforest import IsolationForest
 from ..functions.mmd import median_heuristic_sigma, rbf_kernel, squared_pairwise_distance
 from ..functions.svm import OneClassSVM
-from .ann import _collect_matrix, score_scan
+from .ann import _collect_matrix, _nn_order, _ref_dists, _ref_set, score_scan
 from .closed_form import (
     GAMMA,
     c_of,
@@ -107,45 +109,24 @@ def lof_outlier_scores(
     (``alibi_detect/od/_lof.py:22-213`` semantics: fitted neighbourhood
     statistics on the reference, scores = mean neighbour-lrd / own-lrd).
     Fit is NumPy on the collected reference; scoring is one corpus scan."""
-    _, ref_ids, r = _collect_matrix(emb, ref_pred, id_col)
-    n_ref = r.shape[0]
+    ref_ids, r, r2 = _ref_set(emb, ref_pred, id_col)
     # pairwise within ref (self excluded); distances rounded to 6dp BEFORE
     # neighbour selection, ties broken by ref id — the repo-wide numeric
     # contract that makes the ranking reproducible against the SQL oracle
-    d_rr = np.round(
-        np.sqrt(
-            np.maximum(
-                np.einsum("ij,ij->i", r, r)[:, None]
-                + np.einsum("ij,ij->i", r, r)[None, :]
-                - 2.0 * (r @ r.T),
-                0.0,
-            )
-        ),
-        6,
-    )
+    d_rr = _ref_dists(r, r, r2)
     np.fill_diagonal(d_rr, np.inf)
-    order_rr = np.lexsort((np.broadcast_to(ref_ids, d_rr.shape), d_rr), axis=-1)
-    rows = np.arange(n_ref)[:, None]
-    nn_idx = order_rr[:, :k]
+    rows = np.arange(r.shape[0])[:, None]
+    nn_idx = _nn_order(d_rr, ref_ids)[:, :k]
     kdist = d_rr[rows, nn_idx][:, -1]  # k-distance per ref point
     reach_rr = np.maximum(kdist[nn_idx], d_rr[rows, nn_idx])
     lrd_ref = 1.0 / (reach_rr.mean(axis=1) + 1e-12)
 
-    r2 = np.einsum("ij,ij->i", r, r)
-
     def score(x, _):
-        d = np.round(
-            np.sqrt(
-                np.maximum(
-                    np.einsum("ij,ij->i", x, x)[:, None] + r2[None, :] - 2.0 * (x @ r.T), 0.0
-                )
-            ),
-            6,
-        )
+        d = _ref_dists(x, r, r2)
         # NOTE: a scanned point that IS a reference point keeps its 0-dist
         # self pair (fitted-reference semantics of od/_lof.py: the test
         # batch is scored against the fitted set as-is)
-        idx = np.lexsort((np.broadcast_to(ref_ids, d.shape), d), axis=-1)[:, :k]
+        idx = _nn_order(d, ref_ids)[:, :k]
         reach = np.maximum(kdist[idx], d[np.arange(len(x))[:, None], idx])
         lrd_p = 1.0 / (reach.mean(axis=1) + 1e-12)
         return np.round(lrd_ref[idx].mean(axis=1) / lrd_p, 6)

@@ -116,6 +116,21 @@ def downsample(rollup: DataFrame, from_tier: str, to_tier: str) -> DataFrame:
     )
 
 
+def _metric_cells(agg: DataFrame, key: str) -> DataFrame:
+    """The output cells shared by every metric tier, from the aggregated
+    ``(key, bucket_ts, n_events, sum_dec, min_dec, max_dec)``: the exact
+    DECIMALs presented as double, and ``avg_value`` from the exact sum."""
+    return agg.select(
+        key,
+        "bucket_ts",
+        "n_events",
+        F.col("sum_dec").cast("double").alias("sum_value"),
+        F.col("min_dec").cast("double").alias("min_value"),
+        F.col("max_dec").cast("double").alias("max_value"),
+        F.round(F.col("sum_dec").cast("double") / F.col("n_events"), 6).alias("avg_value"),
+    )
+
+
 def metric_rollup(
     df: DataFrame,
     key: str,
@@ -129,7 +144,7 @@ def metric_rollup(
     distributed == oracle bit-for-bit (then presented as double)."""
     secs = TIER_SECONDS[tier]
     dec = F.col(value).cast("decimal(18,2)")
-    return (
+    return _metric_cells(
         df.select(F.col(key), _bucket_col(ts_col, secs).alias("bucket_ts"), dec.alias("v"))
         .groupBy(key, "bucket_ts")
         .agg(
@@ -137,16 +152,8 @@ def metric_rollup(
             F.sum("v").alias("sum_dec"),
             F.min("v").alias("min_dec"),
             F.max("v").alias("max_dec"),
-        )
-        .select(
-            key,
-            "bucket_ts",
-            "n_events",
-            F.col("sum_dec").cast("double").alias("sum_value"),
-            F.col("min_dec").cast("double").alias("min_value"),
-            F.col("max_dec").cast("double").alias("max_value"),
-            F.round(F.col("sum_dec").cast("double") / F.col("n_events"), 6).alias("avg_value"),
-        )
+        ),
+        key,
     )
 
 
@@ -156,7 +163,7 @@ def metric_downsample(rollup: DataFrame, key: str, from_tier: str, to_tier: str)
     recomputed from the composed sums."""
     secs = TIER_SECONDS[to_tier]
     assert secs % TIER_SECONDS[from_tier] == 0, "tiers must nest"
-    return (
+    return _metric_cells(
         rollup.select(
             key,
             (F.floor(F.col("bucket_ts") / secs) * secs).cast("long").alias("bucket_ts"),
@@ -171,16 +178,8 @@ def metric_downsample(rollup: DataFrame, key: str, from_tier: str, to_tier: str)
             F.sum("sum_dec").alias("sum_dec"),
             F.min("min_dec").alias("min_dec"),
             F.max("max_dec").alias("max_dec"),
-        )
-        .select(
-            key,
-            "bucket_ts",
-            "n_events",
-            F.col("sum_dec").cast("double").alias("sum_value"),
-            F.col("min_dec").cast("double").alias("min_value"),
-            F.col("max_dec").cast("double").alias("max_value"),
-            F.round(F.col("sum_dec").cast("double") / F.col("n_events"), 6).alias("avg_value"),
-        )
+        ),
+        key,
     )
 
 

@@ -73,7 +73,7 @@ def score_pandas(rollup: pd.DataFrame, **kwargs) -> pd.DataFrame:
     from ..operators.detect import score_series
 
     frames = [
-        score_series(grp, **kwargs)[0] for _, grp in rollup.groupby("source", sort=True)
+        score_series(grp, **kwargs) for _, grp in rollup.groupby("source", sort=True)
     ]
     return pd.concat(frames, ignore_index=True)
 

@@ -7,8 +7,9 @@ this job's fingerprint and whose table exists; a stage that died mid-write
 is redone, which is idempotent because every tier write is an overwrite.
 Latest-timestamp-wins reads over an append-only parquet log emulate the
 keyed MERGE (the Iceberg deployment uses a real ``MERGE INTO``). Detector
-state is not kept here: batch carries are per-source dicts the caller hands
-back, and the streaming twins keep theirs in their checkpoint directories.
+state is not kept here: a batch scores pass rescores each whole series, so
+it has none, and the streaming twins keep theirs in their checkpoint
+directories.
 """
 
 from __future__ import annotations

@@ -32,6 +32,19 @@ def test_cheap_queries_execute(spark, sf_dir):
         assert qs[name](spark, sf_dir).count() > 0, name
 
 
+def test_reader_memo_holds_only_the_current_session(spark, sf_dir):
+    """Each memoized reader holds its session alive, so the memo keeps the
+    readers of one session: a second session's first read drops the first
+    session's entries, and a repeated read reuses the memoized reader."""
+    first = E._t(spark, sf_dir, "events")
+    assert E._t(spark, sf_dir, "events") is first
+    other = spark.newSession()
+    E._t(other, sf_dir, "events")
+    E._t(other, sf_dir, "documents")
+    assert len(E._READERS) == 2
+    assert all(df.sparkSession is other for df in E._READERS.values())
+
+
 def test_recording_window_covers_unproven_queries():
     """The driver records only the first ~50 queries() entries per round.
     Guard the round-5 ordering invariant: every query that lacks a

@@ -13,7 +13,7 @@ import io
 import os
 import re
 import sys
-from contextlib import redirect_stdout
+from contextlib import contextmanager, redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -47,6 +47,27 @@ def plan_of(df) -> str:
     return stable_ids(buf.getvalue())
 
 
+@contextmanager
+def checkpointed_plans(spark):
+    """Collect the plan of every relation ``localCheckpoint``-ed on
+    ``spark`` while the block runs: an eager checkpoint shows in the final
+    plan only as ``Scan ExistingRDD``, so its sub-plan is captured here
+    instead."""
+    DataFrame = type(spark.range(0))  # the session's concrete DataFrame class
+    plans: list[str] = []
+    original = DataFrame.localCheckpoint
+
+    def capture(self, *args, **kwargs):
+        plans.append(plan_of(self))
+        return original(self, *args, **kwargs)
+
+    DataFrame.localCheckpoint = capture
+    try:
+        yield plans
+    finally:
+        DataFrame.localCheckpoint = original
+
+
 def main() -> None:
     import __spark_entry__ as E
     from alibi_detect_spark.session import get_spark
@@ -56,9 +77,15 @@ def main() -> None:
     sections = []
     failures = []
 
-    def audit(name, df, requires: list[str], forbids: list[str], note: str):
+    def audit(name, df, requires: list[str], forbids: list[str], note: str, checks=None):
+        """``checks`` maps the label of a check the caller computed to its
+        outcome."""
         p = plan_of(df)
         verdicts = []
+        for label, ok in (checks or {}).items():
+            verdicts.append(f"  - REQUIRE {label}: {'OK' if ok else 'FAIL'}")
+            if not ok:
+                failures.append(f"{name}: {label}")
         for s in requires:
             ok = s in p
             verdicts.append(f"  - REQUIRE `{s}`: {'OK' if ok else 'MISSING'}")
@@ -551,6 +578,26 @@ def main() -> None:
         note="MinHash signatures come from a hash-aggregate over the exploded "
         "shingle relation (partial min map-side); LSH candidates join on "
         "(band_id, band_key) — equi-join only, never a cross join.",
+    )
+
+    # 7b. dedup embedding cosine (the detector_suite dedup query): the
+    #     sketch is one Arrow pass, band candidates come from an equi-join
+    with checkpointed_plans(spark) as sketches:
+        df = qs["dedup_embedding_cosine"](spark, SF)
+    audit(
+        "dedup_embedding_cosine",
+        df,
+        requires=["Left keys [2]: [band_id#"],
+        forbids=["CartesianProduct", "BroadcastNestedLoopJoin"],
+        checks={
+            "the checkpointed sketch relation is one `MapInPandas`": len(sketches) == 1
+            and sketches[0].count(") MapInPandas") == 1
+        },
+        note="Random-hyperplane LSH: one Arrow pass computes the 24-bit "
+        "sketch per vector (checkpointed, so the final plan scans it as "
+        "ExistingRDD), the band candidates come from the self-equi-join on "
+        "(band_id, band_key), and only candidate pairs join the vectors for "
+        "the exact cosine — never a cross join.",
     )
 
     # round-5 operators: categorical Mahalanobis must stay zero-Python
