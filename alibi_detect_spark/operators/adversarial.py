@@ -21,18 +21,16 @@ for Spark in closed form.
 Both are pure column math end to end: one partial+final DECIMAL moment
 aggregate per fitted head, broadcast 1-row parameter relations, whole-stage
 codegen scoring, ``TakeOrderedAndProject`` top-k — no UDF, no collect, and
-every expression tree is mirrored term-for-term in the DuckDB oracle.
+every expression tree is mirrored term-for-term in the DuckDB oracle. The NB
+head is :func:`.closed_form.nb2_loglik` and the student's solve
+:func:`.closed_form.solve_2x2`, the blocks the drift classifiers use.
 """
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame, functions as F
 
-from .closed_form import dec_sum, ranked_top_k, recon_par
-
-_TWO_PI = 2.0 * math.pi
+from .closed_form import dec_sum, nb2_loglik, ranked_top_k, recon_par, solve_2x2
 _PLO = 1e-12
 _PHI = 1.0 - 1e-12
 
@@ -54,21 +52,9 @@ def _nb2_wide(base: DataFrame) -> DataFrame:
 
 
 def _nb2_loglik(vc, uc, k: int, var_eps: float = 1e-9):
-    """log P(x, y=k) under the fitted NB head, evaluated at (vc, uc) —
-    the ``classifier_drift_nb`` loglik shape (same association order)."""
-    n = F.col(f"cnt_{k}")
-    mv = F.col(f"sv_{k}") / n
-    varv = (F.col(f"svv_{k}") / n - mv * mv) + var_eps
-    mu = F.col(f"su_{k}") / n
-    varu = (F.col(f"suu_{k}") / n - mu * mu) + var_eps
-    prior = n / (F.col("cnt_0") + F.col("cnt_1"))
-    return (
-        F.lit(-0.5) * F.log(F.lit(_TWO_PI) * varv)
-        - (vc - mv) * (vc - mv) / (F.lit(2.0) * varv)
-        - F.lit(0.5) * F.log(F.lit(_TWO_PI) * varu)
-        - (uc - mu) * (uc - mu) / (F.lit(2.0) * varu)
-        + F.log(prior)
-    )
+    """log P(x, y=k) under the fitted NB head, evaluated at (vc, uc)."""
+    sums = [F.col(f"{c}_{k}") for c in ("cnt", "sv", "svv", "su", "suu")]
+    return nb2_loglik(vc, uc, *sums, F.col("cnt_0") + F.col("cnt_1"), var_eps)
 
 
 def _p1(vc, uc):
@@ -163,11 +149,9 @@ def model_distillation_2feat(
         (F.col("sp_r") / F.lit(1e9)).alias("sp"),
         (F.col("svp_r") / F.lit(1e13)).alias("svp"),
     )
-    det = (F.col("n") + F.lit(lam)) * (F.col("svv") + F.lit(lam)) - F.col("sv") * F.col("sv")
-    coef = mom.select(
-        (((F.col("svv") + F.lit(lam)) * F.col("sp") - F.col("sv") * F.col("svp")) / det).alias("b0"),
-        (((F.col("n") + F.lit(lam)) * F.col("svp") - F.col("sv") * F.col("sp")) / det).alias("b1"),
-    )
+    n, sv, svv, sp, svp = map(F.col, ("n", "sv", "svv", "sp", "svp"))
+    b0, b1 = solve_2x2(n + lam, svv + lam, sv, sp, svp)
+    coef = mom.select(b0.alias("b0"), b1.alias("b1"))
     sj = q.crossJoin(F.broadcast(coef))
     yhat = F.least(F.greatest(F.col("b0") + F.col("b1") * F.col("v"), F.lit(1e-6)), F.lit(0.999999))
     p1 = F.col("p1")

@@ -25,14 +25,10 @@ Two classifiers:
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import Column, DataFrame, functions as F
 
-from .closed_form import dec_sum
+from .closed_form import dec_sum, nb2_loglik, ridge_2x2
 from .drift import ks_2samp
-
-_TWO_PI = 2.0 * math.pi
 
 
 def _hash_fold(id_col: str, n_folds: int):
@@ -95,19 +91,9 @@ def classifier_drift_nb(
     j = lab.join(F.broadcast(wide), "fold")
 
     def loglik(y: str):
-        n = F.col(f"n_{y}")
-        mv = F.col(f"sv_{y}") / n
-        varv = (F.col(f"svv_{y}") / n - mv * mv) + var_eps
-        mu = F.col(f"su_{y}") / n
-        varu = (F.col(f"suu_{y}") / n - mu * mu) + var_eps
-        prior = n / (F.col("n_ref") + F.col("n_test"))
-        return (
-            F.lit(-0.5) * F.log(F.lit(_TWO_PI) * varv)
-            - (F.col("v") - mv) * (F.col("v") - mv) / (F.lit(2.0) * varv)
-            - F.lit(0.5) * F.log(F.lit(_TWO_PI) * varu)
-            - (F.col("u") - mu) * (F.col("u") - mu) / (F.lit(2.0) * varu)
-            + F.log(prior)
-        )
+        sums = [F.col(f"{c}_{y}") for c in ("n", "sv", "svv", "su", "suu")]
+        n_all = F.col("n_ref") + F.col("n_test")
+        return nb2_loglik(F.col("v"), F.col("u"), *sums, n_all, var_eps)
 
     p_test = F.lit(1.0) / (F.lit(1.0) + F.exp(loglik("ref") - loglik("test")))
     probs = j.select(
@@ -293,7 +279,7 @@ def _ridge_head(
     Per-fold moments are exact DECIMAL(38,0) sums; the leave-fold-out
     training moments are totals minus the fold, so the fit is order-free
     under any partitioning and the 2×2 ridge system is solved as column
-    math."""
+    math by :func:`.closed_form.ridge_2x2`."""
     fs = float(fscale)
     f1, f2, yy = F.col("f1q"), F.col("f2q"), F.col("y")
     sums = {
@@ -329,21 +315,9 @@ def _ridge_head(
         (F.col("s1y") / (n * fs) - m1 * my).alias("c1y"),
         (F.col("s2y") / (n * fs) - m2 * my).alias("c2y"),
     )
-    c11, c22, c12, c1y, c2y = (F.col(c) for c in ("c11", "c22", "c12", "c1y", "c2y"))
-    det = (c11 + F.lit(lam)) * (c22 + F.lit(lam)) - c12 * c12
-    coef = mom.select(
-        "fold",
-        "m1",
-        "m2",
-        "my",
-        (((c22 + F.lit(lam)) * c1y - c12 * c2y) / det).alias("b1"),
-        (((c11 + F.lit(lam)) * c2y - c12 * c1y) / det).alias("b2"),
-    ).select(
-        "fold",
-        "b1",
-        "b2",
-        (F.col("my") - F.col("b1") * F.col("m1") - F.col("b2") * F.col("m2")).alias("a0"),
-    )
+    mcols = map(F.col, ("m1", "m2", "my", "c11", "c22", "c12", "c1y", "c2y"))
+    a0, b1, b2 = ridge_2x2(*mcols, lam)
+    coef = mom.select("fold", b1.alias("b1"), b2.alias("b2"), a0.alias("a0"))
     scored = feat.join(F.broadcast(coef), "fold").select(
         F.lit(feature).alias("feature"),
         F.round(

@@ -1,36 +1,48 @@
-"""Shared fit-and-score blocks of the closed-form outlier operators
-(:mod:`.outlier`, :mod:`.adversarial`, :mod:`.llr`,
-``drift.mahalanobis_scores``).
-
-Each block is one Spark relation or column expression that the DuckDB
-oracle mirrors term-for-term; callers compose them and keep only their own
-scoring math:
+"""Shared fit-and-score blocks of the closed-form operators and their
+streaming twins. Each block is one Spark relation or column expression that
+the DuckDB oracle mirrors term-for-term; callers compose them and keep only
+their own scoring math:
 
 - :func:`moments_2x2` — exact-DECIMAL 2×2 mean/covariance relation, with the
   rank-1 reconstruction (:func:`recon_par`) and probabilistic-PCA
   (:func:`ppca_par`) parameter relations, the eigenvalue discriminant
-  (:func:`eig_2x2`) and the Mahalanobis form (:func:`mahalanobis_2x2`) on top;
+  (:func:`eig_2x2`) and the major direction (:func:`rank1_2x2`) on top;
+- :func:`nb2_loglik` — Gaussian naive-Bayes log joint of two features;
 - :func:`ranked_top_k` — ranked ``TakeOrderedAndProject`` top-k tail;
 - :func:`landmark_kernels` — md5-priority landmark rows, the Σ-var bandwidth
   and the RBF kernel to each landmark;
 - :func:`iforest_score` — isolation-forest leaf maps → ``2^(−E[h]/c)``,
   bounded by :func:`check_iforest_size`;
 - :func:`dec_sum` — exact DECIMAL sum of quantized integers.
+
+The cross-engine 2×2 chains — :func:`mahalanobis_2x2`,
+:func:`online_mahalanobis_2x2`, the 2-center LSDD :func:`lsdd2_hinv` /
+:func:`lsdd2_stat`, :func:`solve_2x2` and :func:`ridge_2x2` — are each
+evaluated by a Spark plan, a streaming twin on NumPy arrays and a driver-side
+fit on Python floats. Operand contract: they use only ``+ − × ÷`` on their
+operands, so a float, an array and a ``Column`` (numbers mixed in become
+literals) build the same association and give the same IEEE bits; ``exp``,
+``log``, ``sqrt`` and ``round`` stay at the call sites, since each engine
+evaluates them its own way. ``functions/`` is the oracle and imports nothing
+from here, so ``online_thresholds.lsdd2_decision_thresholds`` keeps its own
+NumPy copy of the LSDD chain as the calibration twin.
 """
 
 from __future__ import annotations
 
 import hashlib
+import math
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 IFOREST_MAX_LEAVES = 2**16
 GAMMA = 0.5772156649015329  # Euler–Mascheroni, in c(n)
+TWO_PI = 2.0 * math.pi
 
 
 def moments_2x2(df: DataFrame, x: str, y: str, x_cast: str = "decimal(18,4)") -> DataFrame:
-    """1-row relation ``(mx, my, a, b, c)``: means and population covariance
-    ``[[a, c], [c, b]]`` of columns ``x``, ``y`` from raw DECIMAL sums (exact
+    """1-row relation ``(n, mx, my, a, b, c)``: row count, means and population
+    covariance ``[[a, c], [c, b]]`` of columns ``x``, ``y`` from raw DECIMAL sums (exact
     under any aggregation order, so every fitted parameter is bit-identical
     under any partitioning). ``x`` is cast to ``x_cast``, ``y`` to
     ``decimal(18,4)``."""
@@ -46,6 +58,7 @@ def moments_2x2(df: DataFrame, x: str, y: str, x_cast: str = "decimal(18,4)") ->
     }
     n, sx, sy, sxx, syy, sxy = map(F.col, sums)
     return df.agg(*[s.cast("double").alias(k) for k, s in sums.items()]).select(
+        "n",
         (sx / n).alias("mx"),
         (sy / n).alias("my"),
         (sxx / n - (sx / n) * (sx / n)).alias("a"),
@@ -67,14 +80,21 @@ def eig_2x2():
     return disc, (a + b + disc) / F.lit(2.0)
 
 
-def recon_par(df: DataFrame, x: str, y: str) -> DataFrame:
-    """1-row relation ``(mx, my, w1, w2, nrm2)``: rank-1 PCA reconstruction
-    parameters (the linear-AE optimum) — major eigenvalue ``λ₊``, direction
-    ``w = (c, λ₊−a)``, ``nrm2 = |w|²``."""
+def rank1_2x2():
+    """``(w1, w2, nrm2)`` over the 2×2 columns ``a, b, c``: the major
+    eigenvector ``w = (c, λ₊−a)`` and ``nrm2 = |w|²``."""
     _, lamp = eig_2x2()
     c, w2 = F.col("c"), lamp - F.col("a")
+    return c, w2, c * c + w2 * w2
+
+
+def recon_par(df: DataFrame, x: str, y: str) -> DataFrame:
+    """1-row relation ``(mx, my, w1, w2, nrm2)``: rank-1 PCA reconstruction
+    parameters (the linear-AE optimum) — :func:`rank1_2x2` of the
+    covariance."""
+    w1, w2, nrm2 = rank1_2x2()
     return moments_2x2(df, x, y).select(
-        "mx", "my", c.alias("w1"), w2.alias("w2"), (c * c + w2 * w2).alias("nrm2")
+        "mx", "my", w1.alias("w1"), w2.alias("w2"), nrm2.alias("nrm2")
     )
 
 
@@ -83,16 +103,16 @@ def ppca_par(df: DataFrame, x: str, y: str, eps: float) -> DataFrame:
     probabilistic PCA with one latent (Tipping & Bishop 1999) — ``σ² = λ₋ +
     eps``, loading ``W = v̂₊·sqrt(max(λ₊ − σ², 0))``, ``M = WᵀW + σ²``."""
     disc, lamp = eig_2x2()
-    a, c = F.col("a"), F.col("c")
-    sig2 = (a + F.col("b") - disc) / F.lit(2.0) + F.lit(eps)
+    w1, w2, nrm2 = rank1_2x2()
+    sig2 = (F.col("a") + F.col("b") - disc) / F.lit(2.0) + F.lit(eps)
     g = F.greatest(lamp - sig2, F.lit(0.0))
-    nrm = F.sqrt(c * c + (lamp - a) * (lamp - a))
+    nrm = F.sqrt(nrm2)
     return moments_2x2(df, x, y).select(
         "mx",
         "my",
         sig2.alias("sig2"),
-        (c / nrm * F.sqrt(g)).alias("w1"),
-        ((lamp - a) / nrm * F.sqrt(g)).alias("w2"),
+        (w1 / nrm * F.sqrt(g)).alias("w1"),
+        (w2 / nrm * F.sqrt(g)).alias("w2"),
         (g + sig2).alias("m_cap"),
     )
 
@@ -107,13 +127,6 @@ def ranked_top_k(scored: DataFrame, score_col: str, id_cols: list[str], k: int) 
     return top.withColumn("rank", F.row_number().over(Window.orderBy(*order))).select(
         *id_cols, score_col, F.col("rank").cast("int").alias("rank")
     )
-
-
-def mahalanobis_2x2(dx: Column, dy: Column) -> Column:
-    """Quadratic form ``[dx dy]·Σ⁻¹·[dx dy]ᵀ`` with the closed-form inverse
-    of the covariance columns ``a, b, c``."""
-    a, b, c = F.col("a"), F.col("b"), F.col("c")
-    return (b * dx * dx - 2 * c * dx * dy + a * dy * dy) / (a * b - c * c)
 
 
 def landmark_kernels(
@@ -164,6 +177,74 @@ def landmark_kernels(
         return F.exp(-d2 / (F.lit(2.0) * F.col("s2")))
 
     return j, kern
+
+
+def mahalanobis_2x2(dx, dy, a, b, c):
+    """Quadratic form ``[dx dy]·Σ⁻¹·[dx dy]ᵀ`` with the closed-form inverse
+    of ``Σ = [[a, c], [c, b]]``."""
+    return (b * dx * dx - 2.0 * c * dx * dy + a * dy * dy) / (a * b - c * c)
+
+
+def online_mahalanobis_2x2(n, sv, svv, su, suu, svu, v, u, q, var_eps):
+    """:func:`mahalanobis_2x2` of ``(v, u)`` against ``n`` earlier points
+    from their prefix sums of ``q``-quantized features (``var_eps`` added to
+    each variance)."""
+    mv = sv / (n * q)
+    mu = su / (n * q)
+    a = (svv / (n * q * q) - mv * mv) + var_eps
+    b = (suu / (n * q * q) - mu * mu) + var_eps
+    c = svu / (n * q * q) - mv * mu
+    return mahalanobis_2x2(v - mv, u - mu, a, b, c)
+
+
+def lsdd2_hinv(e, lam):
+    """``(m11, m12)`` of the 2-center LSDD ``H_λ⁻¹ = 2B − BHB`` with
+    ``H = [[1, e], [e, 1]]`` and ``B = (H + λI)⁻¹``; ``H_λ⁻¹`` is
+    ``[[m11, m12], [m12, m11]]``."""
+    a = 1.0 + lam
+    det = a * a - e * e
+    b11 = a / det
+    b12 = -e / det
+    bh11 = b11 + b12 * e
+    bh12 = b11 * e + b12
+    bhb11 = bh11 * b11 + bh12 * b12
+    bhb12 = bh11 * b12 + bh12 * b11
+    return 2.0 * b11 - bhb11, 2.0 * b12 - bhb12
+
+
+def lsdd2_stat(m11, m12, h1, h2):
+    """LSDD statistic ``h' H_λ⁻¹ h`` for the :func:`lsdd2_hinv` entries."""
+    return m11 * (h1 * h1 + h2 * h2) + 2.0 * m12 * h1 * h2
+
+
+def solve_2x2(c11, c22, c12, r1, r2):
+    """``(x1, x2)`` solving ``[[c11, c12], [c12, c22]]·x = (r1, r2)`` by the
+    adjugate."""
+    det = c11 * c22 - c12 * c12
+    return (c22 * r1 - c12 * r2) / det, (c11 * r2 - c12 * r1) / det
+
+
+def ridge_2x2(m1, m2, my, c11, c22, c12, c1y, c2y, lam):
+    """``(a0, b1, b2)`` of the ridge fit ``y ≈ a0 + b1·f1 + b2·f2`` from the
+    means and centred (co)variances; ``lam`` is added to each variance."""
+    b1, b2 = solve_2x2(c11 + lam, c22 + lam, c12, c1y, c2y)
+    return my - b1 * m1 - b2 * m2, b1, b2
+
+
+def nb2_loglik(v, u, n, sv, svv, su, suu, n_all, var_eps):
+    """Gaussian naive-Bayes ``log P(x, class)`` at ``(v, u)`` from the
+    class's ``n`` rows and sums, with prior ``n / n_all`` (Column only)."""
+    mv = sv / n
+    varv = (svv / n - mv * mv) + var_eps
+    mu = su / n
+    varu = (suu / n - mu * mu) + var_eps
+    return (
+        F.lit(-0.5) * F.log(F.lit(TWO_PI) * varv)
+        - (v - mv) * (v - mv) / (F.lit(2.0) * varv)
+        - F.lit(0.5) * F.log(F.lit(TWO_PI) * varu)
+        - (u - mu) * (u - mu) / (F.lit(2.0) * varu)
+        + F.log(n / n_all)
+    )
 
 
 def check_iforest_size(n_trees: int, depth: int) -> None:

@@ -25,7 +25,7 @@ from ..functions.mmd import OnlineMMD
 from ..functions.sr import sr_score
 from ..schemas import SCORE_SCHEMA
 from ..synth import mix64
-from .closed_form import dec_sum
+from .closed_form import dec_sum, lsdd2_hinv, lsdd2_stat, online_mahalanobis_2x2, rank1_2x2
 
 
 def source_seed(source: str, base_seed: int) -> int:
@@ -398,8 +398,8 @@ def ssa_outlier_hash_over(
     instance of the OutlierSeq2Seq analog (``alibi_detect/od/seq2seq.py:
     15-330``; general-window seeded variant :func:`ssa_outlier_over`). With
     lag window L=2 the trajectory Gram matrix is 2×2, so the principal
-    direction is CLOSED FORM (the ``pca_outlier_2feat`` eigen recipe on
-    uncentered moments), the rank-1 window reconstruction is column math,
+    direction is CLOSED FORM (:func:`.closed_form.rank1_2x2` on uncentered
+    moments), the rank-1 window reconstruction is column math,
     and the Hankel diagonal average of each timestep's ≤2 window
     reconstructions is a ``lag`` window expression. Score = ``(x − x̂)²``
     per timestep (``od/seq2seq.py:199 feature_score``).
@@ -425,15 +425,8 @@ def ssa_outlier_hash_over(
         (F.col("sbb") / F.col("n")).alias("b"),
         (F.col("sab") / F.col("n")).alias("c"),
     )
-    lamp = (F.col("a") + F.col("b") + F.sqrt(
-        (F.col("a") - F.col("b")) * (F.col("a") - F.col("b")) + F.lit(4.0) * F.col("c") * F.col("c")
-    )) / F.lit(2.0)
-    par = mo.select(
-        key,
-        F.col("c").alias("w1"),
-        (lamp - F.col("a")).alias("w2"),
-        (F.col("c") * F.col("c") + (lamp - F.col("a")) * (lamp - F.col("a"))).alias("nrm2"),
-    )
+    w1, w2, nrm2 = rank1_2x2()
+    par = mo.select(key, w1.alias("w1"), w2.alias("w2"), nrm2.alias("nrm2"))
     j = base.join(F.broadcast(par), key)
     # rank-1 reconstruction of window t = (x_t, x_{t+1}); Hankelize: element
     # t averages its own window's first component and the previous window's
@@ -472,7 +465,8 @@ def lsdd_online_stats_over(
     (per-step LSDD between the reference and a FIFO test window), built from
     the same pinned-fit choices as :func:`~.drift.lsdd_perm_test_hash`:
     centers = first two reference rows per key, fixed σ and λ, closed-form
-    2×2 ``H_λ⁻¹ = 2B − BHB``. The per-step statistic is
+    2×2 ``H_λ⁻¹ = 2B − BHB`` (:func:`.closed_form.lsdd2_hinv`, shared with
+    the streaming twin and the perm test). The per-step statistic is
     ``h' H_λ⁻¹ h`` with ``h = mean_ref(φ) − mean_window(φ)``, the reference's
     estimator structure (``utils/pytorch/distance.py:152-243``) on the
     deterministic feature map. The seeded bootstrap detector with thresholds
@@ -486,7 +480,6 @@ def lsdd_online_stats_over(
     only shuffle is the per-key ordering the semantics require."""
     two_sig2 = 2.0 * sigma * sigma
     four_sig2 = 4.0 * sigma * sigma
-    a = 1.0 + lam
     w0 = Window.partitionBy(key).orderBy(order_col)
     base = df.select(
         F.col(key), F.col(order_col), F.col(value).cast("double").alias("v")
@@ -516,29 +509,14 @@ def lsdd_online_stats_over(
         )
         .where(F.col("rn") >= n_ref + window_size)
     )
-    # closed-form H_λ⁻¹ per key (CTE-layered so the oracle mirrors each step)
-    mm = (
-        cen.withColumn(
-            "e",
-            F.exp(-((F.col("c1") - F.col("c2")) * (F.col("c1") - F.col("c2"))) / F.lit(four_sig2)),
-        )
-        .withColumn("det", F.lit(a * a) - F.col("e") * F.col("e"))
-        .withColumn("b11", F.lit(a) / F.col("det"))
-        .withColumn("b12", (-F.col("e")) / F.col("det"))
-        .withColumn("bh11", F.col("b11") + F.col("b12") * F.col("e"))
-        .withColumn("bh12", F.col("b11") * F.col("e") + F.col("b12"))
-        .withColumn("bhb11", F.col("bh11") * F.col("b11") + F.col("bh12") * F.col("b12"))
-        .withColumn("bhb12", F.col("bh11") * F.col("b12") + F.col("bh12") * F.col("b11"))
-        .select(
-            key,
-            (F.lit(2.0) * F.col("b11") - F.col("bhb11")).alias("m11"),
-            (F.lit(2.0) * F.col("b12") - F.col("bhb12")).alias("m12"),
-        )
-    )
+    # closed-form H_λ⁻¹ per key
+    e = F.exp(-((F.col("c1") - F.col("c2")) * (F.col("c1") - F.col("c2"))) / F.lit(four_sig2))
+    m11, m12 = lsdd2_hinv(e, lam)
+    mm = cen.select(key, m11.alias("m11"), m12.alias("m12"))
     j = strm.join(F.broadcast(refs), key).join(F.broadcast(mm), key)
     h1 = F.col("sr1") / F.lit(n_ref * float(quant)) - F.col("w1") / F.lit(window_size * float(quant))
     h2 = F.col("sr2") / F.lit(n_ref * float(quant)) - F.col("w2") / F.lit(window_size * float(quant))
-    stat = F.col("m11") * (h1 * h1 + h2 * h2) + F.lit(2.0) * F.col("m12") * h1 * h2
+    stat = lsdd2_stat(F.col("m11"), F.col("m12"), h1, h2)
     return j.select(
         key, order_col, (F.round(stat, 9) + F.lit(0.0)).alias("lsdd_stat")
     )
@@ -560,10 +538,11 @@ def mahalanobis_online_stats_over(
     instances is exactly the prefix moments of the ordered stream, so the
     whole recursion collapses to EXCLUSIVE cumulative window sums — no
     sequential loop, no UDF. Features are quantized to integers so every
-    prefix sum is exact and order-free; the 2×2 covariance inverse is closed
-    form. The reference's PCA projection (``n_components``) and categorical
-    embedding live in the seeded ``mahalanobis_online_over`` variant
-    (rows-only, pytest-covered).
+    prefix sum is exact and order-free; the 2×2 covariance inverse is the
+    closed form :func:`.closed_form.online_mahalanobis_2x2`, shared with the
+    streaming twin. The reference's PCA projection (``n_components``) and
+    categorical embedding live in the seeded ``mahalanobis_online_over``
+    variant (rows-only, pytest-covered).
 
     Scale shape: one per-key ordered window pass (the only shuffle), then
     whole-stage-codegen column math."""
@@ -596,15 +575,8 @@ def mahalanobis_online_stats_over(
         cum(F.col("vq") * F.col("uq")).alias("svu"),
     ).where(F.col("rn") > warmup)
     n = (F.col("rn") - F.lit(1)).cast("double")
-    mv = F.col("sv") / (n * q)
-    mu = F.col("su") / (n * q)
-    a = (F.col("svv") / (n * q * q) - mv * mv) + var_eps
-    b = (F.col("suu") / (n * q * q) - mu * mu) + var_eps
-    c = F.col("svu") / (n * q * q) - mv * mu
-    det = a * b - c * c
-    dx = F.col("v") - mv
-    dy = F.col("u") - mu
-    d2 = (b * dx * dx - F.lit(2.0) * c * dx * dy + a * dy * dy) / det
+    cols = map(F.col, ("sv", "svv", "su", "suu", "svu", "v", "u"))
+    d2 = online_mahalanobis_2x2(n, *cols, q, var_eps)
     return pre.select(
         key, order_col, (F.round(d2, 6) + F.lit(0.0)).alias("maha_score")
     )

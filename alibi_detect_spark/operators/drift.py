@@ -52,7 +52,9 @@ from ..functions.context_mmd import context_mmd_2samp
 from ..functions.fet import hypergeom_sf_ge
 from ..functions.lsdd import lsdd_2samp
 from ..functions.perturbation import mmd2_unbiased, permutation_test
-from .closed_form import dec_sum, mahalanobis_2x2, moments_2x2, ranked_top_k
+from .closed_form import (
+    dec_sum, lsdd2_hinv, lsdd2_stat, mahalanobis_2x2, moments_2x2, ranked_top_k, ridge_2x2,
+)
 
 KS_SF_TERMS = 100
 
@@ -641,13 +643,22 @@ def mahalanobis_scores(
     accumulated in DECIMAL (exact under any aggregation order, so the fitted
     mean/cov — and therefore every score — is bit-identical between the
     distributed run and the oracle); top-k ordered by the ROUNDED score + ids
-    so ranking is reproducible across engines.
+    so ranking is reproducible across engines. A singular covariance (one
+    row, or all rows on one line) raises a message naming the rule and the
+    row count instead of ANSI's bare ``DIVIDE_BY_ZERO``.
     """
     x, y = cols
     j = df.crossJoin(F.broadcast(moments_2x2(df, x, y)))
     dx = F.col(x).cast("double") - F.col("mx")
     dy = F.col(y).cast("double") - F.col("my")
-    scored = j.select(*id_cols, F.round(mahalanobis_2x2(dx, dy), 6).alias("maha_score"))
+    a, b, c = F.col("a"), F.col("b"), F.col("c")
+    msg = F.format_string(
+        f"mahalanobis_scores: singular 2x2 covariance of ({x}, {y}) over %d row(s); "
+        "the closed-form inverse needs a*b - c*c != 0",
+        F.col("n").cast("long"),
+    )
+    score = F.when(a * b == c * c, F.raise_error(msg)).otherwise(mahalanobis_2x2(dx, dy, a, b, c))
+    scored = j.select(*id_cols, F.round(score, 6).alias("maha_score"))
     return ranked_top_k(scored, "maha_score", id_cols, top_k)
 
 
@@ -849,7 +860,8 @@ def learned_kernel_drift_hash(
       kernel matrix).
 
     Everything is a closed-form function of the data → hash-checkable
-    against the DuckDB oracle (scalar arithmetic mirrored term-for-term)."""
+    against the DuckDB oracle (the ridge solve is the shared
+    :func:`.closed_form.ridge_2x2`, mirrored term-for-term)."""
     two_sig2 = 2.0 * sigma * sigma
     one_m_eps = 1.0 - eps_mix
 
@@ -878,10 +890,7 @@ def learned_kernel_drift_hash(
         c12 = float((f1 * f2).sum()) / gn - m1 * m2
         c1y = float((f1 * yt).sum()) / gn - m1 * my
         c2y = float((f2 * yt).sum()) / gn - m2 * my
-        det = (c11 + lam) * (c22 + lam) - c12 * c12
-        b1 = ((c22 + lam) * c1y - c12 * c2y) / det
-        b2 = ((c11 + lam) * c2y - c12 * c1y) / det
-        a0 = my - b1 * m1 - b2 * m2
+        a0, b1, b2 = ridge_2x2(m1, m2, my, c11, c22, c12, c1y, c2y, lam)
 
         vh = v[ho]
         h1, h2 = phi(vh)
@@ -935,8 +944,9 @@ def lsdd_perm_test_hash(
 
     The reference-faithful seeded variant (median heuristic, λ search,
     RNG permutations) is :func:`lsdd_perm_test`, pytest-covered.
-    All quadratic-form arithmetic is spelled out scalar-by-scalar (no
-    np.linalg) so the oracle's SQL evaluates the identical expression tree.
+    The quadratic form is the shared scalar chain
+    :func:`.closed_form.lsdd2_hinv` / :func:`.closed_form.lsdd2_stat` (no
+    np.linalg), whose expression tree the oracle's SQL evaluates.
     """
     two_sig2 = 2.0 * sigma * sigma
     four_sig2 = 4.0 * sigma * sigma  # (√2·σ)² · 2
@@ -949,23 +959,13 @@ def lsdd_perm_test_hash(
         c1, c2 = map(float, v[obs][:2])  # ref rows rn = 1, 2
         k1 = np.exp(-((v - c1) ** 2) / two_sig2)
         k2 = np.exp(-((v - c2) ** 2) / two_sig2)
-        # H = k_{√2σ}(centers, centers) = [[1, e], [e, 1]];
-        # B = (H+λI)⁻¹ and H_λ⁻¹ = 2B − BHB, all closed-form scalars
-        e = float(np.exp(-((c1 - c2) ** 2) / four_sig2))
-        a = 1.0 + lam
-        det = a * a - e * e
-        b11, b12 = a / det, -e / det
-        bh11 = b11 + b12 * e
-        bh12 = b11 * e + b12
-        bhb11 = bh11 * b11 + bh12 * b12
-        bhb12 = bh11 * b12 + bh12 * b11
-        m11 = 2.0 * b11 - bhb11
-        m12 = 2.0 * b12 - bhb12
+        # H = k_{√2σ}(centers, centers) = [[1, e], [e, 1]]
+        m11, m12 = lsdd2_hinv(float(np.exp(-((c1 - c2) ** 2) / four_sig2)), lam)
 
         def lsdd(x_mask: np.ndarray) -> float:
             h1 = float(k1[x_mask].sum() / n - k1[~x_mask].sum() / m)
             h2 = float(k2[x_mask].sum() / n - k2[~x_mask].sum() / m)
-            return m11 * (h1 * h1 + h2 * h2) + 2.0 * m12 * h1 * h2
+            return lsdd2_stat(m11, m12, h1, h2)
 
         return _perm_row(lsdd, obs, gid, n_permutations, "lsdd_perm_test_hash")
 

@@ -30,13 +30,9 @@ parameter relation, whole-stage-codegen scoring, and a
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame, functions as F
 
-from .closed_form import ranked_top_k
-
-_TWO_PI = 2.0 * math.pi
+from .closed_form import TWO_PI, ranked_top_k
 
 
 def _mutate(id_col: str, tag: str, col, vmin, vmax, rate_pct: int, quant: float = 1e6):
@@ -102,7 +98,7 @@ def llr_outlier_2feat(
         m = F.col(f"s_{fit}") / F.col("n")
         var = (F.col(f"ss_{fit}") / F.col("n") - m * m) + var_eps
         d = F.col(raw) - m
-        return F.lit(0.5) * F.log(F.lit(_TWO_PI) * var) + d * d / (F.lit(2.0) * var)
+        return F.lit(0.5) * F.log(F.lit(TWO_PI) * var) + d * d / (F.lit(2.0) * var)
 
     # -(log p_s - log p_b) per feature = neg_ll(semantic) - neg_ll(background)
     f0 = neg_ll("v", "v") - neg_ll("v", "vb")

@@ -170,7 +170,9 @@ def pca_outlier_2feat(
     ``(c, λ−−a)``, so the whole detector is whole-stage-codegen column math:
     one partial+final DECIMAL moment aggregate (exact under any order), one
     broadcast join, no UDF. The d-dimensional eigendecomposition variant is
-    :func:`pca_outlier_scores`."""
+    :func:`pca_outlier_scores`. A zero minor direction (one row, or a
+    constant first feature) raises a message naming the rule and the row
+    count instead of ANSI's bare ``DIVIDE_BY_ZERO``."""
     x, y = cols
     j = df.crossJoin(F.broadcast(moments_2x2(df, x, y)))
     disc, _ = eig_2x2()
@@ -179,7 +181,13 @@ def pca_outlier_2feat(
     dx = F.col(x).cast("double") - F.col("mx")
     dy = F.col(y).cast("double") - F.col("my")
     proj = dx * v1 + dy * v2
-    score = (proj * proj) / (v1 * v1 + v2 * v2)
+    nrm2 = v1 * v1 + v2 * v2
+    msg = F.format_string(
+        f"pca_outlier_2feat: zero minor direction (c, lambda_min - a) of the 2x2 "
+        f"covariance of ({x}, {y}) over %d row(s); the score divides by its norm",
+        F.col("n").cast("long"),
+    )
+    score = F.when(nrm2 == 0, F.raise_error(msg)).otherwise((proj * proj) / nrm2)
     scored = j.select(*id_cols, F.round(score, 6).alias("pca2_score"))
     return ranked_top_k(scored, "pca2_score", id_cols, top_k)
 
@@ -1251,7 +1259,7 @@ def mahalanobis_cat_scores(
     j = feat.crossJoin(F.broadcast(moments_2x2(feat, "x0", "x1", x_cast="decimal(18,8)")))
     dx = F.col("x0").cast("double") - F.col("mx")
     dy = F.col("x1").cast("double") - F.col("my")
-    score = mahalanobis_2x2(dx, dy)
+    score = mahalanobis_2x2(dx, dy, F.col("a"), F.col("b"), F.col("c"))
     return j.select(id_col, (F.round(score, 6) + F.lit(0.0)).alias("maha_cat"))
 
 

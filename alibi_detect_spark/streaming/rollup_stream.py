@@ -32,6 +32,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..operators.closed_form import lsdd2_hinv, lsdd2_stat, online_mahalanobis_2x2
 from ..operators.rollup import tier_aggs
 from ..schemas import TIER_SECONDS
 
@@ -334,8 +335,8 @@ def mahalanobis_stream(
     high-water timestamp: because the online state collapses to prefix sums,
     the state store holds no window buffer at all, and the stream reproduces
     the batch trajectory bit-for-bit under any micro-batch slicing (the
-    moments are exact integers, the scalar math is the identical IEEE
-    expression tree)."""
+    moments are exact integers, and the scalar math is the batch operator's
+    own chain, :func:`..operators.closed_form.online_mahalanobis_2x2`)."""
     vcol, ucol = value_cols
     q = float(quant)
 
@@ -365,15 +366,7 @@ def mahalanobis_stream(
         cond = cn >= warmup
         with np.errstate(divide="ignore", invalid="ignore"):
             nn = cn.astype(np.float64)
-            mv = csv / (nn * q)
-            mu = csu / (nn * q)
-            a = (csvv / (nn * q * q) - mv * mv) + var_eps
-            b = (csuu / (nn * q * q) - mu * mu) + var_eps
-            c = csvu / (nn * q * q) - mv * mu
-            det = a * b - c * c
-            dx = v - mv
-            dy = u - mu
-            d2 = (b * dx * dx - 2.0 * c * dx * dy + a * dy * dy) / det
+            d2 = online_mahalanobis_2x2(nn, csv, csvv, csu, csuu, csvu, v, u, q, var_eps)
         sc = np.round(d2, 6) + 0.0
         n0 = int(n0 + len(v))
         sv = int(csv_i[-1] + pv[-1])
@@ -422,9 +415,10 @@ def lsdd_hash_stream(
     exact integer reference sums, the last ``window_size − 1`` quantized
     kernel features, and (during the first two rows only) the pending raw
     values the centers are derived from. Because every sum is an exact
-    integer and the scalar chain mirrors the batch operator's expression
-    tree, the stream reproduces the batch trajectory bit-for-bit under any
-    micro-batch slicing.
+    integer and the scalar chain is the batch operator's own
+    (:func:`..operators.closed_form.lsdd2_hinv`, ``lsdd2_stat``), the stream
+    reproduces the batch trajectory bit-for-bit under any micro-batch
+    slicing.
 
     With ``decision_thresholds`` (e.g.
     ``functions.online_thresholds.lsdd2_decision_thresholds()``) the stream
@@ -448,7 +442,6 @@ def lsdd_hash_stream(
         )
     two_sig2 = 2.0 * sigma * sigma
     four_sig2 = 4.0 * sigma * sigma
-    a = 1.0 + lam
     keep = window_size - 1
 
     def step(_, rows, carry):
@@ -490,19 +483,10 @@ def lsdd_hash_stream(
                 i = idx[full]
                 w1 = (cs1[i + 1] - cs1[i + 1 - window_size]).astype(np.float64)
                 w2 = (cs2[i + 1] - cs2[i + 1 - window_size]).astype(np.float64)
-                e = float(np.exp(-((c1 - c2) * (c1 - c2)) / four_sig2))
-                det = (a * a) - e * e
-                b11 = a / det
-                b12 = (-e) / det
-                bh11 = b11 + b12 * e
-                bh12 = b11 * e + b12
-                bhb11 = bh11 * b11 + bh12 * b12
-                bhb12 = bh11 * b12 + bh12 * b11
-                m11 = 2.0 * b11 - bhb11
-                m12 = 2.0 * b12 - bhb12
+                m11, m12 = lsdd2_hinv(float(np.exp(-((c1 - c2) * (c1 - c2)) / four_sig2)), lam)
                 hh1 = sr1 / (n_ref * float(quant)) - w1 / (window_size * float(quant))
                 hh2 = sr2 / (n_ref * float(quant)) - w2 / (window_size * float(quant))
-                stat = m11 * (hh1 * hh1 + hh2 * hh2) + 2.0 * m12 * hh1 * hh2
+                stat = lsdd2_stat(m11, m12, hh1, hh2)
                 cols = {"bucket_ts": ts[sm][full], "lsdd_stat": np.round(stat, 9) + 0.0}
                 if decision_thresholds is not None:
                     # 1-based step since the first full window, from the

@@ -1,10 +1,12 @@
 """Outlier-family operators (``operators/outlier.py``, ``adversarial.py``,
 ``llr.py``, ``drift.mahalanobis_scores``): partition invariance of every
 2-feature closed form built on the shared :mod:`.closed_form` blocks, and
-the fail-fast guards of the embedding-width operators."""
+the fail-fast guards of the 2×2 closed forms and of the embedding-width
+operators."""
 
 import numpy as np
 import pytest
+from pyspark.errors import SparkRuntimeException
 
 from alibi_detect_spark.operators import drift, llr, outlier
 
@@ -42,6 +44,23 @@ def test_2feat_partitioning_invariance(spark, name):
     a = sorted(map(tuple, _TWO_FEAT[name](df.repartition(1)).collect()))
     b = sorted(map(tuple, _TWO_FEAT[name](df.repartition(16, "v")).collect()))
     assert a == b
+
+
+_DEGENERATE_RULE = {
+    "mahalanobis_scores": r"singular 2x2 covariance",
+    "pca_outlier_2feat": r"zero minor direction \(c, lambda_min - a\) of the 2x2 covariance",
+}
+
+
+@pytest.mark.parametrize("name", sorted(_DEGENERATE_RULE))
+def test_2x2_closed_forms_name_a_degenerate_fit(spark, name):
+    """One row has a zero covariance: the operator fails from its final
+    select naming itself, the rule and the row count, not with ANSI's bare
+    ``DIVIDE_BY_ZERO``."""
+    df = spark.createDataFrame([(0, 50.0, 20.0)], "event_id long, v double, u double")
+    msg = rf"\[USER_RAISED_EXCEPTION\] {name}: {_DEGENERATE_RULE[name]} of \(v, u\) over 1 row\(s\)"
+    with pytest.raises(SparkRuntimeException, match=msg):
+        _TWO_FEAT[name](df).collect()
 
 
 def _emb(spark, vecs):

@@ -569,14 +569,24 @@ def main() -> None:
         )
 
     # 7. dedup minhash: signature agg is partial+final (no raw-shingle shuffle
-    #    of text), candidate join is an equi-join
+    #    of text), candidate join is an equi-join. The signatures are
+    #    checkpointed, so their aggregate shows only in the captured sub-plans
+    with checkpointed_plans(spark) as minhash_parts:
+        minhash = qs["dedup_minhash_lsh"](spark, SF)
     audit(
         "dedup_minhash_lsh",
-        qs["dedup_minhash_lsh"](spark, SF),
+        minhash,
         requires=["HashAggregate"],
         forbids=["CartesianProduct"],
+        checks={
+            "a checkpointed sub-plan holds the signature aggregate's `partial_min`": any(
+                "partial_min(" in part for part in minhash_parts
+            )
+        },
         note="MinHash signatures come from a hash-aggregate over the exploded "
-        "shingle relation (partial min map-side); LSH candidates join on "
+        "shingle relation (partial min map-side; the signatures are "
+        "checkpointed, so the final plan scans them as ExistingRDD and the "
+        "check reads the captured sub-plan); LSH candidates join on "
         "(band_id, band_key) — equi-join only, never a cross join.",
     )
 
@@ -629,8 +639,8 @@ def main() -> None:
     )
 
     # 8. LSH band-key skew defense: the hot-boilerplate-bucket mitigation
-    #    named in dedup.py:218-233 is AQE skew-join splitting — assert the
-    #    engine session actually arms it (at sf0.01 the band join compiles to
+    #    of the band join (dedup._band_pairs) is AQE skew-join splitting —
+    #    assert the engine session actually arms it (at sf0.01 the band join compiles to
     #    a broadcast, the correct small-side shape; at 100 TB it becomes a
     #    sort-merge join that AQE splits on skewed band keys, which only
     #    happens if these flags are on in the load-bearing session config)
@@ -644,7 +654,7 @@ def main() -> None:
         skew_checks.append(f"  - REQUIRE session `{conf_key}=true`: {'OK' if ok else 'MISSING'}")
         if not ok:
             failures.append(f"minhash skew defense: {conf_key} != true")
-    p = plan_of(qs["dedup_minhash_lsh"](spark, SF))
+    p = plan_of(minhash)
     bcast_ok = "BroadcastHashJoin" in p and "CartesianProduct" not in p
     skew_checks.append(
         "  - REQUIRE band-candidate join is broadcast at this SF (small side "
@@ -655,8 +665,8 @@ def main() -> None:
     sections.append(
         "## LSH band-key skew defense (dedup_minhash_lsh)\n\n"
         "Hot boilerplate text concentrates candidate pairs on a few band "
-        "keys (dedup.py:218-233). The named mitigation is AQE skew-join "
-        "splitting on the band-key shuffle: these checks pin the session "
+        "keys of the band join (dedup._band_pairs). The named mitigation is "
+        "AQE skew-join splitting on the band-key shuffle: these checks pin the session "
         "flags that arm it, plus the small-SF join shape.\n\nChecks:\n"
         + "\n".join(skew_checks) + "\n"
     )
