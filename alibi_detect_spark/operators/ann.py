@@ -15,7 +15,10 @@ DuckDB oracle even though matmul and a sequential fold differ in the last
 ulps (absorbed by the rounding). The k-NN scans here and LOF in
 :mod:`.outlier` share that contract as one block each: the collected
 reference set (:func:`_ref_set`), the rounded distance matrix
-(:func:`_ref_dists`) and the neighbour order (:func:`_nn_order`).
+(:func:`_ref_dists`), the neighbour order (:func:`_nn_order`) and the k
+nearest neighbours with the row itself excluded (:func:`_knn`). The
+ensemble's p-values are counted inside the scan against the fitted
+reference scores, which the driver computes once with the same block.
 """
 
 from __future__ import annotations
@@ -38,11 +41,17 @@ def _collect_matrix(emb: DataFrame, pred, id_col: str, extra: list[str] | None =
     return pdf, ids, m
 
 
-def _ref_set(emb: DataFrame, pred, id_col: str):
+def _ref_set(emb: DataFrame, pred, id_col: str, op: str, k: int):
     """The collected reference set of the k-NN scans: ``(ref_ids, r, r2)``,
     ``r2`` being the squared row norms that :func:`_ref_dists` reuses for
-    every batch."""
+    every batch. ``op`` needs ``k`` neighbours of every reference row besides
+    the row itself; a smaller set is named here, on the driver."""
     _, ref_ids, r = _collect_matrix(emb, pred, id_col)
+    if len(ref_ids) < k + 1:
+        raise ValueError(
+            f"{op}: the reference set needs n_ref >= max(k) + 1 = {k + 1} rows (a "
+            f"reference row's own distance is excluded), got n_ref = {len(ref_ids)}"
+        )
     return ref_ids, r, np.einsum("ij,ij->i", r, r)
 
 
@@ -59,6 +68,17 @@ def _nn_order(d: np.ndarray, ref_ids: np.ndarray) -> np.ndarray:
     """Column indices of each row of ``d`` from nearest to farthest, ties
     broken by ref id."""
     return np.lexsort((np.broadcast_to(ref_ids, d.shape), d), axis=-1)
+
+
+def _knn(x: np.ndarray, ids: np.ndarray, ref, k: int):
+    """The ``k`` nearest rows of the reference set ``ref`` (:func:`_ref_set`)
+    to each row of ``x``, the row itself excluded: ``(idx, dist)``, both
+    ``[len(x) × k]``, nearest first."""
+    ref_ids, r, r2 = ref
+    d = _ref_dists(x, r, r2)
+    d[ids[:, None] == ref_ids[None, :]] = np.inf  # exclude self
+    idx = _nn_order(d, ref_ids)[:, :k]
+    return idx, d[np.arange(len(x))[:, None], idx]
 
 
 def score_scan(emb: DataFrame, id_col: str, score_col: str, score) -> DataFrame:
@@ -90,9 +110,16 @@ def knn_ensemble_scores(
     neighbour per k, ShiftAndScaleNormalizer (``ensemble.py:118``) from
     EXACT decimal moments of the rounded distances (bit-stable across
     engines), and Avg/Max/Min/TopK aggregators (``:157-248``) as column math.
+    PValNormalizer (``ensemble.py:78-117``) is fitted like the reference's:
+    the reference rows' own k-th distances are computed once on the driver,
+    and the scan counts each row's p-value against them.
     One corpus scan + one tiny broadcast of the global moments."""
-    ref_ids, r, r2 = _ref_set(emb, ref_pred, id_col)
-    kmax = max(ks)
+    ref = _ref_set(emb, ref_pred, id_col, "knn_ensemble_scores", max(ks))
+    ref_ids, r, _ = ref
+    n_ref = len(ref_ids)
+    # the fitted PValNormalizer: each reference row's own scores, sorted per k
+    ref_top = _knn(r, ref_ids, ref, max(ks))[1]
+    ref_scores = {k: np.sort(ref_top[:, k - 1]) for k in ks}
 
     def fn(batches):
         for pdf in batches:
@@ -100,21 +127,21 @@ def knn_ensemble_scores(
                 continue
             x = np.stack(pdf[EMB_COL].to_numpy()).astype(np.float64)
             ids = pdf[id_col].to_numpy()
-            d = _ref_dists(x, r, r2)
-            d[ids[:, None] == ref_ids[None, :]] = np.inf
-            order = _nn_order(d, ref_ids)
+            top = _knn(x, ids, ref, max(ks))[1]
             rows = {"vec_id": ids}
-            top = d[np.arange(len(ids))[:, None], order[:, :kmax]]
             for k in ks:
                 rows[f"d{k}"] = top[:, k - 1]
+                # 1 − (1 + #{ref score > s}) / (n_ref + 1), exact integer counts
+                le = np.searchsorted(ref_scores[k], rows[f"d{k}"], side="right")
+                rows[f"p{k}"] = 1.0 - (1.0 + (n_ref - le)) / (n_ref + 1.0)
             yield pd.DataFrame(rows)
 
-    # materialize the (id, d3, d5, d7) relation once (lazy checkpoint: no
-    # extra build job, blocks freed on GC of the result): it feeds the
-    # moment aggregate, the normalized scores, AND the two-level ECDF —
-    # without this the Arrow/python distance stage re-executes per branch
+    # materialize the (id, d*, p*) relation once (lazy checkpoint: no extra
+    # build job, blocks freed on GC of the result): it feeds both the moment
+    # aggregate and the normalized scores — without this the Arrow/python
+    # distance stage re-executes per branch
     dists = emb.select(id_col, EMB_COL).mapInPandas(
-        fn, schema="vec_id long, " + ", ".join(f"d{k} double" for k in ks)
+        fn, schema="vec_id long, " + ", ".join(f"d{k} double, p{k} double" for k in ks)
     ).localCheckpoint(eager=False)
     # ShiftAndScaleNormalizer moments from exact decimal sums (order-free)
     n = F.count(F.lit(1)).cast("double")
@@ -131,75 +158,23 @@ def knn_ensemble_scores(
         mean = F.col(f"s{k}") / F.col("n")
         std = F.sqrt(F.col(f"ss{k}") / F.col("n") - mean * mean)
         sel.append(((F.col(f"d{k}") - mean) / std).alias(f"n{k}"))
-    normed = dists.crossJoin(F.broadcast(stats)).select("vec_id", *sel)
+    normed = dists.crossJoin(F.broadcast(stats)).select(
+        "vec_id", *sel, *[f"p{k}" for k in ks]
+    )
     nsum = sum((F.col(f"n{k}") for k in ks[1:]), F.col(f"n{ks[0]}"))
     nmin = F.least(*[F.col(f"n{k}") for k in ks])
     nmax = F.greatest(*[F.col(f"n{k}") for k in ks])
-    scored = normed.select(
+    psum = sum((F.col(f"p{k}") for k in ks[1:]), F.col(f"p{ks[0]}"))
+    return normed.select(
         "vec_id",
         (F.round(nsum / len(ks), 5) + F.lit(0.0)).alias("avg_score"),
         (F.round(nmax, 5) + F.lit(0.0)).alias("max_score"),
         (F.round(nmin, 5) + F.lit(0.0)).alias("min_score"),
         # TopKAggregator(k=2) over |ks|=3 normalized scores = mean of all-but-min
         (F.round((nsum - nmin) / (len(ks) - 1), 5) + F.lit(0.0)).alias("top2_score"),
+        # PValNormalizer, Avg-aggregated
+        (F.round(psum / len(ks), 6) + F.lit(0.0)).alias("pval_avg_score"),
     )
-
-    # PValNormalizer (ensemble.py:78-117): per k, 1 − (1 + #{ref score > s})
-    # / (n_ref + 1), then Avg-aggregated. Relational ECDF over the rounded
-    # distances: the strictly-greater ref count for a row with score s is
-    # n_ref − cum_ref(s). The cumulative sum is TWO-LEVEL (coarse distance
-    # buckets → prefix over the tiny bucket relation → within-bucket window)
-    # so no per-k partition ever holds the full distinct-value set — the
-    # shape that survives 100 TB, unlike a flat per-k ordered window.
-    ref_rel = F.broadcast(emb.where(ref_pred).select(F.col(id_col).alias("__rid")))
-    stack_expr = "stack({}, {}) as (kk, dv)".format(
-        len(ks), ", ".join(f"'{k}', d{k}" for k in ks)
-    )
-    long = (
-        dists.join(ref_rel, dists[id_col] == F.col("__rid"), "left")
-        .select(id_col, F.col("__rid").isNotNull().alias("is_ref"), F.expr(stack_expr))
-    )
-    # bucket at 1e-4 granularity: distances are rounded to 6dp, so a bucket
-    # holds <= 100 distinct values while the bucket relation stays tiny
-    # relative to the corpus (unit-norm embeddings put every distance in
-    # [0, 2] — a coarser floor(dv) would collapse to ONE bucket and
-    # single-task the cumulative again). The bucket width only shapes the
-    # execution; the cumulative sums are identical under any bucketing.
-    g = (
-        long.groupBy("kk", "dv")
-        .agg(F.sum(F.col("is_ref").cast("long")).alias("c_ref"))
-        .withColumn("bkt", F.floor(F.col("dv") * 10000))
-    )
-    per_b = g.groupBy("kk", "bkt").agg(F.sum("c_ref").alias("cb"))
-    wb = Window.partitionBy("kk").orderBy("bkt").rowsBetween(Window.unboundedPreceding, -1)
-    per_b = per_b.withColumn("cum_prev", F.coalesce(F.sum("cb").over(wb), F.lit(0)))
-    totals = F.broadcast(per_b.groupBy("kk").agg(F.sum("cb").alias("n_ref_k")))
-    wv = Window.partitionBy("kk", "bkt").orderBy("dv").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    gc = (
-        g.join(per_b.select("kk", "bkt", "cum_prev"), ["kk", "bkt"])
-        .withColumn("cum_ref", F.col("cum_prev") + F.sum("c_ref").over(wv))
-        .join(totals, "kk")
-        .select("kk", "dv", "cum_ref", "n_ref_k")
-    )
-    pv = long.join(gc, ["kk", "dv"]).select(
-        id_col,
-        "kk",
-        (
-            F.lit(1.0)
-            - (F.lit(1.0) + (F.col("n_ref_k") - F.col("cum_ref")))
-            / (F.col("n_ref_k") + F.lit(1.0))
-        ).alias("pv"),
-    )
-    pw = pv.groupBy(id_col).agg(
-        *[F.max(F.when(F.col("kk") == str(k), F.col("pv"))).alias(f"p{k}") for k in ks]
-    )
-    psum = sum((F.col(f"p{k}") for k in ks[1:]), F.col(f"p{ks[0]}"))
-    pvals = pw.select(
-        id_col, (F.round(psum / len(ks), 6) + F.lit(0.0)).alias("pval_avg_score")
-    )
-    return scored.join(pvals, "vec_id")
 
 
 def knn_outlier_scores(
@@ -211,14 +186,8 @@ def knn_outlier_scores(
     """KNN outlier score (``od/_knn.py``): Euclidean distance to the k-th
     nearest reference vector. One corpus scan, one [batch × n_ref] matmul per
     Arrow batch, no shuffle at all."""
-    ref_ids, r, r2 = _ref_set(emb, ref_pred, id_col)
-
-    def score(x, ids):
-        d = _ref_dists(x, r, r2)
-        d[ids[:, None] == ref_ids[None, :]] = np.inf  # exclude self
-        return d[np.arange(len(ids)), _nn_order(d, ref_ids)[:, k - 1]]
-
-    return score_scan(emb, id_col, "knn_dist", score)
+    ref = _ref_set(emb, ref_pred, id_col, "knn_outlier_scores", k)
+    return score_scan(emb, id_col, "knn_dist", lambda x, ids: _knn(x, ids, ref, k)[1][:, -1])
 
 
 def _topk_scan(emb: DataFrame, q_ids, qm, q_cells, k: int, id_col: str, cell_col: str | None):

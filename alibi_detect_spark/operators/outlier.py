@@ -4,9 +4,10 @@ once on a reference, then scores each instance. Two plan families:
 - **NumPy fit + corpus scan** (``*_outlier_scores``, rows-only): the
   reference set is collected once (small by alibi-detect's own contract),
   the fit happens in NumPy, and scoring is one :func:`.ann.score_scan`
-  ``mapInPandas`` pass — no shuffle of the corpus. LOF ranks neighbours
-  with the k-NN scans' reference-set, distance and order blocks
-  (:func:`.ann._ref_set`, :func:`.ann._ref_dists`, :func:`.ann._nn_order`).
+  ``mapInPandas`` pass — no shuffle of the corpus. LOF fits with the k-NN
+  scans' reference-set and neighbour blocks (:func:`.ann._ref_set`,
+  :func:`.ann._knn`) and scores with their distance and order blocks
+  (:func:`.ann._ref_dists`, :func:`.ann._nn_order`).
 - **Closed form** (``*_2feat``, ``*_dfeat``, ``*_emb``, hash-checked against
   the DuckDB oracle): exact DECIMAL / quantized-integer moment aggregates,
   driver-side scalar math or broadcast 1-row parameter relations, and
@@ -43,7 +44,7 @@ from ..functions.gmm import GMMOutlier
 from ..functions.iforest import IsolationForest
 from ..functions.mmd import median_heuristic_sigma, rbf_kernel, squared_pairwise_distance
 from ..functions.svm import OneClassSVM
-from .ann import _collect_matrix, _nn_order, _ref_dists, _ref_set, score_scan
+from .ann import _collect_matrix, _knn, _nn_order, _ref_dists, _ref_set, score_scan
 from .closed_form import (
     GAMMA,
     c_of,
@@ -109,16 +110,14 @@ def lof_outlier_scores(
     (``alibi_detect/od/_lof.py:22-213`` semantics: fitted neighbourhood
     statistics on the reference, scores = mean neighbour-lrd / own-lrd).
     Fit is NumPy on the collected reference; scoring is one corpus scan."""
-    ref_ids, r, r2 = _ref_set(emb, ref_pred, id_col)
+    ref = _ref_set(emb, ref_pred, id_col, "lof_outlier_scores", k)
+    ref_ids, r, r2 = ref
     # pairwise within ref (self excluded); distances rounded to 6dp BEFORE
     # neighbour selection, ties broken by ref id — the repo-wide numeric
     # contract that makes the ranking reproducible against the SQL oracle
-    d_rr = _ref_dists(r, r, r2)
-    np.fill_diagonal(d_rr, np.inf)
-    rows = np.arange(r.shape[0])[:, None]
-    nn_idx = _nn_order(d_rr, ref_ids)[:, :k]
-    kdist = d_rr[rows, nn_idx][:, -1]  # k-distance per ref point
-    reach_rr = np.maximum(kdist[nn_idx], d_rr[rows, nn_idx])
+    nn_idx, nn_d = _knn(r, ref_ids, ref, k)
+    kdist = nn_d[:, -1]  # k-distance per ref point
+    reach_rr = np.maximum(kdist[nn_idx], nn_d)
     lrd_ref = 1.0 / (reach_rr.mean(axis=1) + 1e-12)
 
     def score(x, _):
@@ -1237,6 +1236,14 @@ def mahalanobis_cat_scores(
     cats = [r[cat_col] for r in rows]
     counts = [int(r["n_c"]) for r in rows]
     cont = [[int(r[f"b{i}"]) for i in range(4)] for r in rows]
+    # equal bin distributions (exact cross-multiplied counts) put every
+    # pairwise distance at 0: the MDS Gram matrix is 0 and has no direction
+    if all(c[i] * counts[0] == cont[0][i] * n for c, n in zip(cont, counts) for i in range(4)):
+        raise ValueError(
+            f"mahalanobis_cat_scores: every category in {cat_col!r} has the same "
+            f"quartile-bin distribution of {value_col!r}, so all pairwise category "
+            "distances are 0 and there is no distance to embed"
+        )
 
     # 3. pairwise category distances + classical-MDS + standardize
     #    (driver scalar chain, mirrored term-for-term by the SQL twin)

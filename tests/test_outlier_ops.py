@@ -1,14 +1,14 @@
 """Outlier-family operators (``operators/outlier.py``, ``adversarial.py``,
 ``llr.py``, ``drift.mahalanobis_scores``): partition invariance of every
 2-feature closed form built on the shared :mod:`.closed_form` blocks, and
-the fail-fast guards of the 2×2 closed forms and of the embedding-width
-operators."""
+the fail-fast guards of the 2×2 closed forms, of the embedding-width
+operators, of the k-NN reference set and of ``mahalanobis_cat_scores``."""
 
 import numpy as np
 import pytest
 from pyspark.errors import SparkRuntimeException
 
-from alibi_detect_spark.operators import drift, llr, outlier
+from alibi_detect_spark.operators import ann, drift, llr, outlier
 
 
 def _cluster_with_ood(spark, n: int = 2000, n_ood: int = 8, seed: int = 11):
@@ -101,6 +101,43 @@ def test_emb_ops_reject_ragged_and_wrong_width_vectors(spark, fn):
         fn(_emb(spark, vecs), dim=4)
     with pytest.raises(ValueError, match="dim=8 components, but component index 4 is present in 0 of 40"):
         fn(_emb(spark, np.ones((40, 4))), dim=8)
+
+
+_KNN = {
+    "knn_outlier_scores": lambda df, k: ann.knn_outlier_scores(df, _ref3(), k=k),
+    "knn_ensemble_scores": lambda df, k: ann.knn_ensemble_scores(df, _ref3(), ks=(1, k)),
+    "lof_outlier_scores": lambda df, k: outlier.lof_outlier_scores(df, _ref3(), k=k),
+}
+
+
+def _ref3():
+    from pyspark.sql import functions as F
+
+    return F.col("vec_id") % 7 == 0  # ids 0, 7, 14 of 20
+
+
+@pytest.mark.parametrize("name", sorted(_KNN))
+def test_knn_ops_name_a_reference_set_too_small_for_k(spark, name):
+    """Three reference rows hold two neighbours of each reference row
+    besides itself: k = 3 fails on the driver naming the operator, the rule
+    and n_ref (not as infinite distances, NULL scores or a worker
+    ``IndexError``), and k = 2 scores every row finitely."""
+    df = _emb(spark, np.random.default_rng(2).normal(size=(20, 4)))
+    with pytest.raises(ValueError, match=rf"{name}: .*n_ref >= max\(k\) \+ 1 = 4 .*n_ref = 3$"):
+        _KNN[name](df, 3).collect()
+    got = _KNN[name](df, 2).toPandas().drop(columns="vec_id").to_numpy()
+    assert got.shape[0] == 20 and np.isfinite(got).all()
+
+
+def test_mahalanobis_cat_names_a_constant_value_column(spark):
+    """A constant value column puts every category in the same quartile bin:
+    all pairwise category distances are 0, and the operator says so instead
+    of failing in the MDS power method with a bare ``ZeroDivisionError``."""
+    rows = [(i, f"c{i % 3}", 5.0) for i in range(30)]
+    df = spark.createDataFrame(rows, "event_id long, event_type string, value double")
+    msg = r"mahalanobis_cat_scores: every category in 'event_type' has the same quartile-bin"
+    with pytest.raises(ValueError, match=msg):
+        outlier.mahalanobis_cat_scores(df, "event_type", "value")
 
 
 def test_quant_em_callers_agree(spark):

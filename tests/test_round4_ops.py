@@ -22,46 +22,50 @@ def _ref_pval_normalizer(scores: np.ndarray, val_scores: np.ndarray) -> np.ndarr
 
 
 def test_pval_normalizer_matches_reference_formula(spark):
-    rng = np.random.default_rng(7)
-    n, dim = 60, 8
-    vecs = rng.normal(size=(n, dim))
-    pdf = pd.DataFrame(
-        {"vec_id": np.arange(n, dtype=np.int64), "embedding": list(vecs)}
-    )
-    emb = spark.createDataFrame(pdf)
+    """Random-normal embeddings, then integer-valued ones: on the integer
+    lattice many scores tie a reference score exactly, which pins the
+    strictly-greater count ``#{val > s}`` of the reference."""
     from pyspark.sql import functions as F
 
+    rng = np.random.default_rng(7)
+    n, dim = 60, 8
+    normal = rng.normal(size=(n, dim))
+    lattice = rng.integers(-2, 3, size=(n, dim)).astype(np.float64)
     ks = (3, 5, 7)
-    out = (
-        ann.knn_ensemble_scores(emb, F.col("vec_id") % 5 == 0, ks=ks)
-        .toPandas()
-        .sort_values("vec_id")
-        .reset_index(drop=True)
-    )
-
-    # brute-force the k-th NN distances exactly as the operator defines them
     ref_mask = np.arange(n) % 5 == 0
-    r = vecs[ref_mask]
     ref_ids = np.arange(n)[ref_mask]
-    d = np.round(
-        np.sqrt(
-            np.maximum(
-                (vecs**2).sum(1)[:, None] + (r**2).sum(1)[None, :] - 2 * vecs @ r.T,
-                0.0,
-            )
-        ),
-        6,
-    )
-    d[np.arange(n)[:, None] == ref_ids[None, :]] = np.inf
-    ds = np.sort(d, axis=1)
-    scores = np.stack([ds[:, k - 1] for k in ks], axis=1)
-    val_scores = scores[ref_mask]
-    expect = _ref_pval_normalizer(scores, val_scores).mean(axis=1)
+    for vecs in (normal, lattice):
+        pdf = pd.DataFrame({"vec_id": np.arange(n, dtype=np.int64), "embedding": list(vecs)})
+        out = (
+            ann.knn_ensemble_scores(spark.createDataFrame(pdf), F.col("vec_id") % 5 == 0, ks=ks)
+            .toPandas()
+            .sort_values("vec_id")
+            .reset_index(drop=True)
+        )
 
-    got = out["pval_avg_score"].to_numpy()
-    np.testing.assert_allclose(got, np.round(expect, 6), atol=1.5e-6)
-    # outliers (large distances) must map near 1, inliers near the low end
-    assert got.min() < 0.4 and got.max() > 0.9
+        # brute-force the k-th NN distances exactly as the operator defines them
+        r = vecs[ref_mask]
+        d = np.round(
+            np.sqrt(
+                np.maximum(
+                    (vecs**2).sum(1)[:, None] + (r**2).sum(1)[None, :] - 2 * vecs @ r.T,
+                    0.0,
+                )
+            ),
+            6,
+        )
+        d[np.arange(n)[:, None] == ref_ids[None, :]] = np.inf
+        ds = np.sort(d, axis=1)
+        scores = np.stack([ds[:, k - 1] for k in ks], axis=1)
+        val_scores = scores[ref_mask]
+        expect = _ref_pval_normalizer(scores, val_scores).mean(axis=1)
+
+        got = out["pval_avg_score"].to_numpy()
+        np.testing.assert_allclose(got, np.round(expect, 6), atol=1.5e-6)
+        # outliers (large distances) must map near 1, inliers near the low end
+        assert got.min() < 0.4 and got.max() > 0.9
+    tied = (scores[:, None, :] == val_scores[None, :, :]).any(axis=1)
+    assert tied[~ref_mask].mean() > 0.3  # 62 of the 144 non-reference scores
 
 
 def test_decision_thresholds_shapes_and_determinism():

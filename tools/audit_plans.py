@@ -500,26 +500,27 @@ def main() -> None:
         f"({n_scans} scan(s))\n"
     )
 
-    # 6m. knn_ensemble PValNormalizer: two-level bucketed ECDF — the within-
-    #     bucket window must be partitioned (kk, bkt), never a global sort;
-    #     no CartesianProduct anywhere (stats travel via broadcast)
-    df = qs["knn_ensemble"](spark, SF)
-    p = plan_of(df)
-    # r6: the Arrow distance stage is materialized once behind a lazy
-    # localCheckpoint, so the final plan reads it as Scan ExistingRDD
-    ok = "CartesianProduct" not in p and ("MapInPandas" in p or "ExistingRDD" in p)
-    if "Window" in p and "hashpartitioning(kk" not in p and "hashpartitioning(knn" not in p:
-        # the bucketed window must shuffle on (kk, bkt) — a window without a
-        # partition key would single-task the full distinct-value relation
-        ok = ok and "hashpartitioning" in p
-    if not ok:
-        failures.append("knn_ensemble: ECDF window not bucket-partitioned or cartesian present")
-    sections.append(
-        "## knn_ensemble — bucketed p-value ECDF\n\n"
-        "PValNormalizer: distances from the Arrow scan stage; the strictly-"
-        "greater ref count comes from a two-level cumulative sum (bucket "
-        "prefix relation + within-(kk,bkt) window) so no partition holds the "
-        f"full distinct-score set. Check: {'OK' if ok else 'FAIL'}\n"
+    # 6m. knn_ensemble: the p-values are counted in the distance scan against
+    #     the driver-fitted reference scores; the final plan reads the
+    #     checkpointed scan and joins only the broadcast moment aggregate
+    with checkpointed_plans(spark) as knn_parts:
+        df = qs["knn_ensemble"](spark, SF)
+    audit(
+        "knn_ensemble",
+        df,
+        requires=["Scan ExistingRDD"],
+        forbids=["Window", "SortMergeJoin", "CartesianProduct"],
+        checks={
+            "the checkpointed scan is a `MapInPandas` with no `Exchange`": len(knn_parts) == 1
+            and "MapInPandas" in knn_parts[0]
+            and "Exchange" not in knn_parts[0]
+        },
+        note="KNN ensemble: one Arrow scan computes each row's k-th distances "
+        "and its PValNormalizer p-values against the reference scores fitted "
+        "on the driver (checkpointed, so the final plan scans it as "
+        "ExistingRDD and the check reads the captured sub-plan); the "
+        "ShiftAndScale moments are one aggregate broadcast back — no window, "
+        "no shuffle join, and the corpus never shuffles.",
     )
 
     # 6n. round-4 second half: multivariate MMD pair relation must broadcast
