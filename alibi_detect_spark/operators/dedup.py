@@ -5,16 +5,18 @@ web-scale dedup family (exact / MinHash-LSH / SimHash / n-gram Jaccard)
 expressed as declarative DataFrame plans so Catalyst owns the physical
 strategy.
 
-Plan shape (the 100 TB posture): every operator is
+Plan shape (the 100 TB posture): the text operators are
 ``explode → map-side hash → hash-aggregate / equi-join`` — no giant nested
 array expressions, no cross joins, nothing driver-side. Candidate generation
 is always bounded by an LSH bucket or an inverted index; verification joins
-touch candidate pairs only.
+touch candidate pairs only. The embedding path verifies inside the bucket
+itself: one Arrow pass bands the vectors, one exchange gathers each LSH
+bucket and one grouped Arrow pass scores its pairs, with no pair relation
+and no join.
 
-Shared blocks: the three LSH paths (MinHash, embedding random-hyperplane,
-SimHash) generate candidates through one banded self-equi-join,
-:func:`_band_pairs`, whose integer-sketch bands come from
-:func:`_bit_bands`; the exact and MinHash shingle paths verify through one
+Shared blocks: the MinHash and SimHash paths generate candidates through one
+banded self-equi-join, :func:`_band_pairs` (SimHash's bands come from
+:func:`_bit_bands`); the exact and MinHash shingle paths verify through one
 Jaccard tail, :func:`_jaccard_pairs`.
 
 Portability contract: per-shingle/word hashing is md5-based (identical in
@@ -158,9 +160,9 @@ def _jaccard_pairs(common: DataFrame, sizes: DataFrame, threshold: float) -> Dat
 def _band_pairs(
     df: DataFrame, id_col: str, a: str, b: str, bands: list, carry: tuple[str, ...] = ()
 ) -> DataFrame:
-    """LSH candidate pairs, shared by the MinHash, embedding and SimHash
-    paths: one ``(band_id, band_key)`` struct per column of ``bands``,
-    exploded to one row per (id, band), then a self-equi-join on
+    """LSH candidate pairs, shared by the MinHash and SimHash paths: one
+    ``(band_id, band_key)`` struct per column of ``bands``, exploded to one
+    row per (id, band), then a self-equi-join on
     ``(band_id, band_key)`` keeping ``a < b`` — shuffle on the band key
     only, never a cross join. Each ``carry`` column of ``df`` comes through
     as ``<name>_a`` / ``<name>_b``. A pair that shares several bands appears
@@ -431,6 +433,26 @@ def _hyperplanes(dim: int, bits: int = HP_BITS) -> "np.ndarray":
     return g
 
 
+def _pair_blocks(n: int, block: int):
+    """Index arrays ``(ia, ib)`` of every pair ``ia < ib`` of ``range(n)``,
+    row-major, in blocks of fewer than ``2 * block`` pairs: a large bucket
+    never holds all of its pairs at once."""
+    import numpy as np
+
+    ia, ib, size = [], [], 0
+    for i in range(n - 1):
+        for j0 in range(i + 1, n, block):
+            j = np.arange(j0, min(n, j0 + block))
+            ia.append(np.full(j.size, i))
+            ib.append(j)
+            size += j.size
+            if size >= block:
+                yield np.concatenate(ia), np.concatenate(ib)
+                ia, ib, size = [], [], 0
+    if size:
+        yield np.concatenate(ia), np.concatenate(ib)
+
+
 def embedding_near_pairs(
     emb: DataFrame,
     threshold: float = 0.4,
@@ -442,16 +464,39 @@ def embedding_near_pairs(
     (SimHash for vectors): 24 sign bits → 6 bands of 4 bits → candidates
     share ≥1 band → verify exact cosine ≥ threshold.
 
-    At 10^12 vectors the corpus shuffles only (id, band) pairs and candidate
-    verification touches the LSH survivors; recall follows the banding
+    A candidate pair is by definition two vectors in one ``(band_id,
+    band_key)`` bucket, so the candidates are verified inside their bucket
+    and no pair relation is ever built: one Arrow pass emits each vector
+    once per band with its sketch and components, one hash exchange groups
+    the buckets, and one grouped Arrow pass scores each bucket's pairs. A
+    pair sharing several bands is scored only in the lowest of them (its
+    lower band keys differ), so it comes out once without a ``distinct``.
+
+    The cosine is the oracle's fold, ``dot / (|a|·|b|)`` with every sum
+    left-associated from ``0.0`` (``((0 + a₁b₁) + a₂b₂) + …``, DuckDB's
+    ``list_reduce``): IEEE doubles with no fused multiply-add, so NumPy gives
+    the same bits. The 6dp round stays a Spark ``round`` (HALF_UP on the
+    decimal form; NumPy rounds half to even); the grouped pass drops only
+    pairs below ``threshold − 1e-6``, which the round cannot lift to the
+    threshold, and keeps NaN cosines, which Spark orders above every double.
+    A NULL component makes every cosine of its vector NULL, which the filter
+    drops, so such a vector emits no band rows.
+
+    At 10^12 vectors the corpus shuffles each vector once per band and
+    verification touches the LSH buckets only; recall follows the banding
     S-curve (approximate by design — the candidate set is part of the spec
     and is deterministic, so the oracle matches it exactly)."""
     import numpy as np
     import pandas as pd
+    import pyarrow as pa
 
     g = _hyperplanes(dim)
+    width = HP_BITS // HP_BANDS
+    mask = (1 << width) - 1
+    block = 1 << 14  # pairs per NumPy column step
+    cutoff = threshold - 1e-6
 
-    def fn(batches):
+    def sketch(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
@@ -464,51 +509,67 @@ def embedding_near_pairs(
                     f"embedding_near_pairs: every {emb_col} vector must have dim={dim} "
                     f"components, but {id_col} {pdf[id_col].iloc[i]} has {lens[i]}"
                 )
-            x = np.stack(vecs).astype(np.float64)
+            keep = ~pdf["has_null"].to_numpy(bool)
+            x = np.stack(vecs[keep]).astype(np.float64) if keep.any() else np.empty((0, dim))
             bits = (x @ g.T) >= 0.0  # [n, bits]
-            sketch = (bits.astype(np.int64) << np.arange(HP_BITS, dtype=np.int64)[None, :]).sum(axis=1)
-            yield pd.DataFrame({"vec_id": pdf[id_col].to_numpy(), "sketch": sketch})
-
-    # materialize the tiny (id, sketch) relation once — both band sides and
-    # the candidate join reuse it instead of re-running the projection scan
-    # (localCheckpoint: blocks freed on GC of the result, no unpersist debt)
-    sk = spread(
-        emb.select(id_col, emb_col).mapInPandas(fn, schema="vec_id long, sketch long"),
-        "vec_id",
-    ).localCheckpoint()
-    cand = (
-        _band_pairs(sk, "vec_id", "vec_a", "vec_b", _bit_bands("sketch", HP_BITS, HP_BANDS))
-        .select("vec_a", "vec_b")
-        .distinct()
-    )
-    # verify with the SAME fold-order cosine the oracle uses — but as an
-    # explicit left-associated term chain (((0+t₁)+t₂)+…, identical IEEE
-    # association to the F.aggregate fold / DuckDB list_reduce) built by one
-    # F.expr parse: HOF lambdas run in the interpreter, and at ~10⁶ banded
-    # candidate pairs the interpreted 64-step folds cost ~10× the whole
-    # operator. Per-vector norms are precomputed once in the (tiny) vecs
-    # relation — the same doubles the per-pair sqrt(dot(v,v)) produced.
-    def dot_expr(p: str, q: str) -> "F.Column":
-        return F.expr(
-            "0.0D + " + " + ".join(
-                f"element_at({p},{i})*element_at({q},{i})" for i in range(1, dim + 1)
+            sk = (bits.astype(np.int64) << np.arange(HP_BITS, dtype=np.int64)[None, :]).sum(axis=1)
+            yield pd.DataFrame(
+                {
+                    "band_id": np.repeat(np.arange(HP_BANDS, dtype=np.int32), len(sk)),
+                    "band_key": np.concatenate([(sk >> (width * b)) & mask for b in range(HP_BANDS)]),
+                    "vec_id": np.tile(pdf[id_col].to_numpy()[keep], HP_BANDS),
+                    "sketch": np.tile(sk, HP_BANDS),
+                    "v": list(x) * HP_BANDS,
+                }
             )
-        )
 
-    vecs = emb.select(
-        F.col(id_col), F.transform(F.col(emb_col), lambda x: x.cast("double")).alias("v")
-    ).select(F.col(id_col), "v", F.sqrt(dot_expr("v", "v")).alias("nrm"))
-    cos = dot_expr("va", "vb") / (F.col("na") * F.col("nb"))
+    def fold(cols, ia, ib):
+        acc = 0.0
+        for c in cols:
+            acc = acc + c[ia] * c[ib]
+        return acc
+
+    def verify(pdf):
+        pdf = pdf.sort_values("vec_id")
+        ids, sk = pdf["vec_id"].to_numpy(), pdf["sketch"].to_numpy()
+        lower = width * int(pdf["band_id"].iloc[0])
+        cols = np.ascontiguousarray(np.stack(pdf["v"].to_numpy()).T)  # [dim, n]
+        every = np.arange(len(ids))
+        nrm = np.sqrt(fold(cols, every, every))
+        out = []
+        for ia, ib in _pair_blocks(len(ids), block):
+            diff = sk[ia] ^ sk[ib]
+            first = np.ones(len(ia), bool)
+            for sh in range(0, lower, width):
+                first &= ((diff >> sh) & mask) != 0
+            ia, ib = ia[first], ib[first]
+            den = nrm[ia] * nrm[ib]
+            zero = np.flatnonzero(den == 0.0)
+            if zero.size:
+                a, b = ia[zero[0]], ib[zero[0]]
+                z, o = (a, b) if nrm[a] <= nrm[b] else (b, a)
+                raise ValueError(
+                    f"embedding_near_pairs: the cosine is undefined for a zero-norm vector, "
+                    f"but {id_col} {ids[z]} (in a pair with {id_col} {ids[o]}) has norm {nrm[z]}"
+                )
+            c = fold(cols, ia, ib) / den
+            hit = ~(c < cutoff)  # NaN is kept, as Spark orders it above every double
+            # Arrow-backed, as a float64 column would reach Spark with NaN as NULL
+            cos = pd.arrays.ArrowExtensionArray(pa.array(c[hit]))
+            out.append(pd.DataFrame({"vec_a": ids[ia[hit]], "vec_b": ids[ib[hit]], "cosine": cos}))
+        if not out:
+            return pd.DataFrame({"vec_a": ids[:0], "vec_b": ids[:0], "cosine": np.empty(0)})
+        return pd.concat(out)
+
+    has_null = F.size(F.array_compact(emb_col)) < F.size(emb_col)
     return (
-        cand.join(
-            vecs.select(F.col(id_col).alias("vec_a"), F.col("v").alias("va"), F.col("nrm").alias("na")),
-            "vec_a",
+        spread(emb.select(id_col, emb_col, has_null.alias("has_null")), id_col)
+        .mapInPandas(
+            sketch, schema="band_id int, band_key long, vec_id long, sketch long, v array<double>"
         )
-        .join(
-            vecs.select(F.col(id_col).alias("vec_b"), F.col("v").alias("vb"), F.col("nrm").alias("nb")),
-            "vec_b",
-        )
-        .select("vec_a", "vec_b", F.round(cos, 6).alias("cosine"))
+        .groupBy("band_id", "band_key")
+        .applyInPandas(verify, schema="vec_a long, vec_b long, cosine double")
+        .select("vec_a", "vec_b", F.round("cosine", 6).alias("cosine"))
         .where(F.col("cosine") >= threshold)
     )
 

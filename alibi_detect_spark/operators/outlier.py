@@ -1247,16 +1247,28 @@ def mahalanobis_cat_scores(
 
     # 3. pairwise category distances + classical-MDS + standardize
     #    (driver scalar chain, mirrored term-for-term by the SQL twin)
-    if d_type == "abdm":
-        dabs = classical_mds_dabs(abdm_dpair(cont, counts), n_iter=n_iter)
-    elif d_type == "mvdm":
-        dabs = classical_mds_dabs(mvdm_dpair(cont, counts), n_iter=n_iter)
-    else:
-        dabs = combine_abdm_mvdm(
-            classical_mds_dabs(abdm_dpair(cont, counts), n_iter=n_iter),
-            classical_mds_dabs(mvdm_dpair(cont, counts), n_iter=n_iter),
-            w=w,
-        )
+    try:
+        if d_type == "abdm":
+            dabs = classical_mds_dabs(abdm_dpair(cont, counts), n_iter=n_iter)
+        elif d_type == "mvdm":
+            dabs = classical_mds_dabs(mvdm_dpair(cont, counts), n_iter=n_iter)
+        else:
+            dabs = combine_abdm_mvdm(
+                classical_mds_dabs(abdm_dpair(cont, counts), n_iter=n_iter),
+                classical_mds_dabs(mvdm_dpair(cont, counts), n_iter=n_iter),
+                w=w,
+            )
+    except ZeroDivisionError:
+        # whether the deflation cancels exactly depends on the rounding of
+        # the first eigenpair, so no rule on the counts predicts it
+        if len(cats) != 2:
+            raise
+        raise ValueError(
+            f"mahalanobis_cat_scores: {cat_col!r} has two categories, {cats[0]!r} and "
+            f"{cats[1]!r}, so the MDS Gram matrix has rank 1, and for their quartile-bin "
+            "counts the deflated matrix of its second direction is exactly 0: the power "
+            "method has no direction to normalise"
+        ) from None
 
     # 4. cat2num + exact-moment Mahalanobis
     mapping = F.when(F.col(cat_col) == F.lit(cats[0]), F.lit(dabs[0]))

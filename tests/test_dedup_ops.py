@@ -2,6 +2,8 @@
 
 import numpy as np
 import pytest
+from hypothesis import Phase, given, settings
+from hypothesis import strategies as st
 from pyspark.errors import PythonException
 from pyspark.sql import functions as F
 
@@ -107,3 +109,117 @@ def test_embedding_near_pairs_rejects_ragged_and_wrong_width_vectors(spark):
     msg = r"ValueError: embedding_near_pairs: every embedding vector must have dim=64 components, but vec_id \d+ has 32"
     with pytest.raises(PythonException, match=msg):
         dedup.embedding_near_pairs(narrow).collect()
+
+
+def _sketches(x):
+    """The 24-bit random-hyperplane sketch of each row of ``x``."""
+    bits = (x @ dedup._hyperplanes(x.shape[1]).T) >= 0.0
+    return (bits.astype(np.int64) << np.arange(dedup.HP_BITS, dtype=np.int64)).sum(axis=1)
+
+
+def _fold_dot(a, b):
+    """Row-wise dot product as the left fold ``((0.0 + a1*b1) + a2*b2) + ...``."""
+    acc = 0.0
+    for d in range(a.shape[1]):
+        acc = acc + a[:, d] * b[:, d]
+    return acc
+
+
+def _rows(df):
+    """Sorted output rows with a NaN cosine made comparable."""
+    return sorted((a, b, "nan" if c != c else c) for a, b, c in df.collect())
+
+
+# no shrink phase: each example runs Spark jobs, and shrinking a failure
+# would rerun them for minutes before reporting it
+@settings(max_examples=5, deadline=None, phases=(Phase.explicit, Phase.reuse, Phase.generate))
+@given(
+    seed=st.integers(0, 2**32 - 1),
+    n_clusters=st.integers(1, 4),
+    noise=st.sampled_from([1e-3, 0.05, 0.3]),
+    target=st.floats(0.0, 0.99),
+)
+def test_embedding_near_pairs_matches_brute_force_spec(spark, seed, n_clusters, noise, target):
+    """Against the spec by brute force at dim 8: every pair sharing at least
+    one of the 6 sketch bands, the left-fold cosine, then Spark's own
+    ``round(c, 6) >= threshold``. Clustered vectors make many pairs share
+    several bands; row 1 copies row 0 (all 6 bands shared, one output row);
+    rows n-2 and n-1 carry a NaN component (sketch 0, NaN cosine, kept as
+    Spark orders NaN above every double); the threshold is the rounded
+    cosine of a pair that Spark rounds up, so that pair's raw cosine lies in
+    ``[threshold - 5e-7, threshold)`` and it must be kept."""
+    rng = np.random.default_rng(seed)
+    centers = rng.normal(size=(n_clusters, 8))
+    x = np.concatenate([c + noise * rng.normal(size=(10, 8)) for c in centers])
+    x = np.concatenate([x[:1], x, x[2:4]])
+    x[-2:, 3] = np.nan
+    n = len(x)
+    sk = _sketches(x)
+    ia, ib = np.triu_indices(n, 1)
+    shared = np.zeros(len(ia), bool)
+    for b in range(dedup.HP_BANDS):
+        shared |= ((sk[ia] >> 4 * b) & 15) == ((sk[ib] >> 4 * b) & 15)
+    ia, ib = ia[shared], ib[shared]
+    nrm = np.sqrt(_fold_dot(x, x))
+    raw = _fold_dot(x[ia], x[ib]) / (nrm[ia] * nrm[ib])
+    ref = spark.createDataFrame(  # from tuples: a pandas frame would turn NaN into NULL
+        list(zip(ia.tolist(), ib.tolist(), raw.tolist())), "vec_a long, vec_b long, c double"
+    ).select("vec_a", "vec_b", F.round("c", 6).alias("cosine"))
+    rounded = np.array([c for _, _, c in ref.collect()])
+    up = np.flatnonzero(np.isfinite(raw) & (rounded > raw))
+    k = up[np.argmin(np.abs(rounded[up] - target))]
+    threshold = float(rounded[k])
+    assert threshold - 5e-7 <= raw[k] < threshold
+
+    emb = spark.createDataFrame(
+        [(i, [float(v) for v in r]) for i, r in enumerate(x)], "vec_id long, embedding array<double>"
+    )
+    got = _rows(dedup.embedding_near_pairs(emb, threshold=threshold, dim=8))
+    assert got == _rows(ref.where(F.col("cosine") >= threshold))
+    pairs = [(a, b) for a, b, _ in got]
+    assert len(pairs) == len(set(pairs))
+    assert (0, 1) in pairs and sk[0] == sk[1]
+    assert (n - 2, n - 1, "nan") in got
+    assert (int(ia[k]), int(ib[k])) in pairs
+
+
+@settings(max_examples=50, deadline=None)
+@given(n=st.integers(0, 40), block=st.integers(1, 30))
+def test_pair_blocks_enumerate_each_pair_once_in_bounded_blocks(n, block):
+    blocks = list(dedup._pair_blocks(n, block))
+    assert all(len(ia) < 2 * block for ia, _ in blocks)
+    ia = np.concatenate([a for a, _ in blocks]) if blocks else np.empty(0, int)
+    ib = np.concatenate([b for _, b in blocks]) if blocks else np.empty(0, int)
+    want_a, want_b = np.triu_indices(n, 1)
+    assert np.array_equal(ia, want_a) and np.array_equal(ib, want_b)
+
+
+def test_embedding_near_pairs_names_a_zero_norm_vector(spark):
+    """A zero vector in a candidate pair fails in the verify pass with a
+    message naming the operator, the row and the rule, not a bare
+    ``[DIVIDE_BY_ZERO]`` from the JVM."""
+    x = np.random.default_rng(8).normal(size=(40, 8))
+    x[7] = 0.0
+    sk = _sketches(x)
+    keys = np.stack([(sk >> 4 * b) & 15 for b in range(dedup.HP_BANDS)])  # [band, row]
+    assert (np.delete(keys, 7, axis=1) == 15).any()  # vector 7 (keys all 15) has a candidate
+    emb = spark.createDataFrame(
+        [(i, [float(v) for v in r]) for i, r in enumerate(x)], "vec_id long, embedding array<double>"
+    )
+    msg = (
+        r"ValueError: embedding_near_pairs: the cosine is undefined for a zero-norm vector, "
+        r"but vec_id 7 \(in a pair with vec_id \d+\) has norm 0.0"
+    )
+    with pytest.raises(PythonException, match=msg):
+        dedup.embedding_near_pairs(emb, dim=8).collect()
+
+
+def test_embedding_near_pairs_drops_pairs_of_a_vector_with_a_null_component(spark):
+    """A NULL component makes the cosine NULL, which the threshold filter
+    drops: the copy of vector 0 loses its pair, every other pair stays."""
+    x = np.random.default_rng(4).normal(size=(6, 8))
+    rows = [(2 * i + j, [float(v) for v in r]) for i, r in enumerate(x) for j in range(2)]
+    rows[1] = (1, [None] + rows[1][1][1:])
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    got = sorted((a, b) for a, b, _ in dedup.embedding_near_pairs(emb, threshold=0.99, dim=8).collect())
+    assert got == [(2 * i, 2 * i + 1) for i in range(1, 6)]

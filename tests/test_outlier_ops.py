@@ -140,6 +140,21 @@ def test_mahalanobis_cat_names_a_constant_value_column(spark):
         outlier.mahalanobis_cat_scores(df, "event_type", "value")
 
 
+def test_mahalanobis_cat_names_two_categories_without_a_second_direction(spark):
+    """Two categories with quartile-bin counts ``[[5,0,0,0],[0,0,5,0]]``:
+    the rank-1 MDS Gram matrix deflates to exactly 0, and the operator names
+    the two categories and the rule instead of failing in the power method
+    with a bare ``ZeroDivisionError``."""
+    rows = [(i, "a" if i < 5 else "b", 1.0 if i < 5 else 2.0) for i in range(10)]
+    df = spark.createDataFrame(rows, "event_id long, event_type string, value double")
+    msg = (
+        r"mahalanobis_cat_scores: 'event_type' has two categories, 'a' and 'b', so the MDS "
+        r"Gram matrix has rank 1, .* deflated matrix of its second direction is exactly 0"
+    )
+    with pytest.raises(ValueError, match=msg):
+        outlier.mahalanobis_cat_scores(df, "event_type", "value")
+
+
 def test_quant_em_callers_agree(spark):
     """The one quantized-EM loop serves both GMM closed forms: at d = 4 the
     embedding operator (index-fold log-densities, per-component moment

@@ -2,8 +2,10 @@
 band join and Jaccard verify (``operators/dedup.py``), the reference k-NN
 distances (``operators/ann.py``, LOF in ``operators/outlier.py``), the
 quantile bands (``operators/detect.py``) and the metric tier cells
-(``operators/rollup.py``). One Spark partition or sixteen hash partitions of
-the input must give the identical, non-empty result relation."""
+(``operators/rollup.py``). ``embedding_near_pairs`` verifies inside its LSH
+buckets and is no longer a band-join member, but keeps its row here. One
+Spark partition or sixteen hash partitions of the input must give the
+identical, non-empty result relation."""
 
 import datetime as dt
 

@@ -592,23 +592,32 @@ def main() -> None:
     )
 
     # 7b. dedup embedding cosine (the detector_suite dedup query): the
-    #     sketch is one Arrow pass, band candidates come from an equi-join
-    with checkpointed_plans(spark) as sketches:
-        df = qs["dedup_embedding_cosine"](spark, SF)
+    #     sketch is one Arrow pass and each LSH bucket is verified in one
+    #     grouped Arrow pass, so there is no candidate-pair relation to join
+    df = qs["dedup_embedding_cosine"](spark, SF)
+    p = plan_of(df)
+    grouped = re.search(
+        r"\) FlatMapGroupsInPandas\nInput \[\d+\]: [^\n]*\nArguments: \[band_id#\d+, band_key#\d+L\]", p
+    )
     audit(
         "dedup_embedding_cosine",
         df,
-        requires=["Left keys [2]: [band_id#"],
-        forbids=["CartesianProduct", "BroadcastNestedLoopJoin"],
+        requires=[],
+        forbids=["SortMergeJoin", "BroadcastHashJoin", "ShuffledHashJoin",
+                 "CartesianProduct", "BroadcastNestedLoopJoin"],
         checks={
-            "the checkpointed sketch relation is one `MapInPandas`": len(sketches) == 1
-            and sketches[0].count(") MapInPandas") == 1
+            "one `MapInPandas` (the sketch pass)": p.count(") MapInPandas") == 1,
+            "one `FlatMapGroupsInPandas`, grouped on `band_id, band_key`": p.count(
+                ") FlatMapGroupsInPandas"
+            ) == 1
+            and grouped is not None,
         },
         note="Random-hyperplane LSH: one Arrow pass computes the 24-bit "
-        "sketch per vector (checkpointed, so the final plan scans it as "
-        "ExistingRDD), the band candidates come from the self-equi-join on "
-        "(band_id, band_key), and only candidate pairs join the vectors for "
-        "the exact cosine — never a cross join.",
+        "sketch per vector and emits it once per band with the vector, one "
+        "hash exchange on (band_id, band_key) gathers each LSH bucket, and "
+        "one grouped Arrow pass scores the exact cosine of each pair in the "
+        "lowest band it shares; Spark rounds and filters. A candidate pair "
+        "never exists as a relation, so the plan has no join of any kind.",
     )
 
     # round-5 operators: categorical Mahalanobis must stay zero-Python
